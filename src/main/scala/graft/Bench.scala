@@ -23,41 +23,26 @@ object Bench {
     ts(reps / 2)
   }
 
-  /** Pipeline input at n docs, in one of two shapes (SPARK_GRAFT_INPUT):
-    *
-    *  - `parquet` (default): the generated pages are written ONCE to a
-    *    local parquet table (untimed) and the pipeline reads from it —
-    *    the PRODUCTION shape: column pruning keeps the never-read html
-    *    payload on disk, both pipeline scans are real columnar scans
-    *    with pushdown, and the input occupies zero JVM heap (caching
-    *    multi-KB documents on-heap is exactly what a cluster cannot do
-    *    at corpus scale, and its GC pressure polluted the cached-input
-    *    scaling numbers). The table is keyed by (n, generator version
-    *    fingerprint) so fresh-JVM matrix levels reuse one write and a
-    *    seed-corpus change can never serve stale rows.
-    *  - `cache`: round-1/2 methodology — generate + cache on-heap.
-    *
-    * Returns (pages, release).
+  /** Pipeline input at n docs: the generated pages are written ONCE to a
+    * local parquet table (untimed) and the pipeline reads from it — the
+    * PRODUCTION shape: column pruning keeps the never-read html payload
+    * on disk, both pipeline scans are real columnar scans with pushdown,
+    * and the input occupies zero JVM heap (caching multi-KB documents
+    * on-heap is exactly what a cluster cannot do at corpus scale). The
+    * table is keyed by (n, generator version fingerprint) so fresh-JVM
+    * matrix levels reuse one write and a seed-corpus change can never
+    * serve stale rows.
     */
-  def pipelineInput(spark: SparkSession, n: Long)
-      : (org.apache.spark.sql.DataFrame, () => Unit) = {
-    val gen = () => graft.sources.PagesGen.generate(spark, n,
-      spark.sparkContext.defaultParallelism).toDF()
-    sys.env.getOrElse("SPARK_GRAFT_INPUT", "parquet") match {
-      case "cache" =>
-        val pages = gen()
-        pages.cache()
-        pages.count()
-        (pages, () => { pages.unpersist(); () })
-      case _ =>
-        val ver = Integer.toHexString(
-          graft.sources.PagesGen.genRow(123457L).text.hashCode)
-        val dir = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_pages_${n}_$ver")
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          gen().write.mode("overwrite").parquet(dir.getPath)
-        (spark.read.parquet(dir.getPath), () => ())
-    }
+  def pipelineInput(spark: SparkSession, n: Long): org.apache.spark.sql.DataFrame = {
+    val ver = Integer.toHexString(
+      graft.sources.PagesGen.genRow(123457L).text.hashCode)
+    val dir = new java.io.File(
+      sys.props("java.io.tmpdir"), s"graft_pages_${n}_$ver")
+    if (!new java.io.File(dir, "_SUCCESS").exists())
+      graft.sources.PagesGen.generate(spark, n,
+        spark.sparkContext.defaultParallelism).toDF()
+        .write.mode("overwrite").parquet(dir.getPath)
+    spark.read.parquet(dir.getPath)
   }
 
   /** Every opt-in battery armed — the "full modern stack" configuration
@@ -84,7 +69,7 @@ object Bench {
                          cfg: graft.pipeline.QualityPipeline.Config =
                            graft.pipeline.QualityPipeline.defaultConfig)
       : (Double, Double) = {
-    val (pages, release) = pipelineInput(spark, n)
+    val pages = pipelineInput(spark, n)
     val sec = timeIt {
       val res = graft.pipeline.QualityPipeline.run(pages, cfg)
       // independent sinks submit concurrently (idiomatic: the scheduler
@@ -99,7 +84,6 @@ object Bench {
       writes.foreach(Await.result(_, Duration.Inf))
       res.unpersist() // warmup + repeat runs must not accumulate caches
     }
-    release()
     (n / sec, sec)
   }
 
@@ -125,20 +109,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val pipelineN = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "100000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ≥4 tasks/core on parquet scans (cache partitioning follows the
-      // scan; 128 MB default = ~1.5 waves at 32 cores — see ScalingBench)
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the feature cache carries raw text; columnar compression burns CPU
-      // on the memory-bandwidth-bound stage for nothing at bench lifetimes
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus.toInt)
     val (gbpsPre, loadPre) = noiseSample()
 
     // session warmup (codegen, parquet footers, scheduler) so the
@@ -176,5 +147,27 @@ object Bench {
       s""""loadavg_pre":"$loadPre","loadavg_post":"$loadPost",""" +
       s""""cpus":$cpus,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The local bench session both `main` and [[ScalingBench]] run in. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // parquet-scan split size governs the FEATURE CACHE's partition
+      // count (the cache inherits scan partitioning), and the default
+      // 128 MB yields ~1.5 task waves at 32 cores on the bench tables —
+      // wave-quantization, not compute, then caps measured scaling. 32 MB
+      // keeps every level at ≥4 tasks/core.
+      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      // the feature cache carries raw text; columnar compression burns CPU
+      // on the memory-bandwidth-bound stage for nothing at bench lifetimes
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

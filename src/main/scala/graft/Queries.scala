@@ -14,7 +14,9 @@ import graft.embed.Ann
   * so the two sides cannot drift silently.
   *
   * Conventions for oracle parity:
-  *  - every float column is `round(x, N)`; sums of doubles round to ≤4dp
+  *  - every float column is `round(x, N)`; sums of doubles round to ≤4dp,
+  *    except sums whose exact value can sit on a rounding tie (money
+  *    products), which sum exact decimals on both sides
   *  - every count is BIGINT on both sides
   *  - every query has a total ORDER BY (no tie-dependent output)
   *  - tokenisation/normalisation fragments mirror TextFns exactly
@@ -25,6 +27,18 @@ object Queries {
     s.read.parquet(s"$dir/documents.parquet")
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** Pre-sort leaf: materialise the frame (eager localCheckpoint), then
+    * sort it by `cols`. `orderBy`'s range partitioner SAMPLES its child
+    * to pick bounds, which re-runs the child's kernel (md5 minhash, the
+    * scrub chain, the WAV/PNG/MP4 encode+decode, ...) a second time; the
+    * leaf makes the sampling pass read finished rows instead — a measured
+    * win on every query that uses it. The leaf is executor-local and
+    * corpus-sized; `repartitionByRange` + `sortWithinPartitions`, or a
+    * planner rule, would keep the single kernel pass without storing it.
+    */
+  private def presortLeaf(cols: String*): DataFrame => DataFrame =
+    _.localCheckpoint(true).orderBy(cols.head, cols.tail: _*)
 
   // ======================================================================
   // SQL fragments (DuckDB dialect) mirroring TextFns
@@ -72,6 +86,20 @@ object Queries {
   // Relational core (TPC-H-ish: aggregate, join+topk, window, rollup)
   // ======================================================================
 
+  /** Σ price·(1 − discount), rounded to cents, as a double. Prices and
+    * discounts carry 2 dp, so each product has 4 dp and a sum can sit
+    * exactly on a half-cent tie; a double sum then lands either side of
+    * the tie depending on summation order, and Spark and DuckDB round it
+    * differently. Summing exact decimals makes the tie exact on both
+    * sides, and both round it half-up. `revenueSql` is the DuckDB twin.
+    */
+  private def revenue(price: Column, discount: Column): Column =
+    round(sum(price.cast("decimal(15,2)") *
+      (lit(1) - discount.cast("decimal(15,2)"))), 2).cast(DoubleType)
+  private def revenueSql(price: String, discount: String): String =
+    s"CAST(round(sum(CAST($price AS DECIMAL(15,2)) * " +
+      s"(1 - CAST($discount AS DECIMAL(15,2)))), 2) AS DOUBLE)"
+
   val q1Agg: (SparkSession, String) => DataFrame = (s, dir) =>
     tbl(s, dir, "lineitem")
       // string→timestamp cast uses the SESSION tz (UTC) — never
@@ -81,16 +109,16 @@ object Queries {
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   val q1AggSql: String =
-    """SELECT l_returnflag, l_linestatus,
+    s"""SELECT l_returnflag, l_linestatus,
       | round(sum(l_quantity), 2) AS sum_qty,
       | round(sum(l_extendedprice), 2) AS sum_base_price,
-      | round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+      | ${revenueSql("l_extendedprice", "l_discount")} AS sum_disc_price,
       | round(avg(l_quantity), 4) AS avg_qty,
       | count(*) AS count_order
       |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
@@ -104,14 +132,14 @@ object Queries {
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .join(broadcast(c), o("o_custkey") === c("c_custkey"))
       .groupBy(col("o_orderkey"), col("c_mktsegment"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+      .agg(revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
       .orderBy(col("revenue").desc, col("o_orderkey"))
       .limit(20)
   }
 
   val q3TopRevenueSql: String =
-    """SELECT o_orderkey, c_mktsegment,
-      | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    s"""SELECT o_orderkey, c_mktsegment,
+      | ${revenueSql("l_extendedprice", "l_discount")} AS revenue
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       | JOIN customer ON o_custkey = c_custkey
       |GROUP BY o_orderkey, c_mktsegment
@@ -267,11 +295,7 @@ object Queries {
       .select(col("doc_id"),
         element_at(col("sig"), 1).as("mh0"), element_at(col("sig"), 2).as("mh1"),
         element_at(col("sig"), 3).as("mh2"), element_at(col("sig"), 4).as("mh3"))
-      // materialised before the sort: orderBy's range partitioner SAMPLES
-      // its child to pick bounds, re-running the md5-minhash kernel a
-      // second time (the mm_* leaf pattern; measured win, not break-even)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val dqMinHashSql: String = {
@@ -293,10 +317,7 @@ object Queries {
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.Md5SimHash.md5SimHash(col("text"), 16).as("simhash"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // md5 voting kernel (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
 
   val dqSimHashSql: String = {
     val bits = (0 until 16).map { b =>
@@ -715,10 +736,7 @@ object Queries {
       .withColumn("keep",
         col("n_words") >= 30 && col("symbol_ratio") <= 0.1 &&
           col("mean_word_len").between(2.0, 12.0))
-      // leaf before the sort — the range sampling pass would re-run the
-      // heuristics kernel (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
 
   val dqHeuristicsSql: String = {
     val sw = Frag.stopHits("text", TextFns.StopwordsEn)
@@ -740,10 +758,7 @@ object Queries {
         LangId.markerLang(col("text")).as("detected_lang"),
         col("lang").as("declared_lang"))
       .withColumn("agree", col("detected_lang") === col("declared_lang"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // langid kernel (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
 
   val dqLangIdSql: String = {
     // argmax over (de, en, es, fr) in lang-asc order, ties → earlier lang;
@@ -776,10 +791,7 @@ object Queries {
         col("doc_id"),
         TextFns.wordCountFast(col("text")).cast(LongType).as("n_ws_tokens"),
         TextFns.bpeishTokenCount(col("text")).cast(LongType).as("n_bpeish_tokens"))
-      // leaf before the sort — the range sampling pass would re-run both
-      // token-count kernels (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
 
   val dqTokenCountSql: String =
     s"""SELECT doc_id,
@@ -793,10 +805,7 @@ object Queries {
         col("doc_id"),
         md5(norm.cast("binary")).as("fp_md5"),
         TextFns.fingerprint(col("text")).as("fp64"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // normalise+md5+fingerprint chain (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val dqFingerprintSql: String =
@@ -927,10 +936,7 @@ object Queries {
     docs(s, dir).select(col("doc_id"), Scrub.scrubCol(pii).as("scrubbed_text"))
       .withColumn("has_email", col("scrubbed_text").contains("<EMAIL>"))
       .withColumn("has_tox", col("scrubbed_text").contains("<TOX>"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // full scrub regex chain (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val dqScrubSql: String = {
@@ -1262,10 +1268,7 @@ object Queries {
       .select(col("doc_id"), col("frame_idx"),
         conv(substring(md5(encode(sliceHex, "UTF-8")), 1, 15), 16, 10)
           .cast(LongType).as("frame_hash"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // per-frame hex-slice md5 (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id", "frame_idx")
+      .transform(presortLeaf("doc_id", "frame_idx"))
   }
 
   val mmFrameSampleSql: String =
@@ -1295,10 +1298,7 @@ object Queries {
       .toDF("doc_id", "payload")
     graft.multimodal.Multimodal.extractMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "width", "height", "format")
-      // leaf before the sort — the range sampling pass would re-run the
-      // PNG encode+decode chain (see mmAudioMeta)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val mmMediaMetaSql: String =
@@ -1328,12 +1328,7 @@ object Queries {
     graft.multimodal.Multimodal.extractAudioMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "sample_rate", "channels", "bits",
         "n_frames", "format")
-      // materialise the decoded rows BEFORE the global sort: orderBy's
-      // range partitioner SAMPLES its child, which re-runs the whole
-      // WAV encode+decode chain a second time; the leaf makes the
-      // sampling pass read finished rows instead
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val mmAudioMetaSql: String =
@@ -1368,10 +1363,7 @@ object Queries {
     graft.multimodal.Multimodal.extractVideoMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "width", "height", "timescale",
         "duration_units", "n_frames", "brand")
-      // leaf before the sort — the range sampling pass would re-run the
-      // MP4 build+box-walk chain (see mmAudioMeta)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   val mmVideoMetaSql: String =
@@ -1412,10 +1404,7 @@ object Queries {
         round(col("r.top_4gram_char_frac"), 6).as("top_4gram_char_frac"),
         round(col("r.dup_5gram_char_frac"), 6).as("dup_5gram_char_frac"),
         round(col("r.dup_10gram_char_frac"), 6).as("dup_10gram_char_frac"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // repetition kernel (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   /** DuckDB brute-force twin of the battery: list ops re-derive every
@@ -1554,10 +1543,7 @@ object Queries {
         round(col("c.frac_js_lines"), 6).as("frac_js_lines"),
         col("c.has_lorem_ipsum").as("has_lorem_ipsum"),
         col("c.has_curly_brace").as("has_curly_brace"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // C4 line kernel (see mmAudioMeta / dqMinHash)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
   }
 
   // s-interpolated so the whitespace classes come from Frag.Ws (the
@@ -1965,11 +1951,7 @@ object Queries {
       .select(col("doc_id"),
         round(graft.functions.QualityModel.scoreColumn(col("__nm")), 4)
           .as("q_score"))
-      // leaf before the sort — the range sampling pass would re-run the
-      // md5-trigram scorer over the corpus (the round's pre-sort-leaf
-      // pattern; this query was missed in the original sweep)
-      .localCheckpoint(true)
-      .orderBy("doc_id")
+      .transform(presortLeaf("doc_id"))
 
   val dqQualityScoreSql: String = {
     val m = graft.functions.QualityModel.Default

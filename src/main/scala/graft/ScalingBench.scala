@@ -1,8 +1,8 @@
 package graft
 
 /** Scaling-efficiency evidence (north rule: ≥0.8 between N and 4N
-  * executors; sandbox proxy per BASELINE.md: the SAME job at local[8] vs
-  * local[32] on the SAME generated input).
+  * executors; sandbox proxy per BASELINE.md: the SAME job at local[N] vs
+  * local[4N] on the SAME generated input).
   *
   * Each parallelism level runs in a FRESH JVM (same-JVM sequential
   * SparkSessions contaminate the second measurement with heap/GC debt —
@@ -15,43 +15,7 @@ package graft
 object ScalingBench {
 
   def runAt(cpus: Int, n: Long): Double = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      // parquet-scan split size governs the FEATURE CACHE's partition
-      // count (the cache inherits scan partitioning), and the default
-      // 128 MB yields ~1.5 task waves at 32 cores on the bench tables —
-      // wave-quantization, not compute, then caps measured scaling. 32 MB
-      // keeps every level at ≥4 tasks/core (the same sizing a production
-      // cluster job would set; prompt guidance: size maxPartitionBytes so
-      // partitions fit and cores stay busy).
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // the feature cache carries the raw text column; columnar-cache
-      // compression burns CPU on exactly the memory-bandwidth-bound stage
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("SPARK_GRAFT_STAGE_METRICS")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for { s <- si.submissionTime; c <- si.completionTime }
-              yield c - s).getOrElse(-1L)
-            val tm = si.taskMetrics
-            System.err.println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
-              f"wall=${wall / 1000.0}%7.2fs run=${tm.executorRunTime / 1000.0}%8.2fs " +
-              f"cpu=${tm.executorCpuTime / 1e9}%8.2fs gc=${tm.jvmGCTime / 1000.0}%7.2fs " +
-              si.name.take(60))
-          }
-        })
-    }
+    val spark = Bench.session(cpus)
     try {
       // warmup at small n to JIT/classload before measuring
       Bench.pipelineDocsPerSec(spark, math.max(2000, n / 50))

@@ -29,8 +29,11 @@ import org.apache.spark.sql.types.DoubleType
 object Ann {
 
   /** Cosine similarity of two array<float/double> columns (double math).
-    * Bit-identical to [[cosineComposed]] on every input (same per-index
-    * fold order, same null semantics) — AnnSpec's differential pins it.
+    * Bit-identical to [[cosineComposed]] on every non-degenerate input
+    * (same per-index fold order, same null semantics) — AnnSpec's
+    * differential pins it. Zero-norm and empty inputs (0/0) yield NaN by
+    * design, as DuckDB's list_cosine_similarity does, where the composed
+    * Divide gives NULL (non-ANSI) or throws (ANSI).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftExpr.column(CosineSimExpr(
@@ -511,7 +514,9 @@ case class IvfCellsExpr(child: org.apache.spark.sql.catalyst.expressions.Express
   * element, codegen fallback for the enclosing span). Same fold order
   * (ascending index from 0.0) ⇒ bit-identical doubles; a null element
   * poisons the fold to SQL NULL exactly as the composed form; empty
-  * array ⇒ 0.0. AnnSpec pins the differential.
+  * array ⇒ 0.0. AnnSpec pins the differential. Element type is checked
+  * at analysis: the kernel reads floats or doubles, so any other array
+  * (e.g. array<int>) would be read at the wrong width.
   */
 case class NormSqExpr(
     child: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -519,6 +524,7 @@ case class NormSqExpr(
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.catalyst.util.ArrayData
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -526,6 +532,12 @@ case class NormSqExpr(
   @transient private lazy val elemIsFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"norm_sq needs an array<float|double> input, got ${t.catalogString}")
   }
 
   override def nullSafeEval(input: Any): Any =

@@ -41,7 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * comparison — a hash collision can never merge two distinct grams),
   * so the whole battery allocates a handful of arrays per doc instead
   * of one string per gram: measured 256 → 88 µs/doc single-thread
-  * (`ProfilePipeline 1 50000 rep`). This is an OPT-IN second scan
+  * (perfbench's traced run reports it as
+  * `functions.Repetition_us_per_doc`). This is an OPT-IN second scan
   * column (`QualityPipeline.Config.gopherRepetition`), not part of the
   * always-on DocStats kernel (~100 µs/doc), because the battery roughly
   * doubles per-doc CPU when enabled.

@@ -789,11 +789,10 @@ object QualityPipeline {
   }
 
   /** Full run: features → pass1 → survivors → pass2 → kept + scrub.
-    * `fusedScrub=true` uses the single-pass ScrubText expression; both
-    * paths produce byte-identical output (property-tested).
+    * The kept text is scrubbed by the single-pass ScrubText expression,
+    * byte-identical to the `Scrub.scrubCol` chain (property-tested).
     */
-  def run(pages: DataFrame, cfg: Config = defaultConfig,
-          fusedScrub: Boolean = true): Result = {
+  def run(pages: DataFrame, cfg: Config = defaultConfig): Result = {
     val bag = new CacheBag
     val feat = bag.track(features(pages, cfg).cache())
     // CACHE BUILD IS FOLDED INTO THE FIRST REAL JOB: the near-dup
@@ -891,8 +890,6 @@ object QualityPipeline {
     bag.track(statCols)
     val v2 = ph("v2 checkpoint")(v2raw.coalesce(par).localCheckpoint(true))
     val verdicts = v1.unionByName(v2)
-    val scrub: Column => Column =
-      if (fusedScrub) Scrub.scrubFused else Scrub.scrubCol
     // kept output: RE-SCAN the source pages (anti-join the tiny dropped
     // url set — both verdict sides are checkpoint leaves, AQE broadcasts
     // them) and recompute the three output features with the LITE kernel
@@ -911,7 +908,7 @@ object QualityPipeline {
         col("__ds.lang").as("lang_detected"),
         col("__ds.perplexity").as("perplexity"),
         col("__ds.n_words").as("n_words"),
-        scrub(col("text")).as("scrubbed_text"))
+        Scrub.scrubFused(col("text")).as("scrubbed_text"))
     val metrics = verdicts.rollup(col("rule")).count()
       .withColumn("rule", coalesce(col("rule"), lit("__total__")))
     Result(verdicts, kept, metrics, bag)

@@ -81,6 +81,13 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  test("normSq: an array<int> input fails analysis") {
+    val ints = Seq(Seq(1, 2, 3)).toDF("a")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      ints.select(Ann.normSq(col("a"))))
+    assert(e.getMessage.contains("array<float|double>"), e.getMessage)
+  }
+
   test("bruteForceTopK: exact neighbors, deterministic tie-break") {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec")).cache()

@@ -2,11 +2,15 @@
 # Scaling-efficiency evidence: same pipeline, same input, local[LO] vs
 # local[HI], each in a fresh JVM. Usage: tools/scaling.sh [docs] [lo] [hi]
 set -e
+# Default levels: N = max(1, nproc/4) vs 4N, so the high level fills the
+# box without oversubscribing it. Default heap: half of MemTotal, clamped
+# to 2-8 GB.
+N=$(( $(nproc) / 4 )); [ "$N" -ge 1 ] || N=1
 DOCS=${1:-300000}
-LO=${2:-8}
-HI=${3:-32}
+LO=${2:-$N}
+HI=${3:-$((4 * N))}
 cd "$(dirname "$0")/.."
-export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g}
+export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 outlo=$(sbt -batch "runMain graft.ScalingBench $LO $DOCS" 2>/dev/null | grep -o '{"metric":"scaling_point".*}')
 outhi=$(sbt -batch "runMain graft.ScalingBench $HI $DOCS" 2>/dev/null | grep -o '{"metric":"scaling_point".*}')
 python3 - "$outlo" "$outhi" "$LO" "$HI" <<'EOF'

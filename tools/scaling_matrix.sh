@@ -21,12 +21,16 @@
 #
 # Usage: tools/scaling_matrix.sh [docs] [lo] [hi] [pairs]
 set -e
+# Default levels: N = max(1, nproc/4) vs 4N, so the high level fills the
+# box without oversubscribing it. Default heap: half of MemTotal, clamped
+# to 2-8 GB.
+N=$(( $(nproc) / 4 )); [ "$N" -ge 1 ] || N=1
 DOCS=${1:-4000000}
-LO=${2:-8}
-HI=${3:-32}
+LO=${2:-$N}
+HI=${3:-$((4 * N))}
 PAIRS=${4:-8}
 cd "$(dirname "$0")/.."
-export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-48g}
+export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 export SPARK_GRAFT_GC=${SPARK_GRAFT_GC:-G1}
 OUT=${SCALING_OUT:-/tmp/scaling_matrix_rows.jsonl}
 : > "$OUT"
