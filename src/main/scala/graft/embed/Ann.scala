@@ -20,36 +20,26 @@ import org.apache.spark.sql.types.DoubleType
   *    the scale path; recall vs brute force is property-tested.
   *
   * Dot products ride the fused [[CosineSimExpr]] kernel: the composed
-  * `aggregate(zip_with(...))` formulation (kept as [[cosineComposed]], the
-  * semantic reference AnnSpec pins bit-equality against) is a Catalyst
-  * higher-order function — its lambda is INTERPRETED per element and its
-  * presence disables whole-stage codegen for the whole plan span
+  * `aggregate(zip_with(...))` formulation (kept in test scope as
+  * `ComposedRefs.cosineComposed`, the semantic reference AnnSpec pins
+  * bit-equality against) is a Catalyst higher-order function — its
+  * lambda is INTERPRETED per element and its presence disables
+  * whole-stage codegen for the whole plan span
   * (plans/r06/emb_knn_before.txt: zero WholeStageCodegen nodes).
   */
 object Ann {
 
   /** Cosine similarity of two array<float/double> columns (double math).
-    * Bit-identical to [[cosineComposed]] on every non-degenerate input
-    * (same per-index fold order, same null semantics) — AnnSpec's
-    * differential pins it. Zero-norm and empty inputs (0/0) yield NaN by
-    * design, as DuckDB's list_cosine_similarity does, where the composed
-    * Divide gives NULL (non-ANSI) or throws (ANSI).
+    * Bit-identical to the composed HOF fold (`ComposedRefs.cosineComposed`,
+    * test scope) on every non-degenerate input (same per-index fold
+    * order, same null semantics) — AnnSpec's differential pins it.
+    * Zero-norm and empty inputs (0/0) yield NaN by design, as DuckDB's
+    * list_cosine_similarity does, where the composed Divide gives NULL
+    * (non-ANSI) or throws (ANSI).
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftExpr.column(CosineSimExpr(
       graft.functions.GraftExpr.expr(a), graft.functions.GraftExpr.expr(b)))
-
-  /** The composed HOF formulation — the oracle-portable semantic
-    * reference for [[cosine]] (DuckDB's list_cosine_similarity agrees on
-    * non-degenerate inputs). Not used in query paths: interpreted lambda
-    * per element + codegen fallback for the enclosing stage.
-    */
-  def cosineComposed(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
 
   /** Kernel behind [[CosineSimExpr]]: one pass computes the three dot
     * products with the SAME per-index accumulation order as the composed
@@ -131,29 +121,12 @@ object Ann {
     }
   }
 
-  /** Array of per-table SRP bucket signatures for a vector column
-    * (composed Column reference — kept for cross-validation; the
-    * interpreted zip_with/aggregate lambdas cost ~tables×nBits×dim HOF
-    * evaluations per vector).
-    */
-  def srpSignaturesComposed(vec: Column, dim: Int, nBits: Int, tables: Int): Column = {
-    val planes = hyperplanes(dim, nBits, tables)
-    array(planes.zipWithIndex.map { case (tbl, t) =>
-      val sig = tbl.zipWithIndex.map { case (p, b) =>
-        val pl = array(p.map(lit): _*)
-        val d = aggregate(zip_with(vec, pl, (x, h) => x.cast(DoubleType) * h),
-          lit(0.0), (acc, v) => acc + v)
-        when(d >= 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(t).as("table"), sig.as("bucket"))
-    }: _*)
-  }
-
   /** Fused SRP buckets: array<long> of length `tables`, element t = the
     * nBits-bit bucket of table t (index IS the table id — pair them with
     * `posexplode`). One tight loop per vector instead of
     * tables×nBits×dim interpreted HOF evaluations; AnnSpec asserts
-    * equality with [[srpSignaturesComposed]].
+    * equality with the composed reference
+    * (`ComposedRefs.srpSignaturesComposed`, test scope).
     */
   def srpBuckets(vec: Column, dim: Int, nBits: Int, tables: Int): Column =
     graft.functions.GraftExpr.column(SrpBucketsExpr(

@@ -1,8 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types._
 
 /** Benchmark DECONTAMINATION: per-document word n-gram overlap against a
   * held-out evaluation corpus — the standard training-data hygiene test
@@ -29,6 +33,13 @@ import org.apache.spark.sql.types.DoubleType
   *    contiguous within a scan partition), so the one shuffle carries
   *    ~one small row per document — never gram text volume.
   *
+  * The rule ([[graft.rules.Rules.contaminationRule]]) skips even that
+  * shuffle: the eval side is broadcast either way, so it fetches the eval
+  * grams' 8-byte hashes to the driver ([[evalHashes]], bounded by
+  * [[SharedHashes.MaxBroadcastGrams]]) and probes them with a
+  * per-document kernel ([[hitStats]]) in the text battery's one narrow
+  * pass.
+  *
   * Tokenisation contract (shared with [[TextFns.tokens]] / the DuckDB
   * oracle): lowercase, trim, split on `\s+`, empties dropped; a gram is
   * n consecutive tokens joined by single spaces. Counting is MULTISET on
@@ -54,7 +65,14 @@ object Decontam {
     * the (broadcast) build side of the contamination probe.
     */
   def evalGrams(evalDf: DataFrame, text: Column, n: Int): DataFrame =
-    evalDf.select(explode(wordNgrams(text, n)).as("gram")).distinct()
+    evalGramRows(evalDf, text, n).distinct()
+
+  /** [[evalGrams]] before its distinct — the probe-set source of the
+    * text battery, which dedups on the driver and so skips the distinct's
+    * exchange.
+    */
+  private[graft] def evalGramRows(evalDf: DataFrame, text: Column, n: Int): DataFrame =
+    evalDf.select(explode(wordNgrams(text, n)).as("gram"))
 
   /** Per-document contamination: (key, n_grams, n_contaminated,
     * contam_frac). `contam_frac` is null for documents with no n-grams
@@ -86,7 +104,62 @@ object Decontam {
       .agg(greatest(max(col("__n")), lit(0)).cast("long").as("n_grams"),
         sum(coalesce(col("__hit"), lit(0))).cast("long").as("n_contaminated"))
       .select(col("__k"), col("n_grams"), col("n_contaminated"),
-        round(col("n_contaminated").cast(DoubleType) /
-          nullif(col("n_grams"), lit(0L)), 6).as("contam_frac"))
+        contamFrac(col("n_contaminated"), col("n_grams")).as("contam_frac"))
   }
+
+  /** The eval side as a probe set: `xxhash64` of each eval gram, fetched
+    * by one bounded action. Duplicate grams collapse in the set. An eval
+    * frame of more than `cap` rows fails: a broadcast eval side is the
+    * rule's one shape, as it is [[contamination]]'s default.
+    */
+  private[graft] def evalHashes(
+      eval: DataFrame,
+      cap: Long = SharedHashes.MaxBroadcastGrams): HashSetRef =
+    SharedHashes.fetch(eval.select(xxhash64(col("gram"))), cap).getOrElse(
+      throw new IllegalArgumentException(
+        s"eval side holds more than $cap n-grams, over the broadcast bound"))
+
+  /** Per-document eval-gram hits of staged tokens: struct(n_grams,
+    * n_contaminated) — every n-gram window probed against the eval set,
+    * multiset on the document side as in [[contamination]].
+    */
+  private[graft] def hitStats(toks: Column, n: Int, eval: HashSetRef): Column =
+    GraftExpr.column(EvalHitsExpr(GraftExpr.expr(toks), n, eval))
+
+  /** `round(n_contaminated / n_grams, 6)`, null when the doc has no grams. */
+  private[graft] def contamFrac(nContaminated: Column, nGrams: Column): Column =
+    round(nContaminated.cast(DoubleType) / nullif(nGrams, lit(0L)), 6)
+
+  val HitsType: StructType = StructType(Seq(
+    StructField("n_grams", LongType, nullable = false),
+    StructField("n_contaminated", LongType, nullable = false)))
+
+  def hitsEval(toks: ArrayData, n: Int, eval: Array[Long]): InternalRow = {
+    val hs = GramHash.windowHashes(toks, n)
+    var hits = 0L
+    var i = 0
+    while (i < hs.length) {
+      if (java.util.Arrays.binarySearch(eval, hs(i)) >= 0) hits += 1
+      i += 1
+    }
+    InternalRow(hs.length.toLong, hits)
+  }
+}
+
+case class EvalHitsExpr(child: Expression, n: Int, eval: HashSetRef)
+    extends UnaryExpression {
+  override def dataType: DataType = Decontam.HitsType
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    Decontam.hitsEval(input.asInstanceOf[ArrayData], n, eval.sorted)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("evalGrams", eval, classOf[HashSetRef].getName)
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.Decontam.hitsEval($c, $n, $ref.sorted());")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): EvalHitsExpr =
+    copy(child = newChild)
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.Platform
   *  - fewer than n tokens ⇒ empty array (the `wordNgrams` `[]` branch);
   *    null input ⇒ null (null-intolerant unary expression);
   *  - downstream consumers ([[ExactSubstr.substrDupStats]],
-  *    [[Decontam.contamination]]) use the hashes as join/group keys
+  *    [[Decontam.contamination]]) use the hashes as join/group/probe keys
   *    only — a 64-bit collision merging two distinct grams is the same
   *    accepted risk as the existing xxhash64 bucketing in
   *    exactDup/boilerplate (p ≈ n²/2⁶⁵).
@@ -41,15 +41,24 @@ object GramHash {
   /** Static kernel (one call per row from interpreted eval AND generated
     * code — Scala objects emit static forwarders).
     */
-  def gramHashesEval(arr: ArrayData, n: Int): ArrayData = {
+  def gramHashesEval(arr: ArrayData, n: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(windowHashes(arr, n))
+
+  /** The n-gram hash of every n-token window of `arr`, in window order
+    * (element i covers tokens i..i+n-1); empty when `arr` has fewer than
+    * n tokens. Shared by [[gramHashesEval]] and the per-document battery
+    * kernels ([[ExactSubstr]], [[Decontam]]) so every gram hash in the
+    * engine is this one computation.
+    */
+  def windowHashes(arr: ArrayData, n: Int): Array[Long] = {
     val k = arr.numElements()
-    if (k < n) return new GenericArrayData(Array.empty[Any])
+    if (k < n) return Array.emptyLongArray
     // token bytes fetched once per row (getUTF8String allocates a view,
     // getBytes may copy — do it k times, not k*n times)
     val tb = new Array[Array[Byte]](k)
     var i = 0
     while (i < k) { tb(i) = arr.getUTF8String(i).getBytes; i += 1 }
-    val out = new Array[Any](k - n + 1)
+    val out = new Array[Long](k - n + 1)
     var buf = new Array[Byte](256)
     var g = 0
     while (g <= k - n) {
@@ -69,7 +78,7 @@ object GramHash {
       out(g) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
       g += 1
     }
-    new GenericArrayData(out)
+    out
   }
 }
 

@@ -365,36 +365,18 @@ object LangId {
 
   /** Fused marker scorer (the hot path): one pass over the text, token
     * FNV lookups against the sorted marker-hash table. The composed
-    * version below ([[markerLangComposed]]) interprets 4 HOF lambdas per
-    * token (measured 5.4 s vs <0.5 s at sf0.1); LangIdSpec asserts the
-    * two paths are equal on every fixture doc.
+    * Column version (`ComposedRefs.markerLangComposed`, test scope)
+    * interprets 4 HOF lambdas per token (measured 5.4 s vs <0.5 s at
+    * sf0.1); LangIdSpec asserts the two paths are equal on every
+    * fixture doc.
     */
   def markerLang(c: Column): Column =
     GraftExpr.column(MarkerLangExpr(GraftExpr.expr(c)))
-
-  /** Column-composed semantic reference for [[markerLang]] (and the shape
-    * the SQL oracle mirrors): per-language marker-hit counts over
-    * lowercased tokens, argmax with tie-break on lang asc, all-zero →
-    * "und".
-    */
-  def markerLangComposed(c: Column): Column = {
-    val toks = transform(TextFns.tokens(c), t => lower(t))
-    val scored = Markers.toSeq.sortBy(_._1).map { case (l, ws) =>
-      val set = array(ws.map(lit): _*)
-      (l, size(filter(toks, t => array_contains(set, t))))
-    }
-    // argmax with deterministic tie-break on lang name asc; all-zero -> "und"
-    val best = scored.map { case (l, s) =>
-      struct(s.as("hits"), lit(l).as("lang"))
-    }.reduceLeft((a, b) =>
-      when(b.getField("hits") > a.getField("hits"), b).otherwise(a))
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
 }
 
 /** `marker_lang(text)` → string: fused equivalent of
-  * [[LangId.markerLangComposed]]. Tokens are whitespace-split (Java `\s`,
-  * matching TextFns.tokens), lowercased per char (markers are ASCII), and
+  * `ComposedRefs.markerLangComposed` (test scope). Tokens are
+  * whitespace-split (Java `\s`, matching TextFns.tokens), lowercased per char (markers are ASCII), and
   * matched by FNV-1a against the marker table; ties break to the
   * lexicographically smaller language; zero hits → "und".
   */

@@ -25,11 +25,13 @@ import graft.profile.Profiler
   *          + scrubbed_text + lite-kernel output features (narrow)
   *
   * Scale shape: TWO narrow scans of the source text (feature pass, kept
-  * writer) and a cached feature frame that carries NO document bodies
-  * (~300 B/doc): at 10⁹-doc partitions the corpus text cannot live in
-  * cluster storage memory, so the design re-reads the columnar source for
-  * the kept output instead of caching or shuffling bodies. Shuffles carry
-  * only (url, hashes/scores); group rules shuffle on low-cardinality or
+  * writer — the opt-in text battery adds one pass plus one scan per
+  * shared-set aggregate, see textBatteryVerdicts) and a cached feature
+  * frame that carries NO document bodies (~300 B/doc): at 10⁹-doc
+  * partitions the corpus text cannot live in cluster storage memory, so
+  * the design re-reads the columnar source for the kept output instead
+  * of caching or shuffling bodies. Shuffles carry only (url,
+  * hashes/scores); group rules shuffle on low-cardinality or
   * hash-distributed keys.
   */
 object QualityPipeline {
@@ -83,15 +85,27 @@ object QualityPipeline {
       minSentences: Int = 3,             // C4 page rule
       maxBulletStartFrac: Double = 0.90, // RefinedWeb
       maxEllipsisEndFrac: Double = 0.30, // RefinedWeb
+      // Four rules below read TEXT (ccnetBoilerplate, decontamPassages,
+      // exactSubstrTokens, modelQualityMin) and share ONE narrow battery
+      // pass over the source pages (textBatteryVerdicts): text and tokens
+      // staged once, one per-doc kernel per rule. Boilerplate and
+      // exact-substring add one set-building aggregate each (a source
+      // scan whose shuffle carries only 8-byte hashes + counts) and a
+      // bounded driver fetch of the set; over SharedHashes.
+      // MaxBroadcastGrams, or when a url repeats, that rule falls back
+      // to its composed shuffle chain. Decontamination fetches only its
+      // eval grams' hashes.
+      //
       // opt-in CCNet-style cross-document paragraph boilerplate rule
-      // (Rules.boilerplateParagraphs). Costs one extra narrow source
-      // scan + an 8-byte-hash shuffle when on; default off.
+      // (Rules.boilerplateParagraphs): shared-paragraph set + per-doc
+      // paragraph kernel; default off.
       ccnetBoilerplate: Boolean = false,
       boilerplateMinDocs: Long = 2,
       maxBoilerplateFrac: Double = 0.50,
       // opt-in benchmark decontamination (Rules.contaminationRule):
       // drop docs sharing >= decontamMinHits word decontamN-grams with
-      // these eval passages. Seq[String] keeps Config serializable; a
+      // these eval passages (their gram hashes are the probe set; no
+      // corpus scan builds it). Seq[String] keeps Config serializable; a
       // production eval CORPUS goes through Rules.contaminationRule
       // with any DataFrame directly. Default empty = rule off.
       decontamPassages: Seq[String] = Nil,
@@ -108,17 +122,18 @@ object QualityPipeline {
       // opt-in cross-document exact-substring duplication rule
       // (Rules.exactSubstrDup, Lee et al. 2021 shape): drop docs whose
       // >= exactSubstrTokens-token spans shared with other docs cover
-      // >= maxSubstrDupFrac of their tokens. One extra narrow source
-      // scan + an 8-byte-hash shuffle when on; 0 = off (the paper's
-      // production L is 50).
+      // >= maxSubstrDupFrac of their tokens. Shared-L-gram set + per-doc
+      // coverage kernel when on; 0 = off (the paper's production L is
+      // 50).
       exactSubstrTokens: Int = 0,
       maxSubstrDupFrac: Double = 0.5,
       // opt-in model-based quality rule (Rules.modelQualityRule — the
       // fastText-shaped hashed-trigram classifier): drop docs scoring
-      // below this. One codegen'd narrow map over the source text scan
-      // when on; None = rule off (the F1 goldens are pinned to the
-      // heuristic rule set). On the built-in model the planted classes
-      // separate at 0.45 with ±0.17 margin (QualityModelSpec).
+      // below this. A per-doc kernel of the battery pass with no
+      // cross-document state; None = rule off (the F1 goldens are
+      // pinned to the heuristic rule set). On the built-in model the
+      // planted classes separate at 0.45 with ±0.17 margin
+      // (QualityModelSpec).
       modelQualityMin: Option[Double] = None,
       // opt-in HTML → text extraction at the pipeline entrance: text is
       // DERIVED from the html payload (HtmlExtract.extractBinary — the
@@ -266,10 +281,7 @@ object QualityPipeline {
     * cost that erodes scaling efficiency at high parallelism.
     */
   def heuristicVerdicts(feat: DataFrame, cfg: Config): DataFrame = {
-    def entry(cond: Column, rule: String, score: Column, detail: Column) =
-      when(cond, struct(lit(rule).as("rule"),
-        score.cast(DoubleType).as("score"),
-        detail.cast("string").as("detail")))
+    import Rules.entry
     val baseEntries = Seq(
       // null text computes features over "" (n_words = 0 < minWords), so
       // the empty rule needs no text reference — the frame carries none
@@ -325,12 +337,7 @@ object QualityPipeline {
           col("c4_lorem_ipsum").cast("int"), lit("placeholder_text")),
         entry(col("c4_curly_brace"), "c4_curly_brace",
           col("c4_curly_brace").cast("int"), lit("code_brace")))
-    val entries = array(baseEntries ++ repEntries ++ c4Entries: _*)
-    feat.select(col("url"), explode(entries).as("__e"))
-      .filter(col("__e").isNotNull)
-      .select(col("url"), col("__e.rule").as("rule"),
-        lit(false).as("keep"), col("__e.score").as("score"),
-        col("__e.detail").as("detail"))
+    Rules.explodeEntries(feat, col("url"), baseEntries ++ repEntries ++ c4Entries)
   }
 
   /** Exact dedup on the 60-bit content fingerprint: shuffle carries
@@ -766,6 +773,47 @@ object QualityPipeline {
     (v2, statCols)
   }
 
+  /** The text battery: the armed text-reading rules judged in ONE narrow
+    * pass over `srcPages` (text already swapped by withSourceText) —
+    * [[Rules.textBattery]] with each rule resolved to its regime. A rule
+    * with cross-document state first fetches its 8-byte hash set
+    * (shared paragraphs, shared L-grams, eval grams); the fetches run
+    * concurrently, each under its own phase line. A shared set over
+    * `cap` sends only its own rule back to its composed shuffle chain;
+    * the eval set is always broadcast (bounded by
+    * SharedHashes.MaxBroadcastGrams). None when no text rule is on —
+    * nothing is built or fetched.
+    */
+  private[graft] def textBatteryVerdicts(
+      srcPages: DataFrame, cfg: Config,
+      cap: Long = SharedHashes.MaxBroadcastGrams): Option[DataFrame] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val (url, text) = (col("url"), col("text"))
+    def fetched(name: String)(r: => Rules.TextRegime) =
+      Future(ph(s"$name set fetch")(r))
+    val regimes = Seq(
+      Option.when(cfg.ccnetBoilerplate)(fetched("boilerplate")(
+        Rules.boilerplateRegime(srcPages, url, text,
+          cfg.boilerplateMinDocs, cfg.maxBoilerplateFrac, cap))),
+      Option.when(cfg.decontamPassages.nonEmpty)(fetched("decontam eval") {
+        val s = srcPages.sparkSession
+        import s.implicits._
+        val ev = Decontam.evalGramRows(
+          cfg.decontamPassages.toDF("p"), col("p"), cfg.decontamN)
+        Right(Rules.contaminationKernel(ev, cfg.decontamN, cfg.decontamMinHits))
+      }),
+      Option.when(cfg.exactSubstrTokens > 0)(fetched("substr gram")(
+        Rules.exactSubstrRegime(srcPages, url, text, cfg.exactSubstrTokens,
+          2L, cfg.maxSubstrDupFrac, cap))),
+      cfg.modelQualityMin.map(theta =>
+        Future.successful(Right(Rules.modelQualityKernel(theta)))))
+      .flatten.map(Await.result(_, Duration.Inf))
+    if (regimes.isEmpty) None
+    else Some(Rules.textBattery(srcPages, url, text, regimes))
+  }
+
   // ---------------------------------------------------------------------
   // Assembly
   // ---------------------------------------------------------------------
@@ -804,6 +852,22 @@ object QualityPipeline {
     // warm scan + an action round-trip of pure coordination on the
     // serial critical path) is gone. All LATER feat consumers still run
     // strictly after this job, so they read a warm cache.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    // The four text-reading rules (CCNet boilerplate, decontamination,
+    // exact-substring dup, model quality) read TEXT, which the feature
+    // frame does not carry: they run as ONE narrow battery pass over the
+    // source pages (textBatteryVerdicts), only when any is on. They read
+    // through withSourceText: under cfg.extractHtml the text column is
+    // DERIVED from the html payload, and a rule reading the raw column
+    // would judge a different (null or stale) corpus view than features()
+    // and the kept writer do. Resolving the battery fetches its shared
+    // hash sets — driver actions over the source pages that never touch
+    // feat — so it starts FIRST, in a future: its scans overlap the
+    // feature-cache build and the near-dup chain instead of delaying v1a.
+    val srcPages = withSourceText(pages, cfg)
+    val batteryF = Future(textBatteryVerdicts(srcPages, cfg))
     val cand = ph("neardup candidates")(nearDupCandidates(feat, cfg))
     // VERDICT SETS ARE LEAVES, NOT CACHES. unionByName flattens unions
     // eagerly, so a downstream plan never contains the v1/v2 union node
@@ -824,48 +888,6 @@ object QualityPipeline {
     // a member fetch, local union-find) — the two own disjoint resources,
     // so this removes the near-dup driver round-trips from the serial
     // critical path instead of queueing them behind the v1 job.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // CCNet boilerplate reads TEXT (the feature frame carries none), so
-    // it scans the source pages — one extra narrow scan, only when on.
-    // ALL text-reading opt-in rules go through withSourceText: under
-    // cfg.extractHtml the text column is DERIVED from the html payload,
-    // and a rule reading the raw column would judge a different (null or
-    // stale) corpus view than features() and the kept writer do
-    val srcPages = withSourceText(pages, cfg)
-    val boilerV: Option[DataFrame] =
-      if (!cfg.ccnetBoilerplate) None
-      else Some(Rules.boilerplateParagraphs(srcPages, col("url"), col("text"),
-        cfg.boilerplateMinDocs, cfg.maxBoilerplateFrac))
-    // decontamination likewise reads TEXT from the source pages; the
-    // eval side is a tiny broadcast built from the configured passages
-    val decontamV: Option[DataFrame] =
-      if (cfg.decontamPassages.isEmpty) None
-      else {
-        val s = pages.sparkSession
-        import s.implicits._
-        val ev = graft.functions.Decontam.evalGrams(
-          cfg.decontamPassages.toDF("p"), col("p"), cfg.decontamN)
-        Some(Rules.contaminationRule(srcPages, col("url"), col("text"),
-          ev, cfg.decontamN, cfg.decontamMinHits))
-      }
-    // exact-substring dup likewise reads TEXT from the source pages —
-    // one narrow scan projecting to 8-byte gram hashes, only when on.
-    // BUILT LAZILY: substrDupStats eagerly materializes + counts the
-    // shared-gram set to pick its join strategy; constructed here it
-    // would run that stage serially on the driver BEFORE v1a's future
-    // starts — deferring construction into the future overlaps it with
-    // the near-dup resolve instead
-    val substrV: () => Option[DataFrame] = () =>
-      if (cfg.exactSubstrTokens <= 0) None
-      else Some(Rules.exactSubstrDup(srcPages, col("url"), col("text"),
-        cfg.exactSubstrTokens, maxFrac = cfg.maxSubstrDupFrac))
-    // model-based quality score likewise reads TEXT — one codegen'd
-    // narrow map on the source scan, only when on
-    val modelV: Option[DataFrame] =
-      cfg.modelQualityMin.map(theta =>
-        Rules.modelQualityRule(srcPages, col("url"), col("text"), theta))
     // URL rules read only the key column; host cap adds one bounded-heap
     // groupBy on host — both off by default
     val urlV: Seq[DataFrame] =
@@ -874,11 +896,14 @@ object QualityPipeline {
          cfg.urlBlockedHosts, cfg.urlAdultKeywords, cfg.maxUrlLen))) ++
       (if (cfg.hostDocCap <= 0) Nil
        else Seq(Rules.hostCap(pages, col("url"), col("url"), cfg.hostDocCap)))
-    val v1aF = Future(ph("v1a checkpoint")(
-      (simHashVerdicts(feat, cfg).toSeq ++ boilerV.toSeq ++ decontamV.toSeq ++ substrV().toSeq ++ modelV.toSeq ++ urlV).foldLeft(
-          heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat, cfg)))(
-          _ unionByName _)
-        .coalesce(par).localCheckpoint(true)))
+    val v1aF = Future {
+      val batteryV = Await.result(batteryF, Duration.Inf)
+      ph("v1a checkpoint")(
+        (simHashVerdicts(feat, cfg).toSeq ++ batteryV.toSeq ++ urlV).foldLeft(
+            heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat, cfg)))(
+            _ unionByName _)
+          .coalesce(par).localCheckpoint(true))
+    }
     val nd = ph("neardup resolve")(nearDupResolve(cand, cfg))
     // both sides are materialised leaves (v1a a checkpoint block, nd a
     // local relation or checkpointed join-back), so the union needs no

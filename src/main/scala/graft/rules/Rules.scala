@@ -376,6 +376,73 @@ object Rules {
     verdict(flagged, key, "empty", frac1, lit("row_null_fraction"))
   }
 
+  /** Conditional verdict entry: struct(rule, score, detail) when `cond`
+    * holds, null otherwise. A set of entries over one frame becomes
+    * verdict rows through [[explodeEntries]] — every rule of a battery
+    * judged in ONE scan.
+    */
+  private[graft] def entry(cond: Column, rule: String, score: Column,
+                           detail: Column): Column =
+    when(cond, struct(lit(rule).as("rule"),
+      score.cast(DoubleType).as("score"),
+      detail.cast("string").as("detail")))
+
+  /** Verdict rows of `entries` over `df`: explode, drop the nulls. */
+  private[graft] def explodeEntries(df: DataFrame, key: Column,
+                                    entries: Seq[Column]): DataFrame =
+    df.select(key.as("url"), explode(array(entries: _*)).as("__e"))
+      .filter(col("__e").isNotNull)
+      .select(col("url"), col("__e.rule").as("rule"),
+        lit(false).as("keep"), col("__e.score").as("score"),
+        col("__e.detail").as("detail"))
+
+  // -------------------------------------------------------------------
+  // Text battery: the rules that read document TEXT
+  // -------------------------------------------------------------------
+  /** One text-reading rule as a per-document kernel of the text battery
+    * pass ([[textBattery]]): `stats` maps the staged text `__t` (and, when
+    * `tokens`, the staged `TextFns.tokens(lower(text))` array `__toks`)
+    * to a per-document stats column, and `entry` turns that column into a
+    * conditional verdict entry.
+    */
+  private[graft] final case class TextRule(tokens: Boolean,
+                                           stats: (Column, Column) => Column,
+                                           entry: Column => Column)
+
+  /** A text rule resolved to its regime: `Right` = a battery kernel (its
+    * cross-document hash set fit under the bound, keys were unique, and
+    * the set is broadcast), `Left` = the rule's verdicts from its
+    * composed shuffle chain (otherwise).
+    */
+  private[graft] type TextRegime = Either[DataFrame, TextRule]
+
+  /** The text battery: every kernel-regime rule is judged in ONE narrow
+    * pass over `df` — text staged once, tokens staged once when any rule
+    * needs them, one stats column per rule, verdict rows through one
+    * explode of entries — with no exchange of its own. Overflowed rules
+    * join as their composed verdict frames.
+    */
+  private[graft] def textBattery(df: DataFrame, key: Column, text: Column,
+                                 rules: Seq[TextRegime]): DataFrame = {
+    require(rules.nonEmpty, "text battery needs at least one rule")
+    val kernels = rules.collect { case Right(r) => r }
+    val pass =
+      if (kernels.isEmpty) None
+      else {
+        val staged0 = df.select(key.as("__k"), text.as("__t"))
+        val staged =
+          if (!kernels.exists(_.tokens)) staged0
+          else staged0.withColumn("__toks",
+            graft.functions.ExactSubstr.stagedTokens(col("__t")))
+        val stats = staged.select(col("__k") +: kernels.zipWithIndex.map {
+          case (r, i) => r.stats(col("__t"), col("__toks")).as(s"__s$i")
+        }: _*)
+        Some(explodeEntries(stats, col("__k"),
+          kernels.indices.map(i => kernels(i).entry(col(s"__s$i")))))
+      }
+    (rules.collect { case Left(v) => v } ++ pass).reduce(_ unionByName _)
+  }
+
   /** CCNet-style CROSS-DOCUMENT paragraph boilerplate rule (Wenzek et al.
     * 2020 "CCNet" dedups paragraphs across shards; dropping the whole doc
     * when a fraction of it is shared boilerplate is the conservative
@@ -386,22 +453,65 @@ object Rules {
     *
     * Paragraph contract shared with [[graft.functions.Repetition]] /
     * the `dq_boilerplate` oracle: literal `\n\n` split, empty segments
-    * dropped, code-point char counts.
+    * dropped, code-point char counts ([[graft.functions.Paragraphs]]).
     *
-    * Scale shape (the whole point of this rule being distributed): the
-    * shuffle carries (8-byte xxhash64, key, length) — never paragraph
-    * text. ndocs is computed as distinct-(hash, key) THEN count — the
-    * explicit two-step spreads a mega-hot paragraph ("subscribe to our
-    * newsletter" in 10⁸ docs) across the (hash, key) key space before
-    * the map-side-combinable count; the join-back build side has exactly
-    * ONE row per hash, so the hot hash joins without salting. Hash note:
-    * xxhash64 is engine-internal bucketing (like exactDup's content
-    * hash); the oracle QUERY groups by paragraph text itself — exact at
-    * test scale, same metric.
+    * A key is a document: rows sharing a key (a page crawled twice)
+    * count once toward `minDocs`.
+    *
+    * Scale shape: the cross-document state is the set of shared
+    * paragraph hashes, built by one map-side-combined aggregate of
+    * per-document-distinct 8-byte hashes, which also checks that keys
+    * are unique ([[graft.functions.SharedHashes.sharedFrame]]). Up to
+    * [[graft.functions.SharedHashes.MaxBroadcastGrams]] hashes, with
+    * unique keys, the set is broadcast and each document is judged by a
+    * per-document kernel in one narrow pass; otherwise the composed
+    * shuffle chain ([[boilerplateComposed]]) runs after the aggregate.
+    * Neither regime ships paragraph text. Eager: the set is fetched at
+    * construction.
     */
   def boilerplateParagraphs(df: DataFrame, key: Column, text: Column,
                             minDocs: Long = 2,
-                            maxFrac: Double = 0.5): DataFrame = {
+                            maxFrac: Double = 0.5): DataFrame =
+    textBattery(df, key, text,
+      Seq(boilerplateRegime(df, key, text, minDocs, maxFrac)))
+
+  private[graft] def boilerplateRegime(
+      df: DataFrame, key: Column, text: Column, minDocs: Long, maxFrac: Double,
+      cap: Long = graft.functions.SharedHashes.MaxBroadcastGrams): TextRegime = {
+    import graft.functions.Paragraphs
+    Paragraphs.shared(df, key, text, minDocs, cap) match {
+      case Some(set) => Right(TextRule(tokens = false,
+        (t, _) => Paragraphs.stats(coalesce(t, lit("")), set),
+        st => boilerplateEntry(st.getField("tot"), st.getField("shared"),
+          st.getField("nshared"), maxFrac)))
+      case None => Left(boilerplateComposed(df, key, text, minDocs, maxFrac))
+    }
+  }
+
+  private def boilerplateEntry(tot: Column, shared: Column, nShared: Column,
+                               maxFrac: Double): Column = {
+    val frac = shared.cast(DoubleType) / nullif(tot, lit(0L))
+    entry(frac >= maxFrac, "ccnet_boilerplate", frac,
+      concat_ws("/", nShared, lit("shared_paras")))
+  }
+
+  /** The boilerplate rule's distributed regime (shared-paragraph set over
+    * the bound, or a repeated key), also the composed reference its
+    * kernel is differential-tested against. It recomputes ndocs from the
+    * source, so past the bound the rule costs the set aggregate that
+    * chose this chain (one source scan plus one (flag, hash, count)
+    * shuffle) on top of it. The shuffle carries (8-byte xxhash64,
+    * key, length) — never paragraph text. ndocs is distinct-(hash, key)
+    * THEN count — the explicit two-step spreads a mega-hot paragraph
+    * ("subscribe to our newsletter" in 10⁸ docs) across the (hash, key)
+    * key space before the map-side-combinable count; the join-back build
+    * side has exactly ONE row per hash, so the hot hash joins without
+    * salting. Hash note: xxhash64 is engine-internal bucketing (like
+    * exactDup's content hash); the oracle QUERY groups by paragraph text
+    * itself — exact at test scale, same metric.
+    */
+  private[graft] def boilerplateComposed(df: DataFrame, key: Column, text: Column,
+                                         minDocs: Long, maxFrac: Double): DataFrame = {
     val paras = df
       .select(key.as("__k"),
         explode(split(coalesce(text, lit("")), "\n\n")).as("__p"))
@@ -416,10 +526,8 @@ object Rules {
         sum(col("__len")).as("__tot"),
         sum(when(col("__ndocs") >= minDocs, col("__len")).otherwise(0L)).as("__shared"),
         sum(when(col("__ndocs") >= minDocs, 1L).otherwise(0L)).as("__nshared"))
-      .withColumn("__frac", col("__shared").cast(DoubleType) / col("__tot"))
-    verdict(perDoc.filter(col("__frac") >= maxFrac), col("__k"),
-      "ccnet_boilerplate", col("__frac"),
-      concat_ws("/", col("__nshared"), lit("shared_paras")))
+    explodeEntries(perDoc, col("__k"), Seq(boilerplateEntry(
+      col("__tot"), col("__shared"), col("__nshared"), maxFrac)))
   }
 
   /** Benchmark-decontamination rule (GPT-3 appx C shape, via
@@ -428,17 +536,32 @@ object Rules {
     * `minHits = 1` is the published semantics — one 8-13-gram collision
     * with a test set is a leak, whatever the document's length; raise it
     * (or gate on `score`, the collision fraction) for noisier eval sets.
-    * Eval side broadcasts (eval suites are tiny next to the corpus);
-    * the one shuffle carries a row per document, never gram text.
+    * The eval grams' 8-byte hashes (at most
+    * [[graft.functions.SharedHashes.MaxBroadcastGrams]]; a larger eval
+    * side fails, as every real eval suite is far smaller) are fetched at
+    * construction and probed by a per-document kernel in one narrow
+    * pass — no shuffle, no join.
     */
   def contaminationRule(df: DataFrame, key: Column, text: Column,
                         eval: DataFrame, n: Int = 8,
-                        minHits: Long = 1): DataFrame = {
-    val c = graft.functions.Decontam.contamination(df, key, text, eval, n)
-    verdict(c.filter(col("n_contaminated") >= minHits), col("__k"),
-      "decontam", coalesce(col("contam_frac"), lit(0.0)),
-      concat_ws("/", col("n_contaminated"), lit("eval_gram_hits")))
+                        minHits: Long = 1): DataFrame =
+    textBattery(df, key, text, Seq(Right(contaminationKernel(eval, n, minHits))))
+
+  private[graft] def contaminationKernel(eval: DataFrame, n: Int,
+                                         minHits: Long): TextRule = {
+    import graft.functions.Decontam
+    val set = Decontam.evalHashes(eval)
+    TextRule(tokens = true,
+      (_, toks) => Decontam.hitStats(toks, n, set),
+      st => contaminationEntry(st.getField("n_grams"),
+        st.getField("n_contaminated"), minHits))
   }
+
+  private[graft] def contaminationEntry(nGrams: Column, nContaminated: Column,
+                                        minHits: Long): Column =
+    entry(nContaminated >= minHits, "decontam",
+      coalesce(graft.functions.Decontam.contamFrac(nContaminated, nGrams), lit(0.0)),
+      concat_ws("/", nContaminated, lit("eval_gram_hits")))
 
   /** Cross-document exact-substring duplication rule (Lee et al. 2021
     * ExactSubstr shape, via [[graft.functions.ExactSubstr]]): flag any
@@ -448,38 +571,74 @@ object Rules {
     * preserve the byte-identical scrub contract, same reasoning as the
     * C4 line battery. Complements MinHash/SimHash whole-doc near-dup:
     * those miss a long verbatim span inside two otherwise-different
-    * documents; this rule measures exactly that.
+    * documents; this rule measures exactly that. Regimes (and the key
+    * contract) as in [[graft.functions.ExactSubstr.substrDupStats]];
+    * eager.
     */
   def exactSubstrDup(df: DataFrame, key: Column, text: Column,
                      l: Int = 50, minDocs: Long = 2L,
-                     maxFrac: Double = 0.2): DataFrame = {
-    val st = graft.functions.ExactSubstr.substrDupStats(df, key, text, l, minDocs)
-    verdict(st.filter(col("dup_frac") >= maxFrac), col("__k"),
-      "exact_substr_dup", col("dup_frac"),
-      concat_ws("/", col("dup_tokens"), col("n_tokens"), lit(s"dup@L$l")))
+                     maxFrac: Double = 0.2): DataFrame =
+    textBattery(df, key, text,
+      Seq(exactSubstrRegime(df, key, text, l, minDocs, maxFrac)))
+
+  private[graft] def exactSubstrRegime(
+      df: DataFrame, key: Column, text: Column, l: Int, minDocs: Long,
+      maxFrac: Double,
+      cap: Long = graft.functions.SharedHashes.MaxBroadcastGrams): TextRegime = {
+    import graft.functions.ExactSubstr
+    ExactSubstr.checkArgs(l, minDocs)
+    ExactSubstr.sharedGrams(df, key, text, l, minDocs, cap) match {
+      case Some(set) => Right(TextRule(tokens = true,
+        (_, toks) => ExactSubstr.coverStats(toks, l, set),
+        st => exactSubstrEntry(st.getField("dup_tokens"),
+          st.getField("n_tokens"), l, maxFrac)))
+      case None => Left(exactSubstrComposed(df, key, text, l, minDocs, maxFrac))
+    }
+  }
+
+  private def exactSubstrEntry(dupTokens: Column, nTokens: Column, l: Int,
+                               maxFrac: Double): Column = {
+    val frac = graft.functions.ExactSubstr.dupFrac(dupTokens, nTokens)
+    entry(frac >= maxFrac, "exact_substr_dup", frac,
+      concat_ws("/", dupTokens, nTokens, lit(s"dup@L$l")))
+  }
+
+  /** The exact-substring rule's distributed regime, also the composed
+    * reference its kernel is differential-tested against.
+    */
+  private[graft] def exactSubstrComposed(df: DataFrame, key: Column, text: Column,
+                                         l: Int, minDocs: Long,
+                                         maxFrac: Double): DataFrame = {
+    val st = graft.functions.ExactSubstr.substrDupStatsComposed(df, key, text, l, minDocs)
+    explodeEntries(st, col("__k"),
+      Seq(exactSubstrEntry(col("dup_tokens"), col("n_tokens"), l, maxFrac)))
   }
 
   /** Model-based quality rule ([[graft.functions.QualityModel]] — the
     * fastText-shaped hashed-trigram classifier the CCNet/DCLM/FineWeb-Edu
     * stack runs next to the heuristic batteries): drop documents scoring
-    * below `minScore`. One codegen'd narrow map over whatever scan reads
-    * the text column — the ~32 KB weight table rides inside the
-    * expression to every executor; zero shuffle, no model server. The
-    * [[graft.functions.QualityModel.Default]] model is the built-in; a
-    * production model trained on real labels loads via
+    * below `minScore`. One codegen'd per-document map — a text battery
+    * kernel with no cross-document state — and the ~32 KB weight table
+    * rides inside the expression to every executor; zero shuffle, no
+    * model server. The [[graft.functions.QualityModel.Default]] model is
+    * the built-in; a production model trained on real labels loads via
     * [[graft.functions.QualityModel.fromFrame]].
     */
   def modelQualityRule(df: DataFrame, key: Column, text: Column,
                        minScore: Double,
                        model: graft.functions.QualityModel.Model =
-                         graft.functions.QualityModel.Default): DataFrame = {
-    val scored = df.select(key.as("__k"),
-        graft.functions.QualityModel.scoreColumn(
-          graft.functions.TextFns.normText(text), model).as("__q"))
-      .filter(col("__q") < minScore)
-    verdict(scored, col("__k"), "model_quality", col("__q"),
-      concat_ws("<", round(col("__q"), 4), lit(minScore.toString)))
-  }
+                         graft.functions.QualityModel.Default): DataFrame =
+    textBattery(df, key, text, Seq(Right(modelQualityKernel(minScore, model))))
+
+  private[graft] def modelQualityKernel(
+      minScore: Double,
+      model: graft.functions.QualityModel.Model =
+        graft.functions.QualityModel.Default): TextRule =
+    TextRule(tokens = false,
+      (t, _) => graft.functions.QualityModel.scoreColumn(
+        graft.functions.TextFns.normText(t), model),
+      q => entry(q < minScore, "model_quality", q,
+        concat_ws("<", round(q, 4), lit(minScore.toString))))
 
   /** URL battery (RefinedWeb §3.1 shape, via [[graft.functions.UrlFns]]):
     * blocked-host membership, adult/spam keyword in the URL, and

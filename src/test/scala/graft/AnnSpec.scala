@@ -25,7 +25,7 @@ class AnnSpec extends AnyFunSuite {
       (Seq(1.0f, 2.0f), Seq(1.0f)))                // length mismatch: NULL
       .toDF("a", "b")
     val both = ff.select(Ann.cosine(col("a"), col("b")).as("f"),
-      Ann.cosineComposed(col("a"), col("b")).as("c")).collect()
+      ComposedRefs.cosineComposed(col("a"), col("b")).as("c")).collect()
     both.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"null mismatch: $r")
       if (!r.isNullAt(0))
@@ -50,14 +50,14 @@ class AnnSpec extends AnyFunSuite {
     val fd = Seq((Seq(0.6f, -1.25f, 4.5f))).toDF("a")
       .select(col("a"), array(lit(0.25), lit(-3.5), lit(0.875)).as("b"))
     val r2 = fd.select(Ann.cosine(col("a"), col("b")).as("f"),
-      Ann.cosineComposed(col("a"), col("b")).as("c")).head()
+      ComposedRefs.cosineComposed(col("a"), col("b")).as("c")).head()
     assert(java.lang.Double.doubleToRawLongBits(r2.getDouble(0)) ==
       java.lang.Double.doubleToRawLongBits(r2.getDouble(1)))
     // null element poisons the fold on either side
     val ne = Seq((Seq(Some(1.0f), None, Some(2.0f)), Seq(Some(1.0f), Some(1.0f), Some(1.0f))))
       .toDF("a", "b")
     val r3 = ne.select(Ann.cosine(col("a"), col("b")).as("f"),
-      Ann.cosineComposed(col("a"), col("b")).as("c")).head()
+      ComposedRefs.cosineComposed(col("a"), col("b")).as("c")).head()
     assert(r3.isNullAt(0) && r3.isNullAt(1), "null element must yield NULL on both")
   }
 
@@ -139,7 +139,7 @@ class AnnSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").as("vec"))
     val both = e.select(
       Ann.srpBuckets(col("vec"), 64, 6, 4).as("fused"),
-      transform(Ann.srpSignaturesComposed(col("vec"), 64, 6, 4),
+      transform(ComposedRefs.srpSignaturesComposed(col("vec"), 64, 6, 4),
         s => s.getField("bucket")).as("composed"))
     both.collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))

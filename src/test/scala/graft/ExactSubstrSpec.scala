@@ -17,7 +17,7 @@ class ExactSubstrSpec extends AnyFunSuite {
   private val L = 4
 
   /** Independent brute force: (ntok, dupWindows, dupTokens) per key. */
-  private def brute(rows: Seq[(String, String)], l: Int)
+  private def brute(rows: Seq[(String, String)], l: Int, minDocs: Int = 2)
       : Map[String, (Long, Long, Long)] = {
     def toks(t: String): Seq[String] =
       if (t == null) Nil
@@ -30,7 +30,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val ndocs = grams.toSeq.flatMap { case (k, gs) => gs.map(_._2 -> k) }
       .distinct.groupBy(_._1).view.mapValues(_.size).toMap
     rows.map { case (k, t) =>
-      val shared = grams(k).filter(g => ndocs(g._2) >= 2).map(_._1).sorted
+      val shared = grams(k).filter(g => ndocs(g._2) >= minDocs).map(_._1).sorted
       val cover = shared.foldLeft((0L, -1000000)) { case ((acc, prev), p) =>
         (acc + math.min(l, p - prev), p)
       }._1
@@ -74,6 +74,52 @@ class ExactSubstrSpec extends AnyFunSuite {
     // within-doc repetition alone is NOT cross-document duplication
     assert(got("c")._3 == 0)
     assert(got("d")._3 == 0 && got("e")._3 == 0 && got("f") == (0L, 0L, 0L, None))
+  }
+
+  test("both regimes == brute force on hostile input (L = 1..5, minDocs 2 and 3)") {
+    // short docs, L = 1, within-doc repeats (count once toward minDocs),
+    // spans shared by exactly 2 and exactly 3 docs, non-BMP and
+    // case-folded tokens, blank/separator-only/null docs
+    val hostile = rows ++ Seq(
+      ("g", "Shared Three Way span of words 𝄞 here"),
+      ("h", "the shared three way SPAN of words 𝄞 here too"),
+      ("i", "prefix shared three way span of words 𝄞"),
+      ("j", "loop loop loop loop loop loop"),
+      ("k", "loop loop"),
+      ("l", "   \t  "),
+      ("m", "\n\n\n"),
+      ("n", "x"))
+    val df = hostile.toDF("k", "t")
+    for (l <- 1 to 5; minDocs <- Seq(2, 3); bound <- Seq(4000000L, 0L)) {
+      val got = ExactSubstr.substrDupStats(df, col("k"), col("t"), l, minDocs.toLong,
+          maxBroadcastGrams = bound)
+        .collect()
+        .map(r => r.getAs[String]("__k") ->
+          (r.getAs[Long]("n_tokens"), r.getAs[Long]("n_dup_windows"),
+           r.getAs[Long]("dup_tokens")))
+        .toMap
+      assert(got == brute(hostile, l, minDocs), s"L=$l minDocs=$minDocs bound=$bound")
+    }
+  }
+
+  test("a repeated key counts once toward minDocs, as in the distributed chain") {
+    // "a" crawled twice: its span is shared with "b" (2 keys), and its own
+    // words are not shared with any OTHER key
+    val dup = (rows :+ rows.head).toDF("k", "t")
+    def stats(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("__k"), r.getAs[Long]("n_tokens"),
+        r.getAs[Long]("n_dup_windows"), r.getAs[Long]("dup_tokens")))
+      .toSeq.sortBy(_.toString)
+    for (l <- Seq(1, L); minDocs <- Seq(2L, 3L)) {
+      val got = stats(ExactSubstr.substrDupStats(dup, col("k"), col("t"), l, minDocs))
+      assert(got == stats(ExactSubstr.substrDupStatsComposed(dup, col("k"), col("t"), l, minDocs)),
+        s"L=$l minDocs=$minDocs")
+      assert(got.count(_._1 == "a") == 2, "one stats row per input row")
+    }
+    // at L = 4 the two copies of "a" cover the same 6 span tokens as one
+    // copy does (not all 12 of its tokens, as two documents would)
+    val a = stats(ExactSubstr.substrDupStats(dup, col("k"), col("t"), L)).filter(_._1 == "a")
+    assert(a.forall(r => r._2 == 12L && r._4 == 6L), a.toString)
   }
 
   test("deterministic across repartitioning") {

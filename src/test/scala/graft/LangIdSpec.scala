@@ -189,7 +189,7 @@ class LangIdSpec extends AnyFunSuite {
     Seq(docs, edge.toDF()).foreach { d =>
       val mismatch = d.select(
           LangId.markerLang(col("text")).as("f"),
-          LangId.markerLangComposed(col("text")).as("c"))
+          ComposedRefs.markerLangComposed(col("text")).as("c"))
         .filter(!(col("f") <=> col("c")))
       assert(mismatch.count() == 0,
         mismatch.collect().take(5).mkString("; "))
@@ -215,7 +215,7 @@ class LangIdSpec extends AnyFunSuite {
     ).toDF("text")
     val mismatch = docs.select(
         LangId.markerLang(col("text")).as("f"),
-        LangId.markerLangComposed(col("text")).as("c"))
+        ComposedRefs.markerLangComposed(col("text")).as("c"))
       .filter(!(col("f") <=> col("c")))
     assert(mismatch.count() == 0, mismatch.collect().take(5).mkString("; "))
     val got = docs.select(LangId.markerLang(col("text")))

@@ -146,8 +146,14 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val pages = graft.sources.PagesGen.generate(spark, 200, 2).toDF()
-    val v = graft.rules.Rules.boilerplateParagraphs(
-      pages, col("url"), col("text"))
+    // the OVERFLOW regime (set bound 0 — the 200 pages share paragraphs,
+    // so the set overflows): the composed shuffle chain. The below-bound
+    // regime has no exchange at all (see the text battery tests below).
+    val regime = graft.rules.Rules.boilerplateRegime(
+      pages, col("url"), col("text"), 2, 0.5, cap = 0)
+    assert(regime.isLeft, "bound 0 must select the composed chain")
+    val v = graft.rules.Rules.textBattery(
+      pages, col("url"), col("text"), Seq(regime))
     // Walk the physical tree: every Exchange must ship only (__h, __k,
     // __len)-shaped rows — the exploded paragraph STRING `__p` must be
     // projected away before any shuffle boundary. At 10^8 docs a shuffle
@@ -170,8 +176,9 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val pages = graft.sources.PagesGen.generate(spark, 200, 2).toDF()
+    // the OVERFLOW regime (set bound 0): the composed shuffle chain
     val st = graft.functions.ExactSubstr.substrDupStats(
-      pages, col("url"), col("text"), l = 8)
+      pages, col("url"), col("text"), l = 8, maxBroadcastGrams = 0)
     // Same contract as boilerplateParagraphs: the exploded L-gram STRING
     // `__g` must die in the scan partition (projected to xxhash64) —
     // every Exchange ships only (__h, __k, __pos)-shaped rows. An
@@ -190,6 +197,77 @@ class PlanSpec extends AnyFunSuite {
       // text/token columns must die in the scan partition too
       assert(!names.contains("__t") && !names.contains("__toks"),
         s"shuffle carries doc text/tokens: ${names.mkString(",")}")
+    }
+  }
+
+  private def shuffles(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    (root, root.collect { case e: ShuffleExchangeExec => e })
+  }
+
+  test("text battery set aggregates: exchanges carry only the key flag, 8-byte hash and count") {
+    import org.apache.spark.sql.types.{BooleanType, LongType}
+    import graft.functions.{ExactSubstr, Paragraphs}
+    val pages = graft.sources.PagesGen.generate(spark, 200, 2).toDF()
+    // the shared-paragraph and shared-L-gram set aggregates are the only
+    // shuffles of the below-bound battery: one map-side-combined
+    // (key flag, hash, partial count) exchange each — never text, tokens,
+    // gram or paragraph strings, nor the document key itself (only its
+    // 8-byte hash, counted to check that keys are unique)
+    Seq("paragraphs" -> Paragraphs.sharedFrame(pages, col("url"), col("text"), 2),
+        "l-grams" -> ExactSubstr.sharedGramFrame(pages, col("url"), col("text"), 8, 2))
+      .foreach { case (name, agg) =>
+        val (_, exchanges) = shuffles(agg)
+        assert(exchanges.nonEmpty, s"$name: expected the aggregate's exchange")
+        exchanges.foreach { e =>
+          val names = e.output.map(_.name)
+          Seq("__p", "__g", "__t", "__toks", "__k", "url", "text").foreach { c =>
+            assert(!names.contains(c), s"$name: shuffle carries $c: ${names.mkString(",")}")
+          }
+          assert(e.output.map(_.dataType) == Seq(BooleanType, LongType, LongType),
+            s"$name: shuffle is not (flag, hash, count): ${e.output.mkString(",")}")
+        }
+      }
+  }
+
+  test("text battery below the bound: per-document plans, zero shuffles and no window") {
+    import graft.rules.Rules
+    import spark.implicits._
+    val pages = graft.sources.PagesGen.generate(spark, 200, 2).toDF()
+    val ev = graft.functions.Decontam.evalGrams(
+      Seq("the quick brown fox jumps over the lazy dog near the river").toDF("p"),
+      col("p"), 8)
+    val plans = Seq(
+      "boilerplate" -> Rules.boilerplateParagraphs(pages, col("url"), col("text")),
+      "decontam" -> Rules.contaminationRule(pages, col("url"), col("text"), ev, 8),
+      "substr" -> Rules.exactSubstrDup(pages, col("url"), col("text"), l = 8),
+      "substr stats" -> graft.functions.ExactSubstr.substrDupStats(
+        pages, col("url"), col("text"), l = 8),
+      "battery" -> Rules.textBattery(pages, col("url"), col("text"), Seq(
+        Rules.boilerplateRegime(pages, col("url"), col("text"), 2, 0.5),
+        Right(Rules.contaminationKernel(ev, 8, 1)),
+        Rules.exactSubstrRegime(pages, col("url"), col("text"), 8, 2, 0.5),
+        Right(Rules.modelQualityKernel(0.45)))))
+    val sharedParas = graft.functions.Paragraphs.sharedFrame(pages, col("url"), col("text"), 2)
+      .filter(!col("__key")).select("__h").as[Long].collect()
+    assert(sharedParas.nonEmpty)
+    plans.foreach { case (name, df) =>
+      val (root, exchanges) = shuffles(df)
+      assert(exchanges.isEmpty,
+        s"$name: below-bound plan shuffles: ${root.toString.take(1200)}")
+      assert(!root.toString.contains("Window"),
+        s"$name: below-bound plan sorts a window: ${root.toString.take(1200)}")
+      // the broadcast set is named by its size only, never its contents
+      assert("<\\d+ hashes>".r.findFirstIn(df.queryExecution.toString).isDefined,
+        s"$name: plan does not name its hash set: ${root.toString.take(1200)}")
+      val planText = df.queryExecution.toString
+      assert(!sharedParas.exists(h => planText.contains(h.toString)),
+        s"$name: plan string carries set contents")
     }
   }
 }
