@@ -2125,9 +2125,7 @@ object Queries {
     * ([[graft.curation.Select.tokenBudget]]): order each language by
     * (quality bucket, portable 60-bit doc hash) and keep docs until the
     * running token total crosses 2,000 — the data-mixing step of a
-    * training-corpus build. The scalable histogram-cutoff twin
-    * ([[graft.curation.Select.tokenBudgetScalable]]) is spec-pinned
-    * equal to this exact path.
+    * training-corpus build.
     */
   val dqTokenBudget: (SparkSession, String) => DataFrame = (s, dir) => {
     val base = docs(s, dir).select(col("doc_id"), col("lang"),

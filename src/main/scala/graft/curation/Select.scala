@@ -3,7 +3,7 @@ package graft.curation
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Corpus SELECTION operators — the step after quality filtering in a
   * training-data pipeline: split each language's documents into quality
@@ -18,21 +18,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * (`dq_quality_buckets`, `dq_token_budget`) state the same semantics
   * with window functions.
   *
-  * Two regimes per operator:
-  *  - EXACT (oracle semantics): one range-partitioned sort per language
-  *    (`ntile` / running-sum window). Right up to the scale where a
-  *    global per-lang sort is acceptable — Spark plans it as a single
-  *    Exchange(lang) + in-partition sort.
-  *  - SCALABLE (10⁹⁺ rows/lang): no global sort. Buckets come from
-  *    sampled cutoffs ([[bucketCutoffs]] + [[assignByCutoffs]], the
-  *    CCNet approach — its cutoffs are quantiles of a sample, not of
-  *    the corpus); the budget comes from a histogram cutoff
-  *    ([[tokenBudgetScalable]]): aggregate token mass per (lang,
-  *    bucket, hash-prefix bin), find each language's boundary bin on
-  *    the driver from bounded metadata, keep whole bins below it, drop
-  *    whole bins above it, and resolve ONLY the boundary bin (a
-  *    2^-binBits fraction) with the exact window. Spec-pinned equal to
-  *    the exact regime on the same input.
+  * Each operator is one range-partitioned sort per language (`ntile` /
+  * running-sum window): Spark plans it as a single Exchange(lang) +
+  * in-partition sort, which holds up to the scale where a per-language
+  * sort is acceptable. A language too large for one sorted partition
+  * needs a sampled-cutoff / histogram regime (CCNet's quantiles of a
+  * sample), which is not built here.
   */
 object Select {
 
@@ -40,16 +31,14 @@ object Select {
   // Quality buckets
   // =====================================================================
 
-  /** EXACT per-language quality buckets: ntile(k) over ascending
+  /** Per-language quality buckets: ntile(k) over ascending
     * (score, key) within each language — bucket 1 = best (lowest
     * score; for CCNet feed perplexity so head = fluent). Ties broken
     * by key: deterministic under any partitioning.
     *
-    * Output: (key, lang, score, bucket). One shuffle on lang; the sort
-    * is per-language — a language with 10¹¹ docs makes this the
-    * sampled-cutoff regime's job instead.
+    * Appends a `bucket` column; all input columns pass through. One
+    * shuffle on lang; the sort is per-language.
     */
-  /** Appends a `bucket` column; all input columns pass through. */
   def ntileBuckets(df: DataFrame, key: Column, lang: Column, score: Column,
                    k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -57,62 +46,11 @@ object Select {
       ntile(k).over(Window.partitionBy(lang).orderBy(score, key)))
   }
 
-  /** SCALABLE bucket cutoffs from a deterministic hash sample: keep rows
-    * with `pmod(xxhash64(key), sampleMod) = 0` (partition-independent, a
-    * pure function of content — same rationale as the IVF training
-    * sample, embed/Ann.scala), then take per-language exact quantile
-    * positions of the SORTED sample. Returns (lang, cuts: array of k-1
-    * ascending cutoff scores).
-    *
-    * The per-language aggregation buffer is `sort_array(collect_list)`
-    * of the SAMPLE only — size corpusRows/(langs·sampleMod); pick
-    * sampleMod so that is ≤ ~10⁶ (at 10¹² docs, sampleMod = 10⁶ leaves
-    * a 10⁶-row global sample). sort_array makes the result independent
-    * of merge arrival order.
-    *
-    * Cut positions replicate ntile's bucket sizes: position of cut i in
-    * an n-row sorted sample is `i·floor(n/k) + min(i, n mod k)` — so on
-    * the FULL corpus (sampleMod = 1) with distinct scores,
-    * [[assignByCutoffs]] reproduces [[ntileBuckets]] exactly
-    * (SelectSpec pins this).
-    */
-  def bucketCutoffs(df: DataFrame, key: Column, lang: Column, score: Column,
-                    k: Int, sampleMod: Long = 1L): DataFrame = {
-    require(k >= 1 && sampleMod >= 1)
-    val samp = df.select(key.as("key"), lang.as("lang"), score.as("score"))
-      .filter(pmod(xxhash64(col("key")), lit(sampleMod)) === 0)
-    val grouped = samp.groupBy(col("lang"))
-      .agg(sort_array(collect_list(col("score"))).as("__sorted"))
-    // k = 1: no cutoffs (sequence(1, 0) would count DOWN in Spark)
-    if (k == 1) grouped.select(col("lang"),
-      expr("CAST(array() AS array<double>)").as("cuts"))
-    else grouped.select(col("lang"),
-      expr(s"""transform(sequence(1, ${k - 1}), i ->
-               |  __sorted[CAST(i * CAST(size(__sorted) / $k AS INT)
-               |    + least(i, size(__sorted) % $k) AS INT) - 1])
-               |""".stripMargin.replaceAll("\n", " ")).as("cuts"))
-  }
-
-  /** Assign buckets from broadcast cutoffs: bucket = 1 + #(cuts with
-    * cut < score). A language absent from `cuts` gets bucket 1 (an
-    * unsampled tiny language has no cutoffs — everything is head).
-    * One broadcast join + one narrow array scan of k-1 elements; zero
-    * sort, zero per-lang shuffle.
-    */
-  def assignByCutoffs(df: DataFrame, key: Column, lang: Column, score: Column,
-                      cuts: DataFrame): DataFrame =
-    df.select(key.as("key"), lang.as("lang"), score.as("score"))
-      .join(broadcast(cuts), Seq("lang"), "left")
-      .select(col("key"), col("lang"), col("score"),
-        (lit(1) + coalesce(
-          size(filter(col("cuts"), c => c < col("score"))), lit(0)))
-          .as("bucket"))
-
   // =====================================================================
   // Token-budget selection
   // =====================================================================
 
-  /** EXACT per-language token-budget draw: order each language's docs by
+  /** Per-language token-budget draw: order each language's docs by
     * (bucket asc, rank asc, key asc) — best quality first, then a
     * deterministic uniform shuffle within the bucket via `rank` (pass a
     * portable content hash, e.g. TextFns.md5Long(key)) — and KEEP every
@@ -132,72 +70,5 @@ object Select {
       .withColumn("__before", coalesce(sum(col("tokens")).over(w), lit(0L)))
       .filter(col("__before") < budget)
       .select(col("key"), col("lang"), col("bucket"), col("tokens"))
-  }
-
-  /** SCALABLE token-budget draw — identical keep set to [[tokenBudget]]
-    * (SelectSpec pins equality across partitionings) without any
-    * per-language global sort:
-    *
-    *  1. Bin each row by (bucket, top binBits bits of rank) — a coarse
-    *     PREFIX of the exact order, so bins are contiguous runs of it
-    *     (`rank` must be a non-negative 60-bit hash, e.g.
-    *     TextFns.md5Long; ties within a bin stay within that bin).
-    *  2. One map-side-combinable groupBy (lang, bucket, bin) →
-    *     (token sum, row count). Driver collects ≤ langs·k·2^binBits
-    *     METADATA rows (binBits 10, k 3, 100 langs → 300k tiny rows),
-    *     walks each language's bins in order, and finds the boundary
-    *     bin where the running total crosses `budget`.
-    *  3. Bins wholly below the boundary KEEP (no sort touches them);
-    *     bins above DROP (never shuffled again); ONLY the boundary
-    *     bin's rows — a 2^-binBits fraction of one language — run the
-    *     exact running-sum window, seeded with the driver's
-    *     cumulative-before total.
-    */
-  def tokenBudgetScalable(df: DataFrame, key: Column, lang: Column,
-                          bucket: Column, rank: Column, tokens: Column,
-                          budget: Long, binBits: Int = 10): DataFrame = {
-    require(binBits >= 1 && binBits <= 40, s"binBits out of range: $binBits")
-    val base = df.select(key.as("key"), lang.as("lang"),
-        bucket.cast("int").as("bucket"),
-        rank.as("rank"), tokens.cast(LongType).as("tokens"))
-      .withColumn("__bin", shiftright(col("rank"), 60 - binBits))
-    val hist = base.groupBy(col("lang"), col("bucket"), col("__bin"))
-      .agg(sum(col("tokens")).as("t"), count(lit(1)).as("n"))
-      .collect()
-    // per lang, bins in exact-order prefix order: (bucket, bin)
-    final case class Bound(bucket: Int, bin: Long, before: Long)
-    val bounds: Map[String, Bound] = hist
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1)
-      .flatMap { case (lg, rows) =>
-        var acc = 0L
-        var found: Option[Bound] = None
-        rows.sortBy(t => (t._2, t._3)).foreach { case (_, b, bin, t) =>
-          if (found.isEmpty && acc + t >= budget) found = Some(Bound(b, bin, acc))
-          if (found.isEmpty) acc += t
-        }
-        // no boundary: whole language fits under budget — keep all
-        found.map(lg -> _)
-      }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bdf = broadcast(bounds.toSeq
-      .map { case (lg, b) => (lg, b.bucket, b.bin, b.before) }
-      .toDF("lang", "__bb", "__bbin", "__bbefore"))
-    val joined = base.join(bdf, Seq("lang"), "left")
-    val keepWhole = joined.filter(col("__bb").isNull ||
-        col("bucket") < col("__bb") ||
-        (col("bucket") === col("__bb") && col("__bin") < col("__bbin")))
-      .select(col("key"), col("lang"), col("bucket"), col("tokens"))
-    val wB = Window.partitionBy(col("lang"))
-      .orderBy(col("bucket"), col("rank"), col("key"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val boundary = joined.filter(col("bucket") === col("__bb") &&
-        col("__bin") === col("__bbin"))
-      .withColumn("__before",
-        col("__bbefore") + coalesce(sum(col("tokens")).over(wB), lit(0L)))
-      .filter(col("__before") < budget)
-      .select(col("key"), col("lang"), col("bucket"), col("tokens"))
-    keepWhole.unionByName(boundary)
   }
 }

@@ -52,27 +52,15 @@ object Hashing {
   def baseHashes(items: Column): Column =
     transform(items, s => pmod(TextFns.md5Long(s), lit(P)))
 
-  /** Fast base hash via xxhash64 — the ENGINE path. Codegen'd native hash,
-    * ~20× cheaper than md5+radix-parse; not SQL-portable, which the
-    * pipeline doesn't need (its oracle is the golden-label fixture).
-    */
-  def baseHashesFast(items: Column): Column =
-    transform(items, s => pmod(xxhash64(s), lit(P)))
-
-  private def minHashFrom(base: Column, k: Int): Column =
-    array(hashParams(k).map { case (a, b) =>
-      array_min(transform(base, h => pmod(lit(a) * h + lit(b), lit(P))))
-    }: _*)
-
   /** MinHash signature (k longs) over an array of string features
     * (shingles or tokens). Empty input ⇒ array of nulls. md5-portable.
     */
-  def minHashSig(items: Column, k: Int): Column =
-    minHashFrom(baseHashes(items), k)
-
-  /** MinHash signature on the fast xxhash64 base (engine hot path). */
-  def minHashSigFast(items: Column, k: Int): Column =
-    minHashFrom(baseHashesFast(items), k)
+  def minHashSig(items: Column, k: Int): Column = {
+    val base = baseHashes(items)
+    array(hashParams(k).map { case (a, b) =>
+      array_min(transform(base, h => pmod(lit(a) * h + lit(b), lit(P))))
+    }: _*)
+  }
 
   /** LSH band keys: signature split into `bands` rows of `rowsPerBand`,
     * each band hashed to one long key. Docs sharing ANY band key are

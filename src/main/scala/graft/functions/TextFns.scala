@@ -59,9 +59,6 @@ object TextFns {
   def sumTokLenFast(c: Column): Column =
     GraftExpr.column(TokenLenSumExpr(GraftExpr.expr(c)))
 
-  /** Character count of the raw string. */
-  def charLen(c: Column): Column = length(c)
-
   /** Count of symbol characters (not alnum, not whitespace). */
   def symbolCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "[^A-Za-z0-9\\s]", ""))

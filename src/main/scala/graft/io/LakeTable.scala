@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   2. rename to                `root/<partCol>=<part>/`
   *   3. touch                    `root/<partCol>=<part>/_COMMITTED`
   * A partition is visible iff its `_COMMITTED` marker exists; a crashed
-  * run leaves staging garbage that is ignored and cleaned on next open.
+  * run leaves staging garbage that reads ignore and the next
+  * `Checkpointer.run` deletes before it starts a partition.
   * This is what makes any failed 10¹²-doc run resumable without
   * recomputing finished partitions.
   */
@@ -50,8 +51,6 @@ final class ParquetLakeTable(val spark: SparkSession, val root: String,
       .toSet
   }
 
-  def isCommitted(v: String): Boolean = fs.exists(marker(v))
-
   def overwritePartition(df: DataFrame, partValue: String): Unit = {
     val staging = new Path(root,
       s"_staging/$partValue-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -73,6 +72,9 @@ final class ParquetLakeTable(val spark: SparkSession, val root: String,
       .parquet(parts.map(v => partPath(v).toString): _*)
   }
 
+  /** Deletes `_staging/`: what a crashed commit left behind. Only safe
+    * while no writer is committing to this table.
+    */
   def cleanStaging(): Unit = {
     val st = new Path(root, "_staging")
     if (fs.exists(st)) fs.delete(st, true)

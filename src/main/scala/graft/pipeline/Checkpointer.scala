@@ -50,6 +50,9 @@ object Checkpointer {
     val keptTable = new ParquetLakeTable(spark, s"$outRoot/kept", "pdate")
     val verdictTable = new ParquetLakeTable(spark, s"$outRoot/verdicts", "pdate")
     val lineageTable = new ParquetLakeTable(spark, s"$outRoot/lineage", "pdate")
+    // one writer per outRoot: before any day starts, what a crashed run
+    // left in staging is garbage (never visible — no _COMMITTED marker)
+    Seq(keptTable, verdictTable, lineageTable).foreach(_.cleanStaging())
 
     val withDay = pages.withColumn("pdate", to_date(col("warc_ts")).cast("string"))
     val days = withDay.select("pdate").distinct().as[String].collect().sorted

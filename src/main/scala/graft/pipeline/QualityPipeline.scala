@@ -2,12 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
 import graft.functions._
 import graft.rules.Rules
-import graft.model.ColumnProfile
-import graft.profile.Profiler
 
 /** The webtext keep/drop + scrub engine (north rule).
   *
@@ -20,7 +17,7 @@ import graft.profile.Profiler
   *   features ──(dedup groupBy on 8-byte hash)──> verdicts₁b
   *   features ──(MinHash bands groupBy)──> verdicts₁c
   *   survivors₁ = features anti-join verdicts₁
-  *   survivors₁ ──(corpus-stat + group rules)──> verdicts₂
+  *   survivors₁ ──(bounded stats fetch + one entry pass)──> verdicts₂
   *   kept = pages (SECOND source scan) anti-join (verdicts₁ ∪ verdicts₂),
   *          + scrubbed_text + lite-kernel output features (narrow)
   *
@@ -36,6 +33,26 @@ import graft.profile.Profiler
   */
 object QualityPipeline {
 
+  /** Rule thresholds and opt-in batteries. Under the defaults, one `run`
+    * over 3,000 PagesGen pages (`PagesGen.generate(spark, 3000, 8)`)
+    * hits the planted classes as below (rows: rule; columns: planted
+    * class; a page may hit several rules). pii and toxic pages hit no
+    * rule: they are kept and scrubbed. The dedup rules also hit clean
+    * and empty pages, because a cluster keeps only its min url.
+    * {{{
+    * rule             bad_lang clean dup empty extreme gibberish near_dup rep_lines symbol
+    * dup_lines               .     .   .     .       .         .        .        46      .
+    * duplication             .    19  11    22       .         .        .         .      .
+    * empty                   .     .   .    34       .         .        .         .      .
+    * extreme_n_chars         .     .   .     .      38         .        .         .      .
+    * extreme_n_words         .     .   .     .      38         .        .         .      .
+    * lang_mismatch          48     .   .     .       .         .        .         .      .
+    * near_dup                .    31  11    22       .         .       19         .      .
+    * perplexity              .     .   .    23       .        39        .         1     36
+    * stopword_ratio          .     .   .    23       .         .        .         9     13
+    * symbol_ratio            .     .   .     .       .         .        .         .     36
+    * }}}
+    */
   final case class Config(
       minWords: Int = 30,                // C4-style short-doc rule
       maxSymbolRatio: Double = 0.10,     // Gopher symbol-to-char
@@ -678,9 +695,9 @@ object QualityPipeline {
     * MinHash shingle) and costs one narrow long (or two) per doc vs k=32
     * signature longs. 60-bit pigeonhole banding through ~10⁸ docs;
     * 128-bit Manku block-pair banding for the 10⁹⁺ regime where 15-bit
-    * chunks saturate (Rules.scala scaladoc has the arithmetic; BENCH.md
-    * the measured occupancy histogram). None (default) adds zero work —
-    * the kernel skips the wide votes and no rule job runs.
+    * chunks saturate (the Rules.simHashNearDupWide scaladoc has the
+    * arithmetic and the measured occupancy table). None (default) adds
+    * zero work — the kernel skips the wide votes and no rule job runs.
     */
   def simHashVerdicts(feat: DataFrame, cfg: Config): Option[DataFrame] =
     cfg.simHashNearDupBits.map {
@@ -699,42 +716,63 @@ object QualityPipeline {
   // ---------------------------------------------------------------------
   // Pass 2 — corpus-stat rules over pass-1 survivors
   // ---------------------------------------------------------------------
-  /** Pass-2 corpus statistics (z-score gates + moments + tendency arming)
-    * come from ONE fused aggregation job — separate Profiler/moments/
-    * tendency actions each cost a full job round-trip, and those fixed
-    * latencies (not compute) were the scaling-efficiency ceiling.
-    * All sums are exact decimals (order-independent — see Stats).
+  /** Pass 2: the corpus-stat rules judged in ONE narrow pass over the
+    * survivors, in the shape of pass 1. Two driver fetches run first,
+    * concurrently: the global stats row (exact moments, `countDistinct`
+    * uniqueness gates, tendency count) and one `groupBy(lang, tld)`
+    * aggregate bounded by [[MaxStatGroups]]. The driver folds the groups
+    * exactly into per-language perplexity moments and per-pair counts,
+    * and the survivors take one broadcast join to that local relation.
+    * The verdicts are a CHECKPOINT LEAF, not a cache: a caller looping
+    * over partitions would otherwise accumulate one never-released cache
+    * per call; a localCheckpoint block is freed with its DataFrame.
     */
   def pass2(survivors: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val (v2, statCols) = pass2Impl(survivors, cfg)
-    // materialize as a CHECKPOINT LEAF, not a cache: a long-running caller
-    // looping over partitions via pass2 would otherwise accumulate one
-    // never-released cache per call; a localCheckpoint block is freed by
-    // the ContextCleaner when the DataFrame is GC'd
     val par = survivors.sparkSession.sparkContext.defaultParallelism
-    val out = v2.coalesce(par).localCheckpoint(true)
-    statCols.unpersist()
-    out
+    val v2 = pass2Verdicts(survivors, cfg)
+    ph("v2 checkpoint")(v2.coalesce(par).localCheckpoint(true))
   }
 
-  /** pass2 returning (verdicts, internal statCols cache) so [[run]] can
-    * release the cache once the result set is materialised.
+  /** Bound on the (lang, tld) groups pass 2 fetches to the driver, one
+    * ~100-byte row each. Web text holds ~10² languages and ~10³ TLDs,
+    * and only occupied pairs appear; past the bound pass 2 fails rather
+    * than pull an unbounded set into the driver heap.
     */
-  private def pass2Impl(survivors: DataFrame, cfg: Config): (DataFrame, DataFrame) = {
-    val statCols = survivors.select("url", "lang", "n_chars", "n_words", "perplexity")
-      .cache()
+  val MaxStatGroups: Long = 100000L
+
+  /** The pass-2 verdicts before the checkpoint: fetches the stats (the
+    * group fetch under `cap`) and returns the lazy entry pass.
+    */
+  private[graft] def pass2Verdicts(survivors: DataFrame, cfg: Config,
+                                   cap: Long = MaxStatGroups): DataFrame = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
     import org.apache.spark.sql.types.DecimalType
+    import graft.profile.Stats
+    val spark = survivors.sparkSession
+    import spark.implicits._
     def dec(c: String) = col(c).cast(DecimalType(38, 10))
     def decSq(c: String) =
       col(c).cast(DecimalType(19, 5)) * col(c).cast(DecimalType(19, 5))
-    val row = statCols.agg(
+    // host suffix of the url (".com"): null url → null, no match → ""
+    val tld = regexp_extract(col("url"), "https?://[^/]*?(\\.[a-z]+)(?:[:/]|$)", 1)
+    val groupsF = Future(ph("pass2 group fetch")(
+      survivors.groupBy(col("lang"), tld.as("tld"))
+        .agg(count(lit(1)).as("rows"), count(col("perplexity")).as("p_n"),
+          sum(dec("perplexity")).as("p_s"), sum(decSq("perplexity")).as("p_s2"))
+        .limit((cap + 1).min(Int.MaxValue.toLong).toInt).collect()))
+    val row = ph("pass2 stats fetch")(survivors.agg(
       count(col("n_chars")).as("nc_n"), countDistinct(col("n_chars")).as("nc_d"),
       sum(dec("n_chars")).as("nc_s"), sum(decSq("n_chars")).as("nc_s2"),
       count(col("n_words")).as("nw_n"), countDistinct(col("n_words")).as("nw_d"),
       sum(dec("n_words")).as("nw_s"), sum(decSq("n_words")).as("nw_s2"),
       sum((col("n_words") < col("n_chars")).cast("long")).as("tend_lt"),
-      count(lit(1)).as("total")).head()
-    def momentsOf(p: String) = graft.profile.Stats.fromSums(
+      count(lit(1)).as("total")).head())
+    val groups = Await.result(groupsF, Duration.Inf)
+    if (groups.length > cap) throw new IllegalArgumentException(
+      s"pass 2 holds more than $cap (lang, tld) groups, over the driver fetch bound")
+    def momentsOf(p: String) = Stats.fromSums(
       row.getAs[Long](s"${p}_n"),
       row.getAs[java.math.BigDecimal](s"${p}_s"),
       row.getAs[java.math.BigDecimal](s"${p}_s2"))
@@ -742,35 +780,36 @@ object QualityPipeline {
       val n = row.getAs[Long](s"${p}_n")
       if (n == 0) 0.0 else row.getAs[Long](s"${p}_d").toDouble / n
     }
-    val extremes = Seq("n_chars" -> "nc", "n_words" -> "nw").flatMap {
-      case (c, p) =>
-        Rules.zScoreExtreme(statCols, col("url"), col(c), c,
-          uniqOf(p), momentsOf(p), cfg.zScoreK)
+    // per-language perplexity moments: the exact sums of a language's
+    // groups add up to its own (a null sum is a group with no perplexity)
+    val byLang = groups.groupBy(_.getString(0)).map { case (lang, gs) =>
+      def total(c: String) = gs.iterator.map(_.getAs[java.math.BigDecimal](c))
+        .filter(_ != null).foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+      lang -> Stats.fromSums(gs.map(_.getAs[Long]("p_n")).sum, total("p_s"), total("p_s2"))
     }
-    val groupZ = Rules.groupZScore(statCols, col("url"), col("lang"),
-      col("perplexity"), "perplexity", cfg.groupZK)
-    val rare = Rules.rareCombo(
-      statCols.withColumn("tld", regexp_extract(col("url"),
-        "https?://[^/]*?(\\.[a-z]+)(?:[:/]|$)", 1)),
-      col("url"), col("lang"), col("tld"), "lang", "tld", cfg.rareComboMin)
-    // tendency (A4): armed from the fused stats row; quirk preserved
-    // (denominator = all rows)
+    val stats = groups.toSeq.map { g =>
+      val m = byLang(g.getString(0))
+      (g.getString(0), g.getString(1), g.getAs[Long]("rows"), m.n, m.mean, m.stddevSamp)
+    }.toDF("__lang", "__tld", "__rows", "__n", "__mean", "__sd")
     val total = row.getAs[Long]("total")
     val lt = Option(row.getAs[Any]("tend_lt")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val tend =
-      if (total == 0 || lt.toDouble / total <= 0.999) None
-      else Some(statCols
-        .filter(col("n_words").isNotNull && col("n_chars").isNotNull &&
-          col("n_words") > col("n_chars"))
-        .select(col("url"), lit("tendency_n_words_n_chars").as("rule"),
-          lit(false).as("keep"), lit(lt.toDouble / total).cast(DoubleType).as("score"),
-          concat_ws(">", col("n_words"), col("n_chars")).as("detail")))
-    val v2 = (extremes ++ Seq(groupZ, rare) ++ tend.toSeq)
-      .reduceOption(_ unionByName _)
-      .getOrElse(statCols.sparkSession.createDataFrame(
-        statCols.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.model.Verdict.schema))
-    (v2, statCols)
+    val (nChars, nWords, lang, ppl) =
+      (col("n_chars"), col("n_words"), col("lang"), col("perplexity"))
+    val entries =
+      Seq("n_chars" -> "nc", "n_words" -> "nw").flatMap { case (c, p) =>
+        Rules.zScoreExtremeEntry(col(c), c, uniqOf(p), momentsOf(p), cfg.zScoreK)
+      } ++
+      Seq(Rules.groupZScoreEntry(ppl, lang, "perplexity",
+          col("__n"), col("__mean"), col("__sd"), cfg.groupZK),
+        Rules.rareComboEntry(lang, col("tld"), "lang", "tld", col("__rows"),
+          cfg.rareComboMin)) ++
+      Rules.tendencyEntry(nWords, nChars, "n_words", "n_chars", lt, total)
+    // every survivor row lies in exactly one fetched group, null keys
+    // included — hence the null-safe join
+    val judged = survivors.select(col("url"), lang, nChars, nWords, ppl, tld.as("tld"))
+      .join(broadcast(stats),
+        lang <=> col("__lang") && col("tld") <=> col("__tld"), "left")
+    Rules.explodeEntries(judged, col("url"), entries)
   }
 
   /** The text battery: the armed text-reading rules judged in ONE narrow
@@ -817,23 +856,15 @@ object QualityPipeline {
   // ---------------------------------------------------------------------
   // Assembly
   // ---------------------------------------------------------------------
-  /** Registry of cached intermediates so a long-running caller (the
-    * Checkpointer loops over hundreds of day partitions; benches loop over
-    * parallelism levels) can release them once outputs are written —
-    * otherwise cached RDDs accumulate unboundedly across partitions.
+  /** `featureCache` is the run's one cached intermediate: call
+    * [[unpersist]] AFTER kept/verdicts are written (the outputs are lazy
+    * views over it). A long-running caller (the Checkpointer loops over
+    * hundreds of day partitions; benches loop over parallelism levels)
+    * must release it, or cached RDDs accumulate unboundedly.
     */
-  final class CacheBag {
-    private val dfs = scala.collection.mutable.Buffer[DataFrame]()
-    def track(df: DataFrame): DataFrame = { dfs += df; df }
-    def release(): Unit = { dfs.foreach(_.unpersist()); dfs.clear() }
-  }
-
   final case class Result(verdicts: DataFrame, kept: DataFrame,
-                          metrics: DataFrame, bag: CacheBag) {
-    /** Release every cached intermediate. Call AFTER kept/verdicts are
-      * written (the outputs are lazy views over the caches).
-      */
-    def unpersist(): Unit = bag.release()
+                          metrics: DataFrame, featureCache: DataFrame) {
+    def unpersist(): Unit = featureCache.unpersist()
   }
 
   /** Full run: features → pass1 → survivors → pass2 → kept + scrub.
@@ -841,8 +872,7 @@ object QualityPipeline {
     * byte-identical to the `Scrub.scrubCol` chain (property-tested).
     */
   def run(pages: DataFrame, cfg: Config = defaultConfig): Result = {
-    val bag = new CacheBag
-    val feat = bag.track(features(pages, cfg).cache())
+    val feat = features(pages, cfg).cache()
     // CACHE BUILD IS FOLDED INTO THE FIRST REAL JOB: the near-dup
     // candidate checkpoint's map stage is a single linear stage chain
     // (the bands exchange is reused by both the hub aggregate and the
@@ -872,8 +902,8 @@ object QualityPipeline {
     // VERDICT SETS ARE LEAVES, NOT CACHES. unionByName flattens unions
     // eagerly, so a downstream plan never contains the v1/v2 union node
     // and a cache() on either can never be matched (measured: every
-    // write job re-ran all 10 pass-1 branches AND 5 pass-2 branches —
-    // ~10 redundant 300-task scans of the feature cache per run). The
+    // write job re-ran every pass-1 branch AND every pass-2 rule — ~10
+    // redundant 300-task scans of the feature cache per run). The
     // verdict sets are tiny (url + rule rows), so an eager localCheckpoint
     // materialises each ONCE — over the warm feat cache, branches running
     // fully parallel inside one job — and every downstream consumer
@@ -911,9 +941,7 @@ object QualityPipeline {
     val v1 = Await.result(v1aF, Duration.Inf).unionByName(nd)
     val dropped1 = v1.select("url").distinct()
     val survivors = feat.join(dropped1, Seq("url"), "left_anti")
-    val (v2raw, statCols) = ph("pass2 stats agg")(pass2Impl(survivors, cfg))
-    bag.track(statCols)
-    val v2 = ph("v2 checkpoint")(v2raw.coalesce(par).localCheckpoint(true))
+    val v2 = pass2(survivors, cfg)
     val verdicts = v1.unionByName(v2)
     // kept output: RE-SCAN the source pages (anti-join the tiny dropped
     // url set — both verdict sides are checkpoint leaves, AQE broadcasts
@@ -936,6 +964,6 @@ object QualityPipeline {
         Scrub.scrubFused(col("text")).as("scrubbed_text"))
     val metrics = verdicts.rollup(col("rule")).count()
       .withColumn("rule", coalesce(col("rule"), lit("__total__")))
-    Result(verdicts, kept, metrics, bag)
+    Result(verdicts, kept, metrics, feat)
   }
 }

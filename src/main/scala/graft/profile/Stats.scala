@@ -35,17 +35,6 @@ object Stats {
     fromSums(n, s, s2)
   }
 
-  /** Per-class exact moments: groupBy + decimal sums (partial-agg
-    * friendly — no window sort, map-side combine applies).
-    */
-  def groupedMoments(df: DataFrame, cls: Column, x: Column): DataFrame =
-    df.filter(x.isNotNull && cls.isNotNull)
-      .groupBy(cls.as("__cls"))
-      .agg(
-        count(lit(1)).as("__n"),
-        sum(x.cast(Dec)).as("__s"),
-        sum(x.cast(DecimalType(19, 5)) * x.cast(DecimalType(19, 5))).as("__s2"))
-
   def fromSums(n: Long, s: java.math.BigDecimal, s2: java.math.BigDecimal): Moments = {
     // sum() over zero rows yields null — a per-day Checkpointer slice where
     // pass 1 dropped everything must commit an empty partition, not NPE
@@ -58,16 +47,5 @@ object Stats {
         (s2.doubleValue() - sd * sd / n) / (n - 1)
       }
     Moments(n, mean, math.sqrt(math.max(0.0, variance)))
-  }
-
-  /** Columns deriving mean/std (sample) from grouped exact sums — usable
-    * directly after [[groupedMoments]] join.
-    */
-  def meanCol: Column = col("__s").cast("double") / col("__n")
-  def stdCol: Column = {
-    val n = col("__n").cast("double")
-    val s = col("__s").cast("double")
-    sqrt(greatest(lit(0.0),
-      (col("__s2").cast("double") - s * s / n) / (n - lit(1.0))))
   }
 }

@@ -2,14 +2,16 @@ package graft.rules
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
 import graft.model.ColumnProfile
 
-/** Generic rule kernels. Each takes a keyed DataFrame and returns a
-  * verdict-shaped DataFrame `(key, rule, keep=false, score, detail)` —
-  * the Spark analogue of the reference's `add_to_bad_idx` rows
-  * (`/root/reference/src/improve_data_quality.py:674-719`).
+/** Generic rule kernels. A frame rule takes a keyed DataFrame and
+  * returns a verdict-shaped DataFrame `(key, rule, keep=false, score,
+  * detail)` — the Spark analogue of the reference's `add_to_bad_idx`
+  * rows (`/root/reference/src/improve_data_quality.py:674-719`); an
+  * entry builder (`*Entry`) returns one conditional verdict entry, and
+  * [[explodeEntries]] turns a set of entries into those rows in one
+  * scan.
   *
   * Scale notes per kernel are inline; the common theme: per-row rules are
   * narrow (no shuffle); group rules shuffle ONLY on the group key (never
@@ -141,6 +143,22 @@ object Rules {
     * per combination so buckets stay person-sized at any corpus scale.
     * Cost: 28 narrow (url, 16B sig, 8B key) rows per doc through ONE
     * groupBy shuffle — the Manku tradeoff (more tables, smaller buckets).
+    *
+    * Bucket occupancy of the two regimes over n UNIFORM random
+    * fingerprints (xorshift; uniform is the BEST case for 15-bit chunks,
+    * since natural-language bit bias concentrates them further), all 4
+    * chunks and one representative block pair, maxBucket = 256:
+    * {{{
+    *        n  regime               key space  mean occ  max occ  docs in >256
+    *   100000  60-bit 15-bit chunk      32768      3.20       13          0.0%
+    *   100000  128-bit block pair        2^32      1.00        2          0.0%
+    *  1000000  60-bit 15-bit chunk      32768     30.52       58          0.0%
+    *  1000000  128-bit block pair        2^32      1.00        2          0.0%
+    * 10000000  60-bit 15-bit chunk      32768    305.18      383         99.8%
+    * 10000000  128-bit block pair        2^32      1.00        3          0.0%
+    * }}}
+    * At n = 10⁹ a 15-bit chunk holds ~30,518 docs per bucket (every
+    * bucket hub-only) and a 32-bit pair key ~0.23.
     */
   def simHashNearDupWide(df: DataFrame, key: Column, hi: Column, lo: Column,
                          maxHamming: Int = 6, maxBucket: Int = 256): DataFrame = {
@@ -220,92 +238,72 @@ object Rules {
     verdict(flagged, col("__drop"), rule, col("__dist"), col("__keep"))
   }
 
-  /** Z-score extremes (`utils.py:190-232`). The reference's quirk is kept:
-    * the predicate is `NOT (x > lo AND x < hi)` so boundary-EQUAL values
-    * are flagged. Gate: only runs when uniqueness ∈ (0.0001, 0.99)
-    * (utils.py:221). Stats are ORDER-INDEPENDENT exact moments
-    * ([[graft.profile.Stats]]) so the flag set is identical at any
-    * partitioning; the rule itself is a narrow filter: no shuffle.
+  // -------------------------------------------------------------------
+  // Corpus-stat rules: verdict entries over a few corpus statistics
+  // -------------------------------------------------------------------
+  /** `x` outside mean ± k·sd, as the reference writes it: the predicate is
+    * `NOT (x > lo AND x < hi)`, so boundary-EQUAL values are flagged.
+    * Score = |x − mean| / sd.
     */
-  def zScoreExtreme(df: DataFrame, key: Column, x: Column, name: String,
-                    uniqueness: Double, m: graft.profile.Stats.Moments,
-                    k: Double = 6.0): Option[DataFrame] = {
-    if (!(uniqueness > 0.0001 && uniqueness < 0.99)) return None
-    if (m.n < 2 || m.stddevSamp.isNaN || m.stddevSamp == 0.0) return None
-    val lo = m.mean - k * m.stddevSamp
-    val hi = m.mean + k * m.stddevSamp
-    val flagged = df.filter(x.isNotNull && !(x > lit(lo) && x < lit(hi)))
-    Some(verdict(flagged, key, s"extreme_$name",
-      abs(x - lit(m.mean)) / lit(m.stddevSamp), x))
-  }
+  private def zEntry(rule: String, x: Column, mean: Column, sd: Column,
+                     k: Double, gate: Column, detail: Column): Column =
+    entry(gate && x.isNotNull &&
+      !(x > mean - lit(k) * sd && x < mean + lit(k) * sd),
+      rule, abs(x - mean) / sd, detail)
 
-  /** Per-class z-score (`improve_data_quality.py:721-766`, A6): within
-    * each value of a low-cardinality class column, z-score a numeric
-    * column; flag rows outside mean ± k·std of their class. Implemented
-    * as groupBy + exact decimal moments + broadcast join-back: map-side
-    * partial aggregation (no window sort), one shuffle of (class, sums)
-    * only, and order-independent bounds — identical verdicts at any
-    * cluster size.
+  /** Z-score extremes (`utils.py:190-232`) as a verdict entry over the
+    * corpus moments `m` of `x`. Gate: only armed when uniqueness ∈
+    * (0.0001, 0.99) (utils.py:221) and the moments have a non-zero sample
+    * stddev. Moments are ORDER-INDEPENDENT exact sums
+    * ([[graft.profile.Stats]]), so the flag set is identical at any
+    * partitioning.
     */
-  def groupZScore(df: DataFrame, key: Column, cls: Column, x: Column,
-                  name: String, k: Double = 6.0): DataFrame = {
-    val base = df.select(key.as("url"), cls.as("__cls"), x.as("__x"))
-      .filter(col("__x").isNotNull && col("__cls").isNotNull)
-    val stats = graft.profile.Stats.groupedMoments(base, col("__cls"), col("__x"))
-      .withColumn("__m", graft.profile.Stats.meanCol)
-      .withColumn("__sd", graft.profile.Stats.stdCol)
-      .select("__cls", "__n", "__m", "__sd")
-    val scored = base.join(broadcast(stats), Seq("__cls"))
-      .filter(col("__n") >= 2 && col("__sd") > 0 &&
-        !(col("__x") > col("__m") - lit(k) * col("__sd") &&
-          col("__x") < col("__m") + lit(k) * col("__sd")))
-    verdict(scored, col("url"), s"group_extreme_$name",
-      abs(col("__x") - col("__m")) / col("__sd"),
-      concat_ws("=", col("__cls"), col("__x").cast("string")))
-  }
+  def zScoreExtremeEntry(x: Column, name: String, uniqueness: Double,
+                         m: graft.profile.Stats.Moments,
+                         k: Double = 6.0): Option[Column] =
+    if (!(uniqueness > 0.0001 && uniqueness < 0.99)) None
+    else if (m.n < 2 || m.stddevSamp.isNaN || m.stddevSamp == 0.0) None
+    else Some(zEntry(s"extreme_$name", x, lit(m.mean), lit(m.stddevSamp), k,
+      lit(true), x))
 
-  /** Rare-combination detector (`improve_data_quality.py:596-636`, A5):
-    * (c1, c2) groups with fewer than `minCount` members flag all their
-    * rows. groupBy on the pair key (tiny), then a broadcast semi-join
-    * back — the grouped side is bounded by the product of two
-    * low-cardinality columns, so the join never shuffles the fact table.
+  /** Per-class z-score (`improve_data_quality.py:721-766`, A6) as a
+    * verdict entry: `x` outside mean ± k·sd of its class `cls`, given the
+    * class's row count `n`, mean and sample stddev as columns (a class
+    * needs n ≥ 2 and sd > 0). Detail = `cls=x`.
     */
-  def rareCombo(df: DataFrame, key: Column, c1: Column, c2: Column,
-                n1: String, n2: String, minCount: Long = 10): DataFrame = {
-    val pairs = df.select(key.as("url"), c1.as("__c1"), c2.as("__c2"))
-      .filter(col("__c1").isNotNull && col("__c2").isNotNull)
-    val rare = pairs.groupBy(col("__c1"), col("__c2")).count()
-      .filter(col("count") < minCount)
-    val flagged = pairs.join(broadcast(rare), Seq("__c1", "__c2"), "inner")
-    verdict(flagged, col("url"), s"rare_combo_${n1}_$n2",
-      col("count"), concat_ws(",", col("__c1"), col("__c2")))
-  }
+  def groupZScoreEntry(x: Column, cls: Column, name: String, n: Column,
+                       mean: Column, sd: Column, k: Double = 6.0): Column =
+    zEntry(s"group_extreme_$name", x, mean, sd, k,
+      cls.isNotNull && n >= 2 && sd > 0,
+      concat_ws("=", cls, x.cast("string")))
 
-  /** Tendency invariant (`utils.py:427-441`, A4): if P(a < b) > thresh
-    * over the corpus (denominator = total rows — the reference's quirk,
-    * kept), rows violating a < b (strictly a > b; ties exempt) are
-    * flagged. One tiny agg decides whether the rule arms; the flag pass
-    * is a narrow filter.
+  /** Rare-combination detector (`improve_data_quality.py:596-636`, A5) as
+    * a verdict entry: a row whose (c1, c2) pair has `count` < `minCount`
+    * members is flagged; a null in either column never is. Score = the
+    * pair's count, detail = `c1,c2`.
     */
-  def tendency(df: DataFrame, key: Column, a: Column, b: Column,
-               n1: String, n2: String, thresh: Double = 0.999): Option[DataFrame] = {
-    val stats = df.agg(
-      sum((a < b).cast("long")).as("lt"),
-      count(lit(1)).as("n")).head()
-    val lt = Option(stats.getAs[Any]("lt")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val n = stats.getAs[Long]("n")
+  def rareComboEntry(c1: Column, c2: Column, n1: String, n2: String,
+                     count: Column, minCount: Long = 10): Column =
+    entry(c1.isNotNull && c2.isNotNull && count < minCount,
+      s"rare_combo_${n1}_$n2", count, concat_ws(",", c1, c2))
+
+  /** Tendency invariant (`utils.py:427-441`, A4) as a verdict entry: armed
+    * when `lt` of the corpus's `n` rows hold a < b and lt / n > thresh
+    * (denominator = all rows — the reference's quirk, kept); then rows
+    * violating a < b (strictly a > b; ties exempt) are flagged with score
+    * lt / n.
+    */
+  def tendencyEntry(a: Column, b: Column, n1: String, n2: String,
+                    lt: Long, n: Long, thresh: Double = 0.999): Option[Column] =
     if (n == 0 || lt.toDouble / n <= thresh) None
-    else {
-      val flagged = df.filter(a.isNotNull && b.isNotNull && a > b)
-      Some(verdict(flagged, key, s"tendency_${n1}_$n2",
-        lit(lt.toDouble / n), concat_ws(">", a.cast("string"), b.cast("string"))))
-    }
-  }
+    else Some(entry(a.isNotNull && b.isNotNull && a > b,
+      s"tendency_${n1}_$n2", lit(lt.toDouble / n),
+      concat_ws(">", a.cast("string"), b.cast("string"))))
 
   /** Value-uniqueness sanity (`utils.py:371-383`, D4): in a ≈all-unique
     * column (uniqueness > hi) duplicated values are suspect; in a
     * ≈all-repeated column (uniqueness < lo) unique values are. groupBy on
-    * the value + semi-join back — same shuffle shape as rareCombo.
+    * the value + semi-join back — the shuffle shape of exactDup.
     */
   def nonUniqueValues(df: DataFrame, key: Column, c: Column, name: String,
                       uniqueness: Double, hi: Double = 0.99,

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.embed.Ann
 import graft.functions.{Decontam, LangId, TextFns}
+import graft.pipeline.QualityPipeline
 import graft.rules.Rules
 
 /** Column-composed semantic references of fused kernels. Only the specs
@@ -69,5 +70,83 @@ object ComposedRefs {
     val c = Decontam.contamination(df, key, text, eval, n)
     Rules.explodeEntries(c, col("__k"),
       Seq(Rules.contaminationEntry(col("n_grams"), col("n_contaminated"), minHits)))
+  }
+
+  private def verdict(df: DataFrame, key: Column, rule: String,
+                      score: Column, detail: Column): DataFrame =
+    df.select(key.as("url"), lit(rule).as("rule"), lit(false).as("keep"),
+      score.cast(DoubleType).as("score"), detail.cast("string").as("detail"))
+
+  /** Pass 2 as five unioned rule branches over one stats row — the
+    * reference [[QualityPipeline.pass2]]'s single entry pass is diffed
+    * against. The z-score extremes and tendency are narrow filters; the
+    * per-class z-score joins grouped exact moments back (mean and sample
+    * stddev derived Spark-side); rare combos join a groupBy back.
+    */
+  def pass2Composed(survivors: DataFrame,
+                    cfg: QualityPipeline.Config): DataFrame = {
+    val statCols = survivors.select("url", "lang", "n_chars", "n_words", "perplexity")
+    def dec(c: Column) = c.cast(DecimalType(38, 10))
+    def decSq(c: Column) = c.cast(DecimalType(19, 5)) * c.cast(DecimalType(19, 5))
+    val row = statCols.agg(
+      count(col("n_chars")).as("nc_n"), countDistinct(col("n_chars")).as("nc_d"),
+      sum(dec(col("n_chars"))).as("nc_s"), sum(decSq(col("n_chars"))).as("nc_s2"),
+      count(col("n_words")).as("nw_n"), countDistinct(col("n_words")).as("nw_d"),
+      sum(dec(col("n_words"))).as("nw_s"), sum(decSq(col("n_words"))).as("nw_s2"),
+      sum((col("n_words") < col("n_chars")).cast("long")).as("tend_lt"),
+      count(lit(1)).as("total")).head()
+    val extremes = Seq("n_chars" -> "nc", "n_words" -> "nw").flatMap { case (c, p) =>
+      val n = row.getAs[Long](s"${p}_n")
+      val uniq = if (n == 0) 0.0 else row.getAs[Long](s"${p}_d").toDouble / n
+      val m = graft.profile.Stats.fromSums(n,
+        row.getAs[java.math.BigDecimal](s"${p}_s"),
+        row.getAs[java.math.BigDecimal](s"${p}_s2"))
+      val x = col(c)
+      if (!(uniq > 0.0001 && uniq < 0.99)) None
+      else if (m.n < 2 || m.stddevSamp.isNaN || m.stddevSamp == 0.0) None
+      else {
+        val k = cfg.zScoreK
+        val (lo, hi) = (m.mean - k * m.stddevSamp, m.mean + k * m.stddevSamp)
+        Some(verdict(statCols.filter(x.isNotNull && !(x > lit(lo) && x < lit(hi))),
+          col("url"), s"extreme_$c", abs(x - lit(m.mean)) / lit(m.stddevSamp), x))
+      }
+    }
+    val base = statCols.select(col("url"), col("lang").as("__cls"),
+        col("perplexity").as("__x"))
+      .filter(col("__x").isNotNull && col("__cls").isNotNull)
+    val moments = base.groupBy(col("__cls"))
+      .agg(count(lit(1)).as("__n"), sum(dec(col("__x"))).as("__s"),
+        sum(decSq(col("__x"))).as("__s2"))
+    val (nD, sD) = (col("__n").cast("double"), col("__s").cast("double"))
+    val stats = moments
+      .withColumn("__m", sD / col("__n"))
+      .withColumn("__sd", sqrt(greatest(lit(0.0),
+        (col("__s2").cast("double") - sD * sD / nD) / (nD - lit(1.0)))))
+      .select("__cls", "__n", "__m", "__sd")
+    val k = cfg.groupZK
+    val groupZ = verdict(base.join(broadcast(stats), Seq("__cls"))
+        .filter(col("__n") >= 2 && col("__sd") > 0 &&
+          !(col("__x") > col("__m") - lit(k) * col("__sd") &&
+            col("__x") < col("__m") + lit(k) * col("__sd"))),
+      col("url"), "group_extreme_perplexity",
+      abs(col("__x") - col("__m")) / col("__sd"),
+      concat_ws("=", col("__cls"), col("__x").cast("string")))
+    val pairs = statCols.select(col("url"), col("lang").as("__c1"),
+        regexp_extract(col("url"), "https?://[^/]*?(\\.[a-z]+)(?:[:/]|$)", 1).as("__c2"))
+      .filter(col("__c1").isNotNull && col("__c2").isNotNull)
+    val rare = pairs.groupBy(col("__c1"), col("__c2")).count()
+      .filter(col("count") < cfg.rareComboMin)
+    val rareV = verdict(pairs.join(broadcast(rare), Seq("__c1", "__c2")),
+      col("url"), "rare_combo_lang_tld", col("count"),
+      concat_ws(",", col("__c1"), col("__c2")))
+    val total = row.getAs[Long]("total")
+    val lt = Option(row.getAs[Any]("tend_lt")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val tend =
+      if (total == 0 || lt.toDouble / total <= 0.999) None
+      else Some(verdict(statCols.filter(col("n_words").isNotNull &&
+          col("n_chars").isNotNull && col("n_words") > col("n_chars")),
+        col("url"), "tendency_n_words_n_chars", lit(lt.toDouble / total),
+        concat_ws(">", col("n_words"), col("n_chars"))))
+    (extremes ++ Seq(groupZ, rareV) ++ tend).reduce(_ unionByName _)
   }
 }

@@ -116,7 +116,7 @@ class HtmlExtractSpec extends AnyFunSuite {
         .collect().toSet
     assert(verdictSet(a) == verdictSet(b))
     assert(keptSet(a) == keptSet(b))
-    a.bag.release(); b.bag.release(); pages.unpersist()
+    a.unpersist(); b.unpersist(); pages.unpersist()
   }
 
   test("extractHtml + text-reading opt-in rules: rules judge the DERIVED text") {
@@ -134,7 +134,7 @@ class HtmlExtractSpec extends AnyFunSuite {
       r.verdicts.filter(col("rule") === "model_quality")
         .select("url").as[String].collect().toSet
     val (ma, mb) = (mq(a), mq(b))
-    a.bag.release(); b.bag.release()
+    a.unpersist(); b.unpersist()
     assert(ma.nonEmpty, "fixture must trip the model rule for the test to bite")
     assert(ma == mb)
   }

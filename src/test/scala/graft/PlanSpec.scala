@@ -270,4 +270,24 @@ class PlanSpec extends AnyFunSuite {
         s"$name: plan string carries set contents")
     }
   }
+
+  test("pass 2: one entry pass — one Generate, no cache of its own, no shuffle join") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    import graft.pipeline.QualityPipeline
+    val pages = graft.sources.PagesGen.generate(spark, 200, 2).toDF()
+    val v = QualityPipeline.pass2Verdicts(QualityPipeline.features(pages),
+      QualityPipeline.defaultConfig)
+    val (root, _) = shuffles(v)
+    val plan = root.toString.take(1500)
+    assert(root.collect { case g: GenerateExec => g }.size == 1, plan)
+    assert(root.collect { case m: InMemoryTableScanExec => m }.isEmpty, plan)
+    assert(root.collect {
+      case j: SortMergeJoinExec => j
+      case j: ShuffledHashJoinExec => j
+    }.isEmpty, plan)
+    assert(root.collect { case j: BroadcastHashJoinExec => j }.size == 1, plan)
+  }
 }

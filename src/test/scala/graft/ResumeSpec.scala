@@ -28,8 +28,14 @@ class ResumeSpec extends AnyFunSuite {
     }
     assert(boom.getMessage.contains("injected failure"))
 
+    // a crashed commit's leftovers: resume must delete them
+    val staging = java.nio.file.Paths.get(crashRoot, "kept", "_staging", s"${days(2)}-dead")
+    Files.createDirectories(staging)
+    Files.writeString(staging.resolve("part-0.parquet"), "partial")
+
     // resume: first two partitions must be SKIPPED, not recomputed
     val resumed = Checkpointer.run(spark, pages, crashRoot)
+    assert(!Files.exists(staging), "staging leftovers survived the resume")
     val skipped = resumed.filter(_.skipped).map(_.partition).toSet
     assert(skipped == Set(days(0), days(1)),
       s"expected first two partitions skipped, got $skipped")

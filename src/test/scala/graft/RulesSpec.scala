@@ -53,15 +53,16 @@ class RulesSpec extends AnyFunSuite {
     val df = (0 to 10).map(_.toDouble).toDF("x").withColumn("url", col("x").cast("string"))
     val m = graft.profile.Stats.Moments(11, 5.0, 1.0)
     // k=5 → lo=0, hi=10: values 0 and 10 sit ON the boundary → flagged
-    val v = Rules.zScoreExtreme(df, col("url"), col("x"), "x", 0.5, m, 5.0).get.collect()
+    val e = Rules.zScoreExtremeEntry(col("x"), "x", 0.5, m, 5.0).get
+    val v = Rules.explodeEntries(df, col("url"), Seq(e)).collect()
     assert(v.map(_.getAs[String]("url")).sorted.toSeq == Seq("0.0", "10.0"))
   }
 
   test("zScoreExtreme: uniqueness gate skips rule outside (0.0001, 0.99)") {
     val df = Seq(1.0).toDF("x").withColumn("url", lit("u"))
     val m = graft.profile.Stats.Moments(2, 0.0, 1.0)
-    assert(Rules.zScoreExtreme(df, col("url"), col("x"), "x", 1.0, m).isEmpty)
-    assert(Rules.zScoreExtreme(df, col("url"), col("x"), "x", 0.99, m).isEmpty)
+    assert(Rules.zScoreExtremeEntry(col("x"), "x", 1.0, m).isEmpty)
+    assert(Rules.zScoreExtremeEntry(col("x"), "x", 0.99, m).isEmpty)
   }
 
   test("Stats.moments: exact and order-independent") {
@@ -78,26 +79,37 @@ class RulesSpec extends AnyFunSuite {
       (1 to 20).map(i => ("b", 500.0 + (i % 5)))
     val df = rows.zipWithIndex.map { case ((c, x), i) => (s"u$i", c, x) }
       .toDF("url", "cls", "x")
-    val v = Rules.groupZScore(df, col("url"), col("cls"), col("x"), "x", 3.0).collect()
+    // per-class exact moments, joined to the rows as the entry's columns
+    val stats = Seq("a", "b").map { c =>
+      val m = graft.profile.Stats.moments(df.filter(col("cls") === c), col("x"))
+      (c, m.n, m.mean, m.stddevSamp)
+    }.toDF("cls", "n", "mean", "sd")
+    val v = Rules.explodeEntries(df.join(stats, Seq("cls")), col("url"),
+      Seq(Rules.groupZScoreEntry(col("x"), col("cls"), "x",
+        col("n"), col("mean"), col("sd"), 3.0))).collect()
     assert(v.length == 1)
     assert(v.head.getAs[String]("detail").startsWith("a=1000"))
   }
 
   test("rareCombo flags member rows of groups under minCount") {
     val df = (1 to 20).map(i => (s"u$i", "en", "com")) ++ Seq(("ux", "xx", "com"))
-    val v = Rules.rareCombo(df.toDF("url", "c1", "c2"),
-      col("url"), col("c1"), col("c2"), "c1", "c2", 3).collect()
+    val rows = df.toDF("url", "c1", "c2")
+    val counted = rows.join(rows.groupBy("c1", "c2").count(), Seq("c1", "c2"))
+    val v = Rules.explodeEntries(counted, col("url"), Seq(Rules.rareComboEntry(
+      col("c1"), col("c2"), "c1", "c2", col("count"), 3))).collect()
     assert(v.map(_.getAs[String]("url")).toSeq == Seq("ux"))
   }
 
   test("tendency arms only above threshold and exempts ties") {
     val df = ((1 to 1999).map(i => (s"u$i", 1.0, 2.0)) ++ Seq(("uv", 5.0, 3.0)))
       .toDF("url", "a", "b")
-    val v = Rules.tendency(df, col("url"), col("a"), col("b"), "a", "b").get.collect()
+    def armed(d: org.apache.spark.sql.DataFrame) = Rules.tendencyEntry(
+      col("a"), col("b"), "a", "b", d.filter(col("a") < col("b")).count(), d.count())
+    val v = Rules.explodeEntries(df, col("url"), armed(df).toSeq).collect()
     assert(v.map(_.getAs[String]("url")).toSeq == Seq("uv"))
     // 50/50 split → not armed
     val df2 = Seq(("u1", 1.0, 2.0), ("u2", 2.0, 1.0)).toDF("url", "a", "b")
-    assert(Rules.tendency(df2, col("url"), col("a"), col("b"), "a", "b").isEmpty)
+    assert(armed(df2).isEmpty)
   }
 
   test("completeness: intersection of both null-fraction thresholds") {

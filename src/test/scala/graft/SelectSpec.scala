@@ -10,8 +10,7 @@ class SelectSpec extends AnyFunSuite {
   import spark.implicits._
 
   // 3 langs × uneven sizes, distinct deterministic scores, token counts
-  // 5-50 — big enough that every regime (multi-bucket, boundary bin,
-  // under-budget lang) appears
+  // 5-50 — every language fills three buckets and crosses the budget line
   private lazy val corpus = {
     val r = new scala.util.Random(43)
     val rows = (1 to 900).map { i =>
@@ -37,36 +36,6 @@ class SelectSpec extends AnyFunSuite {
     }
   }
 
-  test("assignByCutoffs on the full corpus reproduces ntileBuckets exactly") {
-    val exact = Select.ntileBuckets(corpus, col("key"), col("lang"), col("score"), 3)
-      .select("key", "bucket").collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    val cuts = Select.bucketCutoffs(corpus, col("key"), col("lang"),
-      col("score"), 3, sampleMod = 1L)
-    val got = Select.assignByCutoffs(corpus, col("key"), col("lang"),
-        col("score"), cuts)
-      .select("key", "bucket").collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(got == exact)
-  }
-
-  test("bucketCutoffs: deterministic across repartitioning; sampled cutoffs ascend") {
-    def run(parts: Int, mod: Long) =
-      Select.bucketCutoffs(corpus.repartition(parts), col("key"), col("lang"),
-          col("score"), 4, sampleMod = mod)
-        .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-    assert(run(3, 3L) == run(11, 3L))
-    run(3, 3L).foreach { case (lang, cuts) =>
-      assert(cuts == cuts.sorted, lang)
-      assert(cuts.length == 3, lang)
-    }
-    // k = 1: no cutoffs, everything bucket 1
-    val one = Select.assignByCutoffs(corpus, col("key"), col("lang"), col("score"),
-        Select.bucketCutoffs(corpus, col("key"), col("lang"), col("score"), 1))
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-    assert(one == Seq(1))
-  }
-
   test("tokenBudget: keeps best-first until the budget line; crossing doc kept") {
     val b = Select.ntileBuckets(corpus, col("key"), col("lang"), col("score"), 3)
     val kept = Select.tokenBudget(b, col("key"), col("lang"), col("bucket"),
@@ -86,25 +55,5 @@ class SelectSpec extends AnyFunSuite {
       val total = all.filter(_._2 == lang).map(_._5).sum
       assert(rows.map(_._4).sum >= math.min(800L, total), lang)
     }
-  }
-
-  test("tokenBudgetScalable == tokenBudget, any binBits, any partitioning") {
-    val b = Select.ntileBuckets(corpus, col("key"), col("lang"), col("score"), 3)
-    val exact = Select.tokenBudget(b, col("key"), col("lang"), col("bucket"),
-        col("h"), col("tokens"), budget = 800L)
-      .select("key").collect().map(_.getString(0)).toSet
-    for (bits <- Seq(2, 10); parts <- Seq(1, 7)) {
-      val got = Select.tokenBudgetScalable(b.repartition(parts), col("key"),
-          col("lang"), col("bucket"), col("h"), col("tokens"),
-          budget = 800L, binBits = bits)
-        .select("key").collect().map(_.getString(0)).toSet
-      assert(got == exact, s"bits=$bits parts=$parts")
-    }
-    // a budget no language reaches keeps everything (no boundary bin)
-    val allKeys = b.select("key").collect().map(_.getString(0)).toSet
-    val huge = Select.tokenBudgetScalable(b, col("key"), col("lang"),
-        col("bucket"), col("h"), col("tokens"), budget = 10_000_000L)
-      .select("key").collect().map(_.getString(0)).toSet
-    assert(huge == allKeys)
   }
 }
