@@ -343,16 +343,8 @@ object Queries {
     * documents in the fixture guarantee Hamming-0 pairs (rows > 0).
     */
   val dqSimHashNearDup: (SparkSession, String) => DataFrame = (s, dir) => {
-    // materialised once (eager localCheckpoint): the banding rule
-    // references its input frame from the chunk explode, both pair-join
-    // sides and the survivor aggregate — left lazy, each reference
-    // re-runs the md5 simhash kernel over the corpus (the executed plan
-    // held 21 scans / 21 kernel evaluations,
-    // plans/r06/dq_simhash_neardup_before.txt). In the pipeline the
-    // input is the cached feature frame, so this is query-local.
     val sh = docs(s, dir).select(col("doc_id"),
       graft.functions.Md5SimHash.md5SimHash(col("text"), 60).as("sh"))
-      .localCheckpoint(true)
     graft.rules.Rules.simHashNearDup(sh, col("doc_id"), col("sh"),
         maxHamming = 3, bits = 60)
       .select(col("url").cast(LongType).as("doc_id"), col("rule"),
@@ -396,12 +388,9 @@ object Queries {
     * documents in the fixture guarantee Hamming-0 pairs (rows > 0).
     */
   val dqSimHashNearDupWide: (SparkSession, String) => DataFrame = (s, dir) => {
-    // materialised once — same multi-reference recompute as
-    // dq_simhash_neardup, and the wide kernel is 2× the md5 votes
     val sh = docs(s, dir).select(col("doc_id"),
       graft.functions.Md5SimHash.md5SimHashWide(col("text")).as("w"))
       .select(col("doc_id"), col("w.hi").as("hi"), col("w.lo").as("lo"))
-      .localCheckpoint(true)
     graft.rules.Rules.simHashNearDupWide(sh, col("doc_id"), col("hi"), col("lo"),
         maxHamming = 6)
       .select(col("url").cast(LongType).as("doc_id"), col("rule"),

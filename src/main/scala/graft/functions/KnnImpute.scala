@@ -102,9 +102,20 @@ object KnnImpute {
     * diffs, then `· n_features / n_shared`), so results are
     * bit-identical — KnnImputeSpec pins hand-computed values,
     * tie-breaks, fallbacks and partition-independence.
+    *
+    * Cost of the global `f.agg(...)`: it has no grouping key, so every
+    * partition's partial buffer (one k-heap per missing cell) merges in
+    * ONE final task — O(partitions × cells × k) heap merges and the whole
+    * result array on one executor. At the [[MaxReceivers]] bound that
+    * single merge, not the distance pass, is the serial tail.
     */
   def imputeCells(df: DataFrame, key: Column, features: Seq[String],
-                  k: Int = 10): DataFrame = {
+                  k: Int = 10): DataFrame =
+    imputeCells(df, key, features, k, MaxReceivers)
+
+  /** [[imputeCells]] with the receiver bound as a parameter. */
+  private[graft] def imputeCells(df: DataFrame, key: Column, features: Seq[String],
+                                 k: Int, cap: Int): DataFrame = {
     require(features.nonEmpty, "need at least one feature column")
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
@@ -112,10 +123,10 @@ object KnnImpute {
       key.cast(LongType).as("__k") +:
         features.map(c => col(c).cast(DoubleType).as(c)): _*)
     val recvRows = f.filter(features.map(col(_).isNull).reduce(_ || _))
-      .limit(MaxReceivers + 1).collect()
-    if (recvRows.length > MaxReceivers)
+      .limit(cap + 1).collect()
+    if (recvRows.length > cap)
       throw new IllegalArgumentException(
-        s"knn_impute: more than $MaxReceivers rows have missing feature " +
+        s"knn_impute: more than $cap rows have missing feature " +
           "values; the exact all-pairs kNN pass is O(donors x receivers) " +
           "and its per-task heap state is O(receivers). Pre-bucket donors " +
           "and receivers (the Ann.ivfTopK cell-probe pattern) or impute " +

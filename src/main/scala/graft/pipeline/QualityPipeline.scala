@@ -649,15 +649,10 @@ object QualityPipeline {
     labels
   }
 
-  /** Driver-side union-find over a SMALL verified edge set (counted ≤
-    * cfg.maxDriverEdges). Path-halving union-find is O(α·E); the result
-    * labels table is parallelized back out. Exactly equivalent to
-    * [[connectedMin]] on any diameter (no LabelRounds truncation).
-    */
   /** Path-halving union-find over local edges; the returned function maps
     * a node to its component's min node.
     */
-  private def unionFindLocal(edges: Array[(Long, Long)]): Long => Long = {
+  private[graft] def unionFindLocal(edges: Array[(Long, Long)]): Long => Long = {
     val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     def find(x: Long): Long = {
       var r = x
@@ -674,18 +669,6 @@ object QualityPipeline {
       if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
     }
     find
-  }
-
-  private[graft] def connectedMinDriver(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val find = unionFindLocal(edges)
-    val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-    // the label is only a component id — the survivor is picked by min
-    // URL downstream, so root choice carries no semantics
-    val labels = nodes.iterator.map(n => (n, find(n))).toSeq
-    spark.createDataset(labels).toDF("uid", "label")
   }
 
   /** Opt-in SimHash near-dup second opinion (cfg.simHashNearDupBits):

@@ -1,8 +1,8 @@
 package graft.rules
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.model.ColumnProfile
 
 /** Generic rule kernels. A frame rule takes a keyed DataFrame and
@@ -95,36 +95,38 @@ object Rules {
     * into `maxHamming+1` chunks (15 bits each at the defaults), and any
     * pair within Hamming ≤ maxHamming must agree EXACTLY on at least one
     * chunk — so chunk-equality buckets provably contain every qualifying
-    * pair (no recall loss, unlike probabilistic LSH). Scale shape mirrors
-    * the MinHash path: explode to (bucket, url, sig) with one long bucket
-    * id — hub pairing bounds each bucket at O(|bucket|) pairs, and
-    * verification is a codegen'd bit_count(xor) filter. One groupBy shuffle of
-    * docs × (maxHamming+1) narrow rows; no all-pairs anything.
+    * pair (no recall loss, unlike probabilistic LSH). The docs explode to
+    * docs × (maxHamming+1) narrow (url, sig, bucket) rows, and
+    * [[nearDupCore]] resolves each bucket in one sorted walk: all pairs
+    * up to `maxBucket` rows, hub pairs past it. A 15-bit chunk is a far
+    * weaker discriminator than a MinHash band key (natural-language bit
+    * bias concentrates chunk values), so buckets legitimately hold
+    * unrelated docs — hence all pairs below the bound, where hub-only
+    * pairing would drop a true pair whenever a chance collider owned the
+    * hub. At 10⁹+ docs 15-bit chunks saturate: switch to the 128-bit
+    * fingerprint and [[simHashNearDupWide]] rather than raising maxBucket.
     */
   def simHashNearDup(df: DataFrame, key: Column, simhash: Column,
                      maxHamming: Int = 3, bits: Int = 60,
-                     maxBucket: Int = 256): DataFrame = {
+                     maxBucket: Int = 256): DataFrame =
+    nearDupCore(simHashBands(df, key, simhash, maxHamming, bits),
+      graft.functions.Hashing.hammingDist, maxHamming, maxBucket,
+      "near_dup_simhash")
+
+  /** The pigeonhole explode of [[simHashNearDup]]: one (__url, __sh,
+    * bucket) row per chunk; a null simhash gives null buckets. */
+  private[graft] def simHashBands(df: DataFrame, key: Column, simhash: Column,
+                                  maxHamming: Int, bits: Int): DataFrame = {
     require(bits % (maxHamming + 1) == 0,
       s"bits ($bits) must split evenly into ${maxHamming + 1} chunks")
     val chunks = maxHamming + 1
     val w = bits / chunks
     val mask = (1L << w) - 1L
-    val t = df.select(key.as("__url"), simhash.as("__sh"))
-    val ex = t.select(col("__url"), col("__sh"),
+    df.select(key.as("__url"), simhash.as("__sh")).select(col("__url"), col("__sh"),
       explode(array((0 until chunks).map { c =>
         shiftrightunsigned(col("__sh"), c * w).bitwiseAND(lit(mask)) *
           lit(chunks.toLong) + lit(c.toLong)
       }: _*)).as("bucket"))
-    // a 15-bit chunk is a far weaker discriminator than a MinHash band
-    // key (natural-language bit bias concentrates chunk values), so
-    // buckets legitimately hold many UNRELATED docs and hub-only pairing
-    // would drop a true pair whenever a chance collider owns the hub.
-    // Two regimes, split by measured bucket size (see [[nearDupCore]]).
-    // Production note: at 10⁹+ docs, 15-bit chunks saturate — switch to
-    // the 128-bit fingerprint and [[simHashNearDupWide]] rather than
-    // raising maxBucket.
-    nearDupCore(ex, graft.functions.Hashing.hammingDist,
-      maxHamming, maxBucket, "near_dup_simhash")
   }
 
   /** Wide (128-bit) SimHash near-dup rule — the production regime for
@@ -142,7 +144,7 @@ object Rules {
     * proportional to fingerprint width), with 4×10⁹ distinct key values
     * per combination so buckets stay person-sized at any corpus scale.
     * Cost: 28 narrow (url, 16B sig, 8B key) rows per doc through ONE
-    * groupBy shuffle — the Manku tradeoff (more tables, smaller buckets).
+    * bucket exchange — the Manku tradeoff (more tables, smaller buckets).
     *
     * Bucket occupancy of the two regimes over n UNIFORM random
     * fingerprints (xorshift; uniform is the BEST case for 15-bit chunks,
@@ -164,8 +166,15 @@ object Rules {
                          maxHamming: Int = 6, maxBucket: Int = 256): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 6,
       s"block-pair banding over 8 blocks is exact only for Hamming <= 6 (got $maxHamming)")
-    val t = df.select(key.as("__url"),
-      struct(hi.as("hi"), lo.as("lo")).as("__sh"))
+    nearDupCore(wideBands(df, key, hi, lo), wideDist, maxHamming, maxBucket,
+      "near_dup_simhash_wide")
+  }
+
+  /** The block-pair explode of [[simHashNearDupWide]]: 28 (__url,
+    * __sh = (hi, lo), bucket) rows per doc; a key touching a null half
+    * is null. */
+  private[graft] def wideBands(df: DataFrame, key: Column, hi: Column,
+                               lo: Column): DataFrame = {
     def blockOf(b: Int): Column = {
       val src = if (b < 4) col("__sh.lo") else col("__sh.hi")
       shiftrightunsigned(src, (b % 4) * 16).bitwiseAND(lit(0xFFFFL))
@@ -174,68 +183,68 @@ object Rules {
     val keyCols = combos.zipWithIndex.map { case ((a, b), ci) =>
       lit(ci.toLong << 32) + shiftleft(blockOf(a), 16) + blockOf(b)
     }
-    val ex = t.select(col("__url"), col("__sh"),
-      explode(array(keyCols: _*)).as("bucket"))
-    val dist = (a: Column, b: Column) =>
-      graft.functions.Hashing.hammingDist(a.getField("hi"), b.getField("hi")) +
-        graft.functions.Hashing.hammingDist(a.getField("lo"), b.getField("lo"))
-    nearDupCore(ex, dist, maxHamming, maxBucket, "near_dup_simhash_wide")
+    df.select(key.as("__url"), struct(hi.as("hi"), lo.as("lo")).as("__sh"))
+      .select(col("__url"), col("__sh"), explode(array(keyCols: _*)).as("bucket"))
   }
 
-  /** Shared bucket machinery of the SimHash rules. `ex` is the exploded
-    * (bucket, __url, __sh) candidate universe; `dist` compares two `__sh`
-    * values (plain long or (hi, lo) struct). Two regimes, split by
-    * MEASURED bucket size:
-    *  - |bucket| ≤ maxBucket: ALL-PAIRS within the bucket — bounded at
-    *    maxBucket²/2 pairs, exact recall (the banding scheme guarantees
-    *    every qualifying pair shares a bucket);
-    *  - |bucket| > maxBucket: hub pairing only — the df-cap pattern
-    *    (same contract as the MinHash path's hub star and the n-gram
-    *    df cap): a bucket that hot is a degenerate discriminator, and
-    *    O(|bucket|²) on it is exactly the detonation this engine never
-    *    allows.
+  /** Hamming distance of two (hi, lo) wide fingerprints. */
+  private[graft] val wideDist: (Column, Column) => Column = (a, b) =>
+    graft.functions.Hashing.hammingDist(a.getField("hi"), b.getField("hi")) +
+      graft.functions.Hashing.hammingDist(a.getField("lo"), b.getField("lo"))
+
+  /** Shared bucket resolution of the SimHash rules. `ex` is the exploded
+    * (__url, __sh, bucket) candidate universe; `dist` compares two `__sh`
+    * values (plain long or (hi, lo) struct). ONE exchange on `bucket`
+    * sorts each bucket by (__url, __sh) ascending, nulls first, and one
+    * walk per bucket ([[bucketPairs]]) emits its candidate pairs:
+    *  - |bucket| ≤ maxBucket: ALL PAIRS of distinct non-null urls —
+    *    bounded at maxBucket²/2 pairs, exact recall (the banding scheme
+    *    guarantees every qualifying pair shares a bucket);
+    *  - |bucket| > maxBucket: hub pairs only — the bucket's first row
+    *    against every row of another url, streamed without buffering.
+    *    The df-cap contract of the MinHash hub star and the n-gram df
+    *    cap: a bucket that hot is a degenerate discriminator, and
+    *    O(|bucket|²) on it is the detonation this engine never allows.
+    * The walk buffers at most maxBucket + 1 rows; null buckets are
+    * dropped. Pairs within `maxHamming` are verified with `dist`, and the
+    * larger url of each is flagged with its min keeper and min distance
+    * (one more exchange, on the dropped url). No join, no leaf: the
+    * input is read once.
     */
-  private def nearDupCore(ex: DataFrame, dist: (Column, Column) => Column,
-                          maxHamming: Int, maxBucket: Int,
-                          rule: String): DataFrame = {
-    val sizes = ex.groupBy(col("bucket")).agg(count(lit(1)).as("__n"))
-    // Materialised once (eager localCheckpoint): exS feeds BOTH sides of
-    // the small-bucket self-join, the big branch and the hub aggregate —
-    // left lazy each reference re-runs the explode and the bucket-size
-    // join (AQE reuses the exchanges but not the join itself). The frame
-    // is narrow — (8B bucket, key, sig, 8B count) per exploded row that
-    // SURVIVED the __n > 1 filter, i.e. only rows in candidate buckets —
-    // and the banding scheme's whole point is that candidate buckets are
-    // a small fraction of the corpus, so the leaf is far smaller than
-    // the input at any scale (worst case = the input's dup density).
-    val exS = ex.join(sizes, Seq("bucket")).filter(col("__n") > 1)
-      .localCheckpoint(true)
-    val small = exS.filter(col("__n") <= maxBucket)
-    val pairsSmall = small.as("a").join(small.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.__url") < col("b.__url"))
-      .select(col("a.__url").as("__u1"), col("a.__sh").as("__s1"),
-        col("b.__url").as("__u2"), col("b.__sh").as("__s2"))
-    val big = exS.filter(col("__n") > maxBucket)
-    val hubs = big.groupBy(col("bucket"))
-      .agg(min(struct(col("__url"), col("__sh"))).as("__h"))
-      .select(col("bucket"), col("__h.__url").as("__hub_url"),
-        col("__h.__sh").as("__hub_sh"))
-    val pairsBig = big.join(hubs, Seq("bucket"))
-      .filter(col("__url") =!= col("__hub_url"))
-      .select(least(col("__url"), col("__hub_url")).as("__u1"),
-        when(col("__url") < col("__hub_url"), col("__sh"))
-          .otherwise(col("__hub_sh")).as("__s1"),
-        greatest(col("__url"), col("__hub_url")).as("__u2"),
-        when(col("__url") < col("__hub_url"), col("__hub_sh"))
-          .otherwise(col("__sh")).as("__s2"))
-    val verified = pairsSmall.unionByName(pairsBig)
-      .filter(dist(col("__s1"), col("__s2")) <= maxHamming)
-    val flagged = verified.select(
-      col("__u2").as("__drop"), col("__u1").as("__keep"),
-      dist(col("__s1"), col("__s2")).as("__dist"))
+  private[graft] def nearDupCore(ex: DataFrame, dist: (Column, Column) => Column,
+                                 maxHamming: Int, maxBucket: Int,
+                                 rule: String): DataFrame = {
+    val (u, s) = (ex.schema("__url").dataType, ex.schema("__sh").dataType)
+    val pairSchema = StructType(Seq(StructField("__u1", u), StructField("__s1", s),
+      StructField("__u2", u), StructField("__s2", s)))
+    val pairs = ex.filter(col("bucket").isNotNull).groupBy(col("bucket"))
+      .as[Long, Row](Encoders.scalaLong, Encoders.row(ex.schema))
+      .flatMapSortedGroups(col("__url"), col("__sh"))(
+        (_, rows) => bucketPairs(rows, maxBucket))(Encoders.row(pairSchema))
+    val flagged = pairs.filter(dist(col("__s1"), col("__s2")) <= maxHamming)
+      .select(col("__u2").as("__drop"), col("__u1").as("__keep"),
+        dist(col("__s1"), col("__s2")).as("__dist"))
       .groupBy(col("__drop"))
       .agg(min(col("__keep")).as("__keep"), min(col("__dist")).as("__dist"))
     verdict(flagged, col("__drop"), rule, col("__dist"), col("__keep"))
+  }
+
+  /** One bucket's (__u1, __s1, __u2, __s2) candidate pairs, __u1 < __u2,
+    * from its (__url, __sh, …) rows in (__url, __sh) order: all pairs if
+    * the bucket ends within `maxBucket` rows, else (first row, row) for
+    * every later row of another url. */
+  private def bucketPairs(rows: Iterator[Row], maxBucket: Int): Iterator[Row] = {
+    def differ(a: Row, b: Row) = !a.isNullAt(0) && !b.isNullAt(0) && a.get(0) != b.get(0)
+    def pair(a: Row, b: Row) = Row(a.get(0), a.get(1), b.get(0), b.get(1))
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    while (rows.hasNext && buf.length <= maxBucket) buf += rows.next()
+    if (buf.length <= maxBucket)
+      buf.indices.iterator.flatMap(i => (i + 1 until buf.length).iterator
+        .filter(j => differ(buf(i), buf(j))).map(j => pair(buf(i), buf(j))))
+    else {
+      val hub = buf.head
+      (buf.iterator.drop(1) ++ rows).filter(differ(hub, _)).map(pair(hub, _))
+    }
   }
 
   // -------------------------------------------------------------------

@@ -149,4 +149,59 @@ object ComposedRefs {
         concat_ws(">", col("n_words"), col("n_chars"))))
     (extremes ++ Seq(groupZ, rareV) ++ tend).reduce(_ unionByName _)
   }
+
+  /** The SimHash rules' bucket resolution as a join chain — the reference
+    * [[Rules.nearDupCore]]'s one-exchange bucket walk is diffed against:
+    * a bucket-size aggregate joined back and checkpointed, a self-join of
+    * the buckets of ≤ maxBucket rows, a min(struct(__url, __sh)) hub
+    * joined to every bigger bucket, then the same verify and groupBy.
+    */
+  def nearDupCoreComposed(ex: DataFrame, dist: (Column, Column) => Column,
+                          maxHamming: Int, maxBucket: Int,
+                          rule: String): DataFrame = {
+    val sizes = ex.groupBy(col("bucket")).agg(count(lit(1)).as("__n"))
+    val exS = ex.join(sizes, Seq("bucket")).filter(col("__n") > 1)
+      .localCheckpoint(true)
+    val small = exS.filter(col("__n") <= maxBucket)
+    val pairsSmall = small.as("a").join(small.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.__url") < col("b.__url"))
+      .select(col("a.__url").as("__u1"), col("a.__sh").as("__s1"),
+        col("b.__url").as("__u2"), col("b.__sh").as("__s2"))
+    val big = exS.filter(col("__n") > maxBucket)
+    val hubs = big.groupBy(col("bucket"))
+      .agg(min(struct(col("__url"), col("__sh"))).as("__h"))
+      .select(col("bucket"), col("__h.__url").as("__hub_url"),
+        col("__h.__sh").as("__hub_sh"))
+    val pairsBig = big.join(hubs, Seq("bucket"))
+      .filter(col("__url") =!= col("__hub_url"))
+      .select(least(col("__url"), col("__hub_url")).as("__u1"),
+        when(col("__url") < col("__hub_url"), col("__sh"))
+          .otherwise(col("__hub_sh")).as("__s1"),
+        greatest(col("__url"), col("__hub_url")).as("__u2"),
+        when(col("__url") < col("__hub_url"), col("__hub_sh"))
+          .otherwise(col("__sh")).as("__s2"))
+    val flagged = pairsSmall.unionByName(pairsBig)
+      .filter(dist(col("__s1"), col("__s2")) <= maxHamming)
+      .select(col("__u2").as("__drop"), col("__u1").as("__keep"),
+        dist(col("__s1"), col("__s2")).as("__dist"))
+      .groupBy(col("__drop"))
+      .agg(min(col("__keep")).as("__keep"), min(col("__dist")).as("__dist"))
+    verdict(flagged, col("__drop"), rule, col("__dist"), col("__keep"))
+  }
+
+  /** Driver-side union-find over a small edge set, parallelized back out
+    * as (uid, label) — the reference [[QualityPipeline.connectedMin]] is
+    * diffed against (exact on any diameter: no LabelRounds truncation).
+    */
+  def connectedMinDriver(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val find = QualityPipeline.unionFindLocal(edges)
+    val nodes = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    // the label is only a component id — the survivor is picked by min
+    // URL downstream, so root choice carries no semantics
+    val labels = nodes.iterator.map(n => (n, find(n))).toSeq
+    spark.createDataset(labels).toDF("uid", "label")
+  }
 }

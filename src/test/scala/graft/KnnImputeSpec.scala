@@ -107,4 +107,16 @@ class KnnImputeSpec extends AnyFunSuite {
     val c = cells(df.coalesce(1), k = 10)
     assert(a.nonEmpty && a == b && b == c)
   }
+
+  test("receiver bound: cap receivers run, cap + 1 raise the named error") {
+    // base has two receivers (r1 misses f1, r4 misses f2)
+    val ok = KnnImpute.imputeCells(base, col("id"), Seq("f1", "f2"), 2, cap = 2)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    assert(ok == cells(base, k = 2))
+    val e = intercept[IllegalArgumentException] {
+      KnnImpute.imputeCells(base, col("id"), Seq("f1", "f2"), 2, cap = 1)
+    }
+    assert(e.getMessage.contains("knn_impute: more than 1 rows have missing feature"),
+      e.getMessage)
+  }
 }

@@ -140,7 +140,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(dist == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
     // the driver path must produce identical components
-    val drv = QualityPipeline.connectedMinDriver(pairs).collect()
+    val drv = ComposedRefs.connectedMinDriver(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(drv == dist)
   }

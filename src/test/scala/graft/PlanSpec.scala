@@ -41,13 +41,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"feature stage shuffles: ${plan.take(800)}")
   }
 
-  test("rare-combo rule broadcasts the tiny grouped side") {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
-    val g = d.groupBy("lang", "source").count().filter(col("count") < 3)
-    val joined = d.join(broadcast(g), Seq("lang", "source"))
-    assert(physical(joined).contains("BroadcastHashJoin"))
-  }
-
   test("emb_cosine_dedup: no cartesian product — SRP-bucketed equi-join") {
     val plan = physical(Queries.embCosineDedup(spark, dir))
     assert(!plan.contains("CartesianProduct"),
@@ -71,15 +64,36 @@ class PlanSpec extends AnyFunSuite {
   }
 
 
-  test("dq_simhash_neardup: bucket-bounded equi-join, no cartesian / nested-loop") {
-    // pigeonhole chunk banding must discover candidates via an equi-join
-    // on the bucket id — an all-pairs formulation would show up here as a
-    // cartesian or broadcast-nested-loop join over the corpus
-    val plan = physical(Queries.dqSimHashNearDup(spark, dir))
-    assert(!plan.contains("CartesianProduct"),
-      s"cartesian product in dq_simhash_neardup: ${plan.take(800)}")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      s"nested-loop join in dq_simhash_neardup: ${plan.take(800)}")
+  test("dq_simhash_neardup(_wide): one documents scan, no join, no checkpoint leaf") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Adaptive extends AdaptiveSparkPlanHelper
+    // the banding rule resolves its buckets in one sorted walk: the final
+    // adaptive plan holds no join at all (so no cartesian or nested-loop
+    // all-pairs formulation), reads documents once (the md5 kernel runs
+    // once, with no checkpoint leaf to pin it), and hash-shuffles twice:
+    // once on the bucket, once on the dropped doc
+    Seq("dq_simhash_neardup" -> Queries.dqSimHashNearDup,
+        "dq_simhash_neardup_wide" -> Queries.dqSimHashNearDupWide).foreach {
+      case (name, q) =>
+        val df = q(spark, dir)
+        assert(df.collect().nonEmpty, name)
+        val root = df.queryExecution.executedPlan
+        val plan = s"$name: ${root.toString.take(3000)}"
+        assert(!plan.contains("CartesianProduct") &&
+          !plan.contains("BroadcastNestedLoopJoin") && !plan.contains("ExistingRDD"), plan)
+        assert(Adaptive.collect(root) { case j: BaseJoinExec => j }.isEmpty, plan)
+        assert(Adaptive.collect(root) { case r: RDDScanExec => r }.isEmpty, plan)
+        val scans = Adaptive.collect(root) { case f: FileSourceScanExec => f }
+        assert(scans.map(_.relation.location.rootPaths.map(_.getName)) ==
+          Seq(Seq("documents.parquet")), plan)
+        assert(Adaptive.collect(root) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+        }.size == 2, plan)
+    }
   }
 
   test("ev_sessionize: ONE shuffle — the session agg reuses the window's user_id partitioning") {

@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Hashing
 import graft.pipeline.QualityPipeline
 import graft.rules.Rules
 import graft.sources.PagesGen
@@ -191,5 +193,66 @@ class SimHashRuleSpec extends AnyFunSuite {
       // distance to the reported (min-url) survivor
       assert(r.getDouble(3) <= d.toDouble)
     }
+  }
+
+  // --- the bucket walk against the composed join chain ---
+
+  private def verdictRows(df: DataFrame) =
+    df.collect().map(r => (r.get(0), r.getString(1), r.getBoolean(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)), r.getString(4)))
+      .sortBy(_.toString).toSeq
+
+  private def walkEqualsComposed(ex: DataFrame,
+                                 dist: (Column, Column) => Column,
+                                 maxHamming: Int, maxBucket: Int) = {
+    val walk = verdictRows(Rules.nearDupCore(ex, dist, maxHamming, maxBucket, "r"))
+    val ref = verdictRows(ComposedRefs.nearDupCoreComposed(ex, dist, maxHamming,
+      maxBucket, "r"))
+    assert(walk == ref, s"maxBucket=$maxBucket: walk ${walk.diff(ref).take(3)} " +
+      s"vs composed ${ref.diff(walk).take(3)}")
+    walk
+  }
+
+  test("bucket walk == composed join chain on the features (60 and 128 bits)") {
+    val narrow = Rules.simHashBands(feat, col("url"), col("simhash"), 3, 60)
+    val wide = Rules.wideBands(featWide, col("url"), col("sh_hi"), col("sh_lo"))
+    for {
+      (ex, dist, h) <- Seq((narrow, Hashing.hammingDist _, 3), (wide, Rules.wideDist, 6))
+      maxBucket <- Seq(1, 2, 256)
+    } assert(walkEqualsComposed(ex, dist, h, maxBucket).nonEmpty)
+  }
+
+  test("bucket walk == composed join chain on crafted buckets (nulls, repeats, bounds, hub tie)") {
+    import spark.implicits._
+    // (doc_id, simhash, bucket) rows, the query surface's Long-key shape
+    val ex = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(1), Some(0x0), Some(10)), (Some(2), Some(0x1), Some(10)),
+      (Some(3), Some(0x7), Some(10)),                    // exactly maxBucket rows
+      (Some(5), Some(0xF0), Some(20)), (Some(5), Some(0x0F), Some(20)),
+      (Some(6), Some(0x0E), Some(20)),                   // hub tie on url 5: the
+      (Some(7), Some(0xF1), Some(20)),                   // hub is (5, 0x0F)
+      (Some(8), Some(0x3), Some(30)), (Some(8), Some(0x3), Some(30)),
+      (Some(9), Some(0x2), Some(30)),                    // one key twice, same sig
+      (Some(11), Some(0x100), Some(40)), (Some(11), Some(0x0), Some(40)),
+      (Some(12), Some(0x1), Some(40)),                   // one key twice, two sigs
+      (None, Some(0x0), Some(50)), (Some(13), Some(0x0), Some(50)),
+      (Some(14), Some(0x1), Some(50)),                   // null key, small bucket
+      (None, Some(0x5), Some(60)), (Some(15), Some(0x5), Some(60)),
+      (Some(16), Some(0x5), Some(60)), (Some(17), Some(0x4), Some(60)), // null hub
+      (Some(18), Some(0x0), None), (Some(19), Some(0x0), None),
+      (Some(20), None, None),                            // null buckets
+      (Some(21), None, Some(70)), (Some(22), Some(0x0), Some(70)),
+      (Some(23), Some(0x0), Some(80)),                   // one-row bucket
+      (Some(24), Some(0x0), Some(90)), (Some(25), Some(0x1), Some(90)),
+      (Some(26), Some(0x3), Some(90)), (Some(27), Some(0xFF), Some(90)),
+      (Some(28), Some(0x7), Some(90)), (Some(29), Some(0x0), Some(90))  // streamed hub
+    ).toDF("__url", "__sh", "bucket")
+    val got = walkEqualsComposed(ex, Hashing.hammingDist, 3, maxBucket = 3)
+    def v(drop: Long, keep: Long, d: Int) =
+      (drop, "r", false, java.lang.Double.doubleToLongBits(d.toDouble), keep.toString)
+    assert(got.toSet == Set[Any](
+      v(2, 1, 1), v(3, 1, 2), v(6, 5, 1), v(9, 8, 1), v(12, 11, 1), v(14, 13, 1),
+      v(25, 24, 1), v(26, 24, 2), v(28, 24, 3), v(29, 24, 0)))
+    Seq(1, 2, 4, 256).foreach(m => walkEqualsComposed(ex, Hashing.hammingDist, 3, m))
   }
 }
