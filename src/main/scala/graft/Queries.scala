@@ -34,8 +34,10 @@ object Queries {
     * scrub chain, the WAV/PNG/MP4 encode+decode, ...) a second time; the
     * leaf makes the sampling pass read finished rows instead — a measured
     * win on every query that uses it. The leaf is executor-local and
-    * corpus-sized; `repartitionByRange` + `sortWithinPartitions`, or a
-    * planner rule, would keep the single kernel pass without storing it.
+    * corpus-sized. `repartitionByRange` + `sortWithinPartitions` samples
+    * its child the same way, so the kernel still runs twice; the
+    * leaf-free single pass is sort-then-kernel (sort the source, then
+    * map), which shuffles the kernel's input instead of its output.
     */
   private def presortLeaf(cols: String*): DataFrame => DataFrame =
     _.localCheckpoint(true).orderBy(cols.head, cols.tail: _*)
@@ -236,35 +238,18 @@ object Queries {
 
   /** Exact dedup over a deterministically augmented corpus (documents ∪
     * copies of every 50th doc under new ids): all-but-first flagged,
-    * first = min doc_id (SURVEY §2.3 tie-break).
+    * first = min doc_id (SURVEY §2.3 tie-break). [[graft.rules.Rules.exactDup]]
+    * over md5 of the RAW text (60-bit prefix), as the oracle groups raw
+    * `text`; like its `a.text = g.text`, the rule never matches a null.
     */
   val dqExactDup: (SparkSession, String) => DataFrame = (s, dir) => {
     val d = docs(s, dir).select("doc_id", "text")
     val aug = d.unionByName(
       d.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    // Same plan as the pipeline kernel (rules/Rules.exactDup): groupBy
-    // min+count with map-side combine + join-back — no full per-partition
-    // window sort, and the shuffle carries (hash, min, count) per DISTINCT
-    // hash, not every row. Group key = md5 of the RAW text (60-bit prefix;
-    // collision odds ~n²/2⁶¹), matching the oracle's raw-`text` GROUP BY —
-    // the normalised fingerprint would flag case/whitespace variants the
-    // oracle doesn't. Null-safe join: pandas/DuckDB group NaN/NULL texts
-    // together (NaN==NaN in `duplicated()`), so null hashes must too.
-    // project to (doc_id, hash) BEFORE everything (guide: shuffle keys,
-    // not payloads) and materialise once — the frame feeds both the
-    // group aggregate and the join-back probe; left lazy each side
-    // re-runs the md5 over the full text union
-    val hashed = aug
-      .select(col("doc_id"), TextFns.md5Long(col("text")).as("__h"))
-      .localCheckpoint(true)
-    val groups = hashed.groupBy(col("__h"))
-      .agg(min(col("doc_id")).as("first_id"), count(lit(1)).as("cnt"))
-      .filter(col("cnt") > 1)
-      .withColumnRenamed("__h", "__hg")
-    hashed.join(groups, col("__h") <=> col("__hg"))
-      .filter(col("doc_id") =!= col("first_id"))
-      .select(col("doc_id"), lit("duplication").as("rule"), col("first_id"))
+    graft.rules.Rules.exactDup(aug, col("doc_id"), TextFns.md5Long(col("text")))
+      .select(col("url").as("doc_id"), col("rule"),
+        col("detail").cast(LongType).as("first_id"))
       .orderBy("doc_id")
   }
 
@@ -1567,39 +1552,24 @@ object Queries {
       |FROM lv ORDER BY doc_id""".stripMargin
 
   /** CCNet-style cross-document paragraph boilerplate metric (the
-    * distributed operator behind [[graft.rules.Rules.boilerplateParagraphs]]):
-    * per doc, the fraction of paragraph characters belonging to
-    * paragraphs that appear in ≥ 2 DISTINCT documents. The synthetic
-    * docs have no paragraphs, so the query plants two shared ones on
-    * BOTH sides: a 25-way-shared group banner and a universal footer —
-    * n_shared is structural, the fraction varies with each doc's text
-    * length. The query groups by paragraph TEXT (exact at oracle scale);
-    * the pipeline rule is the scale path (8-byte xxhash64 shuffle, see
-    * its scaladoc).
+    * per-doc stats behind [[graft.rules.Rules.boilerplateParagraphs]],
+    * [[graft.functions.Paragraphs.boilerplateStats]]): per doc, the
+    * fraction of paragraph characters belonging to paragraphs that
+    * appear in ≥ 2 DISTINCT documents. The synthetic docs have no
+    * paragraphs, so the query plants two shared ones on BOTH sides: a
+    * 25-way-shared group banner and a universal footer — n_shared is
+    * structural, the fraction varies with each doc's text length. The
+    * engine keys paragraphs by xxhash64, the oracle groups by paragraph
+    * text — identical absent a 64-bit collision.
     */
   val dqBoilerplate: (SparkSession, String) => DataFrame = (s, dir) => {
     val t4 = concat(col("text"),
       lit("\n\nshared boilerplate "), (col("doc_id") % 25).cast("string"),
       lit("\n\nsubscribe to our newsletter"))
-    // LINEAGE TRUNCATION (the round's candidate-pair pattern): the
-    // exploded paragraph universe feeds BOTH the ndocs aggregate and the
-    // join probe side — left lazy, the split+explode over the corpus runs
-    // twice. The leaf holds (doc_id, paragraph) rows — bounded by corpus
-    // size, same class as ngramJaccard's ex0 leaf. Paired A/B medians in
-    // OPTIMIZATION_r06.md.
-    val paras = docs(s, dir)
-      .select(col("doc_id"), explode(split(t4, "\n\n")).as("p"))
-      .filter(col("p") =!= "")
-      .localCheckpoint(true)
-    val ndocs = paras.select("p", "doc_id").distinct()
-      .groupBy("p").agg(count(lit(1)).as("ndocs"))
-    paras.join(ndocs, Seq("p"))
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).cast("int").as("n_paras"),
-        sum(when(col("ndocs") >= 2, 1L).otherwise(0L)).as("n_shared_paras"),
-        round(sum(when(col("ndocs") >= 2, length(col("p")).cast("long")).otherwise(0L))
-          .cast(DoubleType) / sum(length(col("p")).cast("long")), 6)
+    graft.functions.Paragraphs.boilerplateStats(docs(s, dir), col("doc_id"), t4)
+      .select(col("__k").as("doc_id"), col("n_paras").cast("int").as("n_paras"),
+        col("n_shared_paras"),
+        round(col("shared_chars").cast(DoubleType) / col("para_chars"), 6)
           .as("boilerplate_frac"))
       .orderBy("doc_id")
   }
@@ -1639,18 +1609,21 @@ object Queries {
     * eval set. The synthetic corpus shares no 8-grams with the passages,
     * so the query plants P1 on doc_id % 13 and P2 on doc_id % 29 on BOTH
     * sides — n_contaminated is structural (6 / 5 / 11), contam_frac
-    * varies with each doc's own gram count. Engine path: broadcast
-    * eval-gram probe, one ~row-per-doc shuffle (see Decontam scaladoc).
+    * varies with each doc's own gram count. The rule's kernel
+    * ([[graft.functions.Decontam.hitStats]]) over every doc: no join.
     */
   val dqDecontam: (SparkSession, String) => DataFrame = (s, dir) => {
     import s.implicits._
     val aug = concat(col("text"),
       when(col("doc_id") % 13 === 0, lit(" " + DecontamP1)).otherwise(lit("")),
       when(col("doc_id") % 29 === 0, lit(" " + DecontamP2)).otherwise(lit("")))
-    val ev = Decontam.evalGrams(
-      Seq(DecontamP1, DecontamP2, DecontamP3).toDF("p"), col("p"), 8)
-    Decontam.contamination(docs(s, dir), col("doc_id"), aug, ev, 8)
-      .withColumnRenamed("__k", "doc_id")
+    val ev = Decontam.evalHashes(Decontam.evalGramRows(
+      Seq(DecontamP1, DecontamP2, DecontamP3).toDF("p"), col("p"), 8))
+    docs(s, dir)
+      .select(col("doc_id"),
+        Decontam.hitStats(graft.functions.ExactSubstr.stagedTokens(aug), 8, ev).as("__s"))
+      .select(col("doc_id"), col("__s.*"))
+      .withColumn("contam_frac", Decontam.contamFrac(col("n_contaminated"), col("n_grams")))
       .orderBy("doc_id")
   }
 

@@ -19,26 +19,18 @@ import org.apache.spark.sql.types._
   * has no notion of an external corpus; this module is part of the
   * LLM-pipeline surface the engine adds beyond it.
   *
-  * Scale shape (built for the 10⁸-doc × 10⁶-eval-gram regime):
-  *  - eval side: distinct n-grams of the EVAL corpus. Eval suites are
-  *    tiny relative to the training corpus (10⁵-10⁷ grams ⇒ tens of MB)
-  *    — the canonical broadcast side. `contamination` takes it as a
-  *    DataFrame so production loads it from any source; pass
-  *    `broadcastEval = false` for a pathological eval set bigger than
-  *    the broadcast threshold and the same plan degrades to a shuffle
-  *    hash join on the gram.
-  *  - corpus side: one narrow projection (tokenize + gram assembly),
-  *    `explode`, broadcast-hash probe, then a per-doc count. The
-  *    partial aggregation collapses each doc's grams map-side (docs are
-  *    contiguous within a scan partition), so the one shuffle carries
-  *    ~one small row per document — never gram text volume.
-  *
-  * The rule ([[graft.rules.Rules.contaminationRule]]) skips even that
-  * shuffle: the eval side is broadcast either way, so it fetches the eval
-  * grams' 8-byte hashes to the driver ([[evalHashes]], bounded by
-  * [[SharedHashes.MaxBroadcastGrams]]) and probes them with a
-  * per-document kernel ([[hitStats]]) in the text battery's one narrow
-  * pass.
+  * Scale shape (built for the 10⁸-doc × 10⁶-eval-gram regime): eval
+  * suites are tiny relative to the training corpus (10⁵-10⁷ grams ⇒
+  * tens of MB), so the eval side is a probe set. [[evalHashes]] fetches
+  * the distinct eval grams' 8-byte hashes to the driver by one action
+  * (bounded by [[SharedHashes.MaxBroadcastGrams]]; a larger eval side
+  * fails rather than change shape) and broadcasts them; [[hitStats]]
+  * probes every n-gram window of a document's staged tokens in one
+  * narrow per-document kernel. No shuffle, no join, no gram text: the
+  * window hashes come straight from the token array ([[GramHash]]).
+  * The rule ([[graft.rules.Rules.contaminationRule]]) runs the kernel
+  * in the text battery's one narrow pass; the `dq_decontam` query runs
+  * it over every document.
   *
   * Tokenisation contract (shared with [[TextFns.tokens]] / the DuckDB
   * oracle): lowercase, trim, split on `\s+`, empties dropped; a gram is
@@ -62,7 +54,8 @@ object Decontam {
   }
 
   /** Distinct n-grams of an eval corpus, as a one-column `gram` frame —
-    * the (broadcast) build side of the contamination probe.
+    * the eval side of the contamination rule ([[evalHashes]] makes it
+    * the probe set).
     */
   def evalGrams(evalDf: DataFrame, text: Column, n: Int): DataFrame =
     evalGramRows(evalDf, text, n).distinct()
@@ -74,43 +67,10 @@ object Decontam {
   private[graft] def evalGramRows(evalDf: DataFrame, text: Column, n: Int): DataFrame =
     evalDf.select(explode(wordNgrams(text, n)).as("gram"))
 
-  /** Per-document contamination: (key, n_grams, n_contaminated,
-    * contam_frac). `contam_frac` is null for documents with no n-grams
-    * (< n tokens). Every document of `df` appears exactly once
-    * (`explode_outer` keeps gram-less docs).
-    */
-  def contamination(df: DataFrame, key: Column, text: Column,
-                    eval: DataFrame, n: Int,
-                    broadcastEval: Boolean = true): DataFrame = {
-    // Probe on 64-bit gram hashes: the corpus side computes them with
-    // the codegen'd [[GramHash]] kernel over a staged token array (the
-    // composed wordNgrams shape re-evaluated the tokenizer per window in
-    // the interpreted HOF lambda), and the eval side — always the tiny,
-    // often-broadcast side — hashes its materialized gram strings with
-    // the xxhash64 built-in, which [[GramHash]] matches bit-for-bit. A
-    // 64-bit collision counting a clean gram as contaminated is the
-    // same accepted risk as the exactDup/boilerplate hash bucketing.
-    val ev = (if (broadcastEval) broadcast(eval) else eval)
-      .select(xxhash64(col("gram")).as("__h"), lit(1).as("__hit"))
-    val grams = df
-      .select(key.as("__k"), text.as("__t"))
-      .withColumn("__toks", TextFns.tokens(lower(col("__t"))))
-      .select(col("__k"), GramHash.gramHashes(col("__toks"), n).as("__hs"))
-      .select(col("__k"), size(col("__hs")).as("__n"),
-        explode_outer(col("__hs")).as("__h"))
-    grams.join(ev, Seq("__h"), "left")
-      .groupBy("__k")
-      // __n is constant per key; max() just carries it through the agg
-      .agg(greatest(max(col("__n")), lit(0)).cast("long").as("n_grams"),
-        sum(coalesce(col("__hit"), lit(0))).cast("long").as("n_contaminated"))
-      .select(col("__k"), col("n_grams"), col("n_contaminated"),
-        contamFrac(col("n_contaminated"), col("n_grams")).as("contam_frac"))
-  }
-
   /** The eval side as a probe set: `xxhash64` of each eval gram, fetched
     * by one bounded action. Duplicate grams collapse in the set. An eval
     * frame of more than `cap` rows fails: a broadcast eval side is the
-    * rule's one shape, as it is [[contamination]]'s default.
+    * rule's one shape.
     */
   private[graft] def evalHashes(
       eval: DataFrame,
@@ -121,7 +81,7 @@ object Decontam {
 
   /** Per-document eval-gram hits of staged tokens: struct(n_grams,
     * n_contaminated) — every n-gram window probed against the eval set,
-    * multiset on the document side as in [[contamination]].
+    * multiset on the document side (every colliding occurrence counts).
     */
   private[graft] def hitStats(toks: Column, n: Int, eval: HashSetRef): Column =
     GraftExpr.column(EvalHitsExpr(GraftExpr.expr(toks), n, eval))

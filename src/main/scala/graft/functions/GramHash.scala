@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.Platform
   *  - fewer than n tokens ⇒ empty array (the `wordNgrams` `[]` branch);
   *    null input ⇒ null (null-intolerant unary expression);
   *  - downstream consumers ([[ExactSubstr.substrDupStats]],
-  *    [[Decontam.contamination]]) use the hashes as join/group/probe keys
+  *    [[Decontam.hitStats]]) use the hashes as join/group/probe keys
   *    only — a 64-bit collision merging two distinct grams is the same
   *    accepted risk as the existing xxhash64 bucketing in
   *    exactDup/boilerplate (p ≈ n²/2⁶⁵).

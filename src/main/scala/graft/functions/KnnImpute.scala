@@ -81,7 +81,7 @@ object KnnImpute {
     * exact O(n·r) all-pairs pass is the wrong algorithm anyway (the
     * IVF cell-probe shape of [[graft.embed.Ann.ivfTopK]] is the scale
     * path), so the gate fails with a named error instead of an OOM —
-    * the same contract as nearDupResolve's maxDriverEdges and
+    * the same contract as nearDupResolve's MaxDriverEdges and
     * ExactSubstr's broadcast gate.
     */
   val MaxReceivers: Int = 200000

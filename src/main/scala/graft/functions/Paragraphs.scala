@@ -31,10 +31,11 @@ object Paragraphs {
     GraftExpr.column(ParagraphHashesExpr(GraftExpr.expr(text)))
 
   /** Per-document paragraph stats against a set of shared paragraph
-    * hashes: struct(tot, shared, nshared) = (code points over all
-    * paragraph occurrences, code points of those whose hash is in
-    * `shared`, number of such occurrences). A repeated paragraph counts
-    * once per occurrence, as in the composed rule. Null on null text.
+    * hashes: struct(n_paras, para_chars, shared_chars, n_shared_paras) =
+    * (paragraph occurrences, code points over all of them, code points
+    * of those whose hash is in `shared`, number of such occurrences). A
+    * repeated paragraph counts once per occurrence, as in the composed
+    * chain. Null on null text.
     */
   def stats(text: Column, shared: HashSetRef): Column =
     GraftExpr.column(ParagraphStatsExpr(GraftExpr.expr(text), shared))
@@ -51,10 +52,63 @@ object Paragraphs {
              cap: Long): Option[HashSetRef] =
     SharedHashes.fetchShared(sharedFrame(df, key, text, minDocs), cap)
 
+  /** Per-document boilerplate stats: (__k, n_paras, para_chars,
+    * shared_chars, n_shared_paras), one row per key with at least one
+    * paragraph; a paragraph is shared when ≥ `minDocs` distinct keys
+    * hold it. The regimes of [[ExactSubstr.substrDupStats]]: [[stats]]
+    * in one narrow pass when the fetched set ([[shared]]) fits
+    * `maxBroadcastGrams` and keys are unique, else
+    * [[boilerplateStatsComposed]], which merges a repeated key's rows.
+    * Eager: the set is fetched at construction.
+    */
+  def boilerplateStats(df: DataFrame, key: Column, text: Column,
+                       minDocs: Long = 2L,
+                       maxBroadcastGrams: Long = SharedHashes.MaxBroadcastGrams): DataFrame =
+    shared(df, key, text, minDocs, maxBroadcastGrams) match {
+      case Some(set) =>
+        df.select(key.as("__k"), stats(coalesce(text, lit("")), set).as("__s"))
+          .filter(col("__s.n_paras") > 0)
+          .select(col("__k"), col("__s.*"))
+      case None => boilerplateStatsComposed(df, key, text, minDocs)
+    }
+
+  /** The distributed regime of [[boilerplateStats]] (shared-paragraph
+    * set over the bound, or a repeated key), also the composed reference
+    * the kernel is differential-tested against. It recomputes ndocs from
+    * the source, so past the bound it costs the set aggregate that chose
+    * it (one source scan plus one (flag, hash, count) shuffle) on top of
+    * its own chain. The shuffle carries (8-byte xxhash64, key, length) —
+    * never paragraph text. ndocs is distinct-(hash, key) THEN count: the
+    * explicit two-step spreads a mega-hot paragraph ("subscribe to our
+    * newsletter" in 10⁸ docs) across the (hash, key) key space before
+    * the map-side-combinable count, and the join-back build side has
+    * exactly ONE row per hash, so the hot hash joins without salting.
+    */
+  private[graft] def boilerplateStatsComposed(df: DataFrame, key: Column, text: Column,
+                                              minDocs: Long): DataFrame = {
+    val paras = df
+      .select(key.as("__k"),
+        explode(split(coalesce(text, lit("")), "\n\n")).as("__p"))
+      .filter(col("__p") =!= "")
+      .select(col("__k"), xxhash64(col("__p")).as("__h"),
+        length(col("__p")).cast("long").as("__len"))
+    val ndocs = paras.select(col("__h"), col("__k")).distinct()
+      .groupBy("__h").agg(count(lit(1)).as("__ndocs"))
+    val isShared = col("__ndocs") >= minDocs
+    paras.join(ndocs, Seq("__h"))
+      .groupBy("__k")
+      .agg(
+        count(lit(1)).as("n_paras"),
+        sum(col("__len")).as("para_chars"),
+        sum(when(isShared, col("__len")).otherwise(0L)).as("shared_chars"),
+        sum(when(isShared, 1L).otherwise(0L)).as("n_shared_paras"))
+  }
+
   val StatsType: StructType = StructType(Seq(
-    StructField("tot", LongType, nullable = false),
-    StructField("shared", LongType, nullable = false),
-    StructField("nshared", LongType, nullable = false)))
+    StructField("n_paras", LongType, nullable = false),
+    StructField("para_chars", LongType, nullable = false),
+    StructField("shared_chars", LongType, nullable = false),
+    StructField("n_shared_paras", LongType, nullable = false)))
 
   /** Visits each non-empty paragraph as (hash, code-point length). */
   @inline private def foreachParagraph(u: UTF8String)(f: (Long, Int) => Unit): Unit = {
@@ -95,14 +149,16 @@ object Paragraphs {
   }
 
   def statsEval(u: UTF8String, shared: Array[Long]): InternalRow = {
+    var n = 0L
     var tot = 0L
     var sh = 0L
     var nsh = 0L
     foreachParagraph(u) { (h, len) =>
+      n += 1
       tot += len
       if (java.util.Arrays.binarySearch(shared, h) >= 0) { sh += len; nsh += 1 }
     }
-    InternalRow(tot, sh, nsh)
+    InternalRow(n, tot, sh, nsh)
   }
 }
 

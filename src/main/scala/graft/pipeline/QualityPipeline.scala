@@ -160,16 +160,7 @@ object QualityPipeline {
       // fixture corpus carries pre-extracted text.
       extractHtml: Boolean = false,
       rareComboMin: Long = 10,           // A5 semantics
-      maxToxicityHits: Int = 3,          // drop beyond; scrub below
-      saltBuckets: Int = 64,             // exact-dedup join-back salt fan-out (hot-key skew)
-      // near-dup components: driver union-find below BOTH bounds,
-      // distributed cascade above either. 200k edges / 300k members keeps
-      // the driver fetch (url + primitive k-long signature per member,
-      // ~350 B/member) under ~100 MB — safe on a stock 4–8 GB cluster
-      // driver; the previous 2M-edge default courted an OOM exactly at
-      // the crossover.
-      maxDriverEdges: Long = 200000L,
-      maxDriverMembers: Long = 300000L) {
+      maxToxicityHits: Int = 3) {        // drop beyond; scrub below
     // bandKeysOf truncates the band set to the signature length; a config
     // asking for more banded rows than the signature holds would silently
     // diverge from the composed Hashing.bandKeys semantics (empty-slice
@@ -181,6 +172,24 @@ object QualityPipeline {
   }
 
   val defaultConfig: Config = Config()
+
+  /** Exact-dedup join-back salt fan-out (hot-key skew, [[Rules.exactDup]]). */
+  val SaltBuckets: Int = 64
+
+  /** Near-dup components: driver union-find below BOTH bounds,
+    * distributed cascade above either ([[nearDupResolve]]). They keep the
+    * driver fetch (url + k-long signature, ~350 B/member) under ~100 MB,
+    * safe on a stock 4–8 GB cluster driver.
+    */
+  val MaxDriverEdges: Long = 200000L
+  val MaxDriverMembers: Long = 300000L
+
+  /** Bound on the (lang, tld) groups pass 2 fetches to the driver, one
+    * ~100-byte row each. Web text holds ~10² languages and ~10³ TLDs,
+    * and only occupied pairs appear; past the bound pass 2 fails rather
+    * than pull an unbounded set into the driver heap.
+    */
+  val MaxStatGroups: Long = 100000L
 
   // env-gated phase timer (SPARK_GRAFT_PHASES=1): localizes driver-side
   // wall between actions — stage metrics alone can't show scheduling /
@@ -360,11 +369,10 @@ object QualityPipeline {
   /** Exact dedup on the 60-bit content fingerprint: shuffle carries
     * (url, fingerprint) only. keep='first' ⇒ min url (SURVEY §2.3).
     */
-  def exactDupVerdicts(feat: DataFrame,
-                       cfg: Config = defaultConfig): DataFrame =
+  def exactDupVerdicts(feat: DataFrame): DataFrame =
     Rules.exactDup(
       feat.filter(col("n_chars") > 0), // null/empty text ⇒ n_chars = 0
-      col("url"), col("fingerprint"), cfg.saltBuckets)
+      col("url"), col("fingerprint"), SaltBuckets)
 
   /** Near-dup via MinHash + LSH banding: docs sharing any band bucket are
     * candidates; candidates are verified by signature-estimated Jaccard;
@@ -446,7 +454,12 @@ object QualityPipeline {
   /** Verify + cluster + survivor-select over a materialised candidate
     * pair leaf (the second half of [[nearDupVerdicts]]).
     */
-  def nearDupResolve(cand: NearDupCandidates, cfg: Config): DataFrame = {
+  def nearDupResolve(cand: NearDupCandidates, cfg: Config): DataFrame =
+    nearDupResolve(cand, cfg, MaxDriverEdges, MaxDriverMembers)
+
+  /** [[nearDupResolve]] under explicit driver bounds. */
+  private[graft] def nearDupResolve(cand: NearDupCandidates, cfg: Config,
+                                    maxEdges: Long, maxMembers: Long): DataFrame = {
     import cand.{eligible, sigs, pairs}
     // scale-adaptive verify + clustering (same spirit as AQE's broadcast
     // decision — the candidate set is materialised so its size is KNOWN):
@@ -458,11 +471,11 @@ object QualityPipeline {
     //  - above it — genuinely web-scale duplication — the distributed
     //    chain (broadcast verify joins, min-label cascade) is the only
     //    shape that fits.
-    // ONE action decides AND fetches: pulling maxDriverEdges+1 rows from
+    // ONE action decides AND fetches: pulling maxEdges+1 rows from
     // the leaf either yields the complete pair set (driver path) or
     // proves overflow (distributed path) — a separate count() was a
     // driver round-trip spent learning what the fetch shows anyway
-    val fetchCap = (cfg.maxDriverEdges + 1).min(Int.MaxValue.toLong).toInt
+    val fetchCap = (maxEdges + 1).min(Int.MaxValue.toLong).toInt
     val fetched = ph("neardup pair fetch")(pairs.limit(fetchCap).collect())
       .map(r => (r.getLong(0), r.getLong(1)))
     // driver-heap gate is on MEMBER count, not just edge count: the fetch
@@ -470,9 +483,9 @@ object QualityPipeline {
     // set touching many docs (e.g. 200k disjoint pairs = 400k members)
     // is what actually sizes the driver working set
     val memberCount: Long =
-      if (fetched.length > cfg.maxDriverEdges) Long.MaxValue
+      if (fetched.length > maxEdges) Long.MaxValue
       else fetched.iterator.flatMap(p => Iterator(p._1, p._2)).toSet.size.toLong
-    if (fetched.length <= cfg.maxDriverEdges && memberCount <= cfg.maxDriverMembers)
+    if (fetched.length <= maxEdges && memberCount <= maxMembers)
       nearDupDriverVerify(eligible, fetched, cfg)
     else nearDupDistributedVerify(eligible, sigs, pairs, cfg)
   }
@@ -693,7 +706,7 @@ object QualityPipeline {
   def pass1(feat: DataFrame, cfg: Config = defaultConfig): DataFrame =
     simHashVerdicts(feat, cfg).foldLeft(
       heuristicVerdicts(feat, cfg)
-        .unionByName(exactDupVerdicts(feat, cfg))
+        .unionByName(exactDupVerdicts(feat))
         .unionByName(nearDupVerdicts(feat, cfg)))(_ unionByName _)
 
   // ---------------------------------------------------------------------
@@ -715,13 +728,6 @@ object QualityPipeline {
     val v2 = pass2Verdicts(survivors, cfg)
     ph("v2 checkpoint")(v2.coalesce(par).localCheckpoint(true))
   }
-
-  /** Bound on the (lang, tld) groups pass 2 fetches to the driver, one
-    * ~100-byte row each. Web text holds ~10² languages and ~10³ TLDs,
-    * and only occupied pairs appear; past the bound pass 2 fails rather
-    * than pull an unbounded set into the driver heap.
-    */
-  val MaxStatGroups: Long = 100000L
 
   /** The pass-2 verdicts before the checkpoint: fetches the stats (the
     * group fetch under `cap`) and returns the lazy entry pass.
@@ -913,7 +919,7 @@ object QualityPipeline {
       val batteryV = Await.result(batteryF, Duration.Inf)
       ph("v1a checkpoint")(
         (simHashVerdicts(feat, cfg).toSeq ++ batteryV.toSeq ++ urlV).foldLeft(
-            heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat, cfg)))(
+            heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat)))(
             _ unionByName _)
           .coalesce(par).localCheckpoint(true))
     }

@@ -489,8 +489,8 @@ object Rules {
     Paragraphs.shared(df, key, text, minDocs, cap) match {
       case Some(set) => Right(TextRule(tokens = false,
         (t, _) => Paragraphs.stats(coalesce(t, lit("")), set),
-        st => boilerplateEntry(st.getField("tot"), st.getField("shared"),
-          st.getField("nshared"), maxFrac)))
+        st => boilerplateEntry(st.getField("para_chars"),
+          st.getField("shared_chars"), st.getField("n_shared_paras"), maxFrac)))
       case None => Left(boilerplateComposed(df, key, text, minDocs, maxFrac))
     }
   }
@@ -502,39 +502,16 @@ object Rules {
       concat_ws("/", nShared, lit("shared_paras")))
   }
 
-  /** The boilerplate rule's distributed regime (shared-paragraph set over
-    * the bound, or a repeated key), also the composed reference its
-    * kernel is differential-tested against. It recomputes ndocs from the
-    * source, so past the bound the rule costs the set aggregate that
-    * chose this chain (one source scan plus one (flag, hash, count)
-    * shuffle) on top of it. The shuffle carries (8-byte xxhash64,
-    * key, length) — never paragraph text. ndocs is distinct-(hash, key)
-    * THEN count — the explicit two-step spreads a mega-hot paragraph
-    * ("subscribe to our newsletter" in 10⁸ docs) across the (hash, key)
-    * key space before the map-side-combinable count; the join-back build
-    * side has exactly ONE row per hash, so the hot hash joins without
-    * salting. Hash note: xxhash64 is engine-internal bucketing (like
-    * exactDup's content hash); the oracle QUERY groups by paragraph text
-    * itself — exact at test scale, same metric.
+  /** The boilerplate rule's distributed regime, also the composed
+    * reference its kernel is differential-tested against: the per-doc
+    * stats of [[graft.functions.Paragraphs.boilerplateStatsComposed]]
+    * turned into verdict entries.
     */
   private[graft] def boilerplateComposed(df: DataFrame, key: Column, text: Column,
                                          minDocs: Long, maxFrac: Double): DataFrame = {
-    val paras = df
-      .select(key.as("__k"),
-        explode(split(coalesce(text, lit("")), "\n\n")).as("__p"))
-      .filter(col("__p") =!= "")
-      .select(col("__k"), xxhash64(col("__p")).as("__h"),
-        length(col("__p")).cast("long").as("__len"))
-    val ndocs = paras.select(col("__h"), col("__k")).distinct()
-      .groupBy("__h").agg(count(lit(1)).as("__ndocs"))
-    val perDoc = paras.join(ndocs, Seq("__h"))
-      .groupBy("__k")
-      .agg(
-        sum(col("__len")).as("__tot"),
-        sum(when(col("__ndocs") >= minDocs, col("__len")).otherwise(0L)).as("__shared"),
-        sum(when(col("__ndocs") >= minDocs, 1L).otherwise(0L)).as("__nshared"))
-    explodeEntries(perDoc, col("__k"), Seq(boilerplateEntry(
-      col("__tot"), col("__shared"), col("__nshared"), maxFrac)))
+    val st = graft.functions.Paragraphs.boilerplateStatsComposed(df, key, text, minDocs)
+    explodeEntries(st, col("__k"), Seq(boilerplateEntry(
+      col("para_chars"), col("shared_chars"), col("n_shared_paras"), maxFrac)))
   }
 
   /** Benchmark-decontamination rule (GPT-3 appx C shape, via
@@ -649,8 +626,9 @@ object Rules {
 
   /** URL battery (RefinedWeb §3.1 shape, via [[graft.functions.UrlFns]]):
     * blocked-host membership, adult/spam keyword in the URL, and
-    * over-long URLs — all pure narrow expressions riding whatever scan
-    * already reads the key column; zero shuffle. `blockedHosts` /
+    * over-long URLs — pure narrow expressions over one (key, url, host)
+    * projection, whose armed checks become verdict rows through one
+    * explode of entries; zero shuffle. `blockedHosts` /
     * `adultKeywords` are inlined literals here (curated lists are
     * 10³-10⁵ entries — expression-literal scale); a blocklist that has
     * outgrown a literal joins as a broadcast frame on
@@ -661,23 +639,16 @@ object Rules {
                  adultKeywords: Seq[String] = Nil,
                  maxUrlLen: Int = 2048): DataFrame = {
     import graft.functions.UrlFns
-    val base = df.select(key.as("__k"), url.as("__u"),
-      UrlFns.host(url).as("__host"))
-    val blocked =
-      if (blockedHosts.isEmpty) None
-      else Some(verdict(
-        base.filter(col("__host").isin(blockedHosts: _*)),
-        col("__k"), "url_blocked_host", lit(1.0), col("__host")))
-    val adult =
-      if (adultKeywords.isEmpty) None
-      else Some(verdict(
-        base.filter(UrlFns.containsAny(col("__u"), adultKeywords)),
-        col("__k"), "url_adult_keyword", lit(1.0), col("__host")))
-    val long = verdict(
-      base.filter(length(col("__u")) > maxUrlLen),
-      col("__k"), "url_too_long", length(col("__u")).cast(DoubleType),
-      col("__host"))
-    (blocked.toSeq ++ adult.toSeq).foldLeft(long)(_ unionByName _)
+    val (u, host) = (col("__u"), col("__host"))
+    val entries = Seq(
+      Option.when(blockedHosts.nonEmpty)(entry(host.isin(blockedHosts: _*),
+        "url_blocked_host", lit(1.0), host)),
+      Option.when(adultKeywords.nonEmpty)(entry(UrlFns.containsAny(u, adultKeywords),
+        "url_adult_keyword", lit(1.0), host)),
+      Some(entry(length(u) > maxUrlLen, "url_too_long", length(u), host))).flatten
+    explodeEntries(
+      df.select(key.as("__k"), url.as("__u"), UrlFns.host(url).as("__host")),
+      col("__k"), entries)
   }
 
   /** Per-host document cap (host-level dedup pressure: a single template

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.embed.Ann
-import graft.functions.{Decontam, LangId, TextFns}
+import graft.functions.{Decontam, GramHash, LangId, TextFns}
 import graft.pipeline.QualityPipeline
 import graft.rules.Rules
 
@@ -61,13 +61,37 @@ object ComposedRefs {
     when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  /** The contamination rule as a broadcast-join chain over
-    * [[graft.functions.Decontam.contamination]] — the reference the
+  /** Per-document contamination as a broadcast-join chain: (__k,
+    * n_grams, n_contaminated, contam_frac), every document of `df`
+    * exactly once (`explode_outer` keeps gram-less docs), `contam_frac`
+    * null for a doc with no n-grams. The corpus side hashes its windows
+    * with [[GramHash]] over staged tokens; the eval side hashes its gram
+    * strings with the xxhash64 built-in, which [[GramHash]] matches
+    * bit-for-bit. The reference [[Decontam.hitStats]] is diffed against.
+    */
+  def contamination(df: DataFrame, key: Column, text: Column,
+                    eval: DataFrame, n: Int): DataFrame = {
+    val ev = broadcast(eval).select(xxhash64(col("gram")).as("__h"), lit(1).as("__hit"))
+    val grams = df
+      .select(key.as("__k"), TextFns.tokens(lower(text)).as("__toks"))
+      .select(col("__k"), GramHash.gramHashes(col("__toks"), n).as("__hs"))
+      .select(col("__k"), size(col("__hs")).as("__n"),
+        explode_outer(col("__hs")).as("__h"))
+    grams.join(ev, Seq("__h"), "left")
+      .groupBy("__k")
+      // __n is constant per key; max() just carries it through the agg
+      .agg(greatest(max(col("__n")), lit(0)).cast("long").as("n_grams"),
+        sum(coalesce(col("__hit"), lit(0))).cast("long").as("n_contaminated"))
+      .select(col("__k"), col("n_grams"), col("n_contaminated"),
+        Decontam.contamFrac(col("n_contaminated"), col("n_grams")).as("contam_frac"))
+  }
+
+  /** The contamination rule over [[contamination]] — the reference the
     * rule's eval-hit kernel is diffed against.
     */
   def contaminationComposed(df: DataFrame, key: Column, text: Column,
                             eval: DataFrame, n: Int, minHits: Long): DataFrame = {
-    val c = Decontam.contamination(df, key, text, eval, n)
+    val c = contamination(df, key, text, eval, n)
     Rules.explodeEntries(c, col("__k"),
       Seq(Rules.contaminationEntry(col("n_grams"), col("n_contaminated"), minHits)))
   }

@@ -86,7 +86,7 @@ class DecontamSpec extends AnyFunSuite {
       // too short for any gram
       ("d4", "u v")
     ).toDF("k", "t")
-    val c = Decontam.contamination(docs, col("k"), col("t"), eval, 3)
+    val c = ComposedRefs.contamination(docs, col("k"), col("t"), eval, 3)
       .collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]))))

@@ -207,12 +207,15 @@ class PipelineSpec extends AnyFunSuite {
     val df = rows.toDF("url", "warc_ts", "html", "text", "lang")
     val cfg = QualityPipeline.defaultConfig
     val feat = QualityPipeline.features(df, cfg)
-    def verdictsWith(c: QualityPipeline.Config): Set[(String, String)] =
-      QualityPipeline.nearDupVerdicts(feat, c).collect()
+    def verdictsWith(maxEdges: Long = QualityPipeline.MaxDriverEdges,
+                     maxMembers: Long = QualityPipeline.MaxDriverMembers)
+        : Set[(String, String)] =
+      QualityPipeline.nearDupResolve(QualityPipeline.nearDupCandidates(feat, cfg), cfg,
+          maxEdges, maxMembers).collect()
         .map(r => (r.getAs[String]("url"), r.getAs[String]("detail"))).toSet
-    val driver = verdictsWith(cfg) // small pair set → driver path
-    val distByEdges = verdictsWith(cfg.copy(maxDriverEdges = 0L))
-    val distByMembers = verdictsWith(cfg.copy(maxDriverMembers = 1L))
+    val driver = verdictsWith() // small pair set → driver path
+    val distByEdges = verdictsWith(maxEdges = 0L)
+    val distByMembers = verdictsWith(maxMembers = 1L)
     assert(driver.nonEmpty, "fixture drifted: no near-dup pairs planted")
     assert(distByEdges == driver, "edge-bound distributed path diverged")
     assert(distByMembers == driver, "member-bound distributed path diverged")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{Decontam, QualityModel, TextFns}
+import graft.functions.{Decontam, Paragraphs, QualityModel, TextFns}
 import graft.pipeline.QualityPipeline
 import graft.rules.Rules
 
@@ -55,7 +55,25 @@ class TextBatterySpec extends AnyFunSuite {
   private def url = col("url")
   private def text = col("text")
 
+  private def paraStats(df: DataFrame) = df.collect().map(r =>
+    (r.getAs[Any]("__k"), r.getAs[Long]("n_paras"), r.getAs[Long]("para_chars"),
+      r.getAs[Long]("shared_chars"), r.getAs[Long]("n_shared_paras"))).toSeq
+    .sortBy(_.toString)
+
   test("paragraph kernel == composed boilerplate chain on hostile input (minDocs 2 and 3)") {
+    for (minDocs <- Seq(2L, 3L)) {
+      // the per-doc stats, occurrence count included, in both regimes
+      val composed = paraStats(Paragraphs.boilerplateStatsComposed(hostile, url, text, minDocs))
+      assert(paraStats(Paragraphs.boilerplateStats(hostile, url, text, minDocs)) == composed,
+        s"minDocs=$minDocs")
+      assert(paraStats(Paragraphs.boilerplateStats(hostile, url, text, minDocs,
+        maxBroadcastGrams = 0)) == composed, s"minDocs=$minDocs bound 0")
+      val n = composed.map(r => r._1 -> r._2).toMap
+      // "\n\n\n" and "\n\n\n\n\n" each hold the one paragraph "\n";
+      // within-doc repeats count once per occurrence
+      assert(n("sep3") == 1L && n("sep5") == 1L && n("rep") == 4L && n("lead") == 2L)
+      assert(!n.contains("null") && !n.contains("empty"))
+    }
     for (minDocs <- Seq(2L, 3L); maxFrac <- Seq(0.0, 0.3, 0.99)) {
       val composed = rows(Rules.boilerplateComposed(hostile, url, text, minDocs, maxFrac))
       val regime = Rules.boilerplateRegime(hostile, url, text, minDocs, maxFrac)
@@ -139,6 +157,12 @@ class TextBatterySpec extends AnyFunSuite {
       ("mixed", "shared footer para\n\nthe three way span rides here now"),
       ("mixed", "second copy of the mixed page body"))
     val dup = hostile.unionByName(extra.toDF("url", "text"))
+    for (minDocs <- Seq(2L, 3L)) {
+      // a repeated key's rows merge into one stats row, as in the chain
+      val st = paraStats(Paragraphs.boilerplateStats(dup, url, text, minDocs))
+      assert(st == paraStats(Paragraphs.boilerplateStatsComposed(dup, url, text, minDocs)))
+      assert(st.count(_._1 == "recrawl") == 1)
+    }
     for (minDocs <- Seq(2L, 3L); maxFrac <- Seq(0.0, 0.3)) {
       val b = Rules.boilerplateRegime(dup, url, text, minDocs, maxFrac)
       assert(b.isLeft, "a repeated key must select the composed chain")
