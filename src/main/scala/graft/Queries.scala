@@ -189,36 +189,25 @@ object Queries {
   // Profiling (G1/G2/G5): one-pass per-column stats
   // ======================================================================
 
+  /** [[graft.profile.Profiler.profile]]'s one aggregate pass, restacked
+    * to one row per column; the fetched ratios are rounded by Spark's
+    * `round(_, 6)`, and an empty column's uniqueness is null, as the
+    * twin's `nullif` gives.
+    */
   val dqProfile: (SparkSession, String) => DataFrame = (s, dir) => {
-    val d = docs(s, dir)
     val cols = Seq("doc_id", "lang", "n_chars", "source", "text")
-    // ONE scan: every per-column statistic in a single multi-aggregate
-    // (the per-column agg+union version scanned the table once per
-    // column); the per-column row shape is restacked driver-side from the
-    // one collected row. Rounding happens IN the aggregate so the values
-    // are Spark-rounded exactly like every other oracle-checked query.
-    val aggs = cols.flatMap { c => Seq(
-      count(col(c)).as(s"${c}__nn"),
-      countDistinct(col(c)).as(s"${c}__d"),
-      round(countDistinct(col(c)).cast(DoubleType) /
-        nullif(count(col(c)), lit(0)), 6).as(s"${c}__u"),
-      round(avg(isnull(col(c)).cast(DoubleType)), 6).as(s"${c}__nm"))
+    val prof = graft.profile.Profiler.profile(docs(s, dir).select(cols.map(col): _*))
+    val rows = cols.map { c =>
+      val p = prof(c)
+      (c, p.nonNull, p.distinct,
+        Option.when(p.nonNull > 0)(p.uniqueness), p.nullMean)
     }
-    val row = d.agg(aggs.head, aggs.tail: _*).head()
-    val out = cols.map { c => org.apache.spark.sql.Row(
-      c, row.getAs[Long](s"${c}__nn"), row.getAs[Long](s"${c}__d"),
-      row.getAs[java.lang.Double](s"${c}__u"),
-      row.getAs[java.lang.Double](s"${c}__nm"))
-    }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("column_name", StringType, nullable = false),
-      StructField("non_null", LongType, nullable = false),
-      StructField("distinct_cnt", LongType, nullable = false),
-      StructField("uniqueness", DoubleType, nullable = true),
-      StructField("null_mean", DoubleType, nullable = true)))
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(out.asJava, schema).orderBy("column_name")
+    import s.implicits._
+    rows.toDF("column_name", "non_null", "distinct_cnt", "uniqueness", "null_mean")
+      .select(col("column_name"), col("non_null"), col("distinct_cnt"),
+        round(col("uniqueness"), 6).as("uniqueness"),
+        round(col("null_mean"), 6).as("null_mean"))
+      .orderBy("column_name")
   }
 
   val dqProfileSql: String = {
@@ -273,8 +262,8 @@ object Queries {
     val d = docs(s, dir)
     val norm = TextFns.normText(col("text"))
     // fused expression, byte-identical to the md5 SQL-oracle formula
-    // (the composed Column version is Hashing.minHashSig — kept as the
-    // semantic reference, cross-validated in TextFnsSpec)
+    // (TextFnsSpec cross-validates it against the composed Column
+    // version in test scope)
     val sig = graft.functions.Md5MinHash.md5MinHash(norm, 4, 4)
     d.select(col("doc_id"), sig.as("sig"))
       .select(col("doc_id"),
@@ -297,8 +286,8 @@ object Queries {
 
   /** SimHash (16-bit) over distinct lowercase tokens. */
   val dqSimHash: (SparkSession, String) => DataFrame = (s, dir) =>
-    // fused expression; composed reference = Hashing.simHash over
-    // array_distinct(lower(tokens)) — equality asserted in TextFnsSpec
+    // fused expression; TextFnsSpec asserts it equals the composed
+    // simhash over array_distinct(lower(tokens))
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.Md5SimHash.md5SimHash(col("text"), 16).as("simhash"))
@@ -321,11 +310,15 @@ object Queries {
     * — the engine's cheap second opinion next to MinHash/LSH) over a
     * 60-bit md5 token simhash, oracle-checked against a brute-force
     * all-pairs DuckDB twin. The engine path's pigeonhole banding (4 ×
-    * 15-bit chunks) is EXACT for Hamming ≤ 3 while every chunk bucket
-    * stays under `maxBucket` — at 15-bit chunks that holds far past the
-    * oracle scales (32k bucket values vs 10³–10⁴ docs), so banded ==
-    * brute force and the hash comparison is legitimate. Exact-duplicate
-    * documents in the fixture guarantee Hamming-0 pairs (rows > 0).
+    * 15-bit chunks) is EXACT for Hamming ≤ 3 only while every chunk
+    * bucket holds at most `maxBucket` = 256 rows; past that the walk
+    * pairs each row with the bucket's hub only. The oracle boards' text
+    * is biased enough to break that bound: at sf0.01 the query matches
+    * its twin, but at sf0.1 (5,000 docs) the largest chunk bucket holds
+    * 1,371 rows and the query returns 2,277 rows against the twin's
+    * 2,366, so sf0.1 reads 49/51 until ROADMAP item 1 makes the walk
+    * exact past the bound. Exact-duplicate documents in the fixture
+    * guarantee Hamming-0 pairs (rows > 0).
     */
   val dqSimHashNearDup: (SparkSession, String) => DataFrame = (s, dir) => {
     val sh = docs(s, dir).select(col("doc_id"),
@@ -367,10 +360,13 @@ object Queries {
     * all-pairs DuckDB twin at `bit_count(xor(hi,hi)) +
     * bit_count(xor(lo,lo)) <= 6`. The banding is EXACT for Hamming ≤ 6
     * (≤ 6 flipped bits touch ≤ 6 of the 8 blocks, so ≥ 2 blocks — hence
-    * ≥ 1 of the C(8,2) block-pair keys — match exactly), and at oracle
-    * scales every pair bucket stays far under `maxBucket`, so banded ==
-    * brute force and the hash comparison is legitimate. Exact-duplicate
-    * documents in the fixture guarantee Hamming-0 pairs (rows > 0).
+    * ≥ 1 of the C(8,2) block-pair keys — match exactly) only while
+    * every pair bucket holds at most `maxBucket` = 256 rows. At sf0.01
+    * the query matches its twin; at sf0.1 the largest block-pair bucket
+    * holds 496 rows and the query returns 1,860 rows against the twin's
+    * 1,863 — with [[dqSimHashNearDup]], the two sf0.1 mismatches, until
+    * ROADMAP item 1 lands. Exact-duplicate documents in the fixture
+    * guarantee Hamming-0 pairs (rows > 0).
     */
   val dqSimHashNearDupWide: (SparkSession, String) => DataFrame = (s, dir) => {
     val sh = docs(s, dir).select(col("doc_id"),
@@ -557,7 +553,10 @@ object Queries {
        |ORDER BY doc_id""".stripMargin
 
   /** Corpus z-score extremes on n_chars, k=2; boundary-EQUAL values are
-    * flagged — the reference's `~((x>lo)&(x<hi))` quirk (utils.py:229-231).
+    * flagged — the reference's `~((x>lo)&(x<hi))` quirk (utils.py:229-231),
+    * judged by the pipeline rule's own predicate ([[graft.rules.Rules.zEntry]]).
+    * The twin has no uniqueness gate, so none is armed here, and the
+    * moments are the twin's double `avg`/`stddev_samp`.
     *
     * The driver corpus is well-behaved at every SF (n_chars ∈ [48, 577],
     * sd ≈ 138 — everything inside ±2sd), so three extreme rows are
@@ -584,8 +583,8 @@ object Queries {
     val st = d.agg(avg(col("n_chars").cast(DoubleType)).as("m"),
       stddev_samp(col("n_chars").cast(DoubleType)).as("sd"))
     d.crossJoin(broadcast(st))
-      .filter(!(col("n_chars") > col("m") - lit(2) * col("sd") &&
-        col("n_chars") < col("m") + lit(2) * col("sd")))
+      .filter(graft.rules.Rules.zEntry("extreme_n_chars", col("n_chars"),
+        col("m"), col("sd"), k = 2.0, gate = lit(true), col("n_chars")).isNotNull)
       .select(col("doc_id"), col("n_chars"),
         round((col("n_chars") - col("m")) / col("sd"), 6).as("z"))
       .orderBy("doc_id")
@@ -602,15 +601,20 @@ object Queries {
       |WHERE NOT (n_chars > s.m - 2 * s.sd AND n_chars < s.m + 2 * s.sd)
       |ORDER BY doc_id""".stripMargin
 
-  /** Per-language z-score (A6 analogue), k=1.5. */
+  /** Per-language z-score (A6 analogue), k=1.5: the pass-2 rule's entry
+    * ([[graft.rules.Rules.groupZScoreEntry]]) over per-class n/mean/sd
+    * from one `groupBy(lang)`, broadcast-joined back on `lang` — the
+    * twin's `JOIN s USING (lang)`, so a null-`lang` class never joins.
+    * `z` keeps its sign.
+    */
   val dqGroupZscore: (SparkSession, String) => DataFrame = (s, dir) => {
-    val w = Window.partitionBy(col("lang"))
-    docs(s, dir)
-      .withColumn("m", avg(col("n_chars").cast(DoubleType)).over(w))
-      .withColumn("sd", stddev_samp(col("n_chars").cast(DoubleType)).over(w))
-      .filter(col("sd").isNotNull && col("sd") > 0 &&
-        !(col("n_chars") > col("m") - lit(1.5) * col("sd") &&
-          col("n_chars") < col("m") + lit(1.5) * col("sd")))
+    val d = docs(s, dir)
+    val st = d.groupBy("lang").agg(count(lit(1)).as("n"),
+      avg(col("n_chars").cast(DoubleType)).as("m"),
+      stddev_samp(col("n_chars").cast(DoubleType)).as("sd"))
+    d.join(broadcast(st), Seq("lang"))
+      .filter(graft.rules.Rules.groupZScoreEntry(col("n_chars"), col("lang"),
+        "n_chars", col("n"), col("m"), col("sd"), k = 1.5).isNotNull)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         round((col("n_chars") - col("m")) / col("sd"), 6).as("z"))
       .orderBy("doc_id")
@@ -625,12 +629,15 @@ object Queries {
       |  AND NOT (d.n_chars > s.m - 1.5 * s.sd AND d.n_chars < s.m + 1.5 * s.sd)
       |ORDER BY d.doc_id""".stripMargin
 
-  /** Rare (lang, source) combinations (A5 analogue), minCount=3. */
+  /** Rare (lang, source) combinations (A5 analogue), minCount=3, judged
+    * by the pass-2 rule's entry ([[graft.rules.Rules.rareComboEntry]]).
+    */
   val dqRareCombo: (SparkSession, String) => DataFrame = (s, dir) => {
     val d = docs(s, dir)
     val g = d.groupBy("lang", "source").agg(count(lit(1)).as("combo_count"))
-      .filter(col("combo_count") < 3)
     d.join(broadcast(g), Seq("lang", "source"))
+      .filter(graft.rules.Rules.rareComboEntry(col("lang"), col("source"),
+        "lang", "source", col("combo_count"), 3).isNotNull)
       .select("doc_id", "lang", "source", "combo_count")
       .orderBy("doc_id")
   }
@@ -645,7 +652,9 @@ object Queries {
 
   /** Tendency invariant (A4): arm when P(n_chars < 8·n_words) > 0.999
     * over the corpus (denominator = all rows — the reference's quirk),
-    * then flag violators.
+    * then flag violators — the pass-2 rule's entry
+    * ([[graft.rules.Rules.tendencyEntry]]) over one (lt, n) fetch. An
+    * unarmed gate gives no rows.
     */
   val dqTendency: (SparkSession, String) => DataFrame = (s, dir) => {
     val f = docs(s, dir)
@@ -666,12 +675,15 @@ object Queries {
       (lit(1000L) + col("id") * lit(1000L)).as("n_chars"),
       lit(1L).as("n_words"))
     val d = rep.unionByName(planted)
-    val st = d.agg((sum((col("n_chars") < lit(8) * col("n_words")).cast(LongType))
-      .cast(DoubleType) / count(lit(1))).as("p"))
-    d.crossJoin(broadcast(st))
-      .filter(col("p") > 0.999 && col("n_chars") > lit(8) * col("n_words"))
-      .select(col("doc_id"), col("n_chars"), col("n_words"), round(col("p"), 6).as("p"))
-      .orderBy("doc_id")
+    val bound = lit(8) * col("n_words")
+    val st = d.agg(count(when(col("n_chars") < bound, lit(1))), count(lit(1))).head()
+    val cols = Seq(col("doc_id"), col("n_chars"), col("n_words"))
+    (graft.rules.Rules.tendencyEntry(col("n_chars"), bound, "n_chars", "8n_words",
+        st.getLong(0), st.getLong(1)) match {
+      case Some(e) => d.select(cols :+ e.as("__e"): _*).filter(col("__e").isNotNull)
+        .select(cols :+ round(col("__e.score"), 6).as("p"): _*)
+      case None => d.select(cols :+ lit(null).cast(DoubleType).as("p"): _*).limit(0)
+    }).orderBy("doc_id")
   }
 
   val dqTendencySql: String =
@@ -1111,28 +1123,13 @@ object Queries {
       |FROM orders ORDER BY o_orderkey""".stripMargin
 
   /** G3 semantics: one shared label encoding over the union of values,
-    * Pearson correlation of the encoded columns.
+    * Pearson correlation of the encoded columns — [[graft.rules.Rules.corrStr]],
+    * whose correlation is rounded here by Spark's `round(_, 6)`.
     */
   val dqCorr: (SparkSession, String) => DataFrame = (s, dir) => {
-    val d = docs(s, dir)
-    // shared label encoding COLLECTED driver-side and broadcast as a map
-    // literal — the cardinality is tiny by the G3 low-uniqueness gate, and
-    // the previous `row_number().over(Window.orderBy(v))` funneled the
-    // distinct set through ONE partition (the classic global-window
-    // scale-wrong shape). Codes = 1-based rank in sorted order, identical
-    // to the window's row_number.
-    val values = d.select(col("lang").as("v"))
-      .unionByName(d.select(col("source").as("v")))
-      .filter(col("v").isNotNull).distinct()
-      .orderBy("v").collect().map(_.getString(0))
-    val codeMap = values.zipWithIndex.map { case (v, i) => v -> (i + 1).toDouble }.toMap
-    val enc = typedlit(codeMap)
-    d.select(element_at(enc, col("lang")).as("lang_code"),
-        element_at(enc, col("source")).as("source_code"))
-      // inner-join semantics of the encoded original: null keys drop out
-      .filter(col("lang_code").isNotNull && col("source_code").isNotNull)
-      .agg(round(corr(col("lang_code"), col("source_code")), 6)
-        .as("corr_lang_source"))
+    val r = graft.rules.Rules.corrStr(docs(s, dir), Seq("lang", "source"))(("lang", "source"))
+    import s.implicits._
+    Seq(r).toDF("corr").select(round(col("corr"), 6).as("corr_lang_source"))
   }
 
   val dqCorrSql: String =
@@ -1150,17 +1147,22 @@ object Queries {
 
   /** D4 semantics (`utils.py:371-383`): in a ≈all-repeated column, unique
     * values are suspect. A rare-source row is planted so the rule fires.
+    * [[graft.rules.Rules.nonUniqueValues]] judges the rows from one fetch
+    * of the column's uniqueness r; its dup regime is off (hi = 1.0) and
+    * its unique regime arms at r < 0.05, as in the twin.
     */
   val dqValueUniqueness: (SparkSession, String) => DataFrame = (s, dir) => {
     val d = docs(s, dir).select("doc_id", "source")
     val aug = d.unionByName(
       s.range(1).select(lit(999999L).as("doc_id"), lit("src_planted_rare").as("source")))
-    val u = aug.agg((countDistinct(col("source")).cast(DoubleType) /
-      count(col("source"))).as("r"))
-    val cnts = aug.groupBy("source").agg(count(lit(1)).as("c"))
-    aug.join(broadcast(cnts), Seq("source")).crossJoin(broadcast(u))
-      .filter(col("r") < 0.05 && col("c") === 1)
-      .select(col("doc_id"), col("source"), col("c").as("value_count"))
+    val r = aug.agg(countDistinct(col("source")).cast(DoubleType) /
+      count(col("source"))).head().getDouble(0)
+    val flagged = graft.rules.Rules.nonUniqueValues(aug, col("doc_id"), col("source"),
+      "source", r, hi = 1.0, lo = 0.05)
+    flagged.getOrElse(aug.limit(0).select(col("doc_id").as("url"),
+        col("source").as("detail"), lit(0.0).as("score")))
+      .select(col("url").as("doc_id"), col("detail").as("source"),
+        col("score").cast(LongType).as("value_count"))
       .orderBy("doc_id")
   }
 

@@ -11,7 +11,10 @@ import org.apache.spark.ml.functions.vector_to_array
   * column-wise sentences — each column's cells, in row order, form one
   * sentence — then every cell maps to its vector). DEAD CODE in the
   * reference (never called); implemented here for surface completeness
-  * via Spark ML's Word2Vec, the library's own skip-gram.
+  * via Spark ML's Word2Vec, the library's own skip-gram. The engine
+  * returns the vocabulary table (word → vector); mapping cells onto it
+  * is a broadcast join on the cell string, since a categorical
+  * column's vocabulary is broadcast-sized.
   *
   * Distributed re-expression of "one sentence per column": a 10⁹-cell
   * column cannot be one in-memory array on any executor, so sentences
@@ -25,7 +28,7 @@ import org.apache.spark.ml.functions.vector_to_array
   * No DuckDB oracle is possible (embedding training is iterative and
   * float-order-sensitive); the driver records the weaker rows-only
   * check for `w2v_cells`, and CellEmbedSpec pins vocabulary coverage,
-  * dimensionality, finiteness, and the cell → vector mapping.
+  * dimensionality and finiteness.
   */
 object CellEmbed {
 
@@ -61,23 +64,5 @@ object CellEmbed {
       .fit(sentences)
     model.getVectors
       .select(col("word"), vector_to_array(col("vector"), "float32").as("vector"))
-  }
-
-  /** The reference's return shape: `df` with each of `cols` replaced by
-    * its cell's vector (broadcast vocabulary join — the vocabulary of a
-    * categorical column is broadcast-sized by construction).
-    */
-  def transformCells(df: DataFrame, cols: Seq[String], orderCol: String,
-                     dim: Int = 100, window: Int = 2, seed: Long = 42L,
-                     chunk: Int = 1024): DataFrame = {
-    val vecs = vocabVectors(df, cols, orderCol, dim, window, seed, chunk)
-    cols.foldLeft(df) { case (acc, c) =>
-      acc.join(broadcast(vecs.select(
-          col("word").as(s"__w_$c"), col("vector").as(s"__v_$c"))),
-          coalesce(col(c).cast("string"), lit("Nan")) === col(s"__w_$c"),
-          "left")
-        .withColumn(c, col(s"__v_$c"))
-        .drop(s"__w_$c", s"__v_$c")
-    }
   }
 }

@@ -105,8 +105,8 @@ object DocStats {
       minhash: Array[java.lang.Long],
       simhashHi: Long = 0L, simhashLo: Long = 0L) {
     /** LSH band keys over the signature — same formula as the composed
-      * [[Hashing.bandKeys]] (pmod rolling hash of each row group), but
-      * computed in a tight loop. The composed slice+aggregate HOFs are
+      * band-key reference in test scope (pmod rolling hash of each row
+      * group), but computed in a tight loop. The composed slice+aggregate HOFs are
       * interpreted PER ELEMENT per band and measured ~190 s CPU at 300k
       * docs — the single hottest non-kernel cost in the pipeline.
       */
@@ -172,7 +172,7 @@ object DocStats {
       t.putDouble(off,
         if (c == null) 1.0
         else {
-          // same expression as CharLm.fastGramLogProb — identical doubles
+          // same expression as CharLm.perplexityUnder — identical doubles
           val ctx = g.substring(0, CharLm.Order - 1)
           val cc = CharLm.model.ctx.get(ctx)
           val den = (if (cc == null) 0.0 else cc.doubleValue()) +
@@ -500,7 +500,7 @@ object DocStats {
     * distinct set in the kernel, and a legitimate simhash variant;
     * documented contract of the `simhash` feature column). Bit b is set
     * iff at least half the token hashes have bit b set — the same vote
-    * rule as the composed [[Hashing.simHash]]. Empty input ⇒ 0.
+    * rule as the composed simhash reference in test scope. Empty input ⇒ 0.
     * 60 bits keeps the value portable (same bound as md5Long) and leaves
     * headroom for 4×15-bit pigeonhole bands (Hamming ≤ 3 candidate
     * discovery — [[graft.rules.Rules.simHashNearDup]]).
@@ -635,7 +635,7 @@ object DocStats {
 
   /** Band-count clamp, applied at the API boundary: [[Result.bandKeysOf]]
     * emits only bands whose `rowsPerBand` rows all exist in the signature,
-    * which DIFFERS from the composed [[Hashing.bandKeys]] whenever
+    * which DIFFERS from the composed band-key reference whenever
     * `minHashK < bands*rowsPerBand` (there, an out-of-range slice is empty
     * and aggregates to key 0 — co-bucketing every short-sig doc, a
     * degenerate LSH). Clamping here makes the truncation the DECLARED

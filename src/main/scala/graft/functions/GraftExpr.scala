@@ -1,24 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.Shim
 
-/** Column ↔ Expression bridge + SQL registration for the engine's custom
-  * Catalyst expressions.
+/** Column ↔ Expression bridge for the engine's custom Catalyst
+  * expressions.
   */
 object GraftExpr {
   def column(e: Expression): Column = Shim.column(e)
   def expr(c: Column): Expression = Shim.expression(c)
-
-  /** Register the custom expressions for SQL use:
-    * `lang_id(text)`, `char_ngram_perplexity(text)`, `scrub_text(text)`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("lang_id", es => LangIdExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("char_ngram_perplexity",
-      es => CharNgramPerplexity(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("scrub_text", es => ScrubText(es.head), "scala_udf")
-  }
 }

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * specified, engine-portable transform).
   *
   * The extraction IS the ordered transform chain below — defined once and
-  * rendered twice: as a chain of codegen'd Spark built-ins
-  * (`regexp_replace`/`replace`, [[extract]]) and as the identical DuckDB
-  * SQL ([[sqlExpr]], the `dq_html_extract` oracle). Patterns are
+  * rendered twice: as the fused kernel [[extract]] (each step
+  * hand-compiled with the chain's exact match semantics) and as the
+  * identical DuckDB SQL ([[sqlExpr]], the `dq_html_extract` oracle); the
+  * specs diff the kernel against the chain composed of Spark's
+  * `regexp_replace`/`replace` built-ins. Patterns are
   * restricted to the dialect Java regex and RE2 share: inline `(?is)`
   * flags, non-greedy `.*?`, `(?:…)` groups, `\A`/`\z` anchors — no
   * backreferences (RE2 has none), no `\x0B`-class divergences (Java `\s`
@@ -33,12 +35,8 @@ import org.apache.spark.sql.functions._
   *     trimmed around newlines, ≥3 newlines → 2 (paragraph break),
   *     outer trim.
   *
-  * Scale shape: a per-row narrow map of ~17 string ops, all inside
-  * whole-stage codegen (no UDF, no fused-kernel interpreter boundary);
-  * zero shuffle, zero state. At 100 TB this runs at scan speed on the
-  * source partitions. A single-pass state-machine kernel (the DocStats
-  * treatment) is the known next step if profiles ever show the regex
-  * chain dominating — at ~1.5 KB/doc it does not (see BENCH.md).
+  * Scale shape: a per-row narrow map; zero shuffle, zero state. At
+  * 100 TB this runs at scan speed on the source partitions.
   *
   * PagesGen composes its html so that `extract(html) == text` holds
   * byte-identically on every generated page (HtmlExtractSpec pins it,
@@ -90,18 +88,6 @@ object HtmlExtract {
     */
   def extract(html: Column): Column =
     GraftExpr.column(HtmlExtractExpr(GraftExpr.expr(html)))
-
-  /** The extraction as the composed built-in chain — the semantic
-    * reference the DuckDB oracle ([[sqlExpr]]) mirrors and the
-    * differential target for the fused kernel's spec.
-    */
-  def extractChain(html: Column): Column = {
-    var c = html
-    tagSteps.foreach { case (p, r) => c = regexp_replace(c, p, r) }
-    entitySteps.foreach { case (a, b) => c = replace(c, lit(a), lit(b)) }
-    wsSteps.foreach { case (p, r) => c = regexp_replace(c, p, r) }
-    c
-  }
 
   /** Same over a BINARY column (UTF-8 page bytes, the lake schema). */
   def extractBinary(html: Column): Column = extract(decode(html, "UTF-8"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.TernaryLike
 
 /** KNN imputation of missing numeric values — the reference's C8
   * (`/root/reference/src/improve_data_quality.py:459-480`:
@@ -43,8 +42,7 @@ import org.apache.spark.sql.catalyst.trees.TernaryLike
   *    per missing cell — map-side partials carry ≤ k triples per cell
   *    per partition whatever the donor count, the `UrlFns.kthSmallest`
   *    shape (never `collect_list` + sort: that materialises every donor
-  *    in one buffer). The per-(dist, donor key)-group [[KnnMeanK]]
-  *    aggregate remains as the composable single-group primitive.
+  *    in one buffer).
   *  - the previous formulation (broadcast-NLJ pair stream → broadcast
   *    miss join → per-pair map build → ObjectHashAggregate) computed
   *    the same numbers through ~4 jobs and an n·r-row intermediate;
@@ -64,14 +62,6 @@ import org.apache.spark.sql.catalyst.trees.TernaryLike
   * dedup first to mirror the reference (`_is_duplicated` at :471).
   */
 object KnnImpute {
-
-  /** Mean of the k nearest donors' value per group, ordered by
-    * (dist, donorKey) ascending; null on an empty group.
-    */
-  def knnMean(dist: Column, donorKey: Column, value: Column, k: Int): Column =
-    GraftExpr.column(
-      KnnMeanK(GraftExpr.expr(dist), GraftExpr.expr(donorKey),
-        GraftExpr.expr(value), k).toAggregateExpression())
 
   /** Receiver-count gate for [[imputeCells]]: every partition's
     * aggregation buffer holds one bounded k-heap per missing cell
@@ -176,27 +166,6 @@ object KnnImpute {
       .select(col("__c.__k").as("__k"), col("__c.col").as("col"),
         round(col("__c.imputed"), 6).as("imputed"))
   }
-
-  /** The sklearn return shape: the input frame with every missing
-    * feature cell filled (6-dp). Non-feature columns pass through.
-    * The patch broadcast is bounded by construction: imputeCells emits
-    * ≤ one row per missing cell of ≤ [[MaxReceivers]] receivers (the
-    * named-error gate), so the broadcast build can never exceed
-    * receivers × features rows.
-    */
-  def impute(df: DataFrame, key: Column, features: Seq[String],
-             k: Int = 10): DataFrame = {
-    val patch = imputeCells(df, key, features, k)
-      .groupBy(col("__k"))
-      .agg(map_from_entries(collect_list(struct(col("col"), col("imputed"))))
-        .as("__patch"))
-    df.withColumn("__k", key.cast(LongType))
-      .join(broadcast(patch), Seq("__k"), "left")
-      .select(df.columns.map(c =>
-        (if (features.contains(c))
-           coalesce(col(c).cast(DoubleType), element_at(col("__patch"), lit(c)))
-         else col(c)).as(c)): _*)
-  }
 }
 
 /** Bounded max-heap of the k smallest (dist, id) pairs with a payload
@@ -261,66 +230,6 @@ final class KnnMeanHeap(val k: Int) {
     while (i < n) { s += v(idx(i)); i += 1 }
     s / n
   }
-}
-
-/** `knn_mean(dist, donorKey, value, k)` — see [[KnnImpute.knnMean]]. */
-case class KnnMeanK(
-    first: Expression, second: Expression, third: Expression, k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KnnMeanHeap] with TernaryLike[Expression] {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "knn_mean"
-
-  override def createAggregationBuffer(): KnnMeanHeap = new KnnMeanHeap(k)
-
-  override def update(buf: KnnMeanHeap, input: InternalRow): KnnMeanHeap = {
-    val dd = first.eval(input); val ii = second.eval(input)
-    val vv = third.eval(input)
-    if (dd != null && ii != null && vv != null)
-      buf.offer(dd.asInstanceOf[Double], ii.asInstanceOf[Long],
-        vv.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(buf: KnnMeanHeap, other: KnnMeanHeap): KnnMeanHeap = {
-    var i = 0
-    while (i < other.n) { buf.offer(other.d(i), other.id(i), other.v(i)); i += 1 }
-    buf
-  }
-
-  override def eval(buf: KnnMeanHeap): Any =
-    if (buf.n == 0) null else buf.mean
-
-  override def serialize(buf: KnnMeanHeap): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + 24 * buf.n)
-    bb.putInt(buf.k).putInt(buf.n)
-    var i = 0
-    while (i < buf.n) {
-      bb.putDouble(buf.d(i)); bb.putLong(buf.id(i)); bb.putDouble(buf.v(i))
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): KnnMeanHeap = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val heap = new KnnMeanHeap(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) { heap.offer(bb.getDouble(), bb.getLong(), bb.getDouble()); i += 1 }
-    heap
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): KnnMeanK =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KnnMeanK =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): KnnMeanK =
-    copy(first = f, second = s, third = t)
 }
 
 /** Driver-built receiver table shipped inside [[KnnExactAll]] (bounded

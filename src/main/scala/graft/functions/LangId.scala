@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -166,7 +165,7 @@ object LangIdModel {
                          logProb: Array[java.util.HashMap[String, java.lang.Double]],
                          defaultLogProb: Array[Double])
 
-  private def trigrams(s: String): Iterator[String] = {
+  private[graft] def trigrams(s: String): Iterator[String] = {
     val n = TextNorm.norm(s)
     if (n.length < NGram) Iterator.empty
     else (0 to n.length - NGram).iterator.map(i => n.substring(i, i + NGram))
@@ -195,8 +194,7 @@ object LangIdModel {
     * expression to every executor — so anything past this bound is a
     * mispointed DataFrame (a corpus, not a profile), and the loader
     * fails with a named error instead of a driver OOM. Same contract as
-    * QualityModel.fromFrame's bounded sample and the nearDupResolve
-    * driver gates.
+    * the nearDupResolve driver gates.
     */
   val MaxCorpusBytes: Long = 64L << 20
 
@@ -217,8 +215,8 @@ object LangIdModel {
           s"$maxBytes-byte loader budget — this loader collects the " +
           "corpus to build a broadcast-sized model, so a corpus-scale " +
           "input is a mispointed table. Curate/sample it first " +
-          "(e.g. the QualityModel.fromFrame content-hash bottom-k " +
-          "pattern) or raise maxBytes explicitly.")
+          "(e.g. a content-hash bottom-k sample, as Ann.trainCentroids " +
+          "takes) or raise maxBytes explicitly.")
     df.select("lang", "text").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
   }
@@ -282,38 +280,6 @@ object LangIdModel {
     }.toArray
     FastModel(m.langs, tables, m.defaultLogProb)
   }
-
-  /** Returns (bestLang, normalizedScore). Score = best mean per-trigram
-    * log-likelihood margin over the runner-up (≥ 0; higher = more
-    * confident). Empty/too-short text ⇒ ("und", 0.0).
-    */
-  def classify(text: String): (String, Double) = {
-    val m = model
-    val grams = trigrams(text).toArray
-    if (grams.isEmpty) return ("und", 0.0)
-    val scores = new Array[Double](m.langs.length)
-    var i = 0
-    while (i < m.langs.length) {
-      val hm = m.logProb(i); val d = m.defaultLogProb(i)
-      var s = 0.0; var j = 0
-      while (j < grams.length) {
-        val v = hm.get(grams(j))
-        s += (if (v == null) d else v.doubleValue())
-        j += 1
-      }
-      scores(i) = s / grams.length
-      i += 1
-    }
-    var best = 0; var second = -1
-    i = 1
-    while (i < scores.length) {
-      if (scores(i) > scores(best)) { second = best; best = i }
-      else if (second < 0 || scores(i) > scores(second)) second = i
-      i += 1
-    }
-    val margin = if (second < 0) 0.0 else scores(best) - scores(second)
-    (m.langs(best), margin)
-  }
 }
 
 private[functions] object TextNorm {
@@ -325,27 +291,7 @@ private[functions] object TextNorm {
     s.trim.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
 }
 
-/** `lang_id(text)` → struct<lang: string, score: double>. */
-case class LangIdExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("lang", StringType, nullable = false),
-    StructField("score", DoubleType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any = {
-    val (lang, score) = LangIdModel.classify(input.asInstanceOf[UTF8String].toString)
-    InternalRow(UTF8String.fromString(lang), score)
-  }
-  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
-
 object LangId {
-  def langIdStruct(c: Column): Column = GraftExpr.column(LangIdExpr(GraftExpr.expr(c)))
-  def langIdLang(c: Column): Column = langIdStruct(c).getField("lang")
-  def langIdScore(c: Column): Column = langIdStruct(c).getField("score")
-
   /** SQL-portable marker-token language scorer (used by oracle-checked
     * queries): counts per-language marker-word hits among tokens and
     * returns the argmax. Weaker than the n-gram model but expressible

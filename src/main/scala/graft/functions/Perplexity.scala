@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.unsafe.types.UTF8String
-
 /** KenLM-style per-document perplexity from a character n-gram LM.
   *
   * Reimagines the reference's outlier scoring (`/root/reference/src/
@@ -92,23 +86,14 @@ object CharLm {
     math.exp(-logSum / total)
   }
 
-  /** Hash-keyed LOG-prob tables for the zero-allocation scorer
+  /** Hash-keyed LOG-prob defaults for the zero-allocation scorer
     * ([[DocStats]]): `math.log` per trigram was ~1500 log() calls per
-    * document — precomputing log P(c|ctx) for seen grams, the per-context
-    * unseen-gram default, and the global default removes every log from
-    * the hot loop. Values are built with the IDENTICAL expression the
-    * reference path uses, so the summed doubles match bit-for-bit.
+    * document — precomputing the per-context unseen-gram default and the
+    * global default (seen grams' log P(c|ctx) live in DocStats's merged
+    * gram table) removes every log from the hot loop. Values are built
+    * with the IDENTICAL expression the reference path uses, so the
+    * summed doubles match bit-for-bit.
     */
-  lazy val fastGramLogProb: LongDoubleMap = {
-    val t = new LongDoubleMap(model.cnt.size() + 1)
-    model.cnt.forEach { (g, c) =>
-      val ctx = g.substring(0, Order - 1)
-      val cc = model.ctx.get(ctx)
-      val den = (if (cc == null) 0.0 else cc.doubleValue()) + Alpha * model.vocab
-      t.put(DocStats.fnv1a(g, 0, g.length), math.log((c + Alpha) / den))
-    }
-    t
-  }
   lazy val fastCtxDefaultLogProb: LongDoubleMap = {
     val t = new LongDoubleMap(model.ctx.size() + 1)
     model.ctx.forEach { (g, c) =>
@@ -122,20 +107,4 @@ object CharLm {
 
   /** Perplexity = exp(-mean log P(c | ctx)). Short/empty text ⇒ 1.0. */
   def perplexity(text: String): Double = perplexityUnder(model, text)
-}
-
-/** `char_ngram_perplexity(text)` → double. */
-case class CharNgramPerplexity(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    CharLm.perplexity(input.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(newChild: Expression): CharNgramPerplexity =
-    copy(child = newChild)
-}
-
-object Perplexity {
-  def perplexityCol(c: Column): Column =
-    GraftExpr.column(CharNgramPerplexity(GraftExpr.expr(c)))
 }

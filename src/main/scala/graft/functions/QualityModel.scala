@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,10 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the `dq_quality_score` oracle checks the two engines bit-for-bit
   * through the md5 → bucket → mean → round(σ, 4) chain.
   *
-  * Scale shape: training is DRIVER-side over a BOUNDED deterministic
-  * sample (the IVF-centroid pattern — content-hash bottom-k, partition-
-  * independent); the trained weights are ~32 KB that ride inside the
-  * expression to every executor; inference is one codegen'd narrow map
+  * Scale shape: training is DRIVER-side over a BOUNDED sample (a
+  * labeled frame's content-hash bottom-k — the IVF-centroid pattern,
+  * partition-independent — as QualityModelSpec trains one); the
+  * trained weights are ~32 KB that ride inside the expression to every
+  * executor; inference is one codegen'd narrow map
   * over the corpus — no shuffle, no UDF, no model server. That is
   * exactly how the published pipelines run their quality models at
   * 10¹²-doc scale: tiny model, embarrassingly parallel scoring.
@@ -186,50 +186,6 @@ object QualityModel {
   }
 
   private def quant(x: Double): Double = math.rint(x * 1e6) / 1e6
-
-  /** Production loader: train from any (text, label∈{0,1}) DataFrame on
-    * a BOUNDED deterministic sample — content-hash bottom-k (the
-    * [[graft.embed.Ann.trainCentroids]] pattern: partition-independent,
-    * unbiased by file order, `TakeOrderedAndProject` so no corpus
-    * shuffle). At 10¹² docs the sample stays `sampleN` rows; training
-    * cost is independent of corpus size.
-    */
-  def fromFrame(df: DataFrame, textCol: String, labelCol: String,
-                sampleN: Int = 4096, iters: Int = 400,
-                lr: Double = 2.0, l2: Double = 1e-4): Model = {
-    val rows = df
-      .select(col(textCol).cast("string").as("__t"),
-        col(labelCol).cast(DoubleType).as("__y"))
-      .filter(col("__t").isNotNull && col("__y").isNotNull)
-      .orderBy(xxhash64(col("__t")), col("__t"), col("__y"))
-      .limit(sampleN)
-      .collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-    train(rows.toSeq, iters, lr, l2)
-  }
-
-  /** Threshold calibration — the FineWeb-style "keep the top X% by
-    * score" operating point: the (1 − keepRate) quantile of the score
-    * distribution, via `percentile_approx` (one pass, mergeable sketch —
-    * corpus-scale). Drop docs scoring BELOW the returned θ to keep
-    * ≈ keepRate of the corpus.
-    */
-  def thresholdForKeepRate(df: DataFrame, textCol: String, keepRate: Double,
-                           m: Model = Default,
-                           accuracy: Int = 10000): Double = {
-    require(keepRate > 0.0 && keepRate < 1.0,
-      s"keepRate must be in (0,1), got $keepRate")
-    import org.apache.spark.sql.functions.{lit, percentile_approx}
-    val row = df.select(percentile_approx(
-        scoreColumn(TextFns.normText(col(textCol)), m),
-        lit(1.0 - keepRate), lit(accuracy)).as("t"))
-      .head()
-    // percentile_approx of an empty/all-null column is NULL — surface a
-    // named error instead of the NPE getDouble would throw
-    require(!row.isNullAt(0),
-      s"thresholdForKeepRate: no non-null '$textCol' values to calibrate on")
-    row.getDouble(0)
-  }
 
   // =====================================================================
   // Built-in model — trained at class load from a deterministic in-JVM

@@ -88,9 +88,6 @@ object TextFns {
 
   def toxicityHits(c: Column): Column = hitsIn(tokens(c), ToxicityLexicon)
 
-  /** Lines of a document (for line-level dedup). */
-  def lines(c: Column): Column = filter(split(c, "\n"), l => trim(l) =!= lit(""))
-
   /** Canonical text normalisation used before fingerprint/shingle hashing:
     * lowercase, trim, collapse whitespace runs to single spaces.
     */

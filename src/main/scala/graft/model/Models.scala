@@ -55,34 +55,14 @@ object Verdict {
 
 /** Broadcast-sized corpus profile: the Spark analogue of the reference's
   * memoized `uniq_col` / null-mean metadata (`improve_data_quality.py:201-215`,
-  * `utils.py:386-395`). Computed once per run by [[graft.profile.Profiler]]
-  * in a single aggregate pass, then carried on the driver / broadcast —
-  * it is O(columns), never O(rows).
+  * `utils.py:386-395`). Computed by [[graft.profile.Profiler]] in a
+  * single aggregate pass and carried on the driver — it is O(columns),
+  * never O(rows).
   */
 final case class ColumnProfile(
     column: String,
     nonNull: Long,
     distinct: Long,
     uniqueness: Double, // nunique / count over non-nulls (utils.py:159-187)
-    nullMean: Double,   // fraction of nulls (utils.py:386-395)
-    mean: Option[Double],   // numeric columns only
-    stddev: Option[Double]  // SAMPLE stddev — pandas ddof=1 (utils.py:224-225)
-)
-
-/** Per-document features computed in ONE narrow pass over `text`.
-  * The reference re-scans columns once per rule; the engine fuses all
-  * per-doc feature extraction into a single projection so the 100 TB
-  * scan happens exactly once.
-  */
-final case class DocFeatures(
-    url: String,
-    nChars: Int,
-    nWords: Int,
-    meanWordLen: Double,
-    symbolRatio: Double,
-    stopwordRatio: Double,
-    langIdLang: String,
-    langIdScore: Double,
-    perplexity: Double,
-    fingerprint: Long
+    nullMean: Double    // fraction of nulls (utils.py:386-395)
 )

@@ -9,40 +9,24 @@ import graft.model.ColumnProfile
   *
   * Spark analogue of the reference's memoized metadata (`uniq_col`
   * `/root/reference/src/improve_data_quality.py:201-215`, null means
-  * `src/utils.py:386-395`, mean/std `src/utils.py:224-225`): instead of one
-  * pandas pass per column, a single `agg` computes every per-column
-  * statistic in one shuffle-light job (partial aggregation map-side, one
-  * tiny reduce). The result is O(columns) and lives on the driver — the
-  * memoization of the reference becomes an explicit, checkpointable stage.
-  *
-  * `exact=false` swaps `countDistinct` for `approx_count_distinct` (HLL):
-  * at 10¹² rows the exact distinct of a high-cardinality column (url) is
-  * itself a massive shuffle, and the profile only gates rules by coarse
-  * thresholds (0.001 / 0.005 / 0.99 — SURVEY §2.4), so HLL's ~2% error is
-  * safely inside the gate margins. Tests use exact=true.
+  * `src/utils.py:386-395`): instead of one pandas pass per column, a
+  * single `agg` computes every per-column statistic in one shuffle-light
+  * job (partial aggregation map-side, one tiny reduce). The result is
+  * O(columns) and lives on the driver — the memoization of the reference
+  * becomes an explicit, checkpointable stage. The `dq_profile` oracle
+  * query runs it.
   */
 object Profiler {
 
-  def profile(df: DataFrame, exact: Boolean = true): Map[String, ColumnProfile] = {
+  def profile(df: DataFrame): Map[String, ColumnProfile] = {
     val fields = df.schema.fields.filterNot(_.dataType == BinaryType)
     if (fields.isEmpty) return Map.empty
     val aggs = fields.flatMap { f =>
       val c = col(f.name)
-      val distinct =
-        if (exact) countDistinct(c) else approx_count_distinct(c)
-      val numeric = f.dataType match {
-        case _: NumericType => Seq(
-          avg(c.cast(DoubleType)).as(s"${f.name}__mean"),
-          stddev_samp(c.cast(DoubleType)).as(s"${f.name}__std"))
-        case _ => Seq(
-          lit(null).cast(DoubleType).as(s"${f.name}__mean"),
-          lit(null).cast(DoubleType).as(s"${f.name}__std"))
-      }
       Seq(
         count(c).as(s"${f.name}__n"),
-        distinct.as(s"${f.name}__d"),
-        avg(isnull(c).cast(DoubleType)).as(s"${f.name}__nullmean")
-      ) ++ numeric
+        countDistinct(c).as(s"${f.name}__d"),
+        avg(isnull(c).cast(DoubleType)).as(s"${f.name}__nullmean"))
     }
     val row: Row = df.agg(aggs.head, aggs.tail: _*).head()
     fields.map { f =>
@@ -50,12 +34,10 @@ object Profiler {
       val d = row.getAs[Long](s"${f.name}__d")
       val nullMean = Option(row.getAs[Any](s"${f.name}__nullmean"))
         .map(_.asInstanceOf[Double]).getOrElse(0.0)
-      val mean = Option(row.getAs[Any](s"${f.name}__mean")).map(_.asInstanceOf[Double])
-      val std = Option(row.getAs[Any](s"${f.name}__std")).map(_.asInstanceOf[Double])
       // uniqueness = nunique/count over non-nulls; 0 for empty column
       // (utils.py:159-187 — the ratio that gates every reference rule)
       val uniq = if (n == 0) 0.0 else d.toDouble / n
-      f.name -> ColumnProfile(f.name, n, d, uniq, nullMean, mean, std)
+      f.name -> ColumnProfile(f.name, n, d, uniq, nullMean)
     }.toMap
   }
 }

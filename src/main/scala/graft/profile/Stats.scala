@@ -1,9 +1,5 @@
 package graft.profile
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
-
 /** Order-independent moments.
   *
   * Double-precision `avg`/`stddev_samp` depend on partial-aggregation
@@ -12,28 +8,11 @@ import org.apache.spark.sql.types.DecimalType
   * break run-to-run determinism (a hard requirement: verdicts must be
   * identical at N and 4N executors). Summing as DECIMAL is exact and
   * therefore order-independent; mean/std are derived driver-side from
-  * the exact (n, Σx, Σx²).
+  * the exact (n, Σx, Σx²) a caller aggregates (pass 2's stats fetch).
   */
 object Stats {
 
   final case class Moments(n: Long, mean: Double, stddevSamp: Double)
-
-  private val Dec = DecimalType(38, 10)
-
-  /** Exact moments for one numeric column (nulls excluded). */
-  def moments(df: DataFrame, x: Column): Moments = {
-    val d = x.cast(Dec)
-    val row = df.agg(
-      count(x).as("n"),
-      sum(d).as("s"),
-      sum((x.cast(DecimalType(19, 5)) * x.cast(DecimalType(19, 5)))).as("s2")
-    ).head()
-    val n = row.getAs[Long]("n")
-    if (n == 0) return Moments(0, Double.NaN, Double.NaN)
-    val s = row.getAs[java.math.BigDecimal]("s")
-    val s2 = row.getAs[java.math.BigDecimal]("s2")
-    fromSums(n, s, s2)
-  }
 
   def fromSums(n: Long, s: java.math.BigDecimal, s2: java.math.BigDecimal): Moments = {
     // sum() over zero rows yields null — a per-day Checkpointer slice where

@@ -3,7 +3,6 @@ package graft.rules
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import graft.model.ColumnProfile
 
 /** Generic rule kernels. A frame rule takes a keyed DataFrame and
   * returns a verdict-shaped DataFrame `(key, rule, keep=false, score,
@@ -28,21 +27,6 @@ object Rules {
       lit(false).as("keep"),
       score.cast(DoubleType).as("score"),
       detail.cast("string").as("detail"))
-
-  /** O4 `push_bad_index` (`/root/reference/src/improve_data_quality.py:
-    * 162-172`, deprecated there — kept for surface completeness): append
-    * an externally supplied bad-url list to the verdict set. The
-    * reference appends raw indexes to a Python list (duplicates and
-    * all); the verdict-frame analogue is a union of DROP verdicts under
-    * an `external` rule — downstream consumers (`add_to_bad_idx` ≙
-    * verdict union + distinct on url) already dedupe, exactly as the
-    * reference's `bad_index` property does via `set()`.
-    */
-  def pushBadIndex(verdicts: DataFrame, badUrls: DataFrame,
-                   rule: String = "external"): DataFrame =
-    verdicts.unionByName(
-      verdict(badUrls, col(badUrls.columns.head), rule,
-        lit(1.0), lit("pushed")))
 
   /** Exact duplicate detection, reference semantics
     * (`improve_data_quality.py:286-298`): all-but-first occurrence of
@@ -254,7 +238,7 @@ object Rules {
     * `NOT (x > lo AND x < hi)`, so boundary-EQUAL values are flagged.
     * Score = |x − mean| / sd.
     */
-  private def zEntry(rule: String, x: Column, mean: Column, sd: Column,
+  private[graft] def zEntry(rule: String, x: Column, mean: Column, sd: Column,
                      k: Double, gate: Column, detail: Column): Column =
     entry(gate && x.isNotNull &&
       !(x > mean - lit(k) * sd && x < mean + lit(k) * sd),
@@ -330,17 +314,17 @@ object Rules {
     } else None
   }
 
-  /** String-column correlation discovery (`improve_data_quality.py:638-672`,
-    * G3): label-encode the gated low-uniqueness string columns with ONE
-    * SHARED encoding (the reference fits a single LabelEncoder over the
-    * union of values), Pearson-correlate every pair, keep |corr| ≥ thresh.
-    * The encoding table is tiny by the gate's construction → broadcast;
+  /** String-column correlation (`improve_data_quality.py:638-672`, G3):
+    * label-encode `cols` with ONE SHARED encoding (the reference fits a
+    * single LabelEncoder over the union of values: codes = 1-based rank
+    * in sorted order, nulls stay unencoded) and Pearson-correlate every
+    * pair. A pair with fewer than two rows encoded on both sides has no
+    * correlation (None). The encoding table is tiny for the
+    * low-uniqueness columns the reference runs this on → a map literal;
     * all pairwise correlations come from ONE aggregate pass.
     */
-  def corrStr(df: DataFrame, cols: Seq[String],
-              thresh: Double = 0.5): Map[String, Seq[String]] = {
-    if (cols.size < 2) return cols.map(_ -> Seq.empty[String]).toMap
-    // shared encoding: sorted distinct union of all values → 1..K
+  def corrStr(df: DataFrame, cols: Seq[String]): Map[(String, String), Option[Double]] = {
+    if (cols.size < 2) return Map.empty
     val values = cols.map(c => df.select(col(c).cast("string").as("v")))
       .reduce(_ unionByName _).filter(col("v").isNotNull)
       .distinct().orderBy("v")
@@ -349,38 +333,12 @@ object Rules {
     val enc = typedlit(codeMap)
     val encoded = df.select(cols.map(c =>
       element_at(enc, col(c).cast("string")).cast("double").as(c)): _*)
-    val pairs = cols.combinations(2).toSeq
-    val aggs = pairs.map { case Seq(a, b) => corr(col(a), col(b)).as(s"$a|$b") }
+    val pairs = cols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
+    val aggs = pairs.map { case (a, b) => corr(col(a), col(b)).as(s"$a|$b") }
     val row = encoded.agg(aggs.head, aggs.tail: _*).head()
-    val related = pairs.flatMap { case Seq(a, b) =>
-      Option(row.getAs[Any](s"$a|$b")).map(_.asInstanceOf[Double]).toSeq
-        .filter(c => math.abs(c) >= thresh)
-        .flatMap(_ => Seq(a -> b, b -> a))
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sorted }
-    cols.map(c => c -> related.getOrElse(c, Seq.empty)).toMap
-  }
-
-  /** Row-completeness (`utils.py:344-368`, A3): flag rows whose null
-    * fraction across all columns ≥ t1 AND whose null fraction across
-    * "mostly-present" columns (column null-mean < 0.8, from the broadcast
-    * profile) ≥ t2 — the intersection semantics of utils.py:366. Pure
-    * row-local expression: no shuffle.
-    */
-  def completeness(df: DataFrame, key: Column,
-                   profiles: Map[String, ColumnProfile],
-                   cols: Seq[String],
-                   t1: Double = 0.7, t2: Double = 0.5): DataFrame = {
-    val nullCount = cols.map(c => isnull(col(c)).cast("int")).reduce(_ + _)
-    val presentCols = cols.filter(c => profiles.get(c).forall(_.nullMean < 0.8))
-    val nullCountPresent =
-      if (presentCols.isEmpty) lit(0)
-      else presentCols.map(c => isnull(col(c)).cast("int")).reduce(_ + _)
-    val frac1 = nullCount.cast(DoubleType) / lit(cols.size)
-    val frac2 =
-      if (presentCols.isEmpty) lit(0.0)
-      else nullCountPresent.cast(DoubleType) / lit(presentCols.size)
-    val flagged = df.filter(frac1 >= t1 && frac2 >= t2)
-    verdict(flagged, key, "empty", frac1, lit("row_null_fraction"))
+    pairs.map { case (a, b) =>
+      (a, b) -> Option(row.getAs[java.lang.Double](s"$a|$b")).map(_.doubleValue)
+    }.toMap
   }
 
   /** Conditional verdict entry: struct(rule, score, detail) when `cond`
@@ -605,8 +563,8 @@ object Rules {
     * kernel with no cross-document state — and the ~32 KB weight table
     * rides inside the expression to every executor; zero shuffle, no
     * model server. The [[graft.functions.QualityModel.Default]] model is
-    * the built-in; a production model trained on real labels loads via
-    * [[graft.functions.QualityModel.fromFrame]].
+    * the built-in; a production model is [[graft.functions.QualityModel.train]]
+    * over a bounded sample of real labels.
     */
   def modelQualityRule(df: DataFrame, key: Column, text: Column,
                        minScore: Double,

@@ -52,20 +52,4 @@ object PageSource {
     }
     validate(raw).as[Page]
   }
-
-  /** Reference "sql" source (`/root/reference/src/utils.py:42-67`
-    * dispatches `pd.read_sql`; whitelist `utils.py:20-39`): a JDBC table
-    * scan through Spark's jdbc relation. Options pass straight through —
-    * at scale ALWAYS set `partitionColumn`/`lowerBound`/`upperBound`/
-    * `numPartitions`, otherwise the read is a single driver-adjacent
-    * partition by construction (Spark's jdbc default), which no amount of
-    * executors can parallelise.
-    */
-  def loadJdbc(spark: SparkSession, url: String, table: String,
-               options: Map[String, String] = Map.empty): Dataset[Page] = {
-    import spark.implicits._
-    val props = new java.util.Properties()
-    options.foreach { case (k, v) => props.setProperty(k, v) }
-    validate(spark.read.jdbc(url, table, props)).as[Page]
-  }
 }

@@ -1,23 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming ingest surface (Structured Streaming).
+/** Event-time operators over the `events` table, as batch jobs: tumbling
+  * windowed counts and gap-based sessionization, the operators behind the
+  * `ev_window_agg` and `ev_sessionize` oracle queries.
   *
-  * The reference is batch-only (SURVEY §2.8) and the north rule requires
-  * batch resumability, not streaming — but a webtext engine at 100 TB
-  * typically ingests crawl deltas continuously, so the engine exposes the
-  * same windowed-aggregation semantics as a streaming job: event-time
-  * tumbling windows with a watermark for bounded state and late-data
-  * discard. The batch twin [[windowedCountsBatch]] is the SQL-checkable
-  * equivalent used by the correctness oracle; the streaming variant is
-  * exercised in tests via a file source + memory sink.
+  * The reference is batch-only (SURVEY §2.8) and the north rule asks for
+  * batch resumability, not streaming. The engine's per-document rules
+  * are stateless narrow transforms, so they run unchanged over a
+  * `readStream` source (StreamingSpec checks the pass-1 heuristics and
+  * the model-quality rule that way); cross-document rules run as the
+  * checkpointed batch pass over each closed ingest window — the
+  * Checkpointer's per-day contract.
   */
 object EventStream {
 
-  /** Batch twin: tumbling 1-hour windows per event_type. */
+  /** Tumbling 1-hour windows per event_type. */
   def windowedCountsBatch(events: DataFrame): DataFrame =
     events.groupBy(
       date_trunc("hour", col("ts")).as("window_start"),
@@ -25,40 +25,13 @@ object EventStream {
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 4).as("sum_value"))
 
-  /** Streaming quality scoring over a pages directory: the fused feature
-    * projection and the pass-1 per-row heuristic rules are STATELESS
-    * narrow transforms, so they run unchanged under Structured Streaming
-    * — a crawl-delta directory streams straight into per-document
-    * verdicts. (Dedup and pass-2 corpus statistics are inherently
-    * cross-document; in a streaming deployment they run as the
-    * checkpointed batch pass over each closed ingest window — exactly
-    * the Checkpointer's per-day contract.) StreamingSpec asserts the
-    * streamed verdicts equal the batch heuristic verdicts on the same
-    * pages.
-    */
-  def heuristicVerdictStream(spark: SparkSession, sourceDir: String,
-                             queryName: String): StreamingQuery = {
-    val pages = spark.readStream
-      .schema(graft.model.Page.schema)
-      .parquet(sourceDir)
-    val feat = graft.pipeline.QualityPipeline.features(pages)
-    graft.pipeline.QualityPipeline
-      .heuristicVerdicts(feat, graft.pipeline.QualityPipeline.defaultConfig)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Gap-based sessionization, batch twin: a session is a maximal run of
-    * a user's events with consecutive gaps ≤ `gapMinutes`. One shuffle on
-    * the session key (user_id) carrying narrow rows, then a per-user
-    * ordered window — the inherent shape of sessionization at any scale
-    * (the 100 TB version partitions by user hash exactly like this; no
-    * global ordering anywhere). Output micros are BIGINT for oracle
-    * portability (epoch_us on the DuckDB side).
+  /** Gap-based sessionization: a session is a maximal run of a user's
+    * events with consecutive gaps ≤ `gapMinutes`. One shuffle on the
+    * session key (user_id) carrying narrow rows, then a per-user ordered
+    * window — the inherent shape of sessionization at any scale (the
+    * 100 TB version partitions by user hash exactly like this; no global
+    * ordering anywhere). Output micros are BIGINT for oracle portability
+    * (epoch_us on the DuckDB side).
     */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -77,158 +50,5 @@ object EventStream {
         max(col("__us")).as("session_end_us"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("sum_value"))
-  }
-
-  final case class SessionEvent(user_id: Long, event_id: Long, us: Long,
-                                value: Double)
-  /** Per-user state. `n >= 1` = an OPEN session; `n == 0` = a CLOSED
-    * TOMBSTONE: the last session (number `sessionNo`, ended `lastUs`) was
-    * already emitted by an event-time timeout, and the marker survives
-    * solely so the user's NEXT session continues the numbering at
-    * `sessionNo + 1` — without it, numbering restarts at 1 whenever a
-    * user's sessions straddle a timeout, duplicating (user_id,
-    * session_no) keys and diverging from [[sessionizeBatch]].
-    */
-  final case class OpenSession(sessionNo: Long, startUs: Long, lastUs: Long,
-                               n: Long, sum: Double)
-  final case class Session(user_id: Long, session_no: Long,
-                           session_start_us: Long, session_end_us: Long,
-                           n_events: Long, sum_value: Double)
-
-  /** Streaming sessionization — the CUSTOM-STATE operator
-    * (`flatMapGroupsWithState`, the pre-`transformWithState` stable API):
-    * per user, an open session lives in the state store; a micro-batch's
-    * events extend it or close it (gap > `gapMinutes`), and an
-    * event-time TIMEOUT closes it when the watermark passes
-    * last-event + gap — so a session is emitted exactly once, when no
-    * in-watermark event can extend it anymore. A closed session leaves a
-    * TOMBSTONE (see [[OpenSession]]) holding the session counter, expiring
-    * after `tombstoneTtlDays` of user inactivity — so numbering matches
-    * the batch twin exactly while total state stays bounded at one tiny
-    * record per RECENTLY-ACTIVE user (a user returning after the TTL
-    * restarts at session 1; pick the TTL to taste — at 100 TB scale an
-    * unbounded forever-user registry is exactly what a state store must
-    * not become). State per key is O(1), the streaming analogue of the
-    * batch twin's per-user window. Within a micro-batch events are sorted
-    * by (us, event_id); cross-batch disorder beyond the watermark is the
-    * usual Structured Streaming contract.
-    */
-  def sessionizeStream(spark: SparkSession, sourceDir: String,
-                       schemaFrom: DataFrame, queryName: String,
-                       gapMinutes: Int = 30,
-                       maxFilesPerTrigger: Option[Int] = None,
-                       tombstoneTtlDays: Int = 30,
-                       checkpointDir: Option[String] = None,
-                       sinkDir: Option[String] = None): StreamingQuery = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val gapUs = gapMinutes * 60L * 1000000L
-    val ttlMs = tombstoneTtlDays * 86400L * 1000L
-
-    def close(userId: Long, st: OpenSession): Session =
-      Session(userId, st.sessionNo, st.startUs, st.lastUs, st.n,
-        // same HALF_UP semantics as the batch twin's round(sum, 4)
-        BigDecimal(st.sum).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-
-    // strictly-after close boundary: the batch twin closes only on gap
-    // STRICTLY greater than gapUs, so the timeout must not fire until the
-    // watermark passes last + gap — round the µs→ms truncation UP and add
-    // 1 ms so an event at exactly last + gap still extends the session
-    def closeAtMs(lastUs: Long): Long = (lastUs + gapUs) / 1000L + 1L
-
-    def fn(userId: Long, events: Iterator[SessionEvent],
-           state: GroupState[OpenSession]): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        val st = state.get
-        if (st.n == 0L) { state.remove(); return Iterator.empty } // TTL expired
-        // close + emit, but KEEP the counter as a tombstone so the user's
-        // next session (arriving in a later micro-batch) numbers st+1
-        state.update(OpenSession(st.sessionNo, st.lastUs, st.lastUs, 0L, 0.0))
-        state.setTimeoutTimestamp(math.max(st.lastUs / 1000L + ttlMs,
-          state.getCurrentWatermarkMs() + 1L))
-        return Iterator.single(close(userId, st))
-      }
-      val sorted = events.toArray.sortBy(e => (e.us, e.event_id))
-      var out = List.empty[Session]
-      var open = state.getOption
-      sorted.foreach { e =>
-        open match {
-          case Some(st) if st.n == 0L =>
-            // tombstone: the previous session was already emitted by its
-            // timeout (an in-watermark event can no longer extend it, by
-            // the timeout's strictly-after boundary) — resume numbering
-            open = Some(OpenSession(st.sessionNo + 1, e.us, e.us, 1L, e.value))
-          case Some(st) if e.us - st.lastUs > gapUs =>
-            out ::= close(userId, st)
-            open = Some(OpenSession(st.sessionNo + 1, e.us, e.us, 1L, e.value))
-          case Some(st) =>
-            open = Some(st.copy(lastUs = math.max(st.lastUs, e.us),
-              n = st.n + 1, sum = st.sum + e.value))
-          case None =>
-            open = Some(OpenSession(1L, e.us, e.us, 1L, e.value))
-        }
-      }
-      open.foreach { st =>
-        state.update(st)
-        // the timeout must sit strictly after the current watermark (the
-        // API rejects past timestamps); a session whose close time the
-        // watermark already passed times out at the next trigger
-        state.setTimeoutTimestamp(
-          math.max(closeAtMs(st.lastUs), state.getCurrentWatermarkMs() + 1L))
-      }
-      out.reverseIterator
-    }
-
-    val reader0 = spark.readStream.schema(schemaFrom.schema)
-    val reader = maxFilesPerTrigger.fold(reader0)(m =>
-      reader0.option("maxFilesPerTrigger", m))
-    val stream = reader
-      .parquet(sourceDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "0 seconds")
-      // the watermarked event-time column must SURVIVE into the stateful
-      // operator's child plan — project around it, not over it
-      .select(col("ts"), col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        unix_micros(col("ts")).as("us"), col("value").cast("double").as("value"))
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
-
-    // default sink is in-memory (tests/demos); with sinkDir+checkpointDir
-    // the query becomes a RESUMABLE production job — state store, source
-    // offsets and file-sink manifest all live under checkpointDir, so a
-    // kill/restart resumes exactly-once (StreamingSpec restart test)
-    val w0 = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    val w1 = checkpointDir.fold(w0)(d => w0.option("checkpointLocation", d))
-    sinkDir match {
-      case Some(d) => w1.format("parquet").start(d)
-      case None => w1.format("memory").queryName(queryName).start()
-    }
-  }
-
-  /** Streaming variant: same aggregation with a 2-hour watermark. */
-  def windowedCountsStream(spark: SparkSession, sourceDir: String,
-                           schemaFrom: DataFrame,
-                           queryName: String): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(schemaFrom.schema)
-      .parquet(sourceDir)
-    stream
-      // parquet NTZ timestamps → session-tz TIMESTAMP (watermarks
-      // require an instant type)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 }

@@ -1,15 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.functions.CellEmbed
-import graft.rules.Rules
 
-/** C10 ([[graft.functions.CellEmbed]]) and O4 ([[Rules.pushBadIndex]])
-  * — the two reference dead-code items, implemented for surface
-  * completeness. No float-exact claims (embedding training is
-  * order-sensitive); pinned instead: vocabulary coverage, dims,
-  * finiteness, the cell → vector mapping, and O4's union semantics.
+/** C10 ([[graft.functions.CellEmbed]]) — a reference dead-code item,
+  * implemented for surface completeness. No float-exact claims
+  * (embedding training is order-sensitive); pinned instead: vocabulary
+  * coverage, dims and finiteness.
   */
 class CellEmbedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,29 +25,5 @@ class CellEmbedSpec extends AnyFunSuite {
       (0 until 3).map(i => s"src$i").toSet + "Nan")
     assert(rows.forall(_.getSeq[Float](1).size == 8))
     assert(rows.forall(_.getSeq[Float](1).forall(f => !f.isNaN && !f.isInfinite)))
-  }
-
-  test("transformCells: every cell maps to its vocabulary vector") {
-    val out = CellEmbed.transformCells(df, Seq("lang"), "id",
-      dim = 4, chunk = 64)
-    assert(out.columns.toSeq == Seq("id", "lang", "source"))
-    val got = out.select("lang").collect()
-    assert(got.length == 300 && got.forall(_.getSeq[Float](0).size == 4))
-    // same cell value ⇒ same vector (a mapping, not a re-embedding)
-    val distinctVecs = out
-      .select(col("lang")).distinct().count()
-    assert(distinctVecs == 5)
-  }
-
-  test("pushBadIndex: appended urls become DROP verdicts; union dedupes") {
-    val verdicts = Rules.exactDup(
-      Seq(("u1", 1L), ("u2", 1L)).toDF("url", "h"), col("url"), col("h"))
-    val pushed = Rules.pushBadIndex(verdicts,
-      Seq("u9", "u2").toDF("url"))
-    val urls = pushed.select("url").as[String].collect().toSeq
-    assert(urls.sorted == Seq("u2", "u2", "u9")) // raw append, like the ref list
-    assert(pushed.filter(col("rule") === "external").count() == 2)
-    // the reference's bad_index property dedupes via set(): distinct url
-    assert(pushed.select("url").distinct().count() == 2)
   }
 }

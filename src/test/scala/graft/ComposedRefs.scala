@@ -1,16 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.embed.Ann
-import graft.functions.{Decontam, GramHash, LangId, TextFns}
+import graft.functions.{CharLm, Decontam, GramHash, GraftExpr, Hashing, HtmlExtract,
+  LangId, LangIdModel, TextFns}
 import graft.pipeline.QualityPipeline
 import graft.rules.Rules
 
-/** Column-composed semantic references of fused kernels. Only the specs
-  * diff against them (interpreted higher-order lambdas per element, codegen
-  * fallback for the enclosing stage), so they live in test scope.
+/** Semantic references of fused kernels and rules: Column-composed
+  * chains (interpreted higher-order lambdas per element, codegen fallback
+  * for the enclosing stage) and driver-side scorers. Only the specs diff
+  * against them, so they live in test scope.
   */
 object ComposedRefs {
 
@@ -228,4 +235,153 @@ object ComposedRefs {
     val labels = nodes.iterator.map(n => (n, find(n))).toSeq
     spark.createDataset(labels).toDF("uid", "label")
   }
+
+  /** The html extraction as the chain of Spark built-ins
+    * (`regexp_replace`/`replace`) over [[HtmlExtract]]'s ordered steps —
+    * the semantic reference the DuckDB oracle ([[HtmlExtract.sqlExpr]])
+    * mirrors and the differential target of the fused kernel.
+    */
+  def extractChain(html: Column): Column = {
+    var c = html
+    HtmlExtract.tagSteps.foreach { case (p, r) => c = regexp_replace(c, p, r) }
+    HtmlExtract.entitySteps.foreach { case (a, b) => c = replace(c, lit(a), lit(b)) }
+    HtmlExtract.wsSteps.foreach { case (p, r) => c = regexp_replace(c, p, r) }
+    c
+  }
+
+  /** [[CharLm.perplexity]] as a Column (one driver-side scorer call per
+    * row) — the reference the fused DocStats perplexity is diffed against.
+    */
+  def perplexityCol(c: Column): Column =
+    GraftExpr.column(CharNgramPerplexity(GraftExpr.expr(c)))
+
+  /** [[LangIdModel]]'s driver-side classifier, the reference the fused
+    * DocStats language is diffed against: returns (bestLang,
+    * normalizedScore). Score = best mean per-trigram
+    * log-likelihood margin over the runner-up (≥ 0; higher = more
+    * confident). Empty/too-short text ⇒ ("und", 0.0).
+    */
+  def classify(text: String): (String, Double) = {
+    val m = LangIdModel.model
+    val grams = LangIdModel.trigrams(text).toArray
+    if (grams.isEmpty) return ("und", 0.0)
+    val scores = new Array[Double](m.langs.length)
+    var i = 0
+    while (i < m.langs.length) {
+      val hm = m.logProb(i); val d = m.defaultLogProb(i)
+      var s = 0.0; var j = 0
+      while (j < grams.length) {
+        val v = hm.get(grams(j))
+        s += (if (v == null) d else v.doubleValue())
+        j += 1
+      }
+      scores(i) = s / grams.length
+      i += 1
+    }
+    var best = 0; var second = -1
+    i = 1
+    while (i < scores.length) {
+      if (scores(i) > scores(best)) { second = best; best = i }
+      else if (second < 0 || scores(i) > scores(second)) second = i
+      i += 1
+    }
+    val margin = if (second < 0) 0.0 else scores(best) - scores(second)
+    (m.langs(best), margin)
+  }
+
+  /** [[classify]]'s language as a Column (one driver-side
+    * classifier call per row) — the reference the fused DocStats
+    * language is diffed against.
+    */
+  def langIdLang(c: Column): Column =
+    GraftExpr.column(LangIdExpr(GraftExpr.expr(c))).getField("lang")
+
+  /** Base hash of each array element into [0, P), md5-portable. */
+  def baseHashes(items: Column): Column =
+    transform(items, s => pmod(TextFns.md5Long(s), lit(Hashing.P)))
+
+  /** MinHash signature (k longs) over an array of string features — the
+    * composed reference of [[graft.functions.Md5MinHash]]. Empty input ⇒
+    * array of nulls.
+    */
+  def minHashSig(items: Column, k: Int): Column = {
+    val base = baseHashes(items)
+    array(Hashing.hashParams(k).map { case (a, b) =>
+      array_min(transform(base, h => pmod(lit(a) * h + lit(b), lit(Hashing.P))))
+    }: _*)
+  }
+
+  /** LSH band keys: the signature split into `bands` rows of
+    * `rowsPerBand`, each band hashed to one long key — the composed
+    * reference of DocStats's band keys.
+    */
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      val slice_ = slice(sig, b * rowsPerBand + 1, rowsPerBand)
+      struct(
+        lit(b).as("band"),
+        aggregate(slice_, lit(0L),
+          (acc, h) => pmod(acc * lit(31L) + coalesce(h, lit(0L)), lit(Hashing.P))).as("key")
+      )
+    }: _*)
+
+  /** SimHash over an array of string tokens, `bits` wide (≤ 60): bit b
+    * is 1 iff at least half the token hashes have bit b set — the
+    * composed reference of the fused simhash kernels. Empty input ⇒ 0.
+    */
+  def simHash(tokens: Column, bits: Int): Column = {
+    val hs = transform(tokens, t => TextFns.md5Long(t))
+    val n = size(hs)
+    val sum = (0 until bits).map { b =>
+      val ones = aggregate(hs, lit(0L),
+        (acc, h) => acc + shiftright(h, b).bitwiseAND(lit(1L)))
+      // votes = ones - (n - ones) >= 0  ⇔  2*ones >= n
+      when(lit(2L) * ones >= n.cast(LongType), lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    when(n > 0, sum).otherwise(lit(0L)) // empty input ⇒ 0, not all-ones
+  }
+
+  /** Exact moments of one numeric column (nulls excluded): decimal sums,
+    * derived by [[graft.profile.Stats.fromSums]] as pass 2 derives them.
+    */
+  def moments(df: DataFrame, x: Column): graft.profile.Stats.Moments = {
+    val row = df.agg(
+      count(x).as("n"),
+      sum(x.cast(DecimalType(38, 10))).as("s"),
+      sum(x.cast(DecimalType(19, 5)) * x.cast(DecimalType(19, 5))).as("s2")
+    ).head()
+    graft.profile.Stats.fromSums(row.getAs[Long]("n"),
+      row.getAs[java.math.BigDecimal]("s"), row.getAs[java.math.BigDecimal]("s2"))
+  }
+}
+
+/** `char_ngram_perplexity(text)` → double, one [[CharLm.perplexity]] call
+  * per row ([[ComposedRefs.perplexityCol]]).
+  */
+case class CharNgramPerplexity(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = child.nullable
+  override def nullSafeEval(input: Any): Any =
+    CharLm.perplexity(input.asInstanceOf[UTF8String].toString)
+  override protected def withNewChildInternal(newChild: Expression): CharNgramPerplexity =
+    copy(child = newChild)
+}
+
+/** `lang_id(text)` → struct<lang: string, score: double>, one
+  * [[ComposedRefs.classify]] call per row ([[ComposedRefs.langIdLang]]).
+  */
+case class LangIdExpr(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = StructType(Seq(
+    StructField("lang", StringType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any = {
+    val (lang, score) = ComposedRefs.classify(input.asInstanceOf[UTF8String].toString)
+    InternalRow(UTF8String.fromString(lang), score)
+  }
+  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
+    copy(child = newChild)
 }

@@ -83,7 +83,7 @@ class DocStatsSpec extends AnyFunSuite {
   test("lang / lang_score / perplexity match the model functions") {
     fused.zip(samples).foreach { case (f, s) =>
       val d = f.getStruct(0)
-      val (lang, score) = LangIdModel.classify(s)
+      val (lang, score) = ComposedRefs.classify(s)
       assert(d.getAs[String]("lang") == lang, s"lang: '$s'")
       assert(math.abs(d.getAs[Double]("lang_score") - score) < 1e-9, s"score: '$s'")
       assert(math.abs(d.getAs[Double]("perplexity") - CharLm.perplexity(s)) < 1e-9,
@@ -115,7 +115,7 @@ class DocStatsSpec extends AnyFunSuite {
       .select(DocStats.docStats(col("t"), 32, 8, 4).as("d"))
       .select(col("d.minhash_sig").as("sig"), col("d.band_keys").as("fused"))
       .withColumn("composed",
-        transform(graft.functions.Hashing.bandKeys(col("sig"), 8, 4),
+        transform(ComposedRefs.bandKeys(col("sig"), 8, 4),
           s => s.getField("key")))
     df.collect().foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2),

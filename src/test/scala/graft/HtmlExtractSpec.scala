@@ -79,7 +79,7 @@ class HtmlExtractSpec extends AnyFunSuite {
       "&amp;nbsp; &lt;script&gt;", "  \n x  ")
     val df = (fuzz ++ hand).toDF("h")
       .select(col("h"), HtmlExtract.extract(col("h")).as("fused"),
-        HtmlExtract.extractChain(col("h")).as("chain"))
+        ComposedRefs.extractChain(col("h")).as("chain"))
     val bad = df.filter(not(col("fused") <=> col("chain"))).collect()
     assert(bad.isEmpty, bad.take(3).map(r =>
       s"input=${r.getString(0)}\n fused=${r.getString(1)}\n chain=${r.getString(2)}")

@@ -20,6 +20,24 @@ class KnnImputeSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .toSet
 
+  /** The sklearn return shape over [[KnnImpute.imputeCells]]: the
+    * input frame with every missing feature cell filled (6-dp);
+    * non-feature columns pass through.
+    */
+  private def impute(df: org.apache.spark.sql.DataFrame, key: org.apache.spark.sql.Column,
+                     features: Seq[String], k: Int) = {
+    val patch = KnnImpute.imputeCells(df, key, features, k)
+      .groupBy(col("__k"))
+      .agg(map_from_entries(collect_list(struct(col("col"), col("imputed"))))
+        .as("__patch"))
+    df.withColumn("__k", key.cast("long"))
+      .join(broadcast(patch), Seq("__k"), "left")
+      .select(df.columns.map(c =>
+        (if (features.contains(c))
+           coalesce(col(c).cast("double"), element_at(col("__patch"), lit(c)))
+         else col(c)).as(c)): _*)
+  }
+
   // (id, f1, f2): r1 misses f1; r4 misses f2; r4 still donates nothing
   // to r1 (no shared coordinate) while r2/r3/r5 do.
   private val base = Seq(
@@ -68,7 +86,7 @@ class KnnImputeSpec extends AnyFunSuite {
   }
 
   test("impute() fills every gap, passes observed cells through") {
-    val out = KnnImpute.impute(base, col("id"), Seq("f1", "f2"), k = 2)
+    val out = impute(base, col("id"), Seq("f1", "f2"), k = 2)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(out.forall { case (_, a, b) => !a.isNaN && !b.isNaN })

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.{LangId, LangIdModel, CharLm, Perplexity}
+import graft.functions.{LangId, LangIdModel, CharLm, DocStats}
 
 class LangIdSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -86,7 +86,7 @@ class LangIdSpec extends AnyFunSuite {
 
   test("n-gram model classifies held-out-ish sentences per language") {
     sentences.foreach { case (lang, s) =>
-      val (got, _) = LangIdModel.classify(s)
+      val (got, _) = ComposedRefs.classify(s)
       assert(got == lang, s"expected $lang got $got for: $s")
     }
   }
@@ -109,7 +109,7 @@ class LangIdSpec extends AnyFunSuite {
 
   test("broadened model: held-out non-seed sentences classify correctly in all 9 languages") {
     heldOut.foreach { case (lang, s) =>
-      val (got, margin) = LangIdModel.classify(s)
+      val (got, margin) = ComposedRefs.classify(s)
       assert(got == lang, s"expected $lang got $got (margin $margin) for: $s")
     }
   }
@@ -128,7 +128,7 @@ class LangIdSpec extends AnyFunSuite {
           val v = LangIdModel.SeedCorpus(lang).split("\\s+")
           v(r.nextInt(v.length))
         }).mkString(" ")
-        val (got, margin) = LangIdModel.classify(doc)
+        val (got, margin) = ComposedRefs.classify(doc)
         assert(got == lang, s"fixture-style $lang doc classified $got")
         margin
       }
@@ -139,17 +139,19 @@ class LangIdSpec extends AnyFunSuite {
   }
 
   test("classify is deterministic and handles degenerate input") {
-    assert(LangIdModel.classify("") == ("und", 0.0))
-    assert(LangIdModel.classify("ab") == ("und", 0.0))
-    val a = LangIdModel.classify("the quick brown fox")
-    assert(a == LangIdModel.classify("the quick brown fox"))
+    assert(ComposedRefs.classify("") == ("und", 0.0))
+    assert(ComposedRefs.classify("ab") == ("und", 0.0))
+    val a = ComposedRefs.classify("the quick brown fox")
+    assert(a == ComposedRefs.classify("the quick brown fox"))
   }
 
   test("LangIdExpr works as a Column and matches driver-side classify") {
     val df = sentences.values.toSeq.toDF("text")
-    val got = df.select(col("text"), LangId.langIdLang(col("text")).as("l"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    sentences.foreach { case (lang, s) => assert(got(s) == lang) }
+    val got = df.select(col("text"), ComposedRefs.langIdLang(col("text")).as("l"),
+        DocStats.docStats(col("text"), 0).getField("lang").as("fused"))
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    // the fused kernel's language is the per-row classifier's
+    sentences.foreach { case (lang, s) => assert(got(s) == ((lang, lang))) }
   }
 
   test("perplexity: clean seed-like text scores far below gibberish") {
@@ -162,9 +164,12 @@ class LangIdSpec extends AnyFunSuite {
 
   test("perplexity expression matches driver-side function") {
     val texts = Seq("the quick brown fox", "zzz qqq xxx jjj")
-    val got = texts.toDF("t").select(Perplexity.perplexityCol(col("t")))
-      .collect().map(_.getDouble(0))
-    assert(got.toSeq == texts.map(CharLm.perplexity))
+    val got = texts.toDF("t").select(ComposedRefs.perplexityCol(col("t")),
+        DocStats.docStats(col("t"), 0).getField("perplexity"))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(got.toSeq.map(_._1) == texts.map(CharLm.perplexity))
+    // the fused kernel scores as the composed reference does
+    assert(got.forall { case (a, b) => math.abs(a - b) < 1e-9 }, got.toSeq)
   }
 
   test("markerLang SQL-portable scorer: argmax with asc tie-break, und on zero") {

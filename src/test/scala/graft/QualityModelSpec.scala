@@ -10,7 +10,8 @@ import graft.rules.Rules
   * transfer onto PagesGen's planted classes (the built-in model never
   * sees PagesGen text — its negatives are the junk FAMILY distributions
   * re-drawn from different seeds), kernel/driver parity, deterministic
-  * training, the production `fromFrame` loader, and the pipeline toggle.
+  * training, training on a labeled frame's bounded sample, and the
+  * pipeline toggle.
   */
 class QualityModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,6 +23,34 @@ class QualityModelSpec extends AnyFunSuite {
   private lazy val pages =
     graft.sources.PagesGen.generate(spark, 4000, 8).toDF()
       .withColumn("cls", clsOf(col("url")))
+
+  /** Train from a (text, label∈{0,1}) frame on a BOUNDED deterministic
+    * sample — content-hash bottom-k (the [[graft.embed.Ann.trainCentroids]]
+    * pattern: partition-independent, unbiased by file order, no corpus
+    * shuffle), so training cost is independent of corpus size.
+    */
+  private def fromFrame(df: org.apache.spark.sql.DataFrame, textCol: String,
+                        labelCol: String, sampleN: Int, iters: Int): QualityModel.Model = {
+    val rows = df
+      .select(col(textCol).cast("string").as("__t"), col(labelCol).cast("double").as("__y"))
+      .filter(col("__t").isNotNull && col("__y").isNotNull)
+      .orderBy(xxhash64(col("__t")), col("__t"), col("__y"))
+      .limit(sampleN)
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1)))
+    QualityModel.train(rows.toSeq, iters, lr = 2.0, l2 = 1e-4)
+  }
+
+  /** The FineWeb-style "keep the top X% by score" operating point: the
+    * (1 − keepRate) quantile of the built-in model's scores, via
+    * `percentile_approx` (one pass, mergeable sketch).
+    */
+  private def thresholdForKeepRate(df: org.apache.spark.sql.DataFrame, textCol: String,
+                                   keepRate: Double): Double =
+    df.select(percentile_approx(
+        QualityModel.scoreColumn(TextFns.normText(col(textCol))),
+        lit(1.0 - keepRate), lit(10000)))
+      .head().getDouble(0)
 
   private lazy val scored = pages
     .withColumn("q", QualityModel.scoreColumn(TextFns.normText(col("text"))))
@@ -100,9 +129,9 @@ class QualityModelSpec extends AnyFunSuite {
       .withColumn("cls", clsOf(col("url")))
       .filter(col("cls") === "clean" || col("cls").isin(junk.toSeq: _*))
       .withColumn("label", when(col("cls") === "clean", 1.0).otherwise(0.0))
-    val mA = QualityModel.fromFrame(labeled.repartition(3), "text", "label",
+    val mA = fromFrame(labeled.repartition(3), "text", "label",
       sampleN = 1024, iters = 1500)
-    val mB = QualityModel.fromFrame(labeled.repartition(7), "text", "label",
+    val mB = fromFrame(labeled.repartition(7), "text", "label",
       sampleN = 1024, iters = 1500)
     assert(mA.b == mB.b && mA.w.sameElements(mB.w),
       "fromFrame must be partition-independent")
@@ -127,7 +156,7 @@ class QualityModelSpec extends AnyFunSuite {
   test("thresholdForKeepRate: the calibrated θ keeps ≈ the target rate") {
     val n = pages.count().toDouble
     for (rate <- Seq(0.80, 0.95)) {
-      val theta = QualityModel.thresholdForKeepRate(pages, "text", rate)
+      val theta = thresholdForKeepRate(pages, "text", rate)
       val kept = pages
         .withColumn("q", QualityModel.scoreColumn(TextFns.normText(col("text"))))
         .filter(col("q") >= theta).count().toDouble

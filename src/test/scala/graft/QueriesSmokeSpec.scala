@@ -43,4 +43,19 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(q3.toSeq == Seq(810.95))
     assert(q1.toSeq == Seq(810.95))
   }
+
+  test("dq_group_zscore skips a null-lang class, as its twin's JOIN USING (lang) does") {
+    // two classes with the same values: the en class flags its 100, the
+    // null-lang class never joins its stats row, so it flags nothing
+    val tmp = java.nio.file.Files.createTempDirectory("graft_null_lang").toString
+    val nChars = Seq(10L, 10L, 10L, 10L, 100L)
+    (nChars.zipWithIndex.map { case (n, i) => (i + 1L, Option("en"), n) } ++
+      nChars.zipWithIndex.map { case (n, i) => (i + 6L, Option.empty[String], n) })
+      .toDF("doc_id", "lang", "n_chars")
+      .write.parquet(s"$tmp/documents.parquet")
+    val got = Queries.dqGroupZscore(spark, tmp).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("lang"), r.getAs[Double]("z")))
+    // mean 28, sample sd sqrt(1620): z = 72 / 40.249224 = 1.788854
+    assert(got.toSeq == Seq((5L, "en", 1.788854)))
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.model.ColumnProfile
 import graft.profile.Profiler
 import graft.rules.Rules
 
@@ -12,15 +11,19 @@ class RulesSpec extends AnyFunSuite {
 
   test("profiler: uniqueness, null mean, sample stddev") {
     val df = Seq(
-      (Some(1.0), Some("a")), (Some(2.0), Some("a")),
-      (Some(3.0), None), (None, Some("b"))
-    ).toDF("x", "s")
+      (Some(1.0), Some("a"), None: Option[String]), (Some(2.0), Some("a"), None),
+      (Some(3.0), None, None), (None, Some("b"), None)
+    ).toDF("x", "s", "e")
     val p = Profiler.profile(df)
     assert(p("x").nonNull == 3 && p("x").distinct == 3)
     assert(p("x").uniqueness == 1.0)
     assert(p("x").nullMean == 0.25)
-    assert(math.abs(p("x").stddev.get - 1.0) < 1e-12) // sample stddev of 1,2,3
     assert(p("s").uniqueness == 2.0 / 3)
+    // the sample stddev (pandas ddof=1, utils.py:224-225) comes from the
+    // exact moments pass 2 derives: 1, 2, 3 → 1
+    assert(math.abs(ComposedRefs.moments(df, col("x")).stddevSamp - 1.0) < 1e-12)
+    // an all-null column: no values, uniqueness 0 (utils.py:159-187)
+    assert(p("e").nonNull == 0 && p("e").uniqueness == 0.0 && p("e").nullMean == 1.0)
   }
 
   test("exactDup flags all-but-first by key asc, detail = first key") {
@@ -67,8 +70,8 @@ class RulesSpec extends AnyFunSuite {
 
   test("Stats.moments: exact and order-independent") {
     val xs = Seq(1.0, 2.0, 3.0, 4.0, 100.5)
-    val a = graft.profile.Stats.moments(xs.toDF("x"), col("x"))
-    val b = graft.profile.Stats.moments(
+    val a = ComposedRefs.moments(xs.toDF("x"), col("x"))
+    val b = ComposedRefs.moments(
       xs.reverse.toDF("x").repartition(5), col("x"))
     assert(a == b)
     assert(a.n == 5 && math.abs(a.mean - 22.1) < 1e-9)
@@ -81,7 +84,7 @@ class RulesSpec extends AnyFunSuite {
       .toDF("url", "cls", "x")
     // per-class exact moments, joined to the rows as the entry's columns
     val stats = Seq("a", "b").map { c =>
-      val m = graft.profile.Stats.moments(df.filter(col("cls") === c), col("x"))
+      val m = ComposedRefs.moments(df.filter(col("cls") === c), col("x"))
       (c, m.n, m.mean, m.stddevSamp)
     }.toDF("cls", "n", "mean", "sd")
     val v = Rules.explodeEntries(df.join(stats, Seq("cls")), col("url"),
@@ -110,17 +113,6 @@ class RulesSpec extends AnyFunSuite {
     // 50/50 split → not armed
     val df2 = Seq(("u1", 1.0, 2.0), ("u2", 2.0, 1.0)).toDF("url", "a", "b")
     assert(armed(df2).isEmpty)
-  }
-
-  test("completeness: intersection of both null-fraction thresholds") {
-    val df = Seq(
-      ("full", Some("a"), Some("b"), Some("c"), Some("d")),
-      ("sparse", Some("a"), None, None, None)
-    ).toDF("url", "c1", "c2", "c3", "c4")
-    val profs = Profiler.profile(df.drop("url"))
-    val v = Rules.completeness(df, col("url"), profs,
-      Seq("c1", "c2", "c3", "c4"), 0.7, 0.5).collect()
-    assert(v.map(_.getAs[String]("url")).toSeq == Seq("sparse"))
   }
 
   test("boilerplateParagraphs: cross-doc shared paragraphs flag by char fraction") {

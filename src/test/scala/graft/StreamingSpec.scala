@@ -1,225 +1,27 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
-import graft.streaming.EventStream
 
+/** The engine's per-document rules are stateless narrow transforms, so
+  * they run unchanged over a `readStream` source: each test streams a
+  * pages directory through shipped rule code and compares the verdicts
+  * with the batch run over the same pages.
+  */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("streaming windowed agg equals its batch twin on the events table") {
-    val dir = "/root/testdata/sf0.001"
-    val batchEvents = spark.read.parquet(s"$dir/events.parquet")
-    // file stream sources consume directories
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val q = EventStream.windowedCountsStream(spark, streamDir.toString,
-      batchEvents, "stream_out")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      """SELECT window.start AS window_start, event_type, n, round(sum_value, 4) AS sum_value
-        |FROM stream_out""".stripMargin)
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val batch = EventStream.windowedCountsBatch(
-        batchEvents.withColumn("ts", col("ts").cast("timestamp")))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(streamed == batch)
-  }
-
-  test("flatMapGroupsWithState sessionization equals the batch twin once the watermark closes every session") {
-    import org.apache.spark.sql.types.LongType
-    val dir = "/root/testdata/sf0.001"
-    val batchEvents = spark.read.parquet(s"$dir/events.parquet")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-sess")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("00-events.parquet"))
-    // two sentinel batches (user_id = -1, far future) push the watermark
-    // past every real session's last-event + gap: batch 2's sentinel
-    // advances the watermark, batch 3's sentinel TRIGGERS the timeouts
-    // (timeout processing uses the watermark set by the previous batch) —
-    // no reliance on no-data micro-batches. maxFilesPerTrigger=1 keeps
-    // the three files in three triggers.
-    val maxUs = batchEvents
-      .agg(org.apache.spark.sql.functions.max(
-        unix_micros(col("ts").cast("timestamp")))).head().getLong(0)
-    val tsType = batchEvents.schema("ts").dataType
-    def sentinel(offsetUs: Long, evId: Long) = batchEvents.limit(1)
-      .withColumn("user_id", lit(-1L).cast(batchEvents.schema("user_id").dataType))
-      .withColumn("event_id", lit(evId).cast(batchEvents.schema("event_id").dataType))
-      .withColumn("ts", timestamp_micros(lit(maxUs + offsetUs)).cast(tsType))
-    Seq((86400000000L * 100, 999000001L, "01"), (86400000000L * 200, 999000002L, "02"))
-      .foreach { case (off, id, tag) =>
-        Thread.sleep(1100) // distinct mtimes => stable file-batch order
-        sentinel(off, id).repartition(1).write.mode("append")
-          .parquet(streamDir.toString)
-        val _ = tag
-      }
-    val q = graft.streaming.EventStream.sessionizeStream(spark,
-      streamDir.toString, batchEvents, "sess_out", 30, maxFilesPerTrigger = Some(1))
-    q.processAllAvailable()
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))
-    }.toMap
-    val streamed = keyed(spark.sql(
-      """SELECT user_id, session_no, session_start_us, session_end_us,
-        | n_events, sum_value FROM sess_out WHERE user_id >= 0""".stripMargin)
-      .collect())
-    val batch = keyed(graft.streaming.EventStream.sessionizeBatch(batchEvents)
-      .select(col("user_id").cast(LongType), col("session_no"),
-        col("session_start_us"), col("session_end_us"), col("n_events"),
-        col("sum_value"))
-      .collect())
-    assert(streamed.nonEmpty)
-    assert(streamed.keySet == batch.keySet,
-      s"session keys differ: stream-only=${(streamed.keySet -- batch.keySet).take(3)} " +
-        s"batch-only=${(batch.keySet -- streamed.keySet).take(3)}")
-    streamed.foreach { case (k, (s1, e1, n1, v1)) =>
-      val (s2, e2, n2, v2) = batch(k)
-      assert(s1 == s2 && e1 == e2 && n1 == n2, s"bounds/count differ at $k")
-      // double addition order differs (incremental vs partial agg) —
-      // compare post-round values with an ulp-tolerant epsilon
-      assert(math.abs(v1 - v2) < 1e-6, s"sum differs at $k: $v1 vs $v2")
-    }
-  }
-
-  // ---- helpers for the synthetic cross-batch session tests ----
-  // one schema-conforming event row derived from the real events table
-  private def mkEvent(base: org.apache.spark.sql.DataFrame, userId: Long,
-                      evId: Long, us: Long, value: Double) =
-    base.limit(1)
-      .withColumn("user_id", lit(userId).cast(base.schema("user_id").dataType))
-      .withColumn("event_id", lit(evId).cast(base.schema("event_id").dataType))
-      .withColumn("ts", timestamp_micros(lit(us)).cast(base.schema("ts").dataType))
-      .withColumn("value", lit(value).cast(base.schema("value").dataType))
-
-  private def appendFile(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
-    Thread.sleep(1100) // distinct mtimes => stable file-batch order
-    df.repartition(1).write.mode("append").parquet(dir)
-  }
-
-  private val T0 = 1600000000000000L // fixed base epoch-us
-  private val Day = 86400000000L
-
-  test("session numbering survives an event-time timeout between micro-batches") {
-    // user 7's two sessions straddle a timeout: session 1 closes via the
-    // event-time timeout (batches 2-3 carry only sentinel user -1 events
-    // that advance the watermark past last+gap), then session-2 events
-    // arrive in a LATER batch. Without the tombstone counter the stream
-    // would emit two sessions both numbered 1 — duplicate keys, diverging
-    // from the batch twin.
-    val base = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-xbatch").toString
-    val files = Seq(
-      mkEvent(base, 7L, 1L, T0, 1.5).unionByName(
-        mkEvent(base, 7L, 2L, T0 + 600000000L, 2.25)), // +10 min
-      mkEvent(base, -1L, 101L, T0 + 100 * Day, 0.0),
-      mkEvent(base, -1L, 102L, T0 + 200 * Day, 0.0), // fires user 7's timeout
-      mkEvent(base, 7L, 3L, T0 + 300 * Day, 3.0),    // session 2 after tombstone
-      mkEvent(base, -1L, 103L, T0 + 400 * Day, 0.0),
-      mkEvent(base, -1L, 104L, T0 + 500 * Day, 0.0)) // fires session 2's timeout
-    files.foreach(appendFile(_, dir))
-    val all = files.reduce(_ unionByName _)
-    val q = EventStream.sessionizeStream(spark, dir, base, "sess_xbatch",
-      30, maxFilesPerTrigger = Some(1))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      """SELECT user_id, session_no, session_start_us, session_end_us,
-        | n_events, sum_value FROM sess_xbatch WHERE user_id = 7""".stripMargin)
-      .collect()
-    // exactly-once per session key: raw row count must equal key count
-    assert(streamed.length == 2, s"expected 2 sessions, got ${streamed.toSeq}")
-    assert(streamed.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((7L, 1L), (7L, 2L)), s"wrong keys: ${streamed.toSeq}")
-    val batch = EventStream.sessionizeBatch(all)
-      .filter(col("user_id") === 7)
-      .select(col("user_id").cast("long"), col("session_no"),
-        col("session_start_us"), col("session_end_us"), col("n_events"),
-        col("sum_value"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
-    streamed.foreach { r =>
-      val k = (r.getLong(0), r.getLong(1))
-      val (s2, e2, n2, v2) = batch(k)
-      assert(r.getLong(2) == s2 && r.getLong(3) == e2 && r.getLong(4) == n2,
-        s"bounds/count differ at $k")
-      assert(math.abs(r.getDouble(5) - v2) < 1e-6, s"sum differs at $k")
-    }
-  }
-
-  test("sessionizeStream kill/restart from a checkpoint emits each session exactly once") {
-    // phase 1 ingests session 1 + one watermark sentinel, then the query
-    // is STOPPED; phase 2 appends session 2 + sentinels and RESTARTS from
-    // the same checkpoint — state (open session/tombstone + counter),
-    // source offsets and the file-sink manifest must all recover so the
-    // union of emitted sessions equals the batch twin with no duplicates.
-    val base = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-restart").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sess-ckpt").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft-sess-sink").toString
-    val phase1 = Seq(
-      mkEvent(base, 7L, 1L, T0, 1.5).unionByName(
-        mkEvent(base, 7L, 2L, T0 + 600000000L, 2.25)),
-      mkEvent(base, -1L, 101L, T0 + 100 * Day, 0.0))
-    val phase2 = Seq(
-      mkEvent(base, 7L, 3L, T0 + 200 * Day, 3.0),
-      mkEvent(base, -1L, 102L, T0 + 300 * Day, 0.0),
-      mkEvent(base, -1L, 103L, T0 + 400 * Day, 0.0))
-    phase1.foreach(appendFile(_, dir))
-    val q1 = EventStream.sessionizeStream(spark, dir, base, "unused1",
-      30, maxFilesPerTrigger = Some(1), checkpointDir = Some(ckpt),
-      sinkDir = Some(sink))
-    q1.processAllAvailable()
-    q1.stop()
-    phase2.foreach(appendFile(_, dir))
-    val q2 = EventStream.sessionizeStream(spark, dir, base, "unused2",
-      30, maxFilesPerTrigger = Some(1), checkpointDir = Some(ckpt),
-      sinkDir = Some(sink))
-    q2.processAllAvailable()
-    q2.stop()
-    val emitted = spark.read.parquet(sink).filter(col("user_id") === 7)
-      .select("user_id", "session_no", "session_start_us", "session_end_us",
-        "n_events", "sum_value")
-      .collect()
-    assert(emitted.length == 2,
-      s"expected exactly 2 emitted sessions across restart, got ${emitted.toSeq}")
-    assert(emitted.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((7L, 1L), (7L, 2L)), s"wrong keys: ${emitted.toSeq}")
-    val all = (phase1 ++ phase2).reduce(_ unionByName _)
-    val batch = EventStream.sessionizeBatch(all)
-      .filter(col("user_id") === 7)
-      .select(col("user_id").cast("long"), col("session_no"),
-        col("session_start_us"), col("session_end_us"), col("n_events"),
-        col("sum_value"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
-    emitted.foreach { r =>
-      val k = (r.getLong(0), r.getLong(1))
-      val (s2, e2, n2, v2) = batch(k)
-      assert(r.getLong(2) == s2 && r.getLong(3) == e2 && r.getLong(4) == n2,
-        s"bounds/count differ at $k")
-      assert(math.abs(r.getDouble(5) - v2) < 1e-6, s"sum differs at $k")
-    }
-  }
-
   test("streaming heuristic verdicts equal the batch pass-1 heuristics") {
     import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.streaming.Trigger
     val pages = graft.sources.PagesGen.generate(spark, 500, 4).toDF()
     val dir = java.nio.file.Files.createTempDirectory("graft-pages-stream").toString
     pages.write.mode(SaveMode.Overwrite).parquet(dir)
-    val q = EventStream.heuristicVerdictStream(spark, dir, "page_verdicts")
+    val feat = graft.pipeline.QualityPipeline.features(
+      spark.readStream.schema(graft.model.Page.schema).parquet(dir))
+    val q = graft.pipeline.QualityPipeline
+      .heuristicVerdicts(feat, graft.pipeline.QualityPipeline.defaultConfig)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("page_verdicts").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable()
     q.stop()
     val streamed = spark.sql("SELECT url, rule FROM page_verdicts")

@@ -75,7 +75,7 @@ class TextFnsSpec extends AnyFunSuite {
   test("minhash signature: stable, bounded, sensitive to content") {
     val df = Seq("the quick brown fox jumps over the lazy dog",
       "the quick brown fox jumps over the lazy cat").toDF("t")
-    val sigs = df.select(Hashing.minHashSig(
+    val sigs = df.select(ComposedRefs.minHashSig(
       TextFns.charShingles(TextFns.normText(col("t")), 4), 8).as("s"))
       .collect().map(_.getSeq[Long](0).toList)
     assert(sigs(0).size == 8)
@@ -88,7 +88,7 @@ class TextFnsSpec extends AnyFunSuite {
     val texts = Seq("the quick brown fox", "abcd", "ab", "",
       "many words of text for a larger shingle set here today")
     val df = texts.toDF("t")
-    val composed = df.select(Hashing.minHashSig(
+    val composed = df.select(ComposedRefs.minHashSig(
         TextFns.charShingles(col("t"), 4), 4).as("s"))
       .collect().map(_.getSeq[Any](0).toList)
     val fused = df.select(graft.functions.Md5MinHash.md5MinHash(col("t"), 4, 4).as("s"))
@@ -100,7 +100,7 @@ class TextFnsSpec extends AnyFunSuite {
     val texts = Seq("the quick brown Fox fox THE", "", "  ", "one",
       "a b c d e f g h repeated repeated words here")
     val df = texts.toDF("t")
-    val composed = df.select(Hashing.simHash(
+    val composed = df.select(ComposedRefs.simHash(
         array_distinct(transform(TextFns.tokens(col("t")), t => lower(t))), 16).as("h"))
       .collect().map(_.getLong(0))
     val fused = df.select(graft.functions.Md5SimHash.md5SimHash(col("t"), 16).as("h"))
@@ -135,7 +135,7 @@ class TextFnsSpec extends AnyFunSuite {
       ("a", "the quick brown fox jumps over the lazy dog entirely today"),
       ("b", "the quick brown fox jumps over the lazy cat entirely today"),
       ("c", "")).toDF("id", "t")
-    val hs = df.select(col("id"), Hashing.simHash(
+    val hs = df.select(col("id"), ComposedRefs.simHash(
         array_distinct(TextFns.tokens(col("t"))), 16).as("h"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(hs("c") == 0L)
