@@ -1222,10 +1222,7 @@ object Queries {
       |ORDER BY dup_id""".stripMargin
 
   /** Multimodal frame-sampling plumbing, oracle-checked end-to-end:
-    * frames are 256-byte slices of the binary payload (stride 2, same
-    * geometry as the typed engine kernel
-    * [[graft.multimodal.Multimodal.sampleFrames]], which stays the
-    * production path with its cheap FNV hash — CoverageSpec covers it).
+    * frames are 256-byte slices of the binary payload (stride 2).
     * The PORTABLE frame hash here is md5Long over the UPPERCASE HEX of
     * the slice: DuckDB's md5 only accepts VARCHAR, so the hex string —
     * identical in both engines — is the portable hashing domain. This

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,26 +20,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * between 2k docs/sec and 100k+ docs/sec per core, which at 10¹² docs
   * is the difference between a feasible job and an impossible one.
   *
-  * Memory-bandwidth note (the measured scaling ceiling at 32 threads is
-  * bus saturation, see BENCH.md): pure-ASCII documents — the
-  * overwhelming web-corpus majority — are processed directly on the
-  * UTF-8 BYTES of the incoming UTF8String: no char[] materialisation,
-  * half the bytes per character, one byte-array normalisation buffer.
-  * Non-ASCII documents take the char fallback path with identical
-  * semantics (same FNV values for any shared ASCII content, since an
-  * ASCII byte equals its char code).
+  * One walk for every document: [[compute]] reads the UTF-16 code units
+  * of `UTF8String.toString`, whatever the script, and takes counts,
+  * lines, the normalised text, the fingerprint and the token hashes in
+  * one pass. A second walk over the UTF-8 bytes of pure-ASCII documents
+  * used to sit beside it. The two gave equal outputs on all 18 fields of
+  * 142,032 rows (a 10k-page PagesGen window, the sf0.01 and sf0.1
+  * documents, 20k random strings with ASCII controls, Latin-1, BMP,
+  * surrogate pairs and invalid UTF-8; minHashK 32 and 0, wide on and
+  * off). On one JVM (PagesGen pages, 4-vCPU VM, medians of 11
+  * interleaved reps) this walk, `toString` included, cost 77 µs/doc
+  * against the byte walk's 91 (full kernel, 1 thread), 81 vs 94 (full,
+  * 4 threads), 59 vs 71 and 63 vs 76 (lite, k = 0). The byte walk won
+  * no regime, so it is gone.
   *
   * Unicode semantics: `n_chars`, `symbol_ratio` and `mean_word_len`
-  * count CODE POINTS, matching Spark's `length()`/regex semantics (the
-  * Column reference path in [[TextFns]]). Lowercasing in the fallback is
-  * per-code-unit `Character.toLowerCase` — locale-independent, but it
-  * diverges from full-string lowercase for the handful of chars with
-  * 1→N lowercase mappings (e.g. U+0130); those feed only engine-internal
-  * hashes (fingerprint/langid/minhash), never the SQL-oracle surface.
+  * count CODE POINTS, matching Spark's `length()`/regex semantics.
+  * Lowercasing is per-code-unit `Character.toLowerCase` —
+  * locale-independent, but it diverges from full-string lowercase for the
+  * handful of chars with 1→N lowercase mappings (e.g. U+0130); those feed
+  * only engine-internal hashes (fingerprint/langid/minhash), never the
+  * SQL-oracle surface.
   *
-  * The Column-based equivalents in [[TextFns]] remain the semantic
-  * reference (and the SQL-oracle path); DocStatsSpec cross-validates the
-  * two implementations field by field, including non-ASCII inputs.
+  * The composed Column equivalents (test scope, over [[TextFns]] tokens)
+  * remain the semantic reference; DocStatsSpec cross-validates the two
+  * field by field, including non-ASCII and invalid UTF-8 inputs, and pins
+  * every field of six documents.
   *
   * Hash notes: all hashes here (FNV-1a 64) are engine-internal — used
   * only for dedup bucketing within a run — so they need determinism, not
@@ -78,23 +83,21 @@ object DocStats {
   @inline private def isAlnum(c: Int): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 
-  @inline def fnv1a(s: String, from: Int, until: Int): Long = {
-    var h = 0xcbf29ce484222325L
+  private val FnvBasis = 0xcbf29ce484222325L
+  private val FnvPrime = 0x100000001b3L
+
+  /** FNV-1a 64 over the UTF-16 code units `s(from until until)`. */
+  @inline private def fnv1a(s: Array[Char], from: Int, until: Int): Long = {
+    var h = FnvBasis
     var i = from
-    while (i < until) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
+    while (i < until) { h ^= s(i); h *= FnvPrime; i += 1 }
     h
   }
 
-  /** FNV-1a over bytes. For ASCII content this equals [[fnv1a]] over the
-    * same chars (an ASCII byte's unsigned value IS its char code) — the
-    * invariant that lets the byte and char paths share every hash table.
+  /** FNV-1a 64 of a whole string: the key of every gram and word table
+    * the kernel probes.
     */
-  @inline def fnv1aB(b: Array[Byte], from: Int, until: Int): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = from
-    while (i < until) { h ^= (b(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h
-  }
+  def fnv1a(s: String): Long = fnv1a(s.toCharArray, 0, s.length)
 
   final case class Result(
       nChars: Int, nWords: Int, meanWordLen: java.lang.Double,
@@ -133,9 +136,9 @@ object DocStats {
 
   // token membership by sorted-hash binary search: zero-alloc lookups
   private val stopHashes: Array[Long] =
-    TextFns.StopwordsEn.map(w => fnv1a(w, 0, w.length)).sorted.toArray
+    TextFns.StopwordsEn.map(w => fnv1a(w)).sorted.toArray
   private val toxHashes: Array[Long] =
-    TextFns.ToxicityLexicon.map(w => fnv1a(w, 0, w.length)).sorted.toArray
+    TextFns.ToxicityLexicon.map(w => fnv1a(w)).sorted.toArray
 
   /** One-probe fused score table: trigram FNV → (logprob per language,
     * LM logprob). The split per-language tables + LM map cost ~6 random
@@ -160,7 +163,7 @@ object DocStats {
     // and the unpacked sums are bit-identical to the all-double table
     val t = new LongPackedMap(grams.size, nLangs)
     grams.foreach { g =>
-      val off = t.slotFor(fnv1a(g, 0, g.length))
+      val off = t.slotFor(fnv1a(g))
       var l = 0
       while (l < nLangs) {
         val v = lidM.logProb(l).get(g)
@@ -172,7 +175,7 @@ object DocStats {
       t.putDouble(off,
         if (c == null) 1.0
         else {
-          // same expression as CharLm.perplexityUnder — identical doubles
+          // same expression as the perplexity reference — identical doubles
           val ctx = g.substring(0, CharLm.Order - 1)
           val cc = CharLm.model.ctx.get(ctx)
           val den = (if (cc == null) 0.0 else cc.doubleValue()) +
@@ -183,281 +186,119 @@ object DocStats {
     t
   }
 
-  /** String entry point (tests/micro-bench); dispatches like [[computeU]]. */
-  def compute(text: String, minHashK: Int, wide: Boolean = false): Result = {
-    val n = text.length
-    var ascii = true
-    var i = 0
-    while (i < n && ascii) { if (text.charAt(i) >= 0x80) ascii = false; i += 1 }
-    if (ascii)
-      computeBytes(text.getBytes(java.nio.charset.StandardCharsets.US_ASCII), minHashK, wide)
-    else computeChars(text, minHashK, wide)
-  }
-
-  /** UTF8String entry point (the expression's hot path): pure-ASCII docs
-    * never materialise a String/char[].
+  /** The kernel: ONE walk over the UTF-16 code units of `text` computes
+    * the code-point counts, the line set, the normalised text, the
+    * fingerprint and the token hashes; a second loop over the normalised
+    * text scores its trigrams. Every document takes this walk — see the
+    * cost note in the object scaladoc.
     */
-  def computeU(u: UTF8String, minHashK: Int, wide: Boolean = false): Result = {
-    val b = u.getBytes
-    var ascii = true
-    var i = 0
-    while (i < b.length && ascii) { if (b(i) < 0) ascii = false; i += 1 }
-    if (ascii) computeBytes(b, minHashK, wide) else computeChars(u.toString, minHashK, wide)
-  }
-
-  // ---------------------------------------------------------------------
-  // ASCII byte path — the bandwidth-lean hot path
-  // ---------------------------------------------------------------------
-  private def computeBytes(b: Array[Byte], minHashK: Int, wide: Boolean): Result = {
-    val n = b.length
-    // --- raw pass: symbols + lines ---
-    var symbols = 0
-    var i = 0
-    while (i < n) {
-      val c = b(i)
-      if (!isAlnum(c) && !isWs(c)) symbols += 1
-      i += 1
-    }
+  def compute(text: String, minHashK: Int, wide: Boolean = false): Result = {
+    val t = text.toCharArray
+    val n = t.length
+    var nChars = 0; var symbols = 0
+    // lines: FNV of each line's raw chars; a line of spaces only is
+    // blank (Spark trim strips ' ' only, so a tab-only line is NOT blank)
     var nLines = 0; var nDistinct = 0
     val lineHashes = new java.util.HashSet[java.lang.Long]()
-    var ls = 0
-    i = 0
-    while (i <= n) {
-      if (i == n || b(i) == '\n') {
-        // line [ls, i) — count if not space-only (Spark trim semantics:
-        // trim strips ' ' only, so a tab-only line is NOT blank)
-        var j = ls; var blank = true
-        while (j < i && blank) { if (b(j) != ' ') blank = false; j += 1 }
-        if (!blank) {
-          nLines += 1
-          if (lineHashes.add(fnv1aB(b, ls, i))) nDistinct += 1
-        }
-        ls = i + 1
-      }
-      i += 1
-    }
-    val dupLineRatio = if (nLines > 0) 1.0 - nDistinct.toDouble / nLines else 0.0
-
-    // --- normalised bytes (lowercase, \s+ → single space, trimmed) ---
-    val norm = new Array[Byte](n)
+    var lineHash = FnvBasis; var blank = true
+    // normalised text (lowercase, \s+ → single space, trimmed) + its FNV
+    val norm = new Array[Char](n)
     var m = 0
-    var inWs = false
-    i = 0
-    while (i < n) {
-      val c = b(i)
-      if (isWs(c)) inWs = true
-      else {
-        if (inWs && m > 0) { norm(m) = ' '; m += 1 }
-        inWs = false
-        norm(m) = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-        m += 1
-      }
-      i += 1
-    }
-
-    // --- token pass over norm: counts, stopwords, toxicity, token hashes ---
+    var fingerprint = FnvBasis
+    // tokens = the non-whitespace runs of the normalised text
     var nWords = 0; var sumLen = 0L; var stopHits = 0; var toxHits = 0
-    val tokHashes = new java.util.ArrayList[Long](64)
-    var ts = 0
-    i = 0
-    while (i <= m) {
-      if (i == m || norm(i) == ' ') {
-        if (i > ts) {
-          nWords += 1
-          sumLen += (i - ts)
-          val th = fnv1aB(norm, ts, i)
-          if (java.util.Arrays.binarySearch(stopHashes, th) >= 0) stopHits += 1
-          if (java.util.Arrays.binarySearch(toxHashes, th) >= 0) toxHits += 1
-          tokHashes.add(th)
-        }
-        ts = i + 1
-      }
-      i += 1
+    var toks = new Array[Long](64); var nTok = 0
+    var inTok = false; var tokHash = FnvBasis
+    var tokCp = 0 // code points in the current token
+    def endToken(): Unit = {
+      nWords += 1
+      sumLen += tokCp
+      if (java.util.Arrays.binarySearch(stopHashes, tokHash) >= 0) stopHits += 1
+      if (java.util.Arrays.binarySearch(toxHashes, tokHash) >= 0) toxHits += 1
+      if (nTok == toks.length) toks = java.util.Arrays.copyOf(toks, 2 * nTok)
+      toks(nTok) = tokHash; nTok += 1
+      inTok = false; tokHash = FnvBasis; tokCp = 0
     }
-
-    // --- langid + perplexity over norm trigrams: ONE probe per gram ---
-    val fused = fusedTable
-    val fvals = fused.values
-    val lid = LangIdModel.fastModel
-    val dflts = lid.defaults
-    val lmCtxDflt = CharLm.fastCtxDefaultLogProb
-    val lmGlobalDflt = CharLm.globalDefaultLogProb
-    val nLangs = dflts.length
-    val lidScores = new Array[Double](nLangs)
-    var lmLogSum = 0.0
-    var grams = 0
-    if (m >= 3) {
-      i = 0
-      while (i + 3 <= m) {
-        val gramHash = fnv1aB(norm, i, i + 3)
-        val off = fused.find(gramHash)
-        var lp = 1.0
-        if (off >= 0) {
-          var l = 0
-          while (l + 1 < nLangs) {
-            val bits = fvals(off + (l >> 1))
-            lidScores(l) += java.lang.Float.intBitsToFloat(bits.toInt)
-            lidScores(l + 1) += java.lang.Float.intBitsToFloat((bits >>> 32).toInt)
-            l += 2
-          }
-          if (l < nLangs)
-            lidScores(l) += java.lang.Float.intBitsToFloat(fvals(off + (l >> 1)).toInt)
-          lp = java.lang.Double.longBitsToDouble(fvals(off + fused.tailSlot))
-        } else {
-          var l = 0
-          while (l < nLangs) { lidScores(l) += dflts(l); l += 1 }
-        }
-        if (lp > 0) {
-          val ctxHash = fnv1aB(norm, i, i + 2)
-          lp = lmCtxDflt.getOrDefault(ctxHash, lmGlobalDflt)
-        }
-        lmLogSum += lp
-        grams += 1
-        i += 1
+    def endLine(): Unit = {
+      if (!blank) {
+        nLines += 1
+        if (lineHashes.add(lineHash)) nDistinct += 1
       }
+      lineHash = FnvBasis; blank = true
     }
-    val (lang, langScore) = argmaxLang(lidScores, grams, lid.langs)
-    val perplexity = if (grams == 0) 1.0 else math.exp(-lmLogSum / grams)
-    val sh128 = if (wide) simhash128Of(tokHashes) else Zero128
-
-    Result(
-      nChars = n,
-      nWords = nWords,
-      meanWordLen = if (nWords > 0) sumLen.toDouble / nWords else null,
-      symbolRatio = if (n > 0) symbols.toDouble / n else null,
-      stopwordRatio = if (nWords > 0) stopHits.toDouble / nWords else null,
-      toxicityHits = toxHits,
-      nLines = nLines, nDistinctLines = nDistinct, dupLineRatio = dupLineRatio,
-      lang = lang, langScore = langScore, perplexity = perplexity,
-      fingerprint = fnv1aB(norm, 0, m),
-      simhash = simhash60Of(tokHashes),
-      minhash = minhashOf(tokHashes, minHashK),
-      simhashHi = sh128(0),
-      simhashLo = sh128(1))
-  }
-
-  // ---------------------------------------------------------------------
-  // char fallback — non-ASCII docs; code-point-correct counting
-  // ---------------------------------------------------------------------
-  private def computeChars(text: String, minHashK: Int, wide: Boolean): Result = {
-    val n = text.length
-    // --- raw-text pass: code points, symbols + lines ---
-    var nChars = 0
-    var symbols = 0
     var i = 0
     while (i < n) {
-      val c = text.charAt(i)
-      // a low surrogate is the second half of an already-counted code point
-      if (!Character.isLowSurrogate(c)) {
+      val c = t(i)
+      if (c == '\n') endLine()
+      else {
+        lineHash = (lineHash ^ c) * FnvPrime
+        if (c != ' ') blank = false
+      }
+      if (isWs(c)) {
         nChars += 1
-        // surrogate pairs are never alnum/ws → classified as one symbol
-        if (!isAlnum(c) && !isWs(c)) symbols += 1
-      }
-      i += 1
-    }
-    var nLines = 0; var nDistinct = 0
-    val lineHashes = new java.util.HashSet[java.lang.Long]()
-    var ls = 0
-    i = 0
-    while (i <= n) {
-      if (i == n || text.charAt(i) == '\n') {
-        var j = ls; var blank = true
-        while (j < i && blank) { if (text.charAt(j) != ' ') blank = false; j += 1 }
-        if (!blank) {
-          nLines += 1
-          if (lineHashes.add(fnv1a(text, ls, i))) nDistinct += 1
+        if (inTok) endToken()
+      } else {
+        // a low surrogate is the second half of an already-counted code
+        // point; a surrogate pair is never alnum/ws → one symbol
+        if (!Character.isLowSurrogate(c)) {
+          nChars += 1
+          if (!isAlnum(c)) symbols += 1
         }
-        ls = i + 1
+        if (!inTok && m > 0) {
+          norm(m) = ' '; m += 1
+          fingerprint = (fingerprint ^ ' ') * FnvPrime
+        }
+        inTok = true
+        val lc = Character.toLowerCase(c)
+        norm(m) = lc; m += 1
+        fingerprint = (fingerprint ^ lc) * FnvPrime
+        tokHash = (tokHash ^ lc) * FnvPrime
+        if (!Character.isLowSurrogate(lc)) tokCp += 1
       }
       i += 1
     }
+    endLine()
+    if (inTok) endToken()
     val dupLineRatio = if (nLines > 0) 1.0 - nDistinct.toDouble / nLines else 0.0
-
-    // --- normalised string (lowercase, \s+ → single space, trimmed) ---
-    val norm = {
-      val sb = new java.lang.StringBuilder(n)
-      var inWs = false
-      var k = 0
-      while (k < n) {
-        val c = text.charAt(k)
-        if (isWs(c)) inWs = true
-        else {
-          if (inWs && sb.length > 0) sb.append(' ')
-          inWs = false
-          sb.append(Character.toLowerCase(c))
-        }
-        k += 1
-      }
-      sb.toString
-    }
-
-    // --- token pass over norm ---
-    var nWords = 0; var sumLen = 0L; var stopHits = 0; var toxHits = 0
-    val tokHashes = new java.util.ArrayList[Long](64)
-    var ts = 0
-    var tokCp = 0 // code points in the current token
-    val m = norm.length
-    i = 0
-    while (i <= m) {
-      if (i == m || norm.charAt(i) == ' ') {
-        if (i > ts) {
-          nWords += 1
-          sumLen += tokCp
-          val th = fnv1a(norm, ts, i)
-          if (java.util.Arrays.binarySearch(stopHashes, th) >= 0) stopHits += 1
-          if (java.util.Arrays.binarySearch(toxHashes, th) >= 0) toxHits += 1
-          tokHashes.add(th)
-        }
-        ts = i + 1
-        tokCp = 0
-      } else if (!Character.isLowSurrogate(norm.charAt(i))) tokCp += 1
-      i += 1
-    }
 
     // --- langid + perplexity over norm trigrams: ONE probe per gram ---
     val fused = fusedTable
     val fvals = fused.values
-    val lid = LangIdModel.fastModel
-    val dflts = lid.defaults
+    val lid = LangIdModel.model
+    val dflts = lid.defaultLogProb
     val lmCtxDflt = CharLm.fastCtxDefaultLogProb
     val lmGlobalDflt = CharLm.globalDefaultLogProb
     val nLangs = dflts.length
     val lidScores = new Array[Double](nLangs)
     var lmLogSum = 0.0
     var grams = 0
-    if (m >= 3) {
-      i = 0
-      while (i + 3 <= m) {
-        val gramHash = fnv1a(norm, i, i + 3)
-        val off = fused.find(gramHash)
-        var lp = 1.0
-        if (off >= 0) {
-          var l = 0
-          while (l + 1 < nLangs) {
-            val bits = fvals(off + (l >> 1))
-            lidScores(l) += java.lang.Float.intBitsToFloat(bits.toInt)
-            lidScores(l + 1) += java.lang.Float.intBitsToFloat((bits >>> 32).toInt)
-            l += 2
-          }
-          if (l < nLangs)
-            lidScores(l) += java.lang.Float.intBitsToFloat(fvals(off + (l >> 1)).toInt)
-          lp = java.lang.Double.longBitsToDouble(fvals(off + fused.tailSlot))
-        } else {
-          var l = 0
-          while (l < nLangs) { lidScores(l) += dflts(l); l += 1 }
+    i = 0
+    while (i + 3 <= m) {
+      val off = fused.find(fnv1a(norm, i, i + 3))
+      var lp = 1.0
+      if (off >= 0) {
+        var l = 0
+        while (l + 1 < nLangs) {
+          val bits = fvals(off + (l >> 1))
+          lidScores(l) += java.lang.Float.intBitsToFloat(bits.toInt)
+          lidScores(l + 1) += java.lang.Float.intBitsToFloat((bits >>> 32).toInt)
+          l += 2
         }
-        if (lp > 0) {
-          val ctxHash = fnv1a(norm, i, i + 2)
-          lp = lmCtxDflt.getOrDefault(ctxHash, lmGlobalDflt)
-        }
-        lmLogSum += lp
-        grams += 1
-        i += 1
+        if (l < nLangs)
+          lidScores(l) += java.lang.Float.intBitsToFloat(fvals(off + (l >> 1)).toInt)
+        lp = java.lang.Double.longBitsToDouble(fvals(off + fused.tailSlot))
+      } else {
+        var l = 0
+        while (l < nLangs) { lidScores(l) += dflts(l); l += 1 }
       }
+      if (lp > 0) lp = lmCtxDflt.getOrDefault(fnv1a(norm, i, i + 2), lmGlobalDflt)
+      lmLogSum += lp
+      grams += 1
+      i += 1
     }
     val (lang, langScore) = argmaxLang(lidScores, grams, lid.langs)
     val perplexity = if (grams == 0) 1.0 else math.exp(-lmLogSum / grams)
-    val sh128 = if (wide) simhash128Of(tokHashes) else Zero128
+    val sh128 = if (wide) simhash128Of(toks, nTok) else Zero128
 
     Result(
       nChars = nChars,
@@ -468,9 +309,9 @@ object DocStats {
       toxicityHits = toxHits,
       nLines = nLines, nDistinctLines = nDistinct, dupLineRatio = dupLineRatio,
       lang = lang, langScore = langScore, perplexity = perplexity,
-      fingerprint = fnv1a(norm, 0, norm.length),
-      simhash = simhash60Of(tokHashes),
-      minhash = minhashOf(tokHashes, minHashK),
+      fingerprint = fingerprint,
+      simhash = simhash60Of(toks, nTok),
+      minhash = minhashOf(toks, nTok, minHashK),
       simhashHi = sh128(0),
       simhashLo = sh128(1))
   }
@@ -505,13 +346,12 @@ object DocStats {
     * headroom for 4×15-bit pigeonhole bands (Hamming ≤ 3 candidate
     * discovery — [[graft.rules.Rules.simHashNearDup]]).
     */
-  private def simhash60Of(tokHashes: java.util.ArrayList[Long]): Long = {
-    val nTok = tokHashes.size()
+  private def simhash60Of(tokHashes: Array[Long], nTok: Int): Long = {
     if (nTok == 0) return 0L
     val votes = new Array[Int](60)
     var t = 0
     while (t < nTok) {
-      val h = tokHashes.get(t)
+      val h = tokHashes(t)
       var b = 0
       // branchless: the bit IS the increment (a data-dependent branch here
       // mispredicts ~50% on hash bits — measured as a large share of the
@@ -550,13 +390,12 @@ object DocStats {
     * votes/token on top of the 60 the narrow fingerprint already pays,
     * only in the regime that needs them.
     */
-  private def simhash128Of(tokHashes: java.util.ArrayList[Long]): Array[Long] = {
-    val nTok = tokHashes.size()
+  private def simhash128Of(tokHashes: Array[Long], nTok: Int): Array[Long] = {
     if (nTok == 0) return Zero128
     val votes = new Array[Int](128)
     var t = 0
     while (t < nTok) {
-      val lo = tokHashes.get(t)
+      val lo = tokHashes(t)
       val hi = mix64(lo)
       var b = 0
       while (b < 64) {
@@ -576,23 +415,22 @@ object DocStats {
     Array(shHi, shLo)
   }
 
-  private def minhashOf(tokHashes: java.util.ArrayList[Long],
+  private def minhashOf(tokHashes: Array[Long], nTok: Int,
                         minHashK: Int): Array[java.lang.Long] = {
     // k=0 is the "lite" kernel (kept-side output recompute): skip the
     // shingle/minhash machinery entirely — the caller only reads the
     // scalar features
     if (minHashK == 0) return new Array[java.lang.Long](0)
-    val nTok = tokHashes.size()
     val shingleHashes: Array[Long] =
       if (nTok >= ShingleSize) {
         val out = new Array[Long](nTok - ShingleSize + 1)
         var s = 0
         while (s + ShingleSize <= nTok) {
-          var h = 0xcbf29ce484222325L
+          var h = FnvBasis
           var j = 0
           while (j < ShingleSize) {
-            val th = tokHashes.get(s + j)
-            h ^= th; h *= 0x100000001b3L
+            val th = tokHashes(s + j)
+            h ^= th; h *= FnvPrime
             j += 1
           }
           out(s) = h
@@ -600,10 +438,7 @@ object DocStats {
         }
         out
       } else {
-        val out = new Array[Long](nTok)
-        var s = 0
-        while (s < nTok) { out(s) = tokHashes.get(s); s += 1 }
-        out
+        java.util.Arrays.copyOf(tokHashes, nTok)
       }
     val params = Hashing.hashParamsArray(minHashK)
     val sig = new Array[java.lang.Long](minHashK)
@@ -655,7 +490,7 @@ object DocStats {
     */
   def evalRow(u: UTF8String, minHashK: Int, bands: Int, rowsPerBand: Int,
               wideSimHash: Boolean): InternalRow = {
-    val r = computeU(u, minHashK, wideSimHash)
+    val r = compute(u.toString, minHashK, wideSimHash)
     InternalRow(
       r.nChars, r.nWords, r.meanWordLen, r.symbolRatio, r.stopwordRatio,
       r.toxicityHits, r.nLines, r.nDistinctLines, r.dupLineRatio,

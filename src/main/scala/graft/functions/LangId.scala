@@ -173,58 +173,6 @@ object LangIdModel {
 
   lazy val model: Model = buildModel(SeedCorpus.toSeq)
 
-  /** Production model constructors: the model becomes a DATA swap, not a
-    * code edit. `fromText` builds from in-memory (lang, text) pairs with
-    * the exact math of the built-in model (trigram counts, add-alpha
-    * smoothing, float32 log-prob quantization) — `fromText(SeedCorpus)`
-    * reproduces the built-in tables bit-for-bit (LangIdSpec round-trips
-    * it). `fromTable` accepts any DataFrame with (lang, text) columns, so
-    * a parquet or CSV corpus loads via `spark.read` — the corpus is tiny
-    * by construction (a language PROFILE, not training data), so the
-    * driver-side collect is bounded and the built model still replicates
-    * to every executor deterministically through the expression closure.
-    * Rows sharing a lang concatenate with a single space, in (lang, text)
-    * sort order, so multi-row corpora are deterministic too.
-    */
-  def fromText(pairs: Seq[(String, String)]): Model = buildModel(pairs)
-
-  /** Byte budget for the loader collects ([[fromTable]],
-    * [[CharLm.fromTable]]): a language profile / LM training corpus is
-    * curated few-MB text, and the built model ships inside the scorer
-    * expression to every executor — so anything past this bound is a
-    * mispointed DataFrame (a corpus, not a profile), and the loader
-    * fails with a named error instead of a driver OOM. Same contract as
-    * the nearDupResolve driver gates.
-    */
-  val MaxCorpusBytes: Long = 64L << 20
-
-  /** Shared gate: fail with a named error when the (lang, text) frame's
-    * text payload exceeds `maxBytes`; otherwise return the collected
-    * rows. One scalar aggregate decides BEFORE anything is collected.
-    */
-  private[functions] def boundedCorpusRows(
-      df: org.apache.spark.sql.DataFrame, what: String,
-      maxBytes: Long): Seq[(String, String)] = {
-    import org.apache.spark.sql.functions._
-    val bytes = df.select(sum(octet_length(col("text"))).as("b"))
-      .head().getAs[java.lang.Long]("b")
-    val total = if (bytes == null) 0L else bytes.longValue()
-    if (total > maxBytes)
-      throw new IllegalArgumentException(
-        s"$what: training table carries $total bytes of text, over the " +
-          s"$maxBytes-byte loader budget — this loader collects the " +
-          "corpus to build a broadcast-sized model, so a corpus-scale " +
-          "input is a mispointed table. Curate/sample it first " +
-          "(e.g. a content-hash bottom-k sample, as Ann.trainCentroids " +
-          "takes) or raise maxBytes explicitly.")
-    df.select("lang", "text").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-  }
-
-  def fromTable(df: org.apache.spark.sql.DataFrame,
-                maxBytes: Long = MaxCorpusBytes): Model =
-    fromText(boundedCorpusRows(df, "langid_model.from_table", maxBytes))
-
   private def buildModel(corpus: Seq[(String, String)]): Model = {
     val byLang: Map[String, String] = corpus.sorted.groupBy(_._1)
       .map { case (l, ps) => l -> ps.map(_._2).mkString(" ") }
@@ -260,25 +208,6 @@ object LangIdModel {
       math.log(Alpha / tot).toFloat.toDouble
     }.toArray
     Model(langs, lp, dflt)
-  }
-
-  /** Hash-keyed view of the model for the zero-allocation scorer
-    * ([[DocStats]]): trigram → logProb keyed by FNV-1a of the 3 chars.
-    */
-  final case class FastModel(langs: Array[String],
-                             tables: Array[LongDoubleMap],
-                             defaults: Array[Double])
-
-  lazy val fastModel: FastModel = {
-    val m = model
-    val tables = m.langs.indices.map { i =>
-      val t = new LongDoubleMap(m.logProb(i).size() + 1)
-      m.logProb(i).forEach { (gram, lp) =>
-        t.put(DocStats.fnv1a(gram, 0, gram.length), lp)
-      }
-      t
-    }.toArray
-    FastModel(m.langs, tables, m.defaultLogProb)
   }
 }
 
@@ -404,7 +333,7 @@ object MarkerLangExpr {
   // sorted (marker FNV) with a parallel lang-index array for binary search
   private val (sortedHashes, hashLang) = {
     val pairs = LangsAsc.zipWithIndex.flatMap { case (l, li) =>
-      LangId.Markers(l).map(w => (DocStats.fnv1a(w, 0, w.length), li))
+      LangId.Markers(l).map(w => (DocStats.fnv1a(w), li))
     }.sortBy(_._1)
     (pairs.map(_._1), pairs.map(_._2))
   }

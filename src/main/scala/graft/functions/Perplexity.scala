@@ -26,12 +26,9 @@ object CharLm {
 
   lazy val model: Model = fromText(LangIdModel.SeedCorpus.toSeq)
 
-  /** Build the LM from in-memory (lang, text) pairs — IDENTICAL math to
-    * the embedded-corpus build (sort by lang, join with " ", normalize,
-    * count order-3 grams, vocab = distinct final chars + 1), so
-    * `fromText(SeedCorpus)` reproduces [[model]] bit-for-bit
-    * (PerplexitySpec round-trips it). This is the production LM swap
-    * point: the scorer's model is data, not code.
+  /** Build the LM from (lang, text) pairs: sort by lang, join with " ",
+    * normalize, count order-3 grams, vocab = distinct final chars + 1.
+    * LangIdSpec pins that a different corpus gives a different model.
     */
   def fromText(pairs: Seq[(String, String)]): Model = {
     val corpus = pairs.sortBy(_._1).map(_._2).mkString(" ")
@@ -51,41 +48,6 @@ object CharLm {
     Model(ctxCount, gramCount, chars.size.toDouble + 1.0)
   }
 
-  /** Build the LM from any (lang, text) DataFrame — the cluster-friendly
-    * loader twin of [[LangIdModel.fromTable]]: a training corpus is a few
-    * MB of curated text (the model must stay broadcast-sized; it ships
-    * inside the scorer expression to every executor), so a driver
-    * collect is the correct shape — this is model TRAINING input, not a
-    * data path. Gated by the shared [[LangIdModel.MaxCorpusBytes]]
-    * budget: a mispointed corpus-scale table fails with a named error
-    * before anything is collected, never a driver OOM.
-    */
-  def fromTable(df: org.apache.spark.sql.DataFrame,
-                maxBytes: Long = LangIdModel.MaxCorpusBytes): Model =
-    fromText(LangIdModel.boundedCorpusRows(df, "char_lm.from_table", maxBytes))
-
-  /** Perplexity under an EXPLICIT model (the loader-parity scorer; the
-    * fused kernel path scores under the default [[model]]).
-    */
-  def perplexityUnder(m: Model, text: String): Double = {
-    val n = TextNorm.norm(text)
-    if (n.length < Order) return 1.0
-    var logSum = 0.0
-    var i = 0
-    val total = n.length - Order + 1
-    while (i + Order <= n.length) {
-      val ctx = n.substring(i, i + Order - 1)
-      val gram = n.substring(i, i + Order)
-      val c = m.cnt.get(gram)
-      val cc = m.ctx.get(ctx)
-      val num = (if (c == null) 0.0 else c.doubleValue()) + Alpha
-      val den = (if (cc == null) 0.0 else cc.doubleValue()) + Alpha * m.vocab
-      logSum += math.log(num / den)
-      i += 1
-    }
-    math.exp(-logSum / total)
-  }
-
   /** Hash-keyed LOG-prob defaults for the zero-allocation scorer
     * ([[DocStats]]): `math.log` per trigram was ~1500 log() calls per
     * document — precomputing the per-context unseen-gram default and the
@@ -97,14 +59,11 @@ object CharLm {
   lazy val fastCtxDefaultLogProb: LongDoubleMap = {
     val t = new LongDoubleMap(model.ctx.size() + 1)
     model.ctx.forEach { (g, c) =>
-      t.put(DocStats.fnv1a(g, 0, g.length),
+      t.put(DocStats.fnv1a(g),
         math.log(Alpha / (c + Alpha * model.vocab)))
     }
     t
   }
   lazy val globalDefaultLogProb: Double =
     math.log(Alpha / (Alpha * model.vocab))
-
-  /** Perplexity = exp(-mean log P(c | ctx)). Short/empty text ⇒ 1.0. */
-  def perplexity(text: String): Double = perplexityUnder(model, text)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Per-document text features as pure `Column` expressions.
   *
@@ -17,6 +17,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Each feature has a DuckDB-SQL twin in [[graft.OracleFrags]] used by the
   * correctness oracle — keep semantics in sync (tokenisation = split on
   * `\s+` of trimmed text, empties dropped; symbols = non-alnum, non-space).
+  * The composed per-doc heuristics the fused [[DocStats]] kernel replaced
+  * (word count, symbol ratio, mean word length, stopword ratio, toxicity
+  * hits, char shingles) are its references in test scope.
   */
 object TextFns {
 
@@ -40,10 +43,8 @@ object TextFns {
   def tokens(c: Column): Column =
     filter(split(trim(c), "\\s+"), t => t =!= lit(""))
 
-  def wordCount(c: Column): Column = size(tokens(c))
-
-  /** Fused whitespace word count — identical value to [[wordCount]]
-    * (DocStatsSpec pins tokenisation equality) without the interpreted
+  /** Fused whitespace word count — identical value to `size(tokens(c))`
+    * (TextFnsSpec pins equality with the composed reference) without the interpreted
     * split/filter HOF pipeline (~4 s → ~0.5 s on the sf0.1 corpus).
     */
   def wordCountFast(c: Column): Column =
@@ -58,35 +59,6 @@ object TextFns {
     */
   def sumTokLenFast(c: Column): Column =
     GraftExpr.column(TokenLenSumExpr(GraftExpr.expr(c)))
-
-  /** Count of symbol characters (not alnum, not whitespace). */
-  def symbolCount(c: Column): Column =
-    length(c) - length(regexp_replace(c, "[^A-Za-z0-9\\s]", ""))
-
-  /** Gopher-style symbol-to-char ratio, null-safe on empty text. */
-  def symbolRatio(c: Column): Column =
-    (symbolCount(c).cast(DoubleType) / nullif(length(c), lit(0))).cast(DoubleType)
-
-  /** Mean token length; null for empty docs. */
-  def meanWordLen(c: Column): Column = {
-    val toks = tokens(c)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t).cast(LongType))
-      .cast(DoubleType) / nullif(size(toks), lit(0))
-  }
-
-  /** Count of tokens (lowercased) appearing in `words`. */
-  def hitsIn(toks: Column, words: Seq[String]): Column = {
-    val set = array(words.map(lit): _*)
-    size(filter(toks, t => array_contains(set, lower(t))))
-  }
-
-  /** Fraction of tokens that are English stopwords (C4/Gopher heuristic). */
-  def stopwordRatio(c: Column): Column = {
-    val toks = tokens(c)
-    hitsIn(toks, StopwordsEn).cast(DoubleType) / nullif(size(toks), lit(0))
-  }
-
-  def toxicityHits(c: Column): Column = hitsIn(tokens(c), ToxicityLexicon)
 
   /** Canonical text normalisation used before fingerprint/shingle hashing:
     * lowercase, trim, collapse whitespace runs to single spaces.
@@ -110,15 +82,6 @@ object TextFns {
 
   /** Rolling document fingerprint = md5Long of normalised text. */
   def fingerprint(c: Column): Column = md5Long(normText(c))
-
-  /** Character k-shingles of the (already normalised) string; empty array
-    * when the string is shorter than k.
-    */
-  def charShingles(c: Column, k: Int): Column =
-    when(length(c) >= k,
-      transform(sequence(lit(1), length(c) - lit(k - 1)),
-        i => substr(c, i, lit(k))))
-      .otherwise(array().cast("array<string>"))
 }
 
 /** Whitespace-token count over UTF-8 bytes (Java `\s` whitespace set;

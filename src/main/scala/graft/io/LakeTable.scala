@@ -28,6 +28,7 @@ trait LakeTable {
   def committedPartitions: Set[String]
   def overwritePartition(df: DataFrame, partValue: String): Unit
   def read(spark: SparkSession): DataFrame
+  def readPartition(partValue: String): DataFrame
 }
 
 final class ParquetLakeTable(val spark: SparkSession, val root: String,
@@ -70,6 +71,15 @@ final class ParquetLakeTable(val spark: SparkSession, val root: String,
     spark.read
       .option("basePath", root)
       .parquet(parts.map(v => partPath(v).toString): _*)
+  }
+
+  /** Reads one committed partition, without the partition column. Unlike
+    * a filtered [[read]], it lists no other partition, so a concurrent
+    * commit of another partition cannot remove a path under it.
+    */
+  def readPartition(partValue: String): DataFrame = {
+    require(fs.exists(marker(partValue)), s"partition $partValue of $root is not committed")
+    spark.read.parquet(partPath(partValue).toString)
   }
 
   /** Deletes `_staging/`: what a crashed commit left behind. Only safe

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * Iceberg-style table of Common-Crawl-like pages. The reference
   * (`/root/reference/src/improve_data_quality.py:34-42`) infers a dynamic
   * pandas schema; here the table contract is fixed, so schema inference
-  * collapses to a validation guard (see [[graft.sources.PageSource]]).
+  * collapses to a validation guard (`PageSource.validate`, test scope).
   */
 final case class Page(
     url: String,

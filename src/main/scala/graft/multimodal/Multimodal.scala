@@ -23,8 +23,6 @@ object Multimodal {
       doc_id: Long, n_bytes: Long, magic_hex: String,
       width: Int, height: Int, format: String)
 
-  final case class FrameSample(doc_id: Long, frame_idx: Int, frame_hash: Long)
-
   /** REAL image decode via the JDK-bundled `javax.imageio` readers
     * (PNG/JPEG/GIF/BMP ship with the JDK — no external jar). Header-only:
     * reads dimensions from the image metadata without decoding pixels.
@@ -362,26 +360,6 @@ object Multimodal {
           val (w, h, fmt) = decodeImage(bytes).getOrElse(decodeStub(bytes))
           val magic = bytes.take(4).map(b => f"$b%02X").mkString
           MediaMeta(id, bytes.length.toLong, magic, w, h, fmt)
-        }
-      }
-  }
-
-  /** STUB frame sampling: every `stride`-th 256-byte window hashed —
-    * stands in for video frame extraction; the explode/partitioning
-    * plumbing is the real part.
-    */
-  def sampleFrames(df: DataFrame, stride: Int): Dataset[FrameSample] = {
-    import df.sparkSession.implicits._
-    df.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val nFrames = math.max(1, bytes.length / 256)
-        (0 until nFrames by stride).map { f =>
-          var h = 0xcbf29ce484222325L
-          var i = f * 256
-          val end = math.min(bytes.length, i + 256)
-          while (i < end) { h ^= bytes(i); h *= 0x100000001b3L; i += 1 }
-          FrameSample(id, f, h)
         }
       }
   }

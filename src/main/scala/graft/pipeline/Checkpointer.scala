@@ -68,18 +68,18 @@ object Checkpointer {
         val t0 = System.nanoTime()
         val slice = withDay.filter(col("pdate") === day).drop("pdate")
         val res = QualityPipeline.run(slice, cfg)
-        val kept = res.kept.cache()
-        val verdicts = res.verdicts.cache()
         val nDocs = slice.count()
-        val nKept = kept.count()
-        val nVerdicts = verdicts.count()
-        keptTable.overwritePartition(kept, day)
-        verdictTable.overwritePartition(verdicts, day)
+        // document bodies never sit in cluster storage: each table is
+        // written once from its plan, and its row count is read back from
+        // the committed partition's parquet footers
+        keptTable.overwritePartition(res.kept, day)
+        verdictTable.overwritePartition(res.verdicts, day)
+        val nKept = keptTable.readPartition(day).count()
+        val nVerdicts = verdictTable.readPartition(day).count()
         val wallMs = (System.nanoTime() - t0) / 1000000
         val lineage = Seq((day, nDocs, nKept, nVerdicts, wallMs))
           .toDF("partition", "n_docs", "n_kept", "n_verdicts", "wall_ms")
         lineageTable.overwritePartition(lineage, day)
-        kept.unpersist(); verdicts.unpersist()
         res.unpersist() // release the pipeline's internal caches — a long
         // multi-day run would otherwise accumulate one cache set per day
         PartitionReport(day, nDocs, nKept, nVerdicts, wallMs, skipped = false)

@@ -163,8 +163,9 @@ object QualityPipeline {
       maxToxicityHits: Int = 3) {        // drop beyond; scrub below
     // bandKeysOf truncates the band set to the signature length; a config
     // asking for more banded rows than the signature holds would silently
-    // diverge from the composed Hashing.bandKeys semantics (empty-slice
-    // bands hash to key 0 and co-bucket every short-sig doc).
+    // diverge from the composed band-key reference in test scope
+    // (`ComposedRefs.bandKeys`: empty-slice bands hash to key 0 and
+    // co-bucket every short-sig doc).
     require(bands * rowsPerBand <= minHashK,
       s"bands*rowsPerBand (${bands * rowsPerBand}) must not exceed minHashK ($minHashK)")
     require(simHashNearDupBits.forall(b => b == 60 || b == 128),
@@ -411,8 +412,9 @@ object QualityPipeline {
     // signature (the exploded bands would otherwise carry `bands` copies
     // of every signature through the shuffle). Band keys come PRECOMPUTED
     // from the fused DocStats pass: the composed slice+aggregate version
-    // (Hashing.bandKeys, kept as the semantic reference) interprets its
-    // HOF lambdas per element and measured ~190 s CPU at 300k docs.
+    // (`ComposedRefs.bandKeys`, the semantic reference in test scope)
+    // interprets its HOF lambdas per element and measured ~190 s CPU at
+    // 300k docs.
     // The (band, key) pair is folded BIJECTIVELY into one long
     // (key < P = 2³¹ ⇒ key*bands+band < 2³⁴+): this shuffle is the
     // pipeline's biggest (docs × bands rows), and one 8-byte column in

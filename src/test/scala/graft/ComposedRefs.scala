@@ -249,8 +249,70 @@ object ComposedRefs {
     c
   }
 
-  /** [[CharLm.perplexity]] as a Column (one driver-side scorer call per
-    * row) — the reference the fused DocStats perplexity is diffed against.
+  /** Whitespace token count: the reference of the fused word counts. */
+  def wordCount(c: Column): Column = size(TextFns.tokens(c))
+
+  /** Count of symbol characters (not alnum, not whitespace). */
+  def symbolCount(c: Column): Column =
+    length(c) - length(regexp_replace(c, "[^A-Za-z0-9\\s]", ""))
+
+  /** Gopher-style symbol-to-char ratio, null-safe on empty text. */
+  def symbolRatio(c: Column): Column =
+    (symbolCount(c).cast(DoubleType) / nullif(length(c), lit(0))).cast(DoubleType)
+
+  /** Mean token length; null for empty docs. */
+  def meanWordLen(c: Column): Column = {
+    val toks = TextFns.tokens(c)
+    aggregate(toks, lit(0L), (acc, t) => acc + length(t).cast(LongType))
+      .cast(DoubleType) / nullif(size(toks), lit(0))
+  }
+
+  /** Count of tokens (lowercased) appearing in `words`. */
+  def hitsIn(toks: Column, words: Seq[String]): Column = {
+    val set = array(words.map(lit): _*)
+    size(filter(toks, t => array_contains(set, lower(t))))
+  }
+
+  /** Fraction of tokens that are English stopwords (C4/Gopher heuristic). */
+  def stopwordRatio(c: Column): Column = {
+    val toks = TextFns.tokens(c)
+    hitsIn(toks, TextFns.StopwordsEn).cast(DoubleType) / nullif(size(toks), lit(0))
+  }
+
+  def toxicityHits(c: Column): Column = hitsIn(TextFns.tokens(c), TextFns.ToxicityLexicon)
+
+  /** Character k-shingles of the (already normalised) string; empty array
+    * when the string is shorter than k.
+    */
+  def charShingles(c: Column, k: Int): Column =
+    when(length(c) >= k,
+      transform(sequence(lit(1), length(c) - lit(k - 1)),
+        i => substr(c, i, lit(k))))
+      .otherwise(array().cast("array<string>"))
+
+  /** Perplexity of `text` under the char LM `m`: exp(−mean log P(c | ctx))
+    * over the trigrams of the normalised text, add-alpha smoothed.
+    * Short/empty text ⇒ 1.0. The reference of the fused DocStats
+    * perplexity, which scores under [[CharLm.model]].
+    */
+  def perplexityUnder(m: CharLm.Model, text: String): Double = {
+    val grams = LangIdModel.trigrams(text).toArray
+    if (grams.isEmpty) return 1.0
+    var logSum = 0.0
+    grams.foreach { gram =>
+      val c = m.cnt.get(gram)
+      val cc = m.ctx.get(gram.substring(0, CharLm.Order - 1))
+      val num = (if (c == null) 0.0 else c.doubleValue()) + CharLm.Alpha
+      val den = (if (cc == null) 0.0 else cc.doubleValue()) + CharLm.Alpha * m.vocab
+      logSum += math.log(num / den)
+    }
+    math.exp(-logSum / grams.length)
+  }
+
+  def perplexity(text: String): Double = perplexityUnder(CharLm.model, text)
+
+  /** [[perplexity]] as a Column (one driver-side scorer call per row) —
+    * the reference the fused DocStats perplexity is diffed against.
     */
   def perplexityCol(c: Column): Column =
     GraftExpr.column(CharNgramPerplexity(GraftExpr.expr(c)))
@@ -355,7 +417,7 @@ object ComposedRefs {
   }
 }
 
-/** `char_ngram_perplexity(text)` → double, one [[CharLm.perplexity]] call
+/** `char_ngram_perplexity(text)` → double, one [[ComposedRefs.perplexity]] call
   * per row ([[ComposedRefs.perplexityCol]]).
   */
 case class CharNgramPerplexity(child: Expression)
@@ -363,7 +425,7 @@ case class CharNgramPerplexity(child: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
   override def nullSafeEval(input: Any): Any =
-    CharLm.perplexity(input.asInstanceOf[UTF8String].toString)
+    ComposedRefs.perplexity(input.asInstanceOf[UTF8String].toString)
   override protected def withNewChildInternal(newChild: Expression): CharNgramPerplexity =
     copy(child = newChild)
 }

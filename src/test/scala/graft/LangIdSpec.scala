@@ -16,72 +16,24 @@ class LangIdSpec extends AnyFunSuite {
     "it" -> "la gente sarebbe anche nella degli delle questi sono stati per non che piu"
   )
 
-  test("fromText/fromTable loaders reproduce the built-in model bit-for-bit") {
-    // in-memory pairs round-trip
-    val m1 = LangIdModel.fromText(LangIdModel.SeedCorpus.toSeq)
-    // file round-trip: SeedCorpus → parquet → spark.read → fromTable
-    val dir = java.nio.file.Files.createTempDirectory("langid_corpus").toFile
-    val path = new java.io.File(dir, "corpus.parquet").getPath
-    LangIdModel.SeedCorpus.toSeq.toDF("lang", "text")
-      .write.mode("overwrite").parquet(path)
-    val m2 = LangIdModel.fromTable(spark.read.parquet(path))
-    val ref = LangIdModel.model
-    for (m <- Seq(m1, m2)) {
-      assert(m.langs.toSeq == ref.langs.toSeq)
-      assert(m.defaultLogProb.toSeq == ref.defaultLogProb.toSeq)
-      m.langs.indices.foreach { i =>
-        assert(m.logProb(i) == ref.logProb(i),
-          s"per-gram log-prob table differs for ${ref.langs(i)}")
-      }
-    }
-    // a loaded model is usable standalone: classify with the same result
-    val loaded = m2
-    assert(loaded.langs.sameElements(ref.langs))
-  }
-
-  test("fromTable loaders: named error past the byte budget, identical model under it") {
-    val big = Seq(("en", "x" * 4096)).toDF("lang", "text")
-    val eLid = intercept[IllegalArgumentException](
-      LangIdModel.fromTable(big, maxBytes = 1024))
-    assert(eLid.getMessage.contains("langid_model.from_table") &&
-      eLid.getMessage.contains("loader budget"))
-    val eLm = intercept[IllegalArgumentException](
-      CharLm.fromTable(big, maxBytes = 1024))
-    assert(eLm.getMessage.contains("char_lm.from_table"))
-    // under the budget the gate changes nothing: bit-identical tables
-    val df = LangIdModel.SeedCorpus.toSeq.toDF("lang", "text")
-    val m = LangIdModel.fromTable(df)
-    assert(m.langs.sameElements(LangIdModel.model.langs))
-    assert(CharLm.fromTable(df).cnt == CharLm.model.cnt)
-  }
-
-  test("CharLm fromText/fromTable loaders reproduce the built-in LM bit-for-bit") {
-    // in-memory pairs round-trip — identical cnt/ctx tables and vocab
+  test("CharLm fromText reproduces the built-in LM bit-for-bit") {
+    // identical cnt/ctx tables and vocab from the same pairs
     val m1 = CharLm.fromText(LangIdModel.SeedCorpus.toSeq)
-    // file round-trip: SeedCorpus → parquet → spark.read → fromTable
-    val dir = java.nio.file.Files.createTempDirectory("charlm_corpus").toFile
-    val path = new java.io.File(dir, "corpus.parquet").getPath
-    LangIdModel.SeedCorpus.toSeq.toDF("lang", "text")
-      .write.mode("overwrite").parquet(path)
-    val m2 = CharLm.fromTable(spark.read.parquet(path))
     val ref = CharLm.model
-    for (m <- Seq(m1, m2)) {
-      assert(m.vocab == ref.vocab)
-      assert(m.ctx == ref.ctx, "ctx count table differs")
-      assert(m.cnt == ref.cnt, "gram count table differs")
-    }
-    // scoring under the loaded model is bit-identical to the default path
+    assert(m1.vocab == ref.vocab)
+    assert(m1.ctx == ref.ctx, "ctx count table differs")
+    assert(m1.cnt == ref.cnt, "gram count table differs")
+    // scoring under the rebuilt model is bit-identical to the default path
     val texts = Seq("the people would know that this is a good test",
       "xq zvkw jfp qqqz mxnv bbtk zzz qpw xvj kkz", "")
     texts.foreach { t =>
-      assert(CharLm.perplexityUnder(m2, t) == CharLm.perplexity(t))
+      assert(ComposedRefs.perplexityUnder(m1, t) == ComposedRefs.perplexity(t))
     }
-    // a DIFFERENT corpus produces a genuinely different model (the swap
-    // point is real, not a fixed table behind a loader facade)
+    // a DIFFERENT corpus produces a genuinely different model
     val other = CharLm.fromText(Seq("xx" -> "zzz qqq kkk vvv www yyy xxx"))
     assert(other.cnt != ref.cnt)
-    assert(CharLm.perplexityUnder(other,
-      "the people would know") != CharLm.perplexity("the people would know"))
+    assert(ComposedRefs.perplexityUnder(other,
+      "the people would know") != ComposedRefs.perplexity("the people would know"))
   }
 
   test("n-gram model classifies held-out-ish sentences per language") {
@@ -155,11 +107,11 @@ class LangIdSpec extends AnyFunSuite {
   }
 
   test("perplexity: clean seed-like text scores far below gibberish") {
-    val clean = CharLm.perplexity("the people would know that this is a good test")
-    val junk = CharLm.perplexity("xq zvkw jfp qqqz mxnv bbtk zzz qpw xvj kkz")
+    val clean = ComposedRefs.perplexity("the people would know that this is a good test")
+    val junk = ComposedRefs.perplexity("xq zvkw jfp qqqz mxnv bbtk zzz qpw xvj kkz")
     assert(clean < 12, s"clean ppl $clean")
     assert(junk > 30, s"junk ppl $junk")
-    assert(CharLm.perplexity("") == 1.0)
+    assert(ComposedRefs.perplexity("") == 1.0)
   }
 
   test("perplexity expression matches driver-side function") {
@@ -167,7 +119,7 @@ class LangIdSpec extends AnyFunSuite {
     val got = texts.toDF("t").select(ComposedRefs.perplexityCol(col("t")),
         DocStats.docStats(col("t"), 0).getField("perplexity"))
       .collect().map(r => (r.getDouble(0), r.getDouble(1)))
-    assert(got.toSeq.map(_._1) == texts.map(CharLm.perplexity))
+    assert(got.toSeq.map(_._1) == texts.map(ComposedRefs.perplexity))
     // the fused kernel scores as the composed reference does
     assert(got.forall { case (a, b) => math.abs(a - b) < 1e-9 }, got.toSeq)
   }

@@ -141,7 +141,7 @@ class PlanSpec extends AnyFunSuite {
     // interpreted in Spark — only scalar expression chains codegen. The
     // scan + scalar features must be inside a WholeStageCodegen span.
     val d = spark.read.parquet(s"$dir/documents.parquet")
-    val f = d.select(graft.functions.TextFns.symbolRatio(col("text")),
+    val f = d.select(ComposedRefs.symbolRatio(col("text")),
       graft.functions.TextFns.fingerprint(col("text")))
     // codegen'd spans print as "*(n) Project ..." in the physical plan
     assert(physical(f).contains("*(1)"), physical(f).take(500))

@@ -20,10 +20,10 @@ class TextFnsSpec extends AnyFunSuite {
   }
 
   test("wordCount/symbolRatio/meanWordLen on hand-computed strings") {
-    assert(one[Int](TextFns.wordCount(col("t")), "one two three") == 3)
+    assert(one[Int](ComposedRefs.wordCount(col("t")), "one two three") == 3)
     // "ab!@#" → 3 symbols / 5 chars
-    assert(one[Double](TextFns.symbolRatio(col("t")), "ab!@#") == 0.6)
-    assert(one[Double](TextFns.meanWordLen(col("t")), "ab abcd") == 3.0)
+    assert(one[Double](ComposedRefs.symbolRatio(col("t")), "ab!@#") == 0.6)
+    assert(one[Double](ComposedRefs.meanWordLen(col("t")), "ab abcd") == 3.0)
   }
 
   test("sumTokLenFast/wordCountFast equal the HOF formulations (incl. non-ASCII, ws classes, null)") {
@@ -37,7 +37,7 @@ class TextFnsSpec extends AnyFunSuite {
     val df = cases.toDF("t")
     val got = df.select(
       hof(col("t")).as("h"), TextFns.sumTokLenFast(col("t")).as("f"),
-      TextFns.wordCount(col("t")).as("wc"), TextFns.wordCountFast(col("t")).as("wcf"))
+      ComposedRefs.wordCount(col("t")).as("wc"), TextFns.wordCountFast(col("t")).as("wcf"))
       .collect()
     got.zip(cases).foreach { case (r, s) =>
       assert(r.getLong(0) == r.getLong(1), s"sumTokLen mismatch on '$s'")
@@ -51,7 +51,7 @@ class TextFnsSpec extends AnyFunSuite {
 
   test("stopwordRatio counts case-insensitive stopword hits") {
     // "The cat of doom" → the, of = 2/4
-    assert(one[Double](TextFns.stopwordRatio(col("t")), "The cat of doom") == 0.5)
+    assert(one[Double](ComposedRefs.stopwordRatio(col("t")), "The cat of doom") == 0.5)
   }
 
   test("normText collapses whitespace and lowercases") {
@@ -59,8 +59,8 @@ class TextFnsSpec extends AnyFunSuite {
   }
 
   test("charShingles: k-grams; short string yields empty") {
-    assert(oneSeq(TextFns.charShingles(col("t"), 3), "abcd") == List("abc", "bcd"))
-    assert(oneSeq(TextFns.charShingles(col("t"), 3), "ab") == Nil)
+    assert(oneSeq(ComposedRefs.charShingles(col("t"), 3), "abcd") == List("abc", "bcd"))
+    assert(oneSeq(ComposedRefs.charShingles(col("t"), 3), "ab") == Nil)
   }
 
   test("md5Long is deterministic and matches the documented formula") {
@@ -76,7 +76,7 @@ class TextFnsSpec extends AnyFunSuite {
     val df = Seq("the quick brown fox jumps over the lazy dog",
       "the quick brown fox jumps over the lazy cat").toDF("t")
     val sigs = df.select(ComposedRefs.minHashSig(
-      TextFns.charShingles(TextFns.normText(col("t")), 4), 8).as("s"))
+      ComposedRefs.charShingles(TextFns.normText(col("t")), 4), 8).as("s"))
       .collect().map(_.getSeq[Long](0).toList)
     assert(sigs(0).size == 8)
     assert(sigs(0).forall(h => h >= 0 && h < Hashing.P))
@@ -89,7 +89,7 @@ class TextFnsSpec extends AnyFunSuite {
       "many words of text for a larger shingle set here today")
     val df = texts.toDF("t")
     val composed = df.select(ComposedRefs.minHashSig(
-        TextFns.charShingles(col("t"), 4), 4).as("s"))
+        ComposedRefs.charShingles(col("t"), 4), 4).as("s"))
       .collect().map(_.getSeq[Any](0).toList)
     val fused = df.select(graft.functions.Md5MinHash.md5MinHash(col("t"), 4, 4).as("s"))
       .collect().map(_.getSeq[Any](0).toList)

@@ -13,6 +13,11 @@ import graft.model.Page
   * majority-vote type inference (`utils.py:88-120`), the fixed Page
   * contract is VALIDATED: a mismatching table fails fast with the
   * offending columns named.
+  *
+  * Test scope: no shipped entry point reads pages from a path (the
+  * pipeline, `Checkpointer` and the harness mains take DataFrames), so
+  * this stays as the reference of the S1–S3 source semantics that
+  * CoverageSpec pins.
   */
 object PageSource {
 
