@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.functions._
@@ -191,6 +192,51 @@ object QualityPipeline {
     * than pull an unbounded set into the driver heap.
     */
   val MaxStatGroups: Long = 100000L
+
+  /** Bound on the rows of one verdict set that [[verdictLeaf]] holds as a
+    * local relation in the driver heap. Measured with Spark's
+    * SizeEstimator on 100,000 verdict rows with 77-character urls: a
+    * fetched row takes 380 B and its local-relation copy 464 B when
+    * `detail` is a keeper url (the near-dup shape; 316 and 400 B with a
+    * short detail). At the bound a set so takes about 19 MB fetched and
+    * 23 MB as a local relation, 42 MB while both are live, well under
+    * the ~100 MB that [[MaxDriverEdges]] allows; a run holds three such
+    * sets. The
+    * planner's size estimate for the url projection is 28 B a row, 1.4 MB
+    * at the bound, under the default 10 MB broadcast threshold.
+    */
+  val MaxLocalVerdicts: Long = 50000L
+
+  /** A verdict set as a plan leaf whose size the planner knows. One
+    * bounded fetch decides the regime. At or under `cap` rows
+    * ([[MaxLocalVerdicts]] in a run) the set becomes a local relation, the
+    * shape [[nearDupDriverVerify]] returns: a join against it plans as a
+    * broadcast from its real size and runs no stage to learn it. Over
+    * `cap` the fetched rows are dropped and the set is materialised again
+    * as a localCheckpoint leaf, one partition per core, which the planner
+    * may shuffle-join.
+    */
+  private[graft] def verdictLeaf(df: DataFrame, cap: Long): DataFrame = {
+    val rows = df.limit((cap + 1).min(Int.MaxValue.toLong).toInt).collect()
+    if (rows.length <= cap)
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    else df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+      .localCheckpoint(true)
+  }
+
+  /** The url column of some verdict leaves: an anti-join's build side. It
+    * carries a broadcast hint only when every leaf is a local relation,
+    * whose rows are bounded ([[MaxLocalVerdicts]], or [[MaxDriverMembers]]
+    * on the near-dup driver path); past a bound the planner chooses, so a
+    * corpus-scale dropped set can still shuffle-join. Duplicate urls are
+    * kept: they do not change an anti-join's result.
+    */
+  private def droppedUrls(leaves: DataFrame*): DataFrame = {
+    val urls = leaves.map(_.select("url")).reduce(_ unionByName _)
+    if (leaves.forall(_.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]))
+      broadcast(urls)
+    else urls
+  }
 
   // env-gated phase timer (SPARK_GRAFT_PHASES=1): localizes driver-side
   // wall between actions — stage metrics alone can't show scheduling /
@@ -389,7 +435,7 @@ object QualityPipeline {
     * leaf. Split out so [[run]] can use this job — a single linear stage
     * chain whose map stage is the pipeline's FIRST scan of `feat` — as
     * the feature-cache builder (no separate count() barrier), and overlap
-    * the heuristic/exact-dup checkpoint with [[nearDupResolve]]'s
+    * the heuristic/exact-dup fetch with [[nearDupResolve]]'s
     * collect/verify actions.
     */
   final case class NearDupCandidates(eligible: DataFrame, sigs: DataFrame,
@@ -459,9 +505,12 @@ object QualityPipeline {
   def nearDupResolve(cand: NearDupCandidates, cfg: Config): DataFrame =
     nearDupResolve(cand, cfg, MaxDriverEdges, MaxDriverMembers)
 
-  /** [[nearDupResolve]] under explicit driver bounds. */
+  /** [[nearDupResolve]] under explicit driver bounds and, on the
+    * distributed path, an explicit [[verdictLeaf]] bound.
+    */
   private[graft] def nearDupResolve(cand: NearDupCandidates, cfg: Config,
-                                    maxEdges: Long, maxMembers: Long): DataFrame = {
+                                    maxEdges: Long, maxMembers: Long,
+                                    verdictCap: Long = MaxLocalVerdicts): DataFrame = {
     import cand.{eligible, sigs, pairs}
     // scale-adaptive verify + clustering (same spirit as AQE's broadcast
     // decision — the candidate set is materialised so its size is KNOWN):
@@ -489,7 +538,7 @@ object QualityPipeline {
       else fetched.iterator.flatMap(p => Iterator(p._1, p._2)).toSet.size.toLong
     if (fetched.length <= maxEdges && memberCount <= maxMembers)
       nearDupDriverVerify(eligible, fetched, cfg)
-    else nearDupDistributedVerify(eligible, sigs, pairs, cfg)
+    else nearDupDistributedVerify(eligible, sigs, pairs, cfg, verdictCap)
   }
 
   /** Driver path: one cluster scan collects the candidate docs'
@@ -559,7 +608,8 @@ object QualityPipeline {
     * min-label cascade, min-url survivor resolution.
     */
   private def nearDupDistributedVerify(eligible: DataFrame, sigs: DataFrame,
-                                       pairs: DataFrame, cfg: Config): DataFrame = {
+                                       pairs: DataFrame, cfg: Config,
+                                       verdictCap: Long): DataFrame = {
     // verify candidates: join signatures back. NO broadcast hint — this
     // branch is selected precisely BECAUSE the pair set overflowed the
     // driver bound, so force-broadcasting it (and worse, p1 = pairs ×
@@ -604,17 +654,16 @@ object QualityPipeline {
       .join(labels, Seq("uid"))
     val survivors = members.groupBy(col("label"))
       .agg(min(col("url")).as("keep_url"))
-    members.join(survivors, Seq("label"))
+    val verdicts = members.join(survivors, Seq("label"))
       .filter(col("url") =!= col("keep_url"))
       .select(col("url"), lit("near_dup").as("rule"),
         lit(false).as("keep"), lit(1.0).cast(DoubleType).as("score"),
         col("keep_url").cast("string").as("detail"))
-      // leaf-ify to match the driver path's local-relation shape: run()
-      // references the near-dup verdicts several times (survivor
-      // anti-join, verdict union, kept anti-join, metrics), and without
-      // a leaf each reference re-runs the url join-back's feat scan
-      .coalesce(eligible.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+    // a leaf, as on the driver path: run() references the near-dup
+    // verdicts several times (survivor anti-join, verdict union, kept
+    // anti-join, metrics), and without a leaf each reference re-runs the
+    // url join-back's feat scan
+    ph("neardup verdict leaf")(verdictLeaf(verdicts, verdictCap))
   }
 
   /** Number of min-label propagation rounds = the maximum near-dup
@@ -721,17 +770,19 @@ object QualityPipeline {
     * aggregate bounded by [[MaxStatGroups]]. The driver folds the groups
     * exactly into per-language perplexity moments and per-pair counts,
     * and the survivors take one broadcast join to that local relation.
-    * The verdicts are a CHECKPOINT LEAF, not a cache: a caller looping
-    * over partitions would otherwise accumulate one never-released cache
-    * per call; a localCheckpoint block is freed with its DataFrame.
+    * The verdicts come back as a [[verdictLeaf]], not a cache: a caller
+    * looping over partitions would otherwise accumulate one
+    * never-released cache per call, while a local relation (or, past the
+    * bound, a localCheckpoint block) is freed with its DataFrame.
     */
-  def pass2(survivors: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val par = survivors.sparkSession.sparkContext.defaultParallelism
-    val v2 = pass2Verdicts(survivors, cfg)
-    ph("v2 checkpoint")(v2.coalesce(par).localCheckpoint(true))
-  }
+  def pass2(survivors: DataFrame, cfg: Config = defaultConfig): DataFrame =
+    pass2(survivors, cfg, MaxLocalVerdicts)
 
-  /** The pass-2 verdicts before the checkpoint: fetches the stats (the
+  /** [[pass2]] under an explicit [[verdictLeaf]] bound. */
+  private[graft] def pass2(survivors: DataFrame, cfg: Config, verdictCap: Long): DataFrame =
+    ph("v2 leaf")(verdictLeaf(pass2Verdicts(survivors, cfg), verdictCap))
+
+  /** The pass-2 verdicts before the leaf: fetches the stats (the
     * group fetch under `cap`) and returns the lazy entry pass.
     */
   private[graft] def pass2Verdicts(survivors: DataFrame, cfg: Config,
@@ -862,7 +913,14 @@ object QualityPipeline {
     * The kept text is scrubbed by the single-pass ScrubText expression,
     * byte-identical to the `Scrub.scrubCol` chain (property-tested).
     */
-  def run(pages: DataFrame, cfg: Config = defaultConfig): Result = {
+  def run(pages: DataFrame, cfg: Config = defaultConfig): Result =
+    run(pages, cfg, MaxLocalVerdicts, MaxDriverEdges)
+
+  /** [[run]] under an explicit [[verdictLeaf]] bound and near-dup driver
+    * edge bound (0 forces the distributed near-dup path).
+    */
+  private[graft] def run(pages: DataFrame, cfg: Config, verdictCap: Long,
+                         maxEdges: Long): Result = {
     val feat = features(pages, cfg).cache()
     // CACHE BUILD IS FOLDED INTO THE FIRST REAL JOB: the near-dup
     // candidate checkpoint's map stage is a single linear stage chain
@@ -894,17 +952,18 @@ object QualityPipeline {
     // eagerly, so a downstream plan never contains the v1/v2 union node
     // and a cache() on either can never be matched (measured: every
     // write job re-ran every pass-1 branch AND every pass-2 rule — ~10
-    // redundant 300-task scans of the feature cache per run). The
-    // verdict sets are tiny (url + rule rows), so an eager localCheckpoint
-    // materialises each ONCE — over the warm feat cache, branches running
-    // fully parallel inside one job — and every downstream consumer
-    // (survivor anti-joins, writes, metrics) reads a block-backed leaf.
-    // coalesce before checkpointing: the verdict union is 10+ branches ×
-    // shuffle.partitions tasks of a few rows each — one leaf partition
-    // per core is plenty and cuts the checkpoint job's task count 10×
-    val par = pages.sparkSession.sparkContext.defaultParallelism
-    // OVERLAP: the heuristic+exact-dup checkpoint (cluster-parallel scans
-    // of the now-warm cache) runs concurrently with the near-dup
+    // redundant 300-task scans of the feature cache per run). Each
+    // verdict set is materialised ONCE, by one bounded fetch
+    // (verdictLeaf) — over the warm feat cache, branches running fully
+    // parallel inside one action — into a local relation of a few
+    // thousand (url, rule) rows. Every downstream consumer (survivor and
+    // kept anti-joins, writes, metrics) reads that leaf, and the planner
+    // sees its real size: the anti-joins plan as broadcasts up front
+    // instead of running shuffle map stages for AQE to measure first.
+    // Past MaxLocalVerdicts a set falls back to a localCheckpoint leaf.
+    //
+    // OVERLAP: the heuristic+exact-dup fetch (cluster-parallel scans of
+    // the now-warm cache) runs concurrently with the near-dup
     // collect/verify chain (mostly driver-side latency: a bounded fetch,
     // a member fetch, local union-find) — the two own disjoint resources,
     // so this removes the near-dup driver round-trips from the serial
@@ -919,24 +978,22 @@ object QualityPipeline {
        else Seq(Rules.hostCap(pages, col("url"), col("url"), cfg.hostDocCap)))
     val v1aF = Future {
       val batteryV = Await.result(batteryF, Duration.Inf)
-      ph("v1a checkpoint")(
+      ph("v1a leaf")(verdictLeaf(
         (simHashVerdicts(feat, cfg).toSeq ++ batteryV.toSeq ++ urlV).foldLeft(
             heuristicVerdicts(feat, cfg).unionByName(exactDupVerdicts(feat)))(
-            _ unionByName _)
-          .coalesce(par).localCheckpoint(true))
+            _ unionByName _), verdictCap))
     }
-    val nd = ph("neardup resolve")(nearDupResolve(cand, cfg))
-    // both sides are materialised leaves (v1a a checkpoint block, nd a
-    // local relation or checkpointed join-back), so the union needs no
-    // further checkpoint
-    val v1 = Await.result(v1aF, Duration.Inf).unionByName(nd)
-    val dropped1 = v1.select("url").distinct()
-    val survivors = feat.join(dropped1, Seq("url"), "left_anti")
-    val v2 = pass2(survivors, cfg)
-    val verdicts = v1.unionByName(v2)
-    // kept output: RE-SCAN the source pages (anti-join the tiny dropped
-    // url set — both verdict sides are checkpoint leaves, AQE broadcasts
-    // them) and recompute the three output features with the LITE kernel
+    // nd is a local relation (driver path) or a verdictLeaf (distributed
+    // path), so neither pass-1 side needs a further leaf
+    val nd = ph("neardup resolve")(
+      nearDupResolve(cand, cfg, maxEdges, MaxDriverMembers, verdictCap))
+    val v1a = Await.result(v1aF, Duration.Inf)
+    val survivors = feat.join(droppedUrls(v1a, nd), Seq("url"), "left_anti")
+    val v2 = pass2(survivors, cfg, verdictCap)
+    val verdicts = v1a.unionByName(nd).unionByName(v2)
+    // kept output: RE-SCAN the source pages (anti-join the dropped url
+    // set: under the bound, a broadcast of three local relations) and
+    // recompute the three output features with the LITE kernel
     // (minHashK=0: no shingle/minhash work). The feature cache carries no
     // text, so this second source scan is what pays for a cache the
     // cluster can actually hold: at corpus scale caching the bodies is
@@ -944,9 +1001,8 @@ object QualityPipeline {
     // path, and the lite recompute (~µs/doc) is pure partition-local CPU
     // — strictly cheaper than shuffling the kept bodies through a join
     // against the feature frame.
-    val droppedAll = v1.select("url").unionByName(v2.select("url")).distinct()
     val kept = withSourceText(pages, cfg).drop("html")
-      .join(droppedAll, Seq("url"), "left_anti")
+      .join(droppedUrls(v1a, nd, v2), Seq("url"), "left_anti")
       .withColumn("__ds", DocStats.docStats(coalesce(col("text"), lit("")), 0))
       .select(col("url"), col("warc_ts"), col("lang"),
         col("__ds.lang").as("lang_detected"),

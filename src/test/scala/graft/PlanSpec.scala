@@ -318,4 +318,56 @@ class PlanSpec extends AnyFunSuite {
     }.isEmpty, plan)
     assert(root.collect { case j: BroadcastHashJoinExec => j }.size == 1, plan)
   }
+
+  test("local verdict sets: the survivor and kept anti-joins are broadcasts " +
+    "of local relations in the initial plan") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.QualityPipeline
+    val pages = graft.sources.PagesGen.generate(spark, 500, 2).toDF()
+    // the survivor anti-join runs inside run(): capture the plans of the
+    // actions it takes
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val r = try {
+      val r = QualityPipeline.run(pages)
+      ListenerBusDrain.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(l)
+    // the plan AQE starts from, before any stage runs
+    def initial(p: SparkPlan) = p.collect { case a: AdaptiveSparkPlanExec => a.initialPlan }
+    def antiJoins(p: SparkPlan) = p.collect {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j
+    }
+    try {
+      // pass 2's group fetch, stats fetch and entry pass each read the
+      // survivors of the feature cache
+      val survivorJoins = executed.asScala.toSeq.flatMap(initial).flatMap(antiJoins)
+      val keptJoins = initial(r.kept.queryExecution.executedPlan).flatMap(antiJoins)
+      assert(survivorJoins.size == 3, survivorJoins.mkString("\n"))
+      assert(survivorJoins.forall(_.left.collect { case m: InMemoryTableScanExec => m }.nonEmpty))
+      assert(keptJoins.size == 1, keptJoins.mkString("\n"))
+      (survivorJoins ++ keptJoins).foreach { j =>
+        val plan = j.toString.take(2000)
+        assert(j.isInstanceOf[BroadcastHashJoinExec], plan)
+        // the build side is the broadcast of local relations: no shuffle
+        // map stage runs to learn its size
+        assert(j.right.isInstanceOf[BroadcastExchangeExec], plan)
+        assert(j.right.collect { case e: Exchange => e }.size == 1, plan)
+        assert(j.right.collect { case t: LocalTableScanExec => t }.nonEmpty, plan)
+      }
+    } finally r.unpersist()
+  }
 }
