@@ -18,8 +18,15 @@ import graft.embed.Ann
   *    except sums whose exact value can sit on a rounding tie (money
   *    products), which sum exact decimals on both sides
   *  - every count is BIGINT on both sides
-  *  - every query has a total ORDER BY (no tie-dependent output)
   *  - tokenisation/normalisation fragments mirror TextFns exactly
+  *
+  * A result is a bag of rows. Both comparators (`table_hash` in
+  * `tools/check_oracle.py` and in `perfbench/oracle.py`) sort the
+  * canonical row lines before hashing, so row order carries nothing, and
+  * a presentation sort would only add a range repartition of a
+  * corpus-sized output. A sort appears only where it changes the rows:
+  * the top-k of [[q3TopRevenue]] and the `Window` specs. The SQL twins
+  * keep their ORDER BY, which changes no hash.
   */
 object Queries {
 
@@ -27,20 +34,6 @@ object Queries {
     s.read.parquet(s"$dir/documents.parquet")
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Pre-sort leaf: materialise the frame (eager localCheckpoint), then
-    * sort it by `cols`. `orderBy`'s range partitioner SAMPLES its child
-    * to pick bounds, which re-runs the child's kernel (md5 minhash, the
-    * scrub chain, the WAV/PNG/MP4 encode+decode, ...) a second time; the
-    * leaf makes the sampling pass read finished rows instead — a measured
-    * win on every query that uses it. The leaf is executor-local and
-    * corpus-sized. `repartitionByRange` + `sortWithinPartitions` samples
-    * its child the same way, so the kernel still runs twice; the
-    * leaf-free single pass is sort-then-kernel (sort the source, then
-    * map), which shuffles the kernel's input instead of its output.
-    */
-  private def presortLeaf(cols: String*): DataFrame => DataFrame =
-    _.localCheckpoint(true).orderBy(cols.head, cols.tail: _*)
 
   // ======================================================================
   // SQL fragments (DuckDB dialect) mirroring TextFns
@@ -114,7 +107,6 @@ object Queries {
         revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   val q1AggSql: String =
     s"""SELECT l_returnflag, l_linestatus,
@@ -156,7 +148,6 @@ object Queries {
         round(sum(col("o_totalprice")).over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2))
       .select("o_custkey", "o_orderkey", "rn", "running_total")
-      .orderBy(col("o_custkey"), col("rn"))
   }
 
   val qWindowRunningSql: String =
@@ -176,7 +167,6 @@ object Queries {
         coalesce(col("o_orderpriority"), lit("__all__")).as("o_orderpriority"),
         coalesce(col("o_orderstatus"), lit("__all__")).as("o_orderstatus"),
         col("n"), col("total"))
-      .orderBy("o_orderpriority", "o_orderstatus")
 
   val qRollupSql: String =
     """SELECT coalesce(o_orderpriority, '__all__') AS o_orderpriority,
@@ -207,7 +197,6 @@ object Queries {
       .select(col("column_name"), col("non_null"), col("distinct_cnt"),
         round(col("uniqueness"), 6).as("uniqueness"),
         round(col("null_mean"), 6).as("null_mean"))
-      .orderBy("column_name")
   }
 
   val dqProfileSql: String = {
@@ -239,7 +228,6 @@ object Queries {
     graft.rules.Rules.exactDup(aug, col("doc_id"), TextFns.md5Long(col("text")))
       .select(col("url").as("doc_id"), col("rule"),
         col("detail").cast(LongType).as("first_id"))
-      .orderBy("doc_id")
   }
 
   val dqExactDupSql: String =
@@ -269,7 +257,6 @@ object Queries {
       .select(col("doc_id"),
         element_at(col("sig"), 1).as("mh0"), element_at(col("sig"), 2).as("mh1"),
         element_at(col("sig"), 3).as("mh2"), element_at(col("sig"), 4).as("mh3"))
-      .transform(presortLeaf("doc_id"))
   }
 
   val dqMinHashSql: String = {
@@ -291,7 +278,6 @@ object Queries {
     docs(s, dir)
       .select(col("doc_id"),
         graft.functions.Md5SimHash.md5SimHash(col("text"), 16).as("simhash"))
-      .transform(presortLeaf("doc_id"))
 
   val dqSimHashSql: String = {
     val bits = (0 until 16).map { b =>
@@ -328,7 +314,6 @@ object Queries {
       .select(col("url").cast(LongType).as("doc_id"), col("rule"),
         col("score").cast(LongType).as("hamming"),
         col("detail").cast(LongType).as("keep_id"))
-      .orderBy("doc_id")
   }
 
   val dqSimHashNearDupSql: String = {
@@ -377,7 +362,6 @@ object Queries {
       .select(col("url").cast(LongType).as("doc_id"), col("rule"),
         col("score").cast(LongType).as("hamming"),
         col("detail").cast(LongType).as("keep_id"))
-      .orderBy("doc_id")
   }
 
   val dqSimHashNearDupWideSql: String = {
@@ -426,7 +410,7 @@ object Queries {
       .select((col("doc_id") + 1000000L).as("doc_id"),
         regexp_replace(col("text"), "^\\S+", "changed").as("text"))
     val aug = d.unionByName(mut)
-    ngramJaccardPairs(aug).orderBy("id1", "id2")
+    ngramJaccardPairs(aug)
   }
 
   /** Core of [[dqNgramJaccard]] over any (doc_id, text) corpus — exposed
@@ -544,7 +528,6 @@ object Queries {
       .withColumn("n_words", TextFns.wordCountFast(col("text")).cast(LongType))
       .filter(col("text").isNull || col("n_words") < 40)
       .select(col("doc_id"), lit("empty").as("rule"), col("n_words"))
-      .orderBy("doc_id")
 
   val dqCompletenessSql: String =
     s"""SELECT doc_id, 'empty' AS rule, ${Frag.nWords("text")}::BIGINT AS n_words
@@ -587,7 +570,6 @@ object Queries {
         col("m"), col("sd"), k = 2.0, gate = lit(true), col("n_chars")).isNotNull)
       .select(col("doc_id"), col("n_chars"),
         round((col("n_chars") - col("m")) / col("sd"), 6).as("z"))
-      .orderBy("doc_id")
   }
 
   val dqExtremeZscoreSql: String =
@@ -617,7 +599,6 @@ object Queries {
         "n_chars", col("n"), col("m"), col("sd"), k = 1.5).isNotNull)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         round((col("n_chars") - col("m")) / col("sd"), 6).as("z"))
-      .orderBy("doc_id")
   }
 
   val dqGroupZscoreSql: String =
@@ -639,7 +620,6 @@ object Queries {
       .filter(graft.rules.Rules.rareComboEntry(col("lang"), col("source"),
         "lang", "source", col("combo_count"), 3).isNotNull)
       .select("doc_id", "lang", "source", "combo_count")
-      .orderBy("doc_id")
   }
 
   val dqRareComboSql: String =
@@ -678,12 +658,12 @@ object Queries {
     val bound = lit(8) * col("n_words")
     val st = d.agg(count(when(col("n_chars") < bound, lit(1))), count(lit(1))).head()
     val cols = Seq(col("doc_id"), col("n_chars"), col("n_words"))
-    (graft.rules.Rules.tendencyEntry(col("n_chars"), bound, "n_chars", "8n_words",
+    graft.rules.Rules.tendencyEntry(col("n_chars"), bound, "n_chars", "8n_words",
         st.getLong(0), st.getLong(1)) match {
       case Some(e) => d.select(cols :+ e.as("__e"): _*).filter(col("__e").isNotNull)
         .select(cols :+ round(col("__e.score"), 6).as("p"): _*)
       case None => d.select(cols :+ lit(null).cast(DoubleType).as("p"): _*).limit(0)
-    }).orderBy("doc_id")
+    }
   }
 
   val dqTendencySql: String =
@@ -722,7 +702,6 @@ object Queries {
       .withColumn("keep",
         col("n_words") >= 30 && col("symbol_ratio") <= 0.1 &&
           col("mean_word_len").between(2.0, 12.0))
-      .transform(presortLeaf("doc_id"))
 
   val dqHeuristicsSql: String = {
     val sw = Frag.stopHits("text", TextFns.StopwordsEn)
@@ -744,7 +723,6 @@ object Queries {
         LangId.markerLang(col("text")).as("detected_lang"),
         col("lang").as("declared_lang"))
       .withColumn("agree", col("detected_lang") === col("declared_lang"))
-      .transform(presortLeaf("doc_id"))
 
   val dqLangIdSql: String = {
     // argmax over (de, en, es, fr) in lang-asc order, ties → earlier lang;
@@ -777,7 +755,6 @@ object Queries {
         col("doc_id"),
         TextFns.wordCountFast(col("text")).cast(LongType).as("n_ws_tokens"),
         TextFns.bpeishTokenCount(col("text")).cast(LongType).as("n_bpeish_tokens"))
-      .transform(presortLeaf("doc_id"))
 
   val dqTokenCountSql: String =
     s"""SELECT doc_id,
@@ -791,7 +768,6 @@ object Queries {
         col("doc_id"),
         md5(norm.cast("binary")).as("fp_md5"),
         TextFns.fingerprint(col("text")).as("fp64"))
-      .transform(presortLeaf("doc_id"))
   }
 
   val dqFingerprintSql: String =
@@ -820,11 +796,6 @@ object Queries {
       .select(col("doc_id"),
         round(col("az"), 6).as("abs_z"),
         round(col("az") / col("mz"), 6).as("outlier_score"))
-      // no pre-sort leaf here: measured NO win (0.39 -> 0.42-0.53 s with
-      // a localCheckpoint) — the scored frame sits behind the broadcast
-      // stats crossJoin, and the checkpoint action costs more than the
-      // sampling pass saves
-      .orderBy("doc_id")
   }
 
   val dqOutlierScoreSql: String =
@@ -878,7 +849,6 @@ object Queries {
     vocab.join(cstat, Seq("ck")).join(sugg, Seq("ck"))
       .filter(col("cnt") <= 2 && col("max_cnt") >= 10)
       .select(col("tok"), col("cnt"), col("ck"), col("suggestions"))
-      .orderBy("tok")
   }
 
   val dqTypoSuggestSql: String = {
@@ -922,7 +892,6 @@ object Queries {
     docs(s, dir).select(col("doc_id"), Scrub.scrubCol(pii).as("scrubbed_text"))
       .withColumn("has_email", col("scrubbed_text").contains("<EMAIL>"))
       .withColumn("has_tox", col("scrubbed_text").contains("<TOX>"))
-      .transform(presortLeaf("doc_id"))
   }
 
   val dqScrubSql: String = {
@@ -952,7 +921,6 @@ object Queries {
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     Ann.bruteForceTopK(corpus, queries, 5)
       .select(col("qid"), col("id"), round(col("cos"), 4).as("cos_r"), col("rank"))
-      .orderBy("qid", "rank")
   }
 
   val embKnnSql: String =
@@ -992,7 +960,6 @@ object Queries {
         multiProbe = true)
       .filter(col("id") === col("qid") + lit(1000000L))
       .select(col("qid"), col("id"), round(col("cos"), 4).as("cos_r"))
-      .orderBy("qid")
   }
 
   val embAnnLshSql: String =
@@ -1017,7 +984,6 @@ object Queries {
     Ann.ivfTopK(corpus, queries, 5, cents, nProbe = 4)
       .filter(col("id") === col("qid") + lit(1000000L))
       .select(col("qid"), col("id"), round(col("cos"), 4).as("cos_r"))
-      .orderBy("qid")
   }
 
   val embAnnIvfSql: String =
@@ -1038,7 +1004,6 @@ object Queries {
       .select(col("doc_id"),
         length(col("payload")).cast(LongType).as("n_bytes"),
         substring(hex(col("payload")), 1, 8).as("magic_hex"))
-      .orderBy("doc_id")
 
   val mmBinaryMetaSql: String =
     """SELECT doc_id,
@@ -1052,7 +1017,6 @@ object Queries {
 
   val evWindowAgg: (SparkSession, String) => DataFrame = (s, dir) =>
     graft.streaming.EventStream.windowedCountsBatch(tbl(s, dir, "events"))
-      .orderBy("window_start", "event_type")
 
   val evWindowAggSql: String =
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -1068,7 +1032,6 @@ object Queries {
         unix_micros(col("ts").cast("timestamp")) -
           unix_micros(lag(col("ts"), 1).over(w).cast("timestamp")))
       .select("event_id", "user_id", "gap_us")
-      .orderBy("user_id", "event_id")
   }
 
   val evLagGapsSql: String =
@@ -1082,7 +1045,6 @@ object Queries {
     */
   val evSessionize: (SparkSession, String) => DataFrame = (s, dir) =>
     graft.streaming.EventStream.sessionizeBatch(tbl(s, dir, "events"))
-      .orderBy("user_id", "session_no")
 
   val evSessionizeSql: String = {
     val gapUs = 30 * 60L * 1000000L // MUST equal sessionizeBatch's default
@@ -1114,7 +1076,6 @@ object Queries {
         col("o_orderkey"),
         round(graft.functions.DateFns.yearFraction(col("o_orderdate")), 6)
           .as("order_year_frac"))
-      .orderBy("o_orderkey")
 
   val qYearFractionSql: String =
     """SELECT o_orderkey,
@@ -1163,7 +1124,6 @@ object Queries {
         col("source").as("detail"), lit(0.0).as("score")))
       .select(col("url").as("doc_id"), col("detail").as("source"),
         col("score").cast(LongType).as("value_count"))
-      .orderBy("doc_id")
   }
 
   val dqValueUniquenessSql: String =
@@ -1205,7 +1165,6 @@ object Queries {
       .withColumn("cos", round(Ann.cosine(col("v1"), col("v2")), 4))
       .filter(col("cos") >= 0.99)
       .select(col("id2").as("dup_id"), col("id1").as("first_id"), col("cos"))
-      .orderBy("dup_id")
   }
 
   val embCosineDedupSql: String =
@@ -1241,7 +1200,6 @@ object Queries {
       .select(col("doc_id"), col("frame_idx"),
         conv(substring(md5(encode(sliceHex, "UTF-8")), 1, 15), 16, 10)
           .cast(LongType).as("frame_hash"))
-      .transform(presortLeaf("doc_id", "frame_idx"))
   }
 
   val mmFrameSampleSql: String =
@@ -1271,7 +1229,6 @@ object Queries {
       .toDF("doc_id", "payload")
     graft.multimodal.Multimodal.extractMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "width", "height", "format")
-      .transform(presortLeaf("doc_id"))
   }
 
   val mmMediaMetaSql: String =
@@ -1301,7 +1258,6 @@ object Queries {
     graft.multimodal.Multimodal.extractAudioMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "sample_rate", "channels", "bits",
         "n_frames", "format")
-      .transform(presortLeaf("doc_id"))
   }
 
   val mmAudioMetaSql: String =
@@ -1336,7 +1292,6 @@ object Queries {
     graft.multimodal.Multimodal.extractVideoMeta(withPayload).toDF()
       .select("doc_id", "magic_hex", "width", "height", "timescale",
         "duration_units", "n_frames", "brand")
-      .transform(presortLeaf("doc_id"))
   }
 
   val mmVideoMetaSql: String =
@@ -1377,7 +1332,6 @@ object Queries {
         round(col("r.top_4gram_char_frac"), 6).as("top_4gram_char_frac"),
         round(col("r.dup_5gram_char_frac"), 6).as("dup_5gram_char_frac"),
         round(col("r.dup_10gram_char_frac"), 6).as("dup_10gram_char_frac"))
-      .transform(presortLeaf("doc_id"))
   }
 
   /** DuckDB brute-force twin of the battery: list ops re-derive every
@@ -1516,7 +1470,6 @@ object Queries {
         round(col("c.frac_js_lines"), 6).as("frac_js_lines"),
         col("c.has_lorem_ipsum").as("has_lorem_ipsum"),
         col("c.has_curly_brace").as("has_curly_brace"))
-      .transform(presortLeaf("doc_id"))
   }
 
   // s-interpolated so the whitespace classes come from Frag.Ws (the
@@ -1570,7 +1523,6 @@ object Queries {
         col("n_shared_paras"),
         round(col("shared_chars").cast(DoubleType) / col("para_chars"), 6)
           .as("boilerplate_frac"))
-      .orderBy("doc_id")
   }
 
   val dqBoilerplateSql: String =
@@ -1623,7 +1575,6 @@ object Queries {
         Decontam.hitStats(graft.functions.ExactSubstr.stagedTokens(aug), 8, ev).as("__s"))
       .select(col("doc_id"), col("__s.*"))
       .withColumn("contam_frac", Decontam.contamFrac(col("n_contaminated"), col("n_grams")))
-      .orderBy("doc_id")
   }
 
   val dqDecontamSql: String = {
@@ -1676,7 +1627,6 @@ object Queries {
     graft.functions.ExactSubstr.substrDupStats(
         docs(s, dir), col("doc_id"), aug, l = 8)
       .withColumnRenamed("__k", "doc_id")
-      .orderBy("doc_id")
   }
 
   val dqSubstrDupSql: String =
@@ -1732,7 +1682,6 @@ object Queries {
     graft.functions.KnnImpute
       .imputeCells(base, col("doc_id"), Seq("f1", "f2", "f3"), k = 10)
       .withColumnRenamed("__k", "doc_id")
-      .orderBy("doc_id", "col")
   }
 
   val dqKnnImputeSql: String =
@@ -1790,7 +1739,6 @@ object Queries {
       .vocabVectors(docs(s, dir), Seq("lang", "source"), "doc_id",
         dim = 16, chunk = 256)
       .select(col("word"), size(col("vector")).cast(LongType).as("dim"))
-      .orderBy("word")
 
   /** Fixed, deterministic k=4 centroid set for [[embCluster]] — xorshift
     * floats in [-1, 1), the [[graft.embed.Ann.hyperplanes]] convention.
@@ -1858,7 +1806,6 @@ object Queries {
       // driver hashes the RENDERED value ("-0.0" ≠ "0.0")
       .select(col("vec_id"), col("cell"),
         (round(cos, 4) + lit(0.0)).as("cos_r"))
-      .orderBy("vec_id")
   }
 
   val embClusterSql: String = {
@@ -1912,7 +1859,6 @@ object Queries {
       .select(col("doc_id"),
         round(graft.functions.QualityModel.scoreColumn(col("__nm")), 4)
           .as("q_score"))
-      .transform(presortLeaf("doc_id"))
 
   val dqQualityScoreSql: String = {
     val m = graft.functions.QualityModel.Default
@@ -1956,7 +1902,6 @@ object Queries {
           replace(col("text"), lit("&"), lit("&amp;")), lit(HtmlPost))))
       .select(col("doc_id"), col("extracted"),
         length(col("extracted")).cast(LongType).as("n_chars_extracted"))
-      .orderBy("doc_id")
 
   val dqHtmlExtractSql: String = {
     def sqlLit(x: String) = "'" + x.replace("'", "''") + "'"
@@ -2011,7 +1956,6 @@ object Queries {
           .isin("host3.example.com", "host17.example.com").as("blocked_host"),
         UrlFns.containsAny(col("url"), Seq("casino")).as("adult_kw"),
         (length(col("url")) > 2048).as("too_long"))
-      .orderBy("doc_id")
 
   val dqUrlRulesSql: String =
     s"""WITH u AS (SELECT doc_id, $synthUrlSql AS url FROM documents),
@@ -2038,7 +1982,6 @@ object Queries {
       .select(col("url").as("doc_id"),
         col("score").cast(LongType).as("host_docs"),
         col("detail").as("host"))
-      .orderBy("doc_id")
 
   val dqHostCapSql: String =
     s"""WITH u AS (SELECT doc_id, $synthUrlSql AS url FROM documents),
@@ -2071,7 +2014,6 @@ object Queries {
     graft.curation.Select
       .ntileBuckets(base, col("doc_id"), col("lang"), col("score"), 3)
       .select(col("doc_id"), col("lang"), col("score"), col("bucket"))
-      .orderBy("doc_id")
   }
 
   val dqQualityBucketsSql: String =
@@ -2100,7 +2042,6 @@ object Queries {
         col("bucket"), col("h"), col("n_tokens"), budget = 2000L)
       .select(col("key").as("doc_id"), col("lang"), col("bucket"),
         col("tokens"))
-      .orderBy("doc_id")
   }
 
   val dqTokenBudgetSql: String =

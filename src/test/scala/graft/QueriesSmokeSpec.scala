@@ -1,6 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 class QueriesSmokeSpec extends AnyFunSuite {
@@ -15,11 +19,40 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(df.columns.toSet == Set("url", "rule", "keep", "score", "detail"))
   }
 
+  private object Adaptive extends AdaptiveSparkPlanHelper
+
+  /** The queries that keep a checkpoint leaf, each because the leaf's
+    * frame is referenced more than once. */
+  private val leafQueries = Map(
+    "dq_ngram_jaccard" ->
+      "the shingle universe feeds the df cap, the per-doc sizes and both self-join sides",
+    "dq_typo_suggest" ->
+      "the vocabulary feeds the ranked window, the cluster max and the final join")
+
   test("every registered query runs at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, dir).count()
+    // a result is a bag of rows (the Queries scaladoc): no plan sorts
+    // globally to present its rows in order (a range exchange, or a
+    // global SortExec), and only the leaf queries above read an
+    // ExistingRDD (checkpoint) leaf
+    val faults = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val df = fn(spark, dir)
+      val n = df.count()
       withClue(name) { assert(n >= 0) }
+      val root = df.queryExecution.executedPlan
+      // a global sort over a single partition (dq_knn_impute's one
+      // aggregate row stream) needs no range exchange, so both are checked
+      val sorts = Adaptive.collect(root) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+        case s: SortExec if s.global => s
+      }
+      val leaves = Adaptive.collect(root) { case r: RDDScanExec => r }
+      Seq(
+        Option.when(sorts.nonEmpty)(s"$name: global sort"),
+        Option.when(leaves.nonEmpty != leafQueries.contains(name))(
+          s"$name: ${leaves.size} ExistingRDD leaves " +
+            s"(${leafQueries.getOrElse(name, "no frame referenced twice")})")).flatten
     }
+    assert(faults.isEmpty, s"${faults.size} plan faults:\n${faults.mkString("\n")}")
   }
 
   test("every oracle key has a matching query") {
